@@ -48,8 +48,10 @@ object JobStats {
     names.foreach { n =>
       jobs.set(0); stages.set(0); tasks.set(0); shuffleWrite.set(0)
       evalOnce(n)
-      // listener bus is async; give it a moment to drain before reading
-      Thread.sleep(400)
+      // the listener bus is async: read only after every event the
+      // evaluation posted has been delivered
+      require(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext, 60000L),
+        s"listener bus did not drain within 60 s after $n")
       println(f"[jobstats] $n%-24s jobs=${jobs.get}%3d stages=${stages.get}%3d " +
         f"tasks=${tasks.get}%5d shuffle_write=${shuffleWrite.get / 1024}%8d KiB")
     }

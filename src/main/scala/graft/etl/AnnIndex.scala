@@ -515,8 +515,11 @@ object AnnIndex {
         if (hasBatch) {
           val folded =
             if (preserveBatchKeys.isEmpty) lit("-1")
-            else when(col("batch_id").isin(preserveBatchKeys.toSeq: _*),
-              col("batch_id")).otherwise(lit("-1"))
+            // compare as STRING: partition inference types an all-numeric
+            // batch_id set (e.g. only the folded `-1` base) as int, and an
+            // int `isin` of a lineage key fails the cast under ANSI
+            else when(col("batch_id").cast("string").isin(preserveBatchKeys.toSeq: _*),
+              col("batch_id").cast("string")).otherwise(lit("-1"))
           (assigned0.select(col("vec_id"), col("label"), col("embedding"),
              col("list_id"), folded.as("batch_id")),
            Seq("list_id", "batch_id"))

@@ -233,8 +233,11 @@ object Compaction {
         import org.apache.spark.sql.functions.{lit, when}
         val folded =
           if (preserveBatchKeys.isEmpty) lit("-1")
-          else when(col("batch_id").isin(preserveBatchKeys.toSeq: _*),
-            col("batch_id")).otherwise(lit("-1"))
+          // compare as STRING: partition inference types an all-numeric
+          // batch_id set (e.g. only the folded `-1` base) as int, and an
+          // int `isin` of a lineage key fails the cast under ANSI
+          else when(col("batch_id").cast("string").isin(preserveBatchKeys.toSeq: _*),
+            col("batch_id").cast("string")).otherwise(lit("-1"))
         df0.withColumn("batch_id", folded)
       }
       else df0

@@ -199,17 +199,17 @@ object CorpusPipeline {
     val f5 = f4.join(ccDrop, Seq("doc_id"), "left")
       .withColumn("s5", col("s4") && !coalesce(col("ccd"), lit(false)))
     // contamination is per-doc INDEPENDENT of the earlier gates, so the
-    // flag computes corpus-wide from the raw input — s6 = s5 ∧ ¬con is the
-    // same set either way, and this branch carries no dependency on the
-    // f5 chain (which the gram pass would otherwise re-evaluate)
+    // flag computes from the raw input rather than from the s5 survivors —
+    // s6 = s5 ∧ ¬con is the same set either way, and this branch carries
+    // no dependency on the f5 chain (which the gram pass would otherwise
+    // re-evaluate). Only the non-holdout side is grammed: src0 docs'
+    // membership in `contaminated` is irrelevant (s5 ⊆ s1 excludes src0),
+    // so gramming them too would explode the holdout fifth of the input
+    // for rows the flag join never uses. Both gram passes' source filters
+    // push down to the scan, so together they read each doc once (the
+    // eval side is the src0 docs, the probe side the rest).
     val evalGrams = grams4(d0.filter(col("source") === "src0"))
       .select("gram").distinct()
-    // gram only the non-holdout side (r19): src0 docs' membership in
-    // `contaminated` was always irrelevant (s6 = s5 ∧ ¬con and s5 ⊆ s1
-    // excludes src0), so gramming the full corpus re-exploded the holdout
-    // fifth of it for rows the flag join never used. Both gram passes'
-    // source filters push down to the scan, so together they read each doc
-    // once. Same s6 set (CorpusPipelineSpec + both oracles gate it).
     val contaminated = grams4(d0.filter(col("source") =!= "src0"))
       .join(evalGrams, Seq("gram"), "left_semi")
       .select(col("doc_id")).distinct()

@@ -2,6 +2,7 @@ package graft.etl
 
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Llm
@@ -82,10 +83,10 @@ object IncrementalDedup {
 
   /** Steps 1–2 of [[ingest]] as a PURE computation — the batch's surviving
     * posting rows against the CURRENT index, no writes. Exposed so a
-    * composed at-least-once pipeline (e.g.
-    * [[graft.stream.Streams.corpusIngest]]) can stage its effects BEFORE
-    * [[commitPostings]]. Deterministic for a fixed index state, so a
-    * preview and a later commit in the same micro-batch agree.
+    * composed at-least-once pipeline can stage its effects BEFORE
+    * [[commitPostings]] ([[graft.stream.Streams.corpusIngest]] uses the
+    * per-doc form, [[gateBatch]]). Deterministic for a fixed index state,
+    * so a preview and a later commit in the same micro-batch agree.
     *
     * `excludeBatchKey`: a streaming pipeline passes its LINEAGE-SCOPED
     * batch key (`<queryId prefix>-<batchId>`) so the stored-index read
@@ -103,45 +104,110 @@ object IncrementalDedup {
                    excludeBatchKey: Option[String] = None,
                    imageCol: Option[String] = None,
                    audioCol: Option[String] = None,
-                   videoCol: Option[String] = None): DataFrame =
-    keptImpl(batch, indexDir, bands, rowsPerBand, excludeBatchKey,
-      imageCol, audioCol, videoCol, pinGateCells = false)._1
+                   videoCol: Option[String] = None): DataFrame = {
+    val posts = postings(batch, bands, rowsPerBand, imageCol, audioCol, videoCol)
+      .localCheckpoint(true)
+    // 1) drop batch docs colliding with the stored corpus (see
+    // [[storedHitCells]] for the join direction)
+    val survivorPosts = storedHitCells(posts, indexDir, excludeBatchKey) match {
+      case None => posts
+      case Some(cells) =>
+        val hit = posts
+          .join(broadcast(cells), Seq("band", "bkey"), "left_semi")
+          .select("doc_id").distinct()
+        posts.join(hit, Seq("doc_id"), "left_anti")
+    }
+    // 2) full CC dedup within the surviving batch (q_dedup_keep semantics)
+    val nonCanonical = Llm.dedupGroups(Llm.bandStarEdges(survivorPosts))
+      .filter(col("doc_id") =!= col("group_id"))
+      .select("doc_id")
+    survivorPosts.join(nonCanonical, Seq("doc_id"), "left_anti")
+  }
 
-  /** [[keptPostings]] plus the DROP-GATE diagnosis (r15 judge #7): the
-    * second frame is `(doc_id, gate)` for every batch doc the dedup
-    * dropped, naming WHICH modality's collision decided it — the first
-    * question the "why isn't my doc in the corpus?" debugger asks. The
-    * gate is derived from the doc's posting rows that are IMPLICATED in a
-    * collision (a stored-index hit cell, or an in-batch cell claimed by
-    * more than one surviving doc), mapped through the structural band
-    * namespaces: -1 → `exact` (the signature-less content-hash sentinel),
-    * 0–999 → `text`, 1000+ → `image`, 2000+ → `audio`, 3000+ → `video`.
-    * A doc colliding in several modalities reports the LOWEST implicated
-    * namespace (deterministic; exact < text < image < audio < video).
-    * The gates frame is LAZY and batch-bounded; this entry point pins the
-    * stored-hit cells (one localCheckpoint, the SAME single stored-index
-    * scan the kept computation needs — just staged) so evaluating the
-    * gates later never re-scans the index. Callers that don't need gates
-    * use [[keptPostings]], whose plan is byte-identical to the pre-r15
-    * shape (stored scan streaming into the broadcast gate join,
-    * spec-asserted). */
-  def keptPostingsAndGates(batch: DataFrame, indexDir: String,
-                           bands: Int = 4, rowsPerBand: Int = 2,
-                           excludeBatchKey: Option[String] = None,
-                           imageCol: Option[String] = None,
-                           audioCol: Option[String] = None,
-                           videoCol: Option[String] = None)
-      : (DataFrame, DataFrame) =
-    keptImpl(batch, indexDir, bands, rowsPerBand, excludeBatchKey,
-      imageCol, audioCol, videoCol, pinGateCells = true)
+  /** The near-dup gate of ONE streamed micro-batch
+    * ([[graft.stream.Streams.corpusIngest]]): [[keptPostings]]' decisions
+    * plus the DROP-GATE diagnosis, staged so the caller decides every doc
+    * in one frame. Returns
+    *   - the batch's posting rows `(doc_id, band, bkey)`, PINNED — the
+    *     rows the caller commits for its admitted docs;
+    *   - a LAZY per-doc verdict `(doc_id, dd, gate)` over that pin: `dd`
+    *     is true when the doc survives both the stored-index gate and the
+    *     in-batch CC (exactly [[keptPostings]]' doc set); for a dropped doc
+    *     `gate` names WHICH modality's collision decided it (the "why isn't
+    *     my doc in the corpus?" question). The gate comes from the doc's
+    *     posting rows IMPLICATED in a collision — a stored-index hit cell,
+    *     or an in-batch cell shared by two or more index survivors — mapped
+    *     through the structural band namespaces: -1 → `exact` (the
+    *     signature-less content-hash sentinel), 0–999 → `text`, 1000+ →
+    *     `image`, 2000+ → `audio`, 3000+ → `video`; several implicated
+    *     namespaces report the LOWEST (exact < text < image < audio <
+    *     video).
+    *
+    * After the postings pin, one more pin carries all the evidence: every
+    * posting row with its stored-hit flag (the same single index scan, streamed into a broadcast
+    * gate join), whether its doc hit the index, and its cell's lowest and
+    * highest index-survivor doc. The in-batch star edges
+    * ([[graft.queries.Llm.bandStarEdges]]' rule: cell root = lowest
+    * survivor, one edge per other survivor) and the collision cells are
+    * projections of that pin, so the CC input costs no further exchange;
+    * edges may repeat across bands, which the components do not care
+    * about. */
+  private[graft] def gateBatch(batch: DataFrame, indexDir: String,
+                               bands: Int = 4, rowsPerBand: Int = 2,
+                               excludeBatchKey: Option[String] = None,
+                               imageCol: Option[String] = None,
+                               audioCol: Option[String] = None,
+                               videoCol: Option[String] = None)
+      : (DataFrame, DataFrame) = {
+    // pinned on its own first: the stored probe's broadcast side and the
+    // flagged rows both read it, and the two copies of the signature
+    // aggregation do not share an exchange (the probe side carries a
+    // pushed-down null filter)
+    val posts0 = postings(batch, bands, rowsPerBand, imageCol, audioCol, videoCol)
+      .localCheckpoint(true)
+    val flagged = storedHitCells(posts0, indexDir, excludeBatchKey) match {
+      case Some(cells) => posts0
+        .join(broadcast(cells.withColumn("hit", lit(true))),
+          Seq("band", "bkey"), "left")
+        .withColumn("hit", coalesce(col("hit"), lit(false)))
+      case None => posts0.withColumn("hit", lit(false))
+    }
+    val byCell = Window.partitionBy("band", "bkey")
+    val survivorId = when(!col("doc_hit"), col("doc_id"))
+    val posts = flagged
+      .withColumn("doc_hit", max(col("hit")).over(Window.partitionBy("doc_id")))
+      .withColumn("root", min(survivorId).over(byCell))
+      .withColumn("crowded",
+        coalesce(col("root") =!= max(survivorId).over(byCell), lit(false)))
+      .localCheckpoint(true)
+    val edges = posts.filter(!col("doc_hit") && col("doc_id") =!= col("root"))
+      .select(col("root").as("doc_a"), col("doc_id").as("doc_b"))
+    val ccDrop = Llm.dedupGroups(edges)
+      .filter(col("doc_id") =!= col("group_id"))
+      .select(col("doc_id"), lit(true).as("cc_drop"))
+    val verdict = posts
+      .join(broadcast(ccDrop), Seq("doc_id"), "left")
+      .groupBy("doc_id").agg(
+        (!max(col("doc_hit")) && max(col("cc_drop")).isNull).as("dd"),
+        min(when(col("hit") || col("crowded"), col("band"))).as("b"))
+      .select(col("doc_id"), col("dd"),
+        when(!col("dd"),
+          when(col("b") === -1, "exact")
+            .when(col("b") < 1000, "text")
+            .when(col("b") < 2000, "image")
+            .when(col("b") < 3000, "audio")
+            .otherwise("video")).as("gate"))
+    (posts.select("doc_id", "band", "bkey"), verdict)
+  }
 
-  private def keptImpl(batch: DataFrame, indexDir: String,
-                       bands: Int, rowsPerBand: Int,
-                       excludeBatchKey: Option[String],
+  /** Every posting row `(doc_id, band, bkey)` of a batch: MinHash bands,
+    * the configured media fingerprint bands, and the content-hash sentinel
+    * for docs with no signature. Lazy; posting rows of one doc never depend
+    * on another doc. */
+  private def postings(batch: DataFrame, bands: Int, rowsPerBand: Int,
                        imageCol: Option[String],
                        audioCol: Option[String],
-                       videoCol: Option[String],
-                       pinGateCells: Boolean): (DataFrame, DataFrame) = {
+                       videoCol: Option[String]): DataFrame = {
     val spark = batch.sparkSession
     // the media namespaces (image 1000+, audio 2000+, video 3000+) are
     // disjoint from text minhash bands STRUCTURALLY, not by convention: a
@@ -220,92 +286,65 @@ object IncrementalDedup {
     // (text, payload) tuples still collide — exact-dup semantics. Near-dups
     // of signature-less docs remain undetectable by construction; only
     // EXACT repeats carry evidence, and the content-hash cell is it.
-    val signed = hashed.select("doc_id")
-      .union(imagePosts.select("doc_id"))
-      .union(audioPosts.select("doc_id"))
-      .union(videoPosts.select("doc_id")).distinct()
-    val mediaSig = (imageCol.toSeq ++ audioCol.toSeq ++ videoCol.toSeq)
-      .map(c => coalesce(md5(col(c)), lit("")))
-    val unshingled = batch
-      .join(signed, Seq("doc_id"), "left_anti")
+    // Without media columns the signature-less docs are exactly the
+    // null-text ones (a non-null text always shingles: a one-word or empty
+    // text shingles as itself, see Llm.shingleRows), so no anti-join
+    // against the signed docs is needed.
+    val mediaCols = imageCol.toSeq ++ audioCol.toSeq ++ videoCol.toSeq
+    val mediaSig = mediaCols.map(c => coalesce(md5(col(c)), lit("")))
+    val unsigned =
+      if (mediaCols.isEmpty) batch.filter(col("text").isNull)
+      else batch.join(hashed.select("doc_id")
+        .union(imagePosts.select("doc_id"))
+        .union(audioPosts.select("doc_id"))
+        .union(videoPosts.select("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+    val unshingled = unsigned
       .select(col("doc_id"), lit(-1).as("band"),
               md5(concat_ws("|",
                 (coalesce(col("text"), lit("")) +: mediaSig): _*)).as("bkey"))
-    val posts = hashed.unionByName(imagePosts).unionByName(audioPosts)
+    hashed.unionByName(imagePosts).unionByName(audioPosts)
       .unionByName(videoPosts)
       .unionByName(unshingled)
-      .localCheckpoint(true)
-
-    // 1) drop batch docs colliding with the stored corpus. Join DIRECTION
-    // matters at scale: `posts SEMI stored` builds on the stored table
-    // (LeftSemi can only broadcast its right/build side), and since the
-    // index is the corpus-sized side Spark would shuffle the ENTIRE
-    // posting table per micro-batch. Flipped — `stored SEMI broadcast(batch
-    // cells)` — the index is STREAMED once against a broadcast probe set
-    // bounded by the batch's own postings, and never shuffles; the second
-    // hop back to doc_ids joins two batch-bounded frames. Bit-identical
-    // result (set intersection is symmetric), spec-asserted shuffle-free
-    // on the stored side.
-    val (survivorPosts, hitCells) =
-      if (!hasIndex(indexDir)) (posts, None)
-      else {
-        val storedAll = spark.read.parquet(postingsPath(indexDir))
-        val storedOwn = excludeBatchKey match {
-          case Some(k) if storedAll.columns.contains("batch_id") =>
-            // compare as STRING: partition-type inference may type an
-            // all-numeric batch_id dir set as int, and int-vs-string
-            // comparison would cast the non-numeric key to null and drop
-            // every stored row from the gate
-            storedAll.filter(col("batch_id").cast("string") =!= k)
-          case _ => storedAll
-        }
-        val stored = storedOwn.select(col("band"), col("bkey"))
-        val batchCells = posts.select("band", "bkey").distinct()
-        // when gates are requested, pin the hit cells: they feed the drop
-        // below AND the gate diagnosis, and without the checkpoint an
-        // audit read would re-scan the stored index a second time per
-        // batch. Bounded by the batch's own cells. When gates are NOT
-        // requested, stay lazy — the gate join then streams the stored
-        // scan directly (the spec-asserted never-shuffle plan shape).
-        val hits = stored
-          .join(broadcast(batchCells), Seq("band", "bkey"), "left_semi")
-          .distinct()
-        val cells = if (pinGateCells) hits.localCheckpoint(true) else hits
-        val hit = posts
-          .join(broadcast(cells), Seq("band", "bkey"), "left_semi")
-          .select("doc_id").distinct()
-        (posts.join(hit, Seq("doc_id"), "left_anti"), Some(cells))
-      }
-
-    // 2) full CC dedup within the surviving batch (q_dedup_keep semantics)
-    val nonCanonical = Llm.dedupGroups(Llm.bandStarEdges(survivorPosts))
-      .filter(col("doc_id") =!= col("group_id"))
-      .select("doc_id")
-    val kept = survivorPosts.join(nonCanonical, Seq("doc_id"), "left_anti")
-
-    // DROP-GATE diagnosis (lazy): implicated cells are the stored-index
-    // hits plus every in-batch cell claimed by ≥2 index-survivors (the CC
-    // edges); a dropped doc's lowest implicated band names its gate. All
-    // frames here are batch-bounded — O(batch) when evaluated, free when
-    // not.
-    val inBatchDupCells = survivorPosts.groupBy("band", "bkey")
-      .agg(countDistinct(col("doc_id")).as("n")).filter(col("n") > 1)
-      .select("band", "bkey")
-    val implicated = hitCells
-      .map(_.select("band", "bkey").unionByName(inBatchDupCells))
-      .getOrElse(inBatchDupCells)
-    val dropGates = posts
-      .join(kept.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .join(broadcast(implicated.distinct()), Seq("band", "bkey"), "left_semi")
-      .groupBy("doc_id").agg(min(col("band")).as("b"))
-      .select(col("doc_id"),
-        when(col("b") === -1, "exact")
-          .when(col("b") < 1000, "text")
-          .when(col("b") < 2000, "image")
-          .when(col("b") < 3000, "audio")
-          .otherwise("video").as("gate"))
-    (kept, dropGates)
   }
+
+  /** The stored-index cells a batch's postings hit, or None before the
+    * index exists. Join DIRECTION matters at scale: `posts SEMI stored`
+    * builds on the stored table (LeftSemi can only broadcast its
+    * right/build side), and since the index is the corpus-sized side Spark
+    * would shuffle the ENTIRE posting table per micro-batch. Flipped —
+    * `stored SEMI broadcast(batch cells)` — the index is STREAMED once
+    * against a broadcast probe set bounded by the batch's own postings,
+    * and never shuffles; only the batch-bounded hits go on (one row per
+    * matching stored posting). Bit-identical
+    * result (set intersection is symmetric), spec-asserted shuffle-free on
+    * the stored side. */
+  private def storedHitCells(posts: DataFrame, indexDir: String,
+                             excludeBatchKey: Option[String]): Option[DataFrame] =
+    if (!hasIndex(indexDir)) None
+    else {
+      val root = postingsPath(indexDir)
+      val batchLayout = graft.GraftFs.default.list(root).exists(p =>
+        java.nio.file.Paths.get(p).getFileName.toString.startsWith("batch_id="))
+      // the gate reads only the cell columns, so it declares them: no
+      // schema-inference job per batch, and `batch_id` reads as the STRING
+      // it is written as (inference would type an all-numeric batch_id dir
+      // set as int, and int-vs-string comparison would cast the
+      // non-numeric key to null and drop every stored row from the gate)
+      val storedAll = posts.sparkSession.read
+        .schema("band INT, bkey STRING" + (if (batchLayout) ", batch_id STRING" else ""))
+        .parquet(root)
+      val storedOwn = excludeBatchKey match {
+        case Some(k) if batchLayout => storedAll.filter(col("batch_id") =!= k)
+        case _ => storedAll
+      }
+      // neither side is de-duplicated: a semi join's build side needs no
+      // distinct, and a cell stored twice only repeats a HIT posting,
+      // whose doc is dropped whatever its multiplicity (each distinct
+      // would cost an exchange, i.e. a job per batch)
+      Some(storedOwn.select(col("band"), col("bkey"))
+        .join(broadcast(posts.select("band", "bkey")),
+          Seq("band", "bkey"), "left_semi"))
+    }
 
   /** Step 3 of [[ingest]]: land the kept docs' postings — the only write,
     * and the batch's commit point. The index stays bucket-unique: EVERY doc

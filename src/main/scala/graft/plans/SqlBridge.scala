@@ -1,16 +1,22 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` crossing the custom-operator path needs: turning a
-  * hand-built [[LogicalPlan]] back into a public DataFrame. Spark exposes
-  * every other piece of the whole-operator extension surface publicly
-  * (`SparkSessionExtensions.injectPlannerStrategy`, `SparkStrategy`,
-  * `SparkPlan`, `experimental.extraStrategies`) but keeps plan→Dataset
-  * construction session-internal, so libraries adding operators place this
-  * shim in the sql package — the established pattern across open-source
-  * Spark extensions. Kept to the single call; everything else in
-  * [[graft.plans]] uses public/DeveloperApi surfaces. */
+/** The package-private Spark crossings graft needs, kept in one place:
+  *   - plan→Dataset construction: the custom-operator path turns a
+  *     hand-built [[LogicalPlan]] back into a public DataFrame. Spark
+  *     exposes every other piece of the whole-operator extension surface
+  *     publicly (`SparkSessionExtensions.injectPlannerStrategy`,
+  *     `SparkStrategy`, `SparkPlan`, `experimental.extraStrategies`) but
+  *     keeps this step session-internal, so libraries adding operators
+  *     place the shim in the sql package — the established pattern across
+  *     open-source Spark extensions;
+  *   - re-declaring a checkpointed frame's partitioning
+  *     ([[withHashPartitioning]]);
+  *   - draining the listener bus before counters are read
+  *     ([[drainListenerBus]]).
+  * Everything else in [[graft.plans]] uses public/DeveloperApi surfaces. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
@@ -31,15 +37,26 @@ object GraftSqlBridge {
     * `df.repartition(numPartitions, col(key))` (optionally followed by
     * partitioning-preserving ops — window over the same key, filters,
     * projections keeping the key) before the checkpoint. Declaring a
-    * placement the rows do not have silently mis-joins; BucketedTableSpec-
-    * style equivalence tests gate every caller. */
+    * placement the rows do not have silently mis-joins; GraftSqlBridgeSpec
+    * pins the equivalence (same rows, one exchange fewer). */
   def withHashPartitioning(df: DataFrame, key: String, numPartitions: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.LogicalRDD
     df.queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        val attr = lr.output.find(_.name == key).getOrElse(throw new IllegalArgumentException(
-          s"withHashPartitioning: no column '$key' in ${lr.output.map(_.name).mkString(", ")}"))
+        // the session's resolver (case-insensitive by default), and the
+        // name must pick out ONE column: declaring the placement of the
+        // wrong one of two same-named columns would silently mis-join
+        val resolver = df.sparkSession.asInstanceOf[classic.SparkSession]
+          .sessionState.conf.resolver
+        val attr = lr.output.filter(a => resolver(a.name, key)) match {
+          case Seq(a) => a
+          case Seq() => throw new IllegalArgumentException(
+            s"withHashPartitioning: no column '$key' in ${lr.output.map(_.name).mkString(", ")}")
+          case many => throw new IllegalArgumentException(
+            s"withHashPartitioning: column '$key' is ambiguous, it matches " +
+              many.map(_.name).mkString(", "))
+        }
         val declared = lr.makeCopy(Array(lr.output, lr.rdd,
           HashPartitioning(Seq(attr), numPartitions), lr.outputOrdering,
           java.lang.Boolean.valueOf(lr.isStreaming), lr.stream))
@@ -50,4 +67,11 @@ object GraftSqlBridge {
           other.getClass.getName)
     }
   }
+
+  /** Deliver every listener event already posted, so counters a listener
+    * keeps are read after the events that produced them, never after a
+    * guessed sleep. True when the bus emptied within `timeoutMs`. */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

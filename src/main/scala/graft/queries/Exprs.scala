@@ -44,39 +44,6 @@ object Exprs {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(true)
 
-  /** [[pinShared]] for a STATIONARY keyed table (r19, guide §2.4/§3.4): the
-    * frame is first hash-repartitioned on `key` with an explicit partition
-    * count (REPARTITION_BY_NUM — AQE never coalesces or re-places it), then
-    * pinned, then re-declared with the partitioning the materialized RDD
-    * actually has ([[org.apache.spark.sql.GraftSqlBridge.withHashPartitioning]]
-    * — the checkpoint's LogicalRDD otherwise reports UnknownPartitioning and
-    * every keyed consumer re-shuffles it). Use for tables an iterative loop
-    * joins/aggregates on the SAME key every round (CC edges, pagerank
-    * edges): construction pays the one shuffle, the rounds shuffle only the
-    * small side. */
-  def pinHashPartitioned(df: org.apache.spark.sql.DataFrame, key: String)
-      : org.apache.spark.sql.DataFrame = {
-    val n = stationaryPartitions(df)
-    pinPrePartitioned(df.repartition(n, col(key)), key, n)
-  }
-
-  /** SIZE-DERIVED partition count for a stationary pinned table (guide
-    * §2.1/§2.2: partitions sized in the 100 MB–1 GB band, derived from the
-    * input rather than a constant tuned for either local mode or the
-    * cluster). An explicit-count repartition is exempt from AQE coalescing
-    * by design (that is what makes the declared partitioning truthful), so
-    * the count must be right by construction: Catalyst's free sizeInBytes
-    * estimate over the frame's plan, one partition per 128 MB, clamped to
-    * [1, spark.sql.shuffle.partitions]. At bench SFs this lands on 1 (the
-    * pinned edge frames are KB–MB), so loop stages stay single-wave; at
-    * warehouse scale the estimate saturates the clamp and the stationary
-    * table is as wide as the session's configured shuffle width. */
-  def stationaryPartitions(df: org.apache.spark.sql.DataFrame): Int = {
-    val maxN = BigInt(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    (est / (128L << 20)).min(maxN).max(BigInt(1)).toInt
-  }
-
   /** Declare-and-pin for a frame ALREADY exactly hash-partitioned on `key`
     * into `n` partitions (a `repartition(n, key)` followed only by
     * partitioning-preserving ops — same-key windows, filters, projections

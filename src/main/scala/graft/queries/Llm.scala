@@ -496,16 +496,17 @@ object Llm {
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // STATIONARY EDGES (r19, guide §2.4/§3.4): the edge table is joined on
-    // `src` EVERY round, but a plain pin reports UnknownPartitioning and
-    // each round's neighbor join re-shuffled it once the frontier outgrew
-    // broadcast — at 100 TB that is a full edge-table shuffle per round.
-    // Pre-partitioning by src + declaring the partitioning on the pinned
-    // frame makes construction pay the one edge shuffle and every round
-    // shuffle only the node-sized frontier; the seed aggregation below
-    // reuses the same partitioning (no exchange), paying the repartition
-    // back immediately even at bench scale.
-    val edges = pin(sym) // DECOMPOSE-TEST: plain pin
+    // The edge pin doubles as the emptiness test: marked for a lazy local
+    // checkpoint and materialized by a row count — one job, where an eager
+    // pin plus a separate emptiness check would be two. An edge-less input
+    // (a streamed micro-batch without in-batch near-dups, the common case)
+    // then returns at once, without the label pin or a convergence round.
+    // The reliable path pins eagerly and counts the pinned data (a
+    // reliable checkpoint re-computes the RDD to write it; nothing to fuse).
+    val edges = if (reliable) pin(sym) else sym.localCheckpoint(false)
+    if (edges.rdd.count() == 0)
+      return edges.select(col("src").as("doc_id"), col("src").as("group_id"))
+        .limit(0)
     // Seed labels with min(node, min(neighbor)) — this IS round 1's
     // neighbor-min, computed during the init aggregation instead of a full
     // round (one fewer checkpoint + convergence action; the fixpoint is
@@ -575,13 +576,16 @@ object Llm {
       // IncrementalLoad.runAudited lazy-pin pattern): the round result is
       // MARKED for a lazy local checkpoint and the changed-row COUNT is the
       // materializing action — one job per round where the r18 shape paid
-      // an eager checkpoint job plus a separate isEmpty job. count()
-      // computes every partition, so the checkpoint is complete before the
-      // next round reads it. The reliable path keeps the eager pin (a
-      // reliable checkpoint re-computes the RDD to write it, so there is
-      // nothing to fuse) and counts over the pinned data.
+      // an eager checkpoint job plus a separate isEmpty job. The count runs
+      // on the RDD (per-partition sizes, summed by the caller), not as a
+      // Dataset aggregate, whose single-partition exchange would cost a
+      // second job per round. It computes every partition, so the
+      // checkpoint is complete before the next round reads it. The
+      // reliable path keeps the eager pin (a reliable checkpoint
+      // re-computes the RDD to write it, so there is nothing to fuse) and
+      // counts over the pinned data.
       val next = if (reliable) pin(jumped) else jumped.localCheckpoint(false)
-      val nChanged = next.filter(col("label") =!= col("prev")).count()
+      val nChanged = next.filter(col("label") =!= col("prev")).rdd.count()
       converged = nChanged == 0
       // changed rows double as next round's frontier — same cached scan
       // the convergence check read, no extra shuffle or job

@@ -763,7 +763,7 @@ object Streams {
     * incremental pieces, each individually spec-proven, as one foreachBatch
     * pipeline: documents arrive as a stream →
     *
-    *   1. near-dup gate: [[graft.etl.IncrementalDedup.keptPostings]] dedups
+    *   1. near-dup gate: [[graft.etl.IncrementalDedup.gateBatch]] dedups
     *      the batch against the posting index and within itself (O(batch)
     *      work, banded equi-joins, never all-pairs) — EXCLUDING the batch's
     *      own `batch_id` posting partition, so a replay recomputes against
@@ -804,8 +804,18 @@ object Streams {
     * rollback re-derives the same totals. No duplicates, no loss, and no
     * stage can un-publish a doc a reader already saw.
     *
-    * The survivor frame is pinned once (localCheckpoint) and feeds all
-    * effects. Idempotence is keyed on the LINEAGE-SCOPED batch key
+    * ONE DECISION FRAME per micro-batch: the gates run as a single plan
+    * over the near-dup gate's pinned postings and are pinned ONCE — one
+    * row per batch doc with its decision (admitted / holdout_excluded /
+    * quality_gate / repetition_filter / near_dup / decontaminated /
+    * budget_rejected), its deciding gate and the doc as it would publish.
+    * Every effect is a projection or filter of that frame: the kept set,
+    * the decision log, the ledger delta, the corpus commit, the index
+    * appends and the posting commit; only corpus bucket ids (and the kept
+    * count) are collected. Nothing is re-derived by joins over
+    * per-stage frames, so an append micro-batch runs a few dozen Spark
+    * jobs rather than one per cascade stage. Idempotence is keyed on the
+    * LINEAGE-SCOPED batch key
     * `<streaming queryId prefix>-<batchId>` — the query id is stable
     * across checkpointed restarts and fresh per new checkpoint, so a true
     * replay overwrites exactly its own partitions and rolls back exactly
@@ -1036,42 +1046,39 @@ object Streams {
         // funnel fuses into its scan (LlmText.qualityZ /
         // withRepetitionMetrics) — parity by construction, and
         // StreamingSpec asserts the one-batch admission set equals
-        // CorpusPipeline.curate row-for-row. All gates default OFF: the
-        // pre-r17 plan (and its spec-asserted shapes) is byte-identical
-        // when none is configured.
+        // CorpusPipeline.curate row-for-row. All gates default OFF.
         val anyMapGate = holdoutSources.nonEmpty || qualityGate || repetitionGate
         // per-doc gate flags, cumulative like the batch funnel's s1..s3
-        // (g1 holdout, g2 quality, g3 repetition); pinned because the
-        // interpreted HOF metrics feed the admitted set AND the audit —
-        // the same pin-the-flags discipline CorpusPipeline measured out
-        val gateFlags: Option[DataFrame] = if (!anyMapGate) None else Some {
-          // `source` is only needed by the holdout gate — a source-less
-          // stream may still run the quality/repetition gates
-          val gateCols = col("doc_id") +:
-            (if (holdoutSources.nonEmpty) Seq(col("source")) else Nil) :+
-            col("text")
-          val base = graft.queries.LlmText.withRepetitionMetrics(
-            batch.select(gateCols: _*)
-              .withColumn("words", split(col("text"), " ")))
-          base
-            .withColumn("g1",
-              if (holdoutSources.nonEmpty) !col("source").isin(holdoutSources: _*)
+        // (g1 holdout, g2 quality, g3 repetition), as columns on the batch
+        // rows themselves (the batch's own columns ride in a struct, so no
+        // name of theirs can clash with the metric columns). A null
+        // predicate fails its gate. Row-local expressions, no pin: they
+        // evaluate inside the dedup gate's pin (its input filter) and the
+        // decision pin below.
+        val flagged = if (!anyMapGate)
+            batch.withColumn("__g1", lit(true)).withColumn("__g2", lit(true))
+              .withColumn("__g3", lit(true))
+          else {
+            val base = graft.queries.LlmText.withRepetitionMetrics(
+              batch.select(struct(batch.columns.map(col): _*).as("__doc"),
+                col("text"), split(col("text"), " ").as("words")))
+            val g1 =
+              if (holdoutSources.nonEmpty)
+                coalesce(!col("__doc.source").isin(holdoutSources: _*), lit(false))
+              else lit(true)
+            val g2 = g1 && (
+              if (qualityGate) coalesce(
+                graft.queries.LlmText.qualityZ(col("text"), col("words")) >= 0,
+                lit(false))
               else lit(true))
-            .withColumn("g2", col("g1") && (
-              if (qualityGate)
-                graft.queries.LlmText.qualityZ(col("text"), col("words")) >= 0
-              else lit(true)))
-            .withColumn("g3", col("g2") && (
-              if (repetitionGate) col("n_words") >= 2 && !col("flagged")
-              else lit(true)))
-            .select("doc_id", "g1", "g2", "g3")
-            .localCheckpoint(true)
-        }
-        val admittable = gateFlags match {
-          case Some(f) => batch.join(
-            f.filter(col("g3")).select("doc_id"), Seq("doc_id"), "left_semi")
-          case None => batch
-        }
+            val g3 = g2 && (
+              if (repetitionGate)
+                coalesce(col("n_words") >= 2 && !col("flagged"), lit(false))
+              else lit(true))
+            base.select(col("__doc.*") +:
+              Seq(g1.as("__g1"), g2.as("__g2"), g3.as("__g3")): _*)
+          }
+        val admittable = flagged.filter(col("__g3")).select(batch.columns.map(col): _*)
         // held-out eval docs never enter the corpus; with `decontaminate`
         // their word 4-grams feed the persisted eval-gram posting table
         // (the same gram unit as q_decontaminate / the batch funnel —
@@ -1103,24 +1110,14 @@ object Streams {
               case _ => a10
             }).localCheckpoint(true))
           }
-        // the gates variant pins the stored-hit cells for the audit's gate
-        // diagnosis (same single index scan, staged); with the audit off,
-        // keep the unpinned plan (stored scan streams straight into the
-        // broadcast gate join, the spec-asserted shape)
-        val (keptPosts0, dropGates: Option[DataFrame]) =
-          if (auditDir.isDefined) {
-            val (k, g) = graft.etl.IncrementalDedup.keptPostingsAndGates(
-              admittable, dedupDir, excludeBatchKey = Some(batchKey),
-              imageCol = imageCol, audioCol = audioCol, videoCol = videoCol)
-            (k, Some(g))
-          } else
-            (graft.etl.IncrementalDedup.keptPostings(admittable, dedupDir,
-              excludeBatchKey = Some(batchKey), imageCol = imageCol,
-              audioCol = audioCol, videoCol = videoCol), None)
-        val keptPosts = keptPosts0.localCheckpoint(true)
-        val deduped = admittable
-          .join(keptPosts.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
+        // ── NEAR-DUP GATE: the batch's posting rows pinned once, with the
+        // stored-index evidence and the in-batch components; the per-doc
+        // verdict (survivor flag + deciding modality) is a lazy frame over
+        // that pin, so it lands in the decision frame without a pin of its
+        // own
+        val (posts, dedupVerdict) = graft.etl.IncrementalDedup.gateBatch(
+          admittable, dedupDir, excludeBatchKey = Some(batchKey),
+          imageCol = imageCol, audioCol = audioCol, videoCol = videoCol)
         // ── EVAL-GRAM DECONTAMINATION (r17): dedup survivors sharing any
         // word 4-gram with the held-out eval set are rejected at admission
         // — the batch funnel's stage-6 gate, streamed. The gram evidence is
@@ -1130,10 +1127,13 @@ object Streams {
         // identically), unioned with THIS batch's holdout grams so
         // same-batch contamination gates too. O(batch) probe work: the
         // batch-bounded gram frame semi-joins the gram table — never a
-        // corpus re-scan.
-        val clean =
-          if (!anyDecon) deduped
-          else {
+        // corpus re-scan. Contamination is per doc, so it is tested over
+        // every admittable doc and only counts for dedup survivors
+        // (`__cl` below): the same set as testing the survivors alone, with
+        // no dependency on the dedup verdict.
+        val contaminated: Option[DataFrame] =
+          if (!anyDecon) None
+          else Some {
             val storedGrams = {
               val root = graft.etl.Compaction.currentPath(evalGramsTable)
               val fs = graft.GraftFs.default
@@ -1161,24 +1161,23 @@ object Streams {
             // eval-side unit (4-grams vs g4 rows, sliding 10-gram anchors
             // vs a10 rows) — O(batch) gram frames semi-joined against the
             // bounded eval table, never a corpus re-scan
-            val docFrame = deduped.select(col("doc_id"), col("text"))
+            val docFrame = admittable.select(col("doc_id"), col("text"))
             val hit4 =
-              if (!decontaminate) deduped.select("doc_id").limit(0)
+              if (!decontaminate) docFrame.select("doc_id").limit(0)
               else graft.queries.Llm.gram4Rows(docFrame)
                 .join(evalG.filter(col("grain") === "g4").select("gram"),
                   Seq("gram"), "left_semi")
                 .select("doc_id")
             val hit10 =
-              if (!spanDecontaminate) deduped.select("doc_id").limit(0)
+              if (!spanDecontaminate) docFrame.select("doc_id").limit(0)
               else docFrame
                 .select(col("doc_id"), explode(call_function("word_ngrams",
                   split(col("text"), " "), lit(10))).as("gram"))
                 .join(evalG.filter(col("grain") === "a10").select("gram"),
                   Seq("gram"), "left_semi")
                 .select("doc_id")
-            val contaminated = hit4.unionByName(hit10).distinct()
-            deduped.join(contaminated, Seq("doc_id"), "left_anti")
-              .localCheckpoint(true)
+            hit4.unionByName(hit10).distinct()
+              .withColumn("__con", lit(true))
           }
         // the admission base: per-source cumulative spend BEFORE this batch.
         // One bounded ledger read; a replay is recognized by BOTH the batch
@@ -1216,6 +1215,25 @@ object Streams {
               .agg(sum(size(split(col("text"), " ")).cast("long")).as("t0"))
           } else Seq.empty[(String, Long)].toDF("source", "t0")
         }
+        // ── THE DECISION FRAME: one row per batch doc carrying its gate
+        // flags in funnel order — `__dd` near-dup survivor, `__cl` also
+        // uncontaminated, `__bk` also within budget — and the doc as it
+        // would publish. Built as ONE plan over the dedup pin and pinned
+        // ONCE; every effect below (decision log, corpus commit, index
+        // appends, ledger delta, posting and anchor commits) is a
+        // projection or filter of it.
+        val gated = {
+          val d = flagged
+            .join(dedupVerdict.select(col("doc_id"), col("dd").as("__dd"),
+              col("gate").as("__gate")), Seq("doc_id"), "left")
+            .withColumn("__dd", col("__g3") && coalesce(col("__dd"), lit(false)))
+          contaminated match {
+            case Some(c) => d.join(broadcast(c), Seq("doc_id"), "left")
+              .withColumn("__cl", col("__dd") && col("__con").isNull)
+              .drop("__con")
+            case None => d.withColumn("__cl", col("__dd"))
+          }
+        }
         // ── SPAN-GRAIN EXCISION (r18 — the ingest-side ACTION closing the
         // last batch/stream asymmetry): an admitted doc's words that
         // verbatim-duplicate a sliding 10-word anchor already in the
@@ -1228,9 +1246,10 @@ object Streams {
         // TRANSFORM, not a gate: no doc is dropped here (a fully-excised
         // doc publishes empty text and its near-dup postings — computed on
         // the ORIGINAL text — still gate future copies of the original).
-        // The budget below then counts the words actually published.
+        // Only the clean docs' text is rewritten; the budget below then
+        // counts the words actually published.
         val excised =
-          if (!spanExcise) clean
+          if (!spanExcise) gated
           else {
             val stored = {
               val root = graft.etl.Compaction.currentPath(spanAnchorsTable)
@@ -1244,85 +1263,69 @@ object Streams {
                 .filter(col("batch_id").cast("string") =!= batchKey)
                 .select("gram")
             }
-            graft.queries.Llm.exciseIncremental(clean, stored)
-              .localCheckpoint(true)
+            val cut = graft.queries.Llm.exciseIncremental(
+                gated.filter(col("__cl")).select("doc_id", "text"), stored)
+              .select(col("doc_id"), col("text").as("__excised"))
+            gated.join(cut, Seq("doc_id"), "left")
+              .withColumn("text",
+                when(col("__cl"), col("__excised")).otherwise(col("text")))
+              .drop("__excised")
           }
         // In-batch admission follows the batch query's seeded-hash order
-        // (md5 of doc_id — q_source_budget parity); budget-rejected docs
+        // (md5 of doc_id — q_source_budget parity): a clean doc's spend is
+        // its source's prior plus the running sum of the clean docs up to
+        // it in that order (other docs add 0). Budget-rejected docs
         // consume nothing, are not published, and are NOT indexed — their
         // postings never commit, so a later budget raise can still admit
         // them.
-        val kept = budgetPerSource match {
-          case None => excised
+        val budgeted = budgetPerSource match {
+          case None => excised.withColumn("__bk", col("__cl"))
           case Some(budget) =>
-            val w = Window.partitionBy("source").orderBy("h")
+            val w = Window.partitionBy("source").orderBy("__h")
               .rowsBetween(Window.unboundedPreceding, Window.currentRow)
             excised
-              .withColumn("h", md5(col("doc_id").cast("string")))
-              .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
+              .withColumn("__h", md5(col("doc_id").cast("string")))
+              .withColumn("__tok", when(col("__cl"),
+                size(split(col("text"), " ")).cast("long")).otherwise(lit(0L)))
               .join(broadcast(priorBase.get), Seq("source"), "left")
-              .withColumn("cum",
-                coalesce(col("t0"), lit(0L)) + sum(col("n_tok")).over(w))
-              .filter(col("cum") <= budget)
-              .drop("h", "n_tok", "t0", "cum")
-              .localCheckpoint(true)
+              .withColumn("__bk", col("__cl") &&
+                coalesce(col("t0"), lit(0L)) + sum(col("__tok")).over(w) <= budget)
+              .drop("__h", "__tok", "t0")
         }
+        // decision = FIRST failing stage in funnel order (the batch
+        // audit's drop_stage semantics, streamed): map gates, then the
+        // dedup collision gate, then decontamination, then budget; the
+        // gate names the deciding mechanism — for a near_dup the MODALITY
+        // whose band collided, `eval_gram` for decontamination,
+        // `budget` for budget rejections, none for admitted docs and
+        // map-gate decisions (which name themselves)
+        val decided = budgeted
+          .select(batch.columns.map(col) ++ Seq(
+            when(!col("__g1"), lit("holdout_excluded"))
+              .when(!col("__g2"), lit("quality_gate"))
+              .when(!col("__g3"), lit("repetition_filter"))
+              .when(col("__bk"), lit("admitted"))
+              .when(col("__cl"), lit("budget_rejected"))
+              .when(col("__dd"), lit("decontaminated"))
+              .otherwise(lit("near_dup")).as("__decision"),
+            when(!col("__g3") || col("__bk"), lit(null).cast("string"))
+              .when(col("__cl"), lit("budget"))
+              .when(col("__dd"), lit("eval_gram"))
+              .otherwise(col("__gate")).as("__gate")): _*)
+          .localCheckpoint(true)
+        val kept = decided.filter(col("__decision") === "admitted")
+          .select(batch.columns.map(col): _*)
         // ADMISSION DECISION LOG (optional, r14 — the streaming twin of
         // q_curation_audit's explainability): one row per batch doc naming
-        // the gate that decided it — "admitted", "near_dup" (dropped by the
-        // posting-index collision gate or the in-batch CC), or
-        // "budget_rejected" (dedup-survivor the mixture budget cut; its
-        // postings never commit, so a later budget raise can still admit
-        // it). Batch-bounded anti-join arithmetic over frames this body
-        // already pinned — O(batch), no extra corpus work — landed under
-        // this batch's OWN batch_id partition with dynamic overwrite, so a
-        // replay rewrites identical rows (the survivor set replays
-        // identically) and a fresh lineage lands under new keys: the log is
-        // exactly-once like every other effect here. Read it back with a
-        // plain spark.read.parquet(auditDir).
+        // its decision and deciding gate, projected straight off the
+        // decision frame and landed under this batch's OWN batch_id
+        // partition with dynamic overwrite, so a replay rewrites identical
+        // rows (the decisions replay identically) and a fresh lineage lands
+        // under new keys: the log is exactly-once like every other effect
+        // here. Read it back with a plain spark.read.parquet(auditDir).
         auditDir.foreach { ad =>
-          val dedupOk = deduped.select("doc_id")
-            .withColumn("__dd", lit(true))
-          val cleanOk = clean.select("doc_id")
-            .withColumn("__cl", lit(true))
-          val budgetOk = kept.select("doc_id")
-            .withColumn("__bk", lit(true))
-          // gate naming the deciding modality (r15 judge #7): dropGates
-          // carries (doc_id, gate) for dedup drops; budget rejections gate
-          // on "budget", decontamination on "eval_gram"; map-side gate
-          // decisions name the gate themselves; admitted docs carry none
-          val gates = dropGates.get.withColumnRenamed("gate", "__gate")
-          val withFlags = gateFlags match {
-            case Some(gf) => batch.select(col("doc_id"))
-              .join(gf, Seq("doc_id"), "left")
-            case None => batch.select(col("doc_id"))
-              .withColumn("g1", lit(true)).withColumn("g2", lit(true))
-              .withColumn("g3", lit(true))
-          }
-          // decision = FIRST failing stage in funnel order (the batch
-          // audit's drop_stage semantics, streamed): map gates, then the
-          // dedup collision gate, then decontamination, then budget
-          withFlags
-            .join(dedupOk, Seq("doc_id"), "left")
-            .join(cleanOk, Seq("doc_id"), "left")
-            .join(budgetOk, Seq("doc_id"), "left")
-            .join(gates, Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              when(!coalesce(col("g1"), lit(false)), lit("holdout_excluded"))
-                .when(!coalesce(col("g2"), lit(false)), lit("quality_gate"))
-                .when(!coalesce(col("g3"), lit(false)), lit("repetition_filter"))
-                .when(coalesce(col("__bk"), lit(false)), lit("admitted"))
-                .when(coalesce(col("__cl"), lit(false)), lit("budget_rejected"))
-                .when(coalesce(col("__dd"), lit(false)), lit("decontaminated"))
-                .otherwise(lit("near_dup")).as("decision"),
-              when(!coalesce(col("g1") && col("g2") && col("g3"), lit(false)),
-                  lit(null).cast("string"))
-                .when(coalesce(col("__bk"), lit(false)),
-                  lit(null).cast("string"))
-                .when(coalesce(col("__cl"), lit(false)), lit("budget"))
-                .when(coalesce(col("__dd"), lit(false)), lit("eval_gram"))
-                .otherwise(col("__gate")).as("gate"),
-              lit(batchKey).as("batch_id"))
+          decided.select(col("doc_id"), col("__decision").as("decision"),
+              col("__gate").as("gate"), lit(batchKey).as("batch_id"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id").parquet(ad)
@@ -1385,27 +1388,41 @@ object Streams {
             graft.etl.Warehouse.publish(spark, budgetDir,
               dir => totals.coalesce(1).write.mode("overwrite").parquet(dir))
         }
+        // a frame's distinct corpus buckets and its row count in ONE job
+        // and no exchange: each partition reports its own distinct buckets
+        // and count, so at most (partitions × buckets) ints are collected
+        // — bucket ids only, never doc rows
+        def bucketsAndCount(df: DataFrame): (Seq[Int], Long) = {
+          val parts = df.select(col(B)).as[Int].mapPartitions { it =>
+            val seen = scala.collection.mutable.Set.empty[Int]
+            var n = 0L
+            it.foreach { b => seen += b; n += 1 }
+            Iterator((seen.toSeq, n))
+          }.collect()
+          (parts.flatMap(_._1).distinct.sorted.toSeq, parts.map(_._2).sum)
+        }
         // whether THIS batch bootstrapped the IVF model (its clustering is
         // minutes old — retraining it again the same batch is pure waste)
         var ivfSeededThisBatch = false
-        if (kept.isEmpty) {
+        val docCols = kept.drop("embedding")
+          .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
+        val (candBuckets, nKept) = bucketsAndCount(docCols)
+        if (nKept == 0) {
           if (!ledgerExists) commitLedger()
         } else {
-          val docCols = kept.drop("embedding")
-            .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
-          val candBuckets =
-            docCols.select(B).distinct().collect().map(_.getInt(0)).toSeq
           val existing =
             if (BT.exists(corpusDir))
               BT.readBuckets(spark, corpusDir, candBuckets,
                 empty = kept.drop("embedding").limit(0))
             else kept.drop("embedding").limit(0)
+          // admitted docs an earlier attempt of this batch already
+          // published (a replay after the corpus commit landed) are not
+          // novel; only the novel docs' buckets rewrite
           val novel = docCols
             .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
             .localCheckpoint(true)
-          if (!novel.isEmpty) {
-            val touched =
-              novel.select(B).distinct().collect().map(_.getInt(0)).toSeq
+          val (touched, _) = bucketsAndCount(novel)
+          if (touched.nonEmpty) {
             val out = existing
               .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
               .filter(col(B).isin(touched: _*))
@@ -1430,7 +1447,7 @@ object Streams {
             // ONE frozen-model assignment feeds both the lists and the
             // composite's codes (placements mirror by construction, and
             // the argmax runs once, not once per index table); persisted
-            // because two append actions evaluate it
+            // because with the composite both appends evaluate it
             val assigned = graft.etl.AnnIndex.assignIvfLists(vecs, d)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
@@ -1450,7 +1467,9 @@ object Streams {
               }
               // drift flag for the retrain cadence below: set by every
               // append (carrying the CUMULATIVE appended-row count since
-              // the last retrain — the growth gate's numerator), cleared
+              // the last retrain — the growth gate's numerator; the
+              // assignment is one row per admitted doc, so the count is
+              // the one the bucket pass above already took), cleared
               // by a completed retrain — so cadence batches with nothing
               // new since the last retrain skip the O(corpus) re-cluster
               // instead of republishing an identical model. A crash-replay
@@ -1459,13 +1478,13 @@ object Streams {
               // over-counting only retrains marginally earlier.
               val pending = s"$d/_GRAFT_RETRAIN_PENDING"
               graft.GraftFs.default.writeString(pending,
-                (readPendingCount(pending) + assigned.count()).toString)
+                (readPendingCount(pending) + nKept).toString)
             } finally assigned.unpersist(false)
           }
           commitLedger()
           graft.etl.IncrementalDedup.commitPostings(
-            keptPosts.join(kept.select("doc_id").distinct(),
-              Seq("doc_id"), "left_semi"),
+            posts.join(broadcast(kept.select("doc_id")), Seq("doc_id"),
+              "left_semi"),
             dedupDir, Some(batchKey))
         }
         // IN-STREAM MAINTENANCE CADENCE (r11 #1 — the last unbounded-growth

@@ -50,6 +50,11 @@ class StreamingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Spark jobs an append micro-batch of the IVF-PQ corpusIngest stream
+    * below may run — its measured count, so a change that adds a pin or an
+    * exchange to the batch body fails here. */
+  private val AppendBatchJobBudget = 32
+
   private def ts(s: String) = Timestamp.valueOf(s)
   private def ev(id: Long, t: String, user: Long = 1L, typ: String = "click") =
     Ev(id, ts(t), user, typ, 1.0)
@@ -1369,6 +1374,21 @@ class StreamingSpec extends AnyFunSuite {
     // varies with (UUID-named) parquet file order across runs, and
     // unbalanced tiny clusters can land a merged local optimum that fails
     // the exact-recovery assertion below.
+    // JOB BUDGET: Spark jobs per micro-batch of this stream, keyed by
+    // (query id, batch id). The batch body decides every doc once, in one
+    // pinned frame, and derives each effect from it; batch 1 (an append:
+    // no seeding, retrain or compaction) must stay within the budget below.
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long),
+      java.util.concurrent.atomic.AtomicInteger]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties);
+             qid <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          jobs.computeIfAbsent((qid, b.toLong),
+            _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
     val q = Streams.corpusIngest(mem.toDF(), dedupDir, lshDir, corpusDir,
       ivfDir = Some(ivfDir), ivfNlist = 4, ivfRetrainEvery = 2,
       compactEvery = 3, ivfPqDir = Some(ivfPqDir), pqM = 4, pqK = 4).start()
@@ -1378,6 +1398,12 @@ class StreamingSpec extends AnyFunSuite {
         mem.addData((0 until 4).map(c => doc(i * 4L + c)): _*)
         q.processAllAvailable()
       }
+      assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext, 60000L),
+        "listener bus did not drain")
+      val appendJobs = Option(jobs.get((q.id.toString, 1L))).map(_.get).getOrElse(0)
+      assert(appendJobs > 0 && appendJobs <= AppendBatchJobBudget,
+        s"append micro-batch ran $appendJobs Spark jobs, budget $AppendBatchJobBudget " +
+          s"(jobs per (query, batch): $jobs)")
       val listsTable = s"$ivfDir/lists"
       // (a) every admitted doc's vector is in the index exactly once —
       // across bootstrap-seeded batch 0, frozen-centroid appends, retrains
@@ -1452,7 +1478,10 @@ class StreamingSpec extends AnyFunSuite {
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(served.nonEmpty && served.forall(_ % 4 == 2),
         s"composite probe must serve cluster 2's docs, got $served")
-    } finally q.stop()
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("ivfRetrainMinGrowth gates cadence retrains on corpus growth, carrying drift across skipped points") {
@@ -2113,6 +2142,43 @@ class StreamingSpec extends AnyFunSuite {
         graft.etl.Compaction.currentPath(s"$dedupDir/postings")).count()
         === postRows,
         "a re-sent all-rejected batch must not grow the dedup postings")
+    } finally q.stop()
+  }
+
+  test("corpusIngest decontamination with compaction: the eval-gram table keeps gating after it folds to its base") {
+    // every holdout doc in the FIRST batch and compactEvery = 2: batch 2
+    // folds the eval-gram table down to its `batch_id=-1` base alone, so
+    // batch 4's compaction reads a table whose only batch_id is numeric
+    // (partition inference types it int) and must still fold it
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    implicit val sqlCtx = spark.sqlContext
+    val dedupDir = Files.createTempDirectory("graft_decc_dedup").toString
+    val lshDir = Files.createTempDirectory("graft_decc_lsh").toString
+    val corpusDir = Files.createTempDirectory("graft_decc_corpus").toString
+    def emb(seed: Int): Array[Float] =
+      Array.tabulate(8)(i => math.sin(seed * 31 + i).toFloat)
+    val holdout = SourcedDoc(1, "alpha bravo charlie delta echo foxtrot", "eval", emb(1))
+    def clean(id: Long) = SourcedDoc(id,
+      (0 until 6).map(t => s"w${id}t$t").mkString(" "), "web", emb(id.toInt))
+    val mem = MemoryStream[SourcedDoc]
+    val q = Streams.corpusIngest(mem.toDF(), dedupDir, lshDir, corpusDir,
+      holdoutSources = Seq("eval"), decontaminate = true,
+      compactEvery = 2).start()
+    try {
+      val batches = Seq(Seq(holdout), Seq(clean(2)), Seq(clean(3)), Seq(clean(4)),
+        // batch 4: doc 6 shares the 4-gram "alpha bravo charlie delta"
+        Seq(clean(5), SourcedDoc(6, "zulu alpha bravo charlie delta yankee", "web", emb(6))))
+      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      val keys = spark.read
+        .parquet(graft.etl.Compaction.currentPath(s"$corpusDir/_eval_grams"))
+        .select(col("batch_id").cast("string")).distinct()
+        .collect().map(_.getString(0)).toSet
+      assert(keys === Set("-1"), s"the eval grams must have folded to the base, got $keys")
+      val corpus = graft.etl.BucketedTable.readCurrent(spark, corpusDir)
+        .collect().map(_.getAs[Long]("doc_id")).toSet
+      assert(corpus === Set(2L, 3L, 4L, 5L),
+        s"the folded eval grams must still reject the contaminated doc, got $corpus")
     } finally q.stop()
   }
 
