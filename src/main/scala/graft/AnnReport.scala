@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/report main: score all ten ANN paths on the shared planted fixture
   * ([[graft.etl.AnnQuality]]), plus the distribution-level recall table
   * (r17, judge #4) over seeded-random REAL-corpus probes at sf0.001 and
@@ -12,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object AnnReport {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("ANN_REPORT.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
     val fixture =
       graft.etl.AnnQuality.reportMarkdown(graft.etl.AnnQuality.score(spark))
     val dist = Seq("0.001", "0.1").filter(sf =>

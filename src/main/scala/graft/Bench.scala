@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark harness: per-query wall seconds on $SPARK_GRAFT_SF_DIR.
@@ -76,7 +75,7 @@ object Bench {
     * a probe median > `hardRatio`× its idle band, or top-10 spread_ratio
     * > 0.35. Suspect (r14 judge #1c) when clean but not CLEAN: any probe
     * ratio > 1.1 or spread_ratio > 0.25 — "read the total with suspicion,
-    * prefer QueryTimer adjudication" rather than silence. Bands from r15
+    * prefer the isolated re-times" rather than silence. Bands from r15
     * calibration sweeps on the target machine: idle full sweep 0.19, a
     * mildly host-contended one (total +23%, CPU probe 1.41×) 0.30, the
     * r14 contaminated artifact 0.42. The suspect spread threshold was
@@ -96,21 +95,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = SfEnv.resolve("/root/testdata/sf0.1", args.headOption)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as raw long (Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reliable-checkpoint files (pinShared under a checkpoint dir) are
-      // never deleted by default; let the ContextCleaner reclaim them
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // native function surface (cosine_similarity et al.)
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     def evalOnce(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -235,7 +220,7 @@ object Bench {
       contentionVerdict(canaryContendedRatio, canaryRatio, canaryIoRatio,
         spreadRatioV)
     // SELF-ADJUDICATION (r15 judge #1): canary v2 made a contended sweep
-    // say so, but the acceptance number still needed a judge's QueryTimer
+    // say so, but the acceptance number still needed a separate isolated
     // re-run. Close the loop in-process: on a tripped (or suspect) canary,
     // re-time the drivers of the total — the 10 slowest plus every
     // wide-spread riser — isolated and sequential AFTER the sweep (ambient
@@ -317,7 +302,7 @@ object Bench {
     // that drive the total) exceeded 0.35, the signal r14's contaminated
     // sweep carried (0.42) while its pure-CPU canary read clean.
     // suspect=true means "below the hard trip-wires but not clean: prefer
-    // QueryTimer adjudication". The idle bands USED are emitted so a
+    // the adjudicated total". The idle bands USED are emitted so a
     // consumer can tell a stale calibration (wrong machine) from real
     // contention.
     def selfPart(nReported: Int): String =

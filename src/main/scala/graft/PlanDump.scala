@@ -1,7 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev utility: dump post-AQE formatted plans for the headline queries into
@@ -9,9 +8,15 @@ import org.apache.spark.sql.execution.ExplainMode
   * (broadcasts where expected, pushdown at the scan, partial aggregation,
   * banded equi-joins, TakeOrderedAndProject — no surprises at 100 TB).
   *
-  * Usage: `sbt "runMain graft.PlanDump <sfDir> <outFile>"`. Each query is
-  * fully evaluated first (AQE final plan; a lazy plan shows no codegen
-  * spans and isFinalPlan=false).
+  * Usage: `sbt "runMain graft.PlanDump [sfDir] [outFile] [query ...]"`
+  * (defaults: sf0.001, `PLANS.md`). With no query names it writes the
+  * headline set plus one CC round under the PLANS.md header; with names it
+  * writes only those queries' sections, e.g. before/after plans of the
+  * queries a change touches. Each query is fully evaluated first (AQE final
+  * plan; a lazy plan shows no codegen spans and isFinalPlan=false), and each
+  * section carries the executed plan's stage-reuse count: shuffle/broadcast
+  * query stages in total and distinct (equal counts mean no stage is
+  * reused, so every shared subtree recomputes) and its parquet scans.
   */
 object PlanDump {
   /** Headline queries, each annotated with what its plan must show. */
@@ -63,21 +68,23 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sections = headline.map { case (name, expect) =>
+    val named = args.drop(2).toSeq
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(" ")}")
+    val spark = GraftSession.start()
+    val expected = headline.toMap
+    val sections = (if (named.isEmpty) headline.map(_._1) else named).map { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE so the dumped plan is the executed one
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      s"## `$name`\n\nExpected shape: $expect\n\n```\n${plan.trim}\n```\n"
+      val executed = df.queryExecution.executedPlan.toString
+      val stageIds = "(ShuffleQueryStage|BroadcastQueryStage) (\\d+)".r
+        .findAllMatchIn(executed).map(_.group(2)).toSeq
+      val reuse = s"stages_total=${stageIds.length} " +
+        s"stages_distinct=${stageIds.distinct.length} " +
+        s"scans=${"Scan parquet".r.findAllIn(executed).length}"
+      val expect = expected.get(name).fold("")(e => s"Expected shape: $e\n\n")
+      s"## `$name`\n\n${expect}Stage reuse: `$reuse`\n\n```\n${plan.trim}\n```\n"
     }
     val header =
       s"""# PLANS — audited physical plans for the headline queries
@@ -368,20 +375,24 @@ object PlanDump {
          |adjudicate. ScaleSmoke (35 queries, 3 SFs) green at 0 violations
          |both before and after the round's review-fix commits.
          |""".stripMargin
-    // The converged q_dedup_groups plan is only the final checkpoint scan;
-    // the per-round shape is what costs at scale, so dump ONE un-pinned
-    // round explicitly.
-    val ccDf = graft.queries.Llm.ccRoundForAudit(spark, sfDir)
-    ccDf.collect()
-    val ccSection =
-      "## `q_dedup_groups` — one CC round\n\n" +
-      "Expected shape: the loop materializes this each round — keyed " +
-      "neighbor equi-join + min hash-aggregate + pointer-jump equi-join; " +
-      "no cartesian anywhere, O(log d) rounds total.\n\n" +
-      s"```\n${ccDf.queryExecution.explainString(ExplainMode.fromString("formatted")).trim}\n```\n"
-    Files.writeString(Paths.get(out),
-      header + "\n" + (sections :+ ccSection).mkString("\n"))
-    println(s"[plandump] wrote ${headline.size + 1} plans to $out")
+    val doc =
+      if (named.nonEmpty) sections.mkString("\n")
+      else {
+        // The converged q_dedup_groups plan is only the final checkpoint
+        // scan; the per-round shape is what costs at scale, so dump ONE
+        // un-pinned round explicitly.
+        val ccDf = graft.queries.Llm.ccRoundForAudit(spark, sfDir)
+        ccDf.collect()
+        val ccSection =
+          "## `q_dedup_groups` — one CC round\n\n" +
+          "Expected shape: the loop materializes this each round — keyed " +
+          "neighbor equi-join + min hash-aggregate + pointer-jump equi-join; " +
+          "no cartesian anywhere, O(log d) rounds total.\n\n" +
+          s"```\n${ccDf.queryExecution.explainString(ExplainMode.fromString("formatted")).trim}\n```\n"
+        header + "\n" + (sections :+ ccSection).mkString("\n")
+      }
+    Files.writeString(Paths.get(out), doc)
+    println(s"[plandump] wrote ${sections.size} query plans to $out")
     spark.stop()
   }
 }

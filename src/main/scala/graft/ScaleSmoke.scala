@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-growth smoke harness: times a headline slice of the declared
   * queries at sf0.001 / sf0.01 / sf0.1 and ASSERTS sub-quadratic growth —
   * the automated version of the audit that caught the r4 `q_fuzzy_match`
@@ -30,8 +28,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Exit 0 + one JSON line on stdout when all queries hold the bound;
   * exit 1 with the offending ratios otherwise. Run:
-  *   sbt "runMain graft.ScaleSmoke"           # /root/testdata defaults
-  *   sbt "runMain graft.ScaleSmoke <base> <sf> <sf> ..."
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleSmoke"   # default base and sfs
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleSmoke <base> <sf> <sf> ..."
   */
 object ScaleSmoke {
   private val Floor = 0.3 // seconds; ~32-task stage scheduling cost at local[32]
@@ -69,16 +67,7 @@ object ScaleSmoke {
     val sfs = if (args.length > 1) args.drop(1).toSeq
               else Seq("sf0.001", "sf0.01", "sf0.1")
     require(sfs.length >= 2, "need at least two scale factors to measure growth")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     def time(name: String, dir: String): Double = {
       def once(): Double = {

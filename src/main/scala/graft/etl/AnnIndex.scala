@@ -220,6 +220,16 @@ object AnnIndex {
     else s"$indexDir/centroids"
   }
 
+  /** The `(list_id, centroid)` rows [[writeCentroids]] wrote for a lists
+    * generation, by list id. The read declares their schema, so it runs no
+    * schema-inference job. */
+  private def readCentroids(spark: SparkSession, listsRoot: String,
+                            indexDir: String): Array[(Int, Array[Double])] =
+    spark.read.schema("list_id INT, centroid ARRAY<DOUBLE>")
+      .parquet(centroidsPathFor(listsRoot, indexDir)).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+
   /** Resolve the IVF composite ONCE: the current lists generation root and
     * its paired centroid rows `(list_id, centroid)`. Probe flows that rank
     * centroids and then scan lists MUST use one snapshot for both steps —
@@ -228,9 +238,7 @@ object AnnIndex {
   def ivfSnapshot(spark: SparkSession, indexDir: String)
       : (String, Array[(Int, Array[Double])]) = {
     val root = cur(s"$indexDir/lists")
-    val cents = spark.read.parquet(centroidsPathFor(root, indexDir)).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val cents = readCentroids(spark, root, indexDir)
     (root, cents)
   }
 
@@ -1115,9 +1123,7 @@ object AnnIndex {
       : (Array[(Int, Array[Double])], Array[(Int, Array[Double])],
          Array[Array[Double]], Seq[(Int, Int, Array[Double])]) = {
     import spark.implicits._
-    val cents = spark.read.parquet(centroidsPathFor(listsRoot, ivfDir)).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val cents = readCentroids(spark, listsRoot, ivfDir)
     val means = listMeans(spark, listsRoot)
     val bcM = spark.sparkContext.broadcast(centArrOf(means))
     // the residual frame feeds two passes (moment, m k-means fits) —
@@ -1381,9 +1387,7 @@ object AnnIndex {
       if (r.nonEmpty && gfs.isDirectory(r)) r
       else cur(s"$ivfDir/lists")
     }
-    val cents = spark.read.parquet(centroidsPathFor(listsRoot, ivfDir)).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val cents = readCentroids(spark, listsRoot, ivfDir)
     (listsRoot, cents, codesRoot, books)
   }
 

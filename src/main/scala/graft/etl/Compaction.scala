@@ -305,9 +305,6 @@ object Compaction {
     compactParquet(spark, s"$indexDir/sq8", Nil, coalesceBatchKeyed = true,
       preserveBatchKeys = preserveBatchKeys,
       graceGenerations = graceGenerations, fs = fs)
-  def compactPqCodes(spark: SparkSession, indexDir: String,
-                     fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactParquet(spark, s"$indexDir/codes", Nil, fs = fs)
   /** The IVF-PQ composite's per-list code dirs ([[AnnIndex.buildIvfPq]] /
     * `appendIvfPq` — `codes/list_id=` partitioning; the `codebooks` table
     * is a single coalesced file and never fragments). Batch-coalescing like

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.queries.{Llm, LlmText}
+import graft.queries.{Exprs, Llm, LlmText}
 
 /** End-to-end corpus curation — the standard LLM training-data funnel
   * composed from the engine's declared operators, in the order a production
@@ -172,9 +172,7 @@ object CorpusPipeline {
       .withColumn("s3", col("s2") && col("n_words") >= 2 && !col("flagged"))
       .withColumn("h", md5(col("text")))
       .select("doc_id", "h", "s1", "s2", "s3")
-    val f3 =
-      if (spark.sparkContext.getCheckpointDir.isDefined) gated.checkpoint()
-      else gated.localCheckpoint(true)
+    val f3 = Exprs.pinShared(gated)
     // The pinned frame is flags + a 16-byte content hash — NOT the corpus:
     // the exact-dedup stage groups on the pinned `h` directly (no text
     // re-read), and the one stage that genuinely needs the payload

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.queries.Exprs
+
 /** TPC-DI incremental-update driver (SURVEY.md §2.10, [SPEC: incremental
   * updates]): Batches 2..N arrive as CDC record streams (`CDC_FLAG` ∈ I/U/D
   * plus a `CDC_DSN` sequence number) and fold into the current warehouse
@@ -13,12 +15,10 @@ import org.apache.spark.sql.functions._
   * Scale posture: each fold is one keyed window + one keyed anti-join
   * (Scd2.applyCdc); the per-batch report is ONE aggregation (count and
   * delete-count in the same action), and between folds the snapshot is
-  * localCheckpoint'ed so lineage stays bounded at arbitrary batch counts —
-  * without it, fold N's plan re-derives every previous fold. On a real
-  * cluster the checkpoint would go to reliable storage
-  * (`sparkContext.setCheckpointDir` + `.checkpoint()`), or each fold would
-  * be a foreachBatch upsert into a keyed-bucketed table
-  * (Streams.upsertToParquet); local[n] uses executor-local storage.
+  * pinned so lineage stays bounded at arbitrary batch counts — without it,
+  * fold N's plan re-derives every previous fold. The pin follows
+  * [[graft.queries.Exprs]]' policy: reliable storage when the session has a
+  * checkpoint dir, executor-local otherwise.
   */
 object IncrementalLoad {
 
@@ -26,22 +26,19 @@ object IncrementalLoad {
   final case class BatchReport(batch: String, n_records: Long,
                                n_upserts: Long, n_deletes: Long)
 
-  /** Fold CDC batches (in order) into the snapshot; returns the final state
-    * and one report per batch. `truncateLineage=false` keeps the fold fully
-    * lazy (useful when the caller persists/writes per fold itself). */
   /** The shared per-batch step of [[run]] and [[runAudited]] — ONE
     * definition of the envelope stats + CDC apply + lineage truncation, so
     * the audited and plain folds cannot drift. One action per batch: total
-    * and delete counts in a single pass. */
-  /** `lazyPin=true` marks the folded state for a LAZY localCheckpoint
-    * instead of an eager one — correct only when the caller runs an action
-    * over the returned frame before the next fold (runAudited's per-batch
-    * audit aggregation does exactly that), which materializes the pin in
-    * the SAME job instead of paying a separate eager-checkpoint job per
-    * batch (r18 optimization, guide §1.2: fewer passes). [[run]] keeps the
-    * eager pin: without a per-batch action, a lazy mark would let fold N's
-    * plan nest every previous fold — the recursion the checkpoint exists
-    * to cut. */
+    * and delete counts in a single pass.
+    *
+    * `lazyPin=true` pins the folded state with [[graft.queries.Exprs.pinLazy]]
+    * instead of the eager [[graft.queries.Exprs.pinShared]] — correct only
+    * when the caller runs an action over the returned frame before the next
+    * fold (runAudited's per-batch audit aggregation does exactly that),
+    * which materializes the pin in the SAME job instead of paying a
+    * separate eager-checkpoint job per batch. [[run]] keeps the eager pin:
+    * without a per-batch action, a lazy mark would let fold N's plan nest
+    * every previous fold — the recursion the checkpoint exists to cut. */
   private def foldOne(snap: DataFrame, name: String, cdc: DataFrame,
                       keyCols: Seq[String], seqCol: String, flagCol: String,
                       truncateLineage: Boolean,
@@ -53,10 +50,15 @@ object IncrementalLoad {
     val (n, nDel) = (stats.getLong(0), stats.getLong(1))
     val folded = Scd2.applyCdc(snap, cdc, keyCols, seqCol, flagCol)
     val next =
-      if (truncateLineage) folded.localCheckpoint(!lazyPin) else folded
+      if (!truncateLineage) folded
+      else if (lazyPin) Exprs.pinLazy(folded)
+      else Exprs.pinShared(folded)
     (next, BatchReport(name, n, n - nDel, nDel))
   }
 
+  /** Fold CDC batches (in order) into the snapshot; returns the final state
+    * and one report per batch. `truncateLineage=false` keeps the fold fully
+    * lazy (useful when the caller persists/writes per fold itself). */
   def run(snapshot: DataFrame, batches: Seq[(String, DataFrame)],
           keyCols: Seq[String], seqCol: String = "cdc_dsn",
           flagCol: String = "cdc_flag",

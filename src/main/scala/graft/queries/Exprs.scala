@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared oracle-parity-safe aggregate expressions (SURVEY.md §5.3).
@@ -12,6 +12,10 @@ import org.apache.spark.sql.functions._
   * and order-independent: the per-row value is computed in double (identical
   * IEEE ops on identical inputs in both engines), snapped to 6 decimal digits,
   * then summed exactly. The final cast back to double is deterministic.
+  *
+  * Also home of the one pin policy ([[pinShared]] and its variants): no
+  * other module decides between a reliable and an executor-local
+  * checkpoint.
   */
 object Exprs {
   /** Order-independent money sum, exact to 6 decimal places. Scale 6 matters:
@@ -31,29 +35,36 @@ object Exprs {
     * DAG (PLANS.md r9 adjudication: Spark's exchange reuse does not fire
     * across column-pruned consumer copies, so a shared subtree recomputes —
     * full source scans included — once per consumer). Pin only frames that
-    * are aggregate-narrow relative to their source; policy mirrors the CC
-    * operators: reliable checkpoint when the session has a checkpoint dir,
-    * executor-local otherwise.
+    * are aggregate-narrow relative to their source.
     *
-    * Sessions that DO configure a checkpoint dir should also set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (the harness
-    * builders do): reliable checkpoint files are never deleted by default,
-    * and with ~15 queries pinning per sweep a long-lived session
-    * accumulates them without bound. */
-  def pinShared(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint(true)
+    * THE pin policy, for every pin outside the stream path: a RELIABLE
+    * checkpoint when the session has a checkpoint dir (it survives executor
+    * loss on a cluster; `spark.cleaner.referenceTracking.cleanCheckpoints`,
+    * set by [[graft.GraftSession]], reclaims its files), an executor-local
+    * one otherwise (no write amplification). Both modes give identical
+    * results (LlmSpec). */
+  def pinShared(df: DataFrame): DataFrame =
+    if (reliable(df)) df.checkpoint() else df.localCheckpoint(true)
+
+  /** [[pinShared]] fused with the caller's next action: executor-local mode
+    * only MARKS the frame for a lazy checkpoint, which the caller's next
+    * action materializes in its own job instead of a separate eager
+    * checkpoint job. Correct only when that action computes every partition
+    * (a row count, a full aggregation) and runs before any other use of the
+    * frame. Under a checkpoint dir the pin stays eager: a reliable
+    * checkpoint re-computes the RDD to write it, so there is nothing to
+    * fuse. */
+  def pinLazy(df: DataFrame): DataFrame =
+    if (reliable(df)) df.checkpoint() else df.localCheckpoint(false)
 
   /** Declare-and-pin for a frame ALREADY exactly hash-partitioned on `key`
     * into `n` partitions (a `repartition(n, key)` followed only by
     * partitioning-preserving ops — same-key windows, filters, projections
     * keeping the key). The contract is the caller's to uphold; see
     * [[org.apache.spark.sql.GraftSqlBridge.withHashPartitioning]]. */
-  def pinPrePartitioned(df: org.apache.spark.sql.DataFrame, key: String, n: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val pinned =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(true)
-    org.apache.spark.sql.GraftSqlBridge.withHashPartitioning(pinned, key, n)
-  }
+  def pinPrePartitioned(df: DataFrame, key: String, n: Int): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.withHashPartitioning(pinShared(df), key, n)
+
+  private def reliable(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext.getCheckpointDir.isDefined
 }

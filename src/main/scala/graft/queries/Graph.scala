@@ -82,7 +82,7 @@ object Graph {
     // table ([[graft.etl.BucketedTable]]) — this is the in-query
     // equivalent. 5-round Pregel shape unchanged; integer ranks unchanged.
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edgesW = graft.queries.Exprs.pinPrePartitioned(
+    val edgesW = Exprs.pinPrePartitioned(
       sym.repartition(nPart, col("src")).withColumn("outdeg",
         count(lit(1)).over(Window.partitionBy("src"))), "src", nPart)
     // n_nodes is ONE bounded scalar: compute it driver-side over the
@@ -147,17 +147,14 @@ object Graph {
     // pruned copies (plan-probed: the upstream MinHash pair generation —
     // the expensive part — recomputed ~4×). Both frames are two-long-
     // column edge lists: pin once, derive everything.
-    val reliable = pairs0.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint(true)
-    val pairs = pin(pairs0)
+    val pairs = Exprs.pinShared(pairs0)
     val deg = pairs.select(col("doc_a").as("node"))
       .union(pairs.select(col("doc_b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val aFirst = // orient toward the higher-(deg, id) endpoint
       col("deg_a") < col("deg_b") ||
         (col("deg_a") === col("deg_b") && col("doc_a") < col("doc_b"))
-    val oriented = pin(pairs
+    val oriented = Exprs.pinShared(pairs
       .join(deg.select(col("node").as("doc_a"), col("deg").as("deg_a")), "doc_a")
       .join(deg.select(col("node").as("doc_b"), col("deg").as("deg_b")), "doc_b")
       .select(when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("src"),

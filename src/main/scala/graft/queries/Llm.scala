@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.etl.AnnIndex
 import graft.expr.GraftFunctions
+import graft.queries.Exprs.{pinLazy, pinShared}
 
 /** LLM-data-pipeline block (SURVEY.md §2.9, the north star) — this file
   * holds the DEDUPLICATION family (exact, MinHash-LSH, SimHash, n-gram
@@ -170,7 +171,7 @@ object Llm {
     * LlmSpec can run the FP-removal property on a crafted corpus.
     * Callers must have [[GraftFunctions.ensureRegistered]] the session. */
   private[graft] def bloomDedupFrame(docs: DataFrame): DataFrame = {
-    val d = Exprs.pinShared(docs.select(col("doc_id"), col("source"),
+    val d = pinShared(docs.select(col("doc_id"), col("source"),
       md5(concat_ws(" ", slice(split(col("text"), " "), 1, 8))).as("prefix_md5")))
     val base = d.filter(col("source") === "src0").select("prefix_md5")
     val bloom = base.stat.bloomFilter("prefix_md5", base.count() max 1000L, 0.01)
@@ -477,17 +478,10 @@ object Llm {
     * makes long near-dup chains converge inside the iteration budget.
     * Labels always reference existing nodes, so the jump join is total. */
   private[graft] def dedupGroups(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    // Lineage pinning per round. localCheckpoint blocks are EXECUTOR-local:
-    // (see also [[pinShared]] — the one-shot variant for DAG-shared frames)
-    // lose an executor mid-iteration on a real cluster and the job dies with
-    // no lineage to recompute from — fatal for a multi-hour dedup at round N.
-    // When the session has a checkpoint dir configured (HDFS/object store),
-    // pin with the RELIABLE checkpoint instead; locally the executor-local
-    // variant avoids the write amplification. Both modes are spec-asserted
-    // to produce identical components (LlmSpec).
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint(true)
+    // Lineage is pinned per round under the one pin policy (Exprs): a
+    // reliable checkpoint when the session has a checkpoint dir — losing an
+    // executor mid-iteration must not kill a multi-hour dedup at round N —
+    // executor-local otherwise.
     // Symmetrize via ONE explode over the pairs subtree instead of a union
     // of two scans of it (r19 — the pagerank construction trick, guide
     // §1.2): the union form planned the whole candidate-edge lineage
@@ -496,14 +490,12 @@ object Llm {
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // The edge pin doubles as the emptiness test: marked for a lazy local
-    // checkpoint and materialized by a row count — one job, where an eager
-    // pin plus a separate emptiness check would be two. An edge-less input
-    // (a streamed micro-batch without in-batch near-dups, the common case)
-    // then returns at once, without the label pin or a convergence round.
-    // The reliable path pins eagerly and counts the pinned data (a
-    // reliable checkpoint re-computes the RDD to write it; nothing to fuse).
-    val edges = if (reliable) pin(sym) else sym.localCheckpoint(false)
+    // The edge pin doubles as the emptiness test: a lazy pin materialized
+    // by a row count — one job, where an eager pin plus a separate
+    // emptiness check would be two. An edge-less input (a streamed
+    // micro-batch without in-batch near-dups, the common case) then returns
+    // at once, without the label pin or a convergence round.
+    val edges = pinLazy(sym)
     if (edges.rdd.count() == 0)
       return edges.select(col("src").as("doc_id"), col("src").as("group_id"))
         .limit(0)
@@ -511,7 +503,7 @@ object Llm {
     // neighbor-min, computed during the init aggregation instead of a full
     // round (one fewer checkpoint + convergence action; the fixpoint is
     // unchanged, it's just entered one hop closer).
-    var labels = pin(edges.groupBy(col("src").as("node"))
+    var labels = pinShared(edges.groupBy(col("src").as("node"))
       .agg(min(col("dst")).as("nbmin"))
       .select(col("node"), least(col("node"), col("nbmin")).as("label")))
     // FRONTIER propagation (r18 optimization, guide §2.3 "shuffle fewer
@@ -572,19 +564,15 @@ object Llm {
         .join(oneHop.select(col("node").as("label"), col("label").as("label2")),
               "label")
         .select(col("node"), col("label2").as("label"), col("prev"))
-      // FUSED pin + convergence check (r19, guide §1.2 — the
-      // IncrementalLoad.runAudited lazy-pin pattern): the round result is
-      // MARKED for a lazy local checkpoint and the changed-row COUNT is the
-      // materializing action — one job per round where the r18 shape paid
-      // an eager checkpoint job plus a separate isEmpty job. The count runs
-      // on the RDD (per-partition sizes, summed by the caller), not as a
-      // Dataset aggregate, whose single-partition exchange would cost a
-      // second job per round. It computes every partition, so the
-      // checkpoint is complete before the next round reads it. The
-      // reliable path keeps the eager pin (a reliable checkpoint
-      // re-computes the RDD to write it, so there is nothing to fuse) and
-      // counts over the pinned data.
-      val next = if (reliable) pin(jumped) else jumped.localCheckpoint(false)
+      // FUSED pin + convergence check (guide §1.2): the round result is a
+      // lazy pin and the changed-row COUNT is the materializing action —
+      // one job per round instead of an eager checkpoint job plus a
+      // separate isEmpty job. The count runs on the RDD (per-partition
+      // sizes, summed by the caller), not as a Dataset aggregate, whose
+      // single-partition exchange would cost a second job per round. It
+      // computes every partition, so the checkpoint is complete before the
+      // next round reads it.
+      val next = pinLazy(jumped)
       val nChanged = next.filter(col("label") =!= col("prev")).rdd.count()
       converged = nChanged == 0
       // changed rows double as next round's frontier — same cached scan
@@ -593,8 +581,6 @@ object Llm {
       labels = next.select("node", "label")
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged=$converged after $iter rounds")
     // Never return a silently-unconverged labeling: with pointer jumping,
     // maxIters=25 covers component diameters up to ~2^25 — hitting the cap
     // means something is structurally wrong (or maxIters was lowered), and
@@ -766,16 +752,6 @@ object Llm {
     * The final enrich joins are broadcasts against d-row / 1-row slices of
     * the pinned gram frame. */
   // ---- text analysis ------------------------------------------------------
-
-  /** Materialize a NARROW frame consumed by multiple branches of one query
-    * DAG. Spark's exchange reuse does not fire for these shapes — column
-    * pruning specializes each consumer's copy of the subtree, so the
-    * canonical plans differ and the corpus re-scans once per consumer
-    * (plan-probed: zero reused stages in the bm25/tfidf/token-count family
-    * before this). Pinning trades ONE materialization of a few-bytes-per-
-    * doc frame for k−1 corpus scans — the right trade exactly when the
-    * frame is aggregate-narrow (never pin the token stream itself). */
-  private[graft] def pinShared(df: DataFrame): DataFrame = Exprs.pinShared(df)
 
   /** §2.9 Exact set-containment join (r8) — all document pairs with word
     * 4-gram containment |A∩B| / min(|A|,|B|) ≥ 0.8: the asymmetric

@@ -158,7 +158,7 @@ object LlmMix {
         base.select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).as("n_tokens"))
       else {
-        val wf = Llm.pinShared(
+        val wf = Exprs.pinShared(
           base.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
             .groupBy("doc_id", "w").agg(count(lit(1)).as("n")))
         val wtok = graft.functions.Bpe.tokenCounts(spark, wf.select("w").distinct())
@@ -198,7 +198,7 @@ object LlmMix {
         base.select(col("doc_id"), col("lang"),
           size(split(col("text"), " ")).as("n_tokens"))
       else {
-        val wf = Llm.pinShared(
+        val wf = Exprs.pinShared(
           base.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
             .groupBy("doc_id", "w").agg(count(lit(1)).as("n")))
         val wtok = graft.functions.Bpe.tokenCounts(spark, wf.select("w").distinct())
@@ -298,7 +298,7 @@ object LlmMix {
   def qLabelBalance(spark: SparkSession, dir: String): DataFrame = {
     // |langs| rows feeding the totals AND the weight projection — pinned
     // so the corpus count scan runs once
-    val perLang = Llm.pinShared(Tables.documents(spark, dir)
+    val perLang = Exprs.pinShared(Tables.documents(spark, dir)
       .groupBy("lang").agg(count(lit(1)).as("n_docs")))
     val totals = perLang.agg(
       sum(col("n_docs")).as("n_total"), count(lit(1)).as("k_classes"))
@@ -326,7 +326,7 @@ object LlmMix {
   def qMixTemperature(spark: SparkSession, dir: String): DataFrame = {
     // |sources| rows feeding the totals AND the share projection — pinned
     // so the corpus count scan runs once
-    val per = Llm.pinShared(Tables.documents(spark, dir)
+    val per = Exprs.pinShared(Tables.documents(spark, dir)
       .groupBy("source").agg(count(lit(1)).as("n_docs"))
       .withColumn("w_micro",
         floor(sqrt(col("n_docs").cast("double")) * 1e6).cast("bigint")))

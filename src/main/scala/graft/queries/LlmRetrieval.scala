@@ -69,7 +69,7 @@ object LlmRetrieval {
     // countDistinct(doc) over the token stream) instead of re-exploding
     // the corpus; exchange reuse never fires across the pruned consumers
     // (plan-probed), so without the pin this query scanned the text 3×.
-    val tf = Llm.pinShared(tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+    val tf = Exprs.pinShared(tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(dfreq, "term")
@@ -100,7 +100,7 @@ object LlmRetrieval {
     * ONCE — one keyed aggregation computes each doc's length AND its
     * per-query-term counts as conditional sums in the same pass, and the
     * resulting per-doc frame (doc_id + |q|+1 longs — bytes per doc) is
-    * PINNED ([[pinShared]]); dl, tf, corpus stats, and the final join all
+    * PINNED ([[Exprs.pinShared]]); dl, tf, corpus stats, and the final join all
     * derive from the pinned frame. (The previous formulation declared
     * "tokens explode once" but planned five scans: exchange reuse never
     * fires across column-pruned consumers — plan-probed, zero reused
@@ -109,7 +109,7 @@ object LlmRetrieval {
     val docs = Tables.documents(spark, dir)
     val qTerms = Seq("spark", "table", "join")
     val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val perDoc = Llm.pinShared(tok.groupBy("doc_id").agg(
+    val perDoc = Exprs.pinShared(tok.groupBy("doc_id").agg(
       count(lit(1)).as("dl"),
       qTerms.map(t =>
         sum(when(col("term") === t, 1L).otherwise(0L)).as(s"tf_$t")): _*))
@@ -238,7 +238,7 @@ object LlmRetrieval {
       .limit(N)
     // bounded N-row frame feeds the rel list AND both sim-join sides: pin
     // so the data-scaled relevance scan underneath runs once, not thrice
-    val candP = Llm.pinShared(cand)
+    val candP = Exprs.pinShared(cand)
     val rels: Array[(Long, Int)] = candP.select("vec_id", "rel4")
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     val sims: Map[(Long, Long), Int] = candP.as("a")

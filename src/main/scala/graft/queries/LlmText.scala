@@ -50,7 +50,7 @@ object LlmText {
     // wf is pinned: it feeds BOTH the vocabulary pass and the count join,
     // and exchange reuse does not fire across the pruned consumers
     // (plan-probed) — unpinned, the corpus word-count aggregation ran twice
-    val wf = Llm.pinShared(Tables.documents(spark, dir)
+    val wf = Exprs.pinShared(Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("n")))
     val wtok = graft.functions.Bpe.tokenCounts(spark, wf.select("w").distinct())
@@ -378,14 +378,14 @@ object LlmText {
     // feeds two (bigram total + the scored frame); both are VOCABULARY-
     // sized, and exchange reuse does not fire across the pruned consumers
     // (plan-probed ~5 corpus passes unpinned) — pin once, derive the rest
-    val uni = Llm.pinShared(docs.select(explode(toksCol).as("w"))
+    val uni = Exprs.pinShared(docs.select(explode(toksCol).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1")))
     val totals = uni.agg(sum(col("c1")).as("cu"))
     val pairs = docs.filter(size(toksCol) >= 2)
       .select(explode(arrays_zip(slice(toksCol, lit(1), size(toksCol) - 1),
                                  slice(toksCol, lit(2), size(toksCol) - 1))).as("p"))
       .select(col("p").getField("0").as("w1"), col("p").getField("1").as("w2"))
-    val pc = Llm.pinShared(pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair")))
+    val pc = Exprs.pinShared(pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair")))
     val nb = pc.agg(sum(col("n_pair")).as("cb"))
     pc.filter(col("n_pair") >= 5)
       .join(broadcast(uni.select(col("w").as("w1"), col("c1").as("c1a"))), "w1")
@@ -519,9 +519,9 @@ object LlmText {
     // P90 cut AND the output — exchange reuse does not fire across the
     // pruned consumers (plan-probed ~4.5 passes unpinned), and both frames
     // are small (vocabulary / one row per doc)
-    val uni = Llm.pinShared(toks.groupBy("w").agg(count(lit(1)).as("c1")))
+    val uni = Exprs.pinShared(toks.groupBy("w").agg(count(lit(1)).as("c1")))
     val totals = uni.agg(sum(col("c1")).as("cu"))
-    val scored = Llm.pinShared(toks
+    val scored = Exprs.pinShared(toks
       .join(broadcast(uni), "w")
       .crossJoin(broadcast(totals))
       .groupBy("doc_id")
@@ -577,11 +577,11 @@ object LlmText {
     // frame (no lag needed), so the window itself runs exactly twice.
     val seq = toks.withColumn("w_prev",
       lag("w", 1).over(Window.partitionBy("doc_id").orderBy("pos")))
-    val uni = Llm.pinShared(toks.groupBy("w").agg(count(lit(1)).as("c1")))
+    val uni = Exprs.pinShared(toks.groupBy("w").agg(count(lit(1)).as("c1")))
     val totals = uni.agg(sum(col("c1")).as("cu"), count(lit(1)).as("v"))
     val bi = seq.filter(col("w_prev").isNotNull)
       .groupBy("w_prev", "w").agg(count(lit(1)).as("c2"))
-    val scored = Llm.pinShared(seq
+    val scored = Exprs.pinShared(seq
       .join(broadcast(uni), Seq("w")) // unigram leg: vocabulary-bounded
       .join(broadcast(uni.select(col("w").as("w_prev"),
         col("c1").as("c1_prev"))), Seq("w_prev"), "left")
@@ -624,7 +624,7 @@ object LlmText {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), (col("source") === "src0").as("pos"),
         explode(split(col("text"), " ")).as("w"))
-    val counts = Llm.pinShared(toks.groupBy("w").agg(
+    val counts = Exprs.pinShared(toks.groupBy("w").agg(
       sum(when(col("pos"), 1L).otherwise(0L)).as("cp"),
       sum(when(col("pos"), 0L).otherwise(1L)).as("cn")))
     val totals = counts.agg(sum(col("cp")).as("np"), sum(col("cn")).as("nn"),

@@ -104,7 +104,7 @@ class BenchLogicSpec extends AnyFunSuite {
       "the quiet sub-second majority is never re-timed")
     assert(picks.size <= 20, s"bounded re-time cost: ${picks.size}")
 
-    // isolated re-times: the judge's QueryTimer numbers where the sweep was
+    // isolated re-times: what an isolated re-run read where the sweep was
     // contaminated; slightly WORSE numbers where the sweep was already clean
     // (min() must keep the sweep value there)
     val iso = Map(

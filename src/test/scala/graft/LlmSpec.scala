@@ -1043,6 +1043,14 @@ class LlmSpec extends AnyFunSuite {
     def run() = Llm.dedupGroups(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val local = run()
+    // The same pin policy (Exprs) behind the other pinning paths: the
+    // triangle edge pins, the curation flag frame, pinShared,
+    // pinPrePartitioned and the CDC fold's lazy pin.
+    val pinned = Seq("q_graph_triangles", "q_corpus_curate",
+      "q_join_range_scd2", "q_pagerank", "q_cdc_batches")
+    def rows(q: String) = SparkEntry.queries(q)(spark, TestSpark.sfDir)
+      .collect().map(_.toString).sorted.toSeq
+    val localRows = pinned.map(q => q -> rows(q)).toMap
     // TestSpark is shared across suites: restore the (unset) checkpoint dir
     // afterwards so later dedupGroups calls don't silently switch modes, and
     // remove the temp checkpoint files (cleanCheckpoints defaults to false).
@@ -1053,6 +1061,12 @@ class LlmSpec extends AnyFunSuite {
       val reliable = run()
       assert(reliable === local,
         "reliable-checkpoint CC diverged from the executor-local run")
+      pinned.foreach { q =>
+        val r = rows(q)
+        assert(r.nonEmpty, s"$q: empty result proves nothing")
+        assert(r === localRows(q),
+          s"$q: reliable-checkpoint run diverged from the executor-local run")
+      }
     } finally {
       spark.sparkContext.setCheckpointDir(prev.orNull)
       import scala.jdk.CollectionConverters._

@@ -29,7 +29,7 @@ import java.nio.file.{Files, Paths}
   * exactly linearly in the copy count.
   *
   * Run (writes the replica under /tmp, ~170 MB at factor 10):
-  *   sbt 'Test/runMain graft.ScaleUp'
+  *   SPARK_GRAFT_CPUS=32 sbt 'Test/runMain graft.ScaleUp'
   * Results land in SCALE.md (committed) — one row per query with both
   * times, the growth ratio, and the 10× shuffle count vs budget.
   * Exit 1 when any contract fails.
@@ -338,17 +338,7 @@ object ScaleUp {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else s"/tmp/graft_scale$Factor"
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     // provenance marker (r17, ADVICE r16): a reused variant dir must have
     // been materialized from THIS source at THIS factor — a stale variant

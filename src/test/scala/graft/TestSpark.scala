@@ -4,28 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (never stopped — the forked test
   * JVM's exit cleans it up; stopping in an afterAll would kill it for the
-  * suites that follow). Mirrors the Verify/Bench builder configs. */
+  * suites that follow). Fixed at `local[4]` whatever `SPARK_GRAFT_CPUS`
+  * says, so plan shapes and partition counts are the same on every host. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // bucketed-table tests (WarehouseSpec) use saveAsTable; keep the managed
-    // warehouse out of the repo tree
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // events.parquet carries TIMESTAMP(NANOS); read as raw long (Tables.events)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // reliable-checkpoint files (pinShared under a checkpoint dir) are
-    // never deleted by default; let the ContextCleaner reclaim them
-    .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    // native function surface (cosine_similarity et al.)
-    .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-    .getOrCreate()
-
-  spark.sparkContext.setLogLevel("WARN")
+  lazy val spark: SparkSession = GraftSession.start(
+    GraftSession.builder(cpus = 4)
+      .appName("graft-test")
+      // bucketed-table tests (WarehouseSpec) use saveAsTable; keep the
+      // managed warehouse out of the repo tree
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_warehouse").toString),
+    logLevel = "WARN")
 
   val sfDir = "/root/testdata/sf0.001"
 }
