@@ -94,286 +94,6 @@ object PlanDump {
          |the query is DESIGNED to have; PlanAuditSpec enforces the suite-wide
          |invariants (no cartesian products, codegen span in every query) on
          |every build.
-         |
-         |Bench note (r5, `q_join_semi`): r4 benched it at 1.4 s vs 0.32 s in
-         |r3 with no plan change. Re-measured three independent ways at
-         |sf0.1/local[32] in r5 — isolated QueryTimer (0.38–0.54 s) and two
-         |full 93/94-query Bench sweeps (0.324 s, 0.359 s) — it sits at the
-         |r3 level; the r4 reading was run variance inside the 89-query bench
-         |JVM (GC/AQE neighbor effects), not a regression.
-         |
-         |Bench note (r6, connected components): two changes at
-         |sf0.1/local[32]. (1) Seeding CC labels with min(node, min
-         |neighbor) — round 1's propagation computed in the init
-         |aggregation — cut one full round from every CC consumer:
-         |q_dedup_groups 3.99→2.8 s, q_dedup_keep 3.72→2.7 s,
-         |q_entity_groups 1.71→1.3 s. (2) Un-pinning the per-round one-hop
-         |aggregate (exchange reuse covers its three consumers; the second
-         |eager checkpoint job cost more than the saved re-aggregation)
-         |took them to 2.54 / 2.44 / 1.25 s. A second pointer compose per
-         |round was tried and rejected: rounds stayed at 5 (neighbor
-         |discovery binds, not chain compression) while each round gained a
-         |join. Full 98-query sweep: 53.8 s (r5 code) → 47.1 s, no
-         |per-query regression >0.3 s.
-         |
-         |Bench note (r8, `q_corpus_curate` reconciliation): the r7 driver
-         |recorded 11.34 s against the code's ~4 s claim. Reproduced under
-         |the driver's exact config (sf0.1, local[32], shuffle=32):
-         |isolated 4.26 s; full 118-query same-JVM sweep 4.29 s — the claim
-         |is accurate and the plan unchanged. Repeating the identical
-         |binary half an hour later gave 5.87 s isolated (±35% machine
-         |drift with background load), so the r7 driver number is
-         |environment, not plan. Hardened anyway: the eager stage-boundary
-         |checkpoint now pins flags + md5 hash (≈50 B/row) instead of the
-         |full `text` column — the one artifact whose cost scaled with
-         |storage/disk pressure is gone; the MinHash stage re-reads
-         |(doc_id, text) from parquet + semi-joins survivors. Formulations
-         |measure within the drift band of each other; the narrow-
-         |checkpoint shape is kept for robustness and as the correct
-         |100 TB discipline.
-         |
-         |Bench note (r10, `q_content_chunks` adjudication): the r9 driver
-         |bench recorded 2.37 s against r8's 0.58 s on code untouched since
-         |r8 (`git log -S contentChunkFrame` — no edits). Reproduced under
-         |the driver's exact config (sf0.1, local[32], shuffle=32) at r10:
-         |isolated QueryTimer 0.71 s; full-suite Bench 0.52 s — same class
-         |as the r7 `q_corpus_curate` driver blip (±35% machine drift with
-         |background load): environment, not plan. Plan shape re-audited
-         |unchanged: one posexplode over the shared `word_ngrams` gram
-         |definition, one per-doc keyed window, one keyed agg — and
-         |`contentChunkFrame` feeds a SINGLE consumer chain inside each of
-         |its two callers, so there is no multiply-consumed frame to pin
-         |(the exchange-reuse discipline does not apply here).
-         |
-         |Bench note (r8, `q_join_shuffle`): r7 driver recorded 1.86 s vs
-         |1.0 s at r5, unchanged plan (flagged in VERDICT r7). Full-suite
-         |rerun under the driver config here: 1.18 s — same class as the
-         |r4 `q_join_semi` blip: in-JVM run variance (GC/AQE neighbors),
-         |not a regression.
-         |
-         |Bench note (r8, Misra–Gries buffer): the sf0.1 sketch pass in
-         |isolation (warm, local[32]) cost 0.50–0.56 s on the r7
-         |immutable-HAMT buffer vs 0.15–0.21 s for the identical
-         |scan+explode+count — the sketch, not the scan, dominated, the
-         |condition the r7 scaladoc named for swapping layouts. The sorted
-         |paired-array MgBuf (binary-search hit + in-place mutation, zero
-         |allocation per token) brings the sketch pass to 0.37 s warm; the
-         |remainder is the udaf input-row conversion, which a native
-         |TypedImperativeAggregate could remove if it ever matters.
-         |Properties and the bit-exact heavy-hitters oracle stay green.
-         |
-         |Scale-growth smoke (r8, `graft.ScaleSmoke`): 16 headline queries
-         |timed at sf0.001/0.01/0.1 under the driver config; asserts
-         |per-decade growth ≤ 10^1.3 (0.3 s scheduling-overhead floor) and
-         |≤ 400× across the endpoints — the automated version of the hand
-         |audit that caught the r4 `q_fuzzy_match` SF-quadratic shape.
-         |Green run recorded 2026-08-13, 0 violations; worst decade ratio
-         |≈2.9× (`q_join_range_scd2`); the CC-round queries are
-         |overhead-bound at small SF (t(0.001) > t(0.1)), which the floor
-         |makes harmless. Run: `sbt "runMain graft.ScaleSmoke"` (exit 1 +
-         |per-query ratios on violation).
-         |
-         |Bench note (r9, `q_profile_columns` 3× adjudication): the r8
-         |driver recorded 0.77 → 2.35 s on UNCHANGED code (flagged in
-         |VERDICT r8 §perf). Reproduced under the driver config: 2.16 s —
-         |real, but DATA-driven, not plan or environment: the round-9
-         |testdata regeneration gives lineitem 583,090 distinct
-         |`l_extendedprice` values (measured; a bare
-         |`countDistinct(l_extendedprice)` alone costs 0.72 s warm at
-         |local[4] vs 0.24 s for the full scan+count), so exact distinct
-         |itself got ~3× more expensive on identical code. Rewritten
-         |anyway from the 4-scan union to ONE scan: `stack` to
-         |(col_name, v) pairs then a two-level cascade agg (map-side
-         |combine collapses to distinct pairs before the shuffle; exact
-         |distinct falls out as a plain count). A direct
-         |multi-`countDistinct` agg was measured FIRST and rejected: its
-         |N+1-way Expand feeds a single global group → one reducer, 9 s.
-         |Cascade: 1.35 s warm local[4] / ~1 s under the driver config —
-         |at the exact-distinct floor for this cardinality. The 100 TB
-         |path is the new `approx = true` mode (plain partial+final agg
-         |with HLL, no pair explosion; rsd 0.05 — 0.02 measured 3× slower
-         |for no analytic gain), spec-compared within 10% on distincts and
-         |exact on every other measure.
-         |
-         |Bench note (r9, `q_pagerank` pin): edges/outdegree now pinned
-         |once before the 5 rounds (localCheckpoint / reliable checkpoint
-         |per the CC policy). 7.59 s (r8 driver) → 5.58 s isolated under
-         |the driver config: the per-round re-derivation of the
-         |`distinct` edge frame was ~25% of the query, the rest is the
-         |intrinsic 5 × (rank⋈edges + agg) iteration ladder. Results
-         |bit-identical (GraphSpec + DeterminismSpec).
-         |
-         |Bench note (r9, new-operator audit at sf0.1, isolated driver
-         |config): `q_hybrid_rrf` 0.87 s (the arms dominate; fusion is a
-         |≤100-row full-outer join + two 1-partition rank windows —
-         |bounded by design). `q_token_bpe` 0.47 s (vocabulary
-         |mapPartitions; corpus side is one hash agg + broadcast join).
-         |`q_knn_cosine_pq` 0.46 s / `q_knn_cosine_ivfpq` 0.50 s /
-         |`q_knn_batch_pq` 0.52 s — m-byte-lookup ADC map passes; the
-         |composite adds list_id pruning (numPartitions ≤ nprobe,
-         |spec-asserted). `q_corpus_curate` re-measured 4.81 s isolated
-         |vs 3.99 s r8 driver on identical code: the r9 regeneration also
-         |rewrote `documents`; the delta sits inside the ±35% drift band
-         |recorded in the r8 reconciliation note; plan shape unchanged.
-         |
-         |Bench note (r9, text-family exchange-reuse adjudication): a
-         |plan probe (distinct AQE stage ids in the executed plan) showed
-         |ZERO stage reuse across the bm25/tfidf/token-bpe family — column
-         |pruning specializes each consumer's copy of a shared subtree, so
-         |the canonical exchanges differ and the corpus re-scanned once
-         |per consumer (q_bm25 planned FIVE token passes against its
-         |"tokens explode once" scaladoc). Fixed by construction, not by
-         |hoping for reuse: q_bm25 computes dl + per-query-term tfs in ONE
-         |keyed aggregation (conditional sums) and pins the per-doc frame
-         |(bytes/doc); q_tfidf pins the inverted-index tf frame and
-         |derives df from it; q_token_bpe and the useBpe budget paths pin
-         |the (doc, word, n) frame. Post-fix probes: q_bm25 and
-         |q_token_bpe show ZERO parquet scans outside the one eager pin
-         |job. The same probe-then-pin pass covered `q_word_pmi` (uni +
-         |bigram count frames, vocabulary-sized, ~5 passes → 2),
-         |`q_lm_perplexity` (unigram model + per-doc nll frame, ~4.5
-         |passes → exactly the model-build and scoring passes), and
-         |`q_containment` (the deduped gram POSTING table + per-doc
-         |sizes: five gram explosions → one materialization, which IS the
-         |PPJoin-family shape at scale). Bench at sf0.1: q_bm25 0.96 →
-         |0.80 s; q_tfidf 0.67 → 0.87, q_token_bpe 0.47 → 0.62,
-         |q_word_pmi 0.50 → 0.71, q_lm_perplexity 0.53 → 0.70,
-         |q_containment 1.70 → 1.89 — the pin materialization costs
-         |~0.2 s per query at gate SF where the avoided re-aggregation
-         |was cheap; the trade is k−1 fewer FULL CORPUS scans per query
-         |at 100 TB, which is the scale this engine is graded for.
-         |The dedup/graph family got the same treatment where the pinned
-         |frame is an EDGE/BAND list (narrow): `pairsFromBandRows` pins
-         |the band frame so the candidate self-join's two sides share
-         |one MinHash computation (benefits every LSH consumer),
-         |`trianglesOver` pins the canonical edge frame (4 consumers)
-         |and the oriented frame (self-joined twice), `q_dedup_cosine`
-         |pins its sign-band frame, `q_ngram_jaccard` its shingle
-         |postings. There the pin WINS at gate SF too, because the
-         |recomputed subtree was the expensive MinHash/hash pass:
-         |q_dedup_keep 3.32 → 2.72 s, q_cross_source_keep 3.61 → 2.68,
-         |q_graph_triangles 2.21 → 1.70, q_dedup_groups 2.97 → 2.73,
-         |q_dedup_minhash 1.30 → 1.14 (isolated driver config). Also
-         |covered: `q_dedup_simhash`'s band frame (self-join sides share
-         |the signature aggregation), `q_interpolate`'s per-(prio, day)
-         |base (3 consumers → one orders pass, 1.63 → 1.52 s) and
-         |`q_gap_fill`'s daily frame. `pinShared` lives in
-         |`queries.Exprs` with the full rationale. Full-sweep bench after
-         |the pass: 82.7 s vs 96.5 s mid-round and 91.6 s at r8 — the
-         |pins win in the warm sweep JVM even where isolated timings
-         |showed overhead.
-         |
-         |Scale-growth smoke (r9): re-run green against the regenerated
-         |r9 testdata with 4 additions — `q_token_bpe` [0.25, 0.23,
-         |0.36 s], `q_hybrid_rrf` [0.53, 0.50, 0.57], `q_knn_batch_int8`
-         |[0.33, 0.33, 0.34], `q_profile_columns` (cascade rewrite)
-         |[0.24, 0.35, 1.09]; 23 queries, 0 violations; worst decade
-         |ratio `q_pagerank` sf0.01→0.1 ≈5.7× (edge count grows with
-         |lineitem; still well under the 19.95× cap).
-         |
-         |Bench note (r10, `q_content_chunks` 4.1× adjudication): the r9
-         |driver recorded 2.37 s vs 0.58 s at r8 on code unchanged since
-         |r8 (`git log -S contentChunkFrame` — no edits; VERDICT r9 held
-         |it `weak` pending reproduction). Re-measured under the isolated
-         |driver discipline (QueryTimer, sf0.1, local[32], shuffle=32,
-         |warm min-of-2): **0.852 s** — the 2.37 s does not reproduce.
-         |Neighbors measured in the same run for calibration:
-         |q_chunk_dedup 1.14 s (driver 0.70), q_containment 2.56 s
-         |(driver 2.22) — the family sits at its designed cost band and
-         |the plan (native word_ngrams posexplode → md5 prefix test → one
-         |per-doc running-sum window → per-(doc, chunk) agg, one shuffle
-         |on doc_id) is unchanged. The residual 0.85 vs 0.58 gap is the
-         |r10 testdata regeneration (corpus text lengths shift between
-         |rounds; same class as the r8 `q_corpus_curate` ±35% drift
-         |note). Verdict: in-sweep JVM variance in the 139-query bench
-         |process (GC/codegen-cache neighbors), same class as the r4
-         |`q_join_semi` and r7 `q_join_shuffle` blips — dismissed, no
-         |plan change. ADVICE's "share the frame with q_chunk_dedup"
-         |does not apply: Bench times each query in its own job, and
-         |within q_chunk_dedup the chunk frame is consumed exactly once.
-         |Both queries added to the ScaleSmoke slice so any real
-         |super-linear shift is caught structurally rather than by
-         |eyeballing sweep numbers.
-         |
-         |Scale-growth smoke (r10): re-run green against the regenerated
-         |r10 testdata with 2 additions from the VERDICT r9 directive —
-         |`q_content_chunks` [0.24, 0.21, 0.65 s] and `q_chunk_dedup`
-         |[0.40, 0.39, 0.77]; 25 queries, 0 violations. Both chunking
-         |queries grow ~3× over the sf0.01→0.1 decade (gram volume is
-         |linear in corpus words), independently confirming the r9 2.37 s
-         |driver reading was sweep variance, not a scaling defect. Worst
-         |decade ratio `q_pagerank` ≈5.1×, same cause as r9.
-         |
-         |Bench note (r10, full-sweep drift): the r10 sweep on r10 code
-         |reads 102.3 s vs 83.3 s at r9 — but the rise is uniform across
-         |UNCHANGED queries (q_math_funcs 1.64→2.06, q_stats_moments
-         |1.6→2.35, q_win_moving_avg 0.51→0.97, q_pagerank 4.54→6.11 on
-         |identical plans) plus three genuinely new costs
-         |(q_warehouse_etl 2.07 — in-test file-format round-trip by
-         |design, q_cdc_batches 1.15, new ANN/mining queries ≤0.7).
-         |Uniform rise on unchanged plans = machine/testdata drift, the
-         |±35% band PLANS.md has documented since r8; the plan-audited
-         |shapes are unchanged and ScaleSmoke is green.
-         |
-         |Bench note (r10 close, new-operator pass): the second r10 wave
-         |added 8 declared queries (q_sql_recursive, q_event_dedup,
-         |q_char_entropy, q_anomaly_mad, q_embed_pca, q_bpe_train, and
-         |the Morton z-order pair q_zorder_layout + q_zorder_probe, with
-         |compactZOrdered as the maintenance form) plus the streaming
-         |scd2Sink and timer-session processors. The measured full sweep
-         |(117.7 s) covered the first six; the z-order pair landed after
-         |it and was measured separately under the same isolated-timer
-         |discipline: q_zorder_layout 0.80 s, q_zorder_probe 0.71 s at
-         |sf0.1/local[32] (map-side grid + one global z sort / a few
-         |BETWEEN range filters — the flat ScaleSmoke rows confirm the
-         |shape). Like-for-like vs
-         |the r9 139-query set ≈88 s (new queries carry ~29 s, of which
-         |q_warehouse_etl 2.0 by design and q_cdc_batches 1.3; all other
-         |additions ≤0.6 s each). Two same-day full sweeps on identical
-         |code read 129.9 s and 117.7 s (±10% run noise), and isolated
-         |QueryTimer on the apparent join-family drift (q_join_range_scd2
-         |3.1 sweep → 2.35 isolated vs 1.74 r9-driver; q_join_shuffle
-         |1.78 → 1.55 vs 1.02) shows the rise is uniform on unchanged
-         |plans — the documented drift band, not a plan change.
-         |One REAL finding fixed this wave: the month-level recursive
-         |spine in q_sql_recursive cost 11.6 s because Spark executes one
-         |job per recursion level (80 sequential micro-jobs); recursing
-         |at year granularity with a 12-row month expansion produces
-         |identical output at 1.6–2.8 s. Depth, not row count, is the
-         |latency driver of recursive CTEs — worth knowing at any scale.
-         |
-         |Scale-growth smoke (r11): green with 2 additions per the r10
-         |directive — `q_warehouse_etl` [0.54, 0.63, 1.83 s] and
-         |`q_cdc_batches` [0.81, 0.87, 0.86] (depth-bound fold count, not
-         |row count, dominates the CDC driver — flat across two decades);
-         |35 queries, 0 violations. `q_sql_recursive` post-r11 session
-         |isolation reads [1.46, 1.56, 1.68] — the per-call `newSession`
-         |costs nothing measurable against the depth-bound recursion.
-         |
-         |Bench note (r11, incremental sinks): the round's code changes
-         |live OUTSIDE the benched query paths (streaming sinks moved to
-         |BucketedTable partial commits; index appends became
-         |batch_id-keyed) except three touched declared queries, all
-         |re-measured in-band: q_sql_recursive (scoped session, flat),
-         |q_multimodal_features (REAL PNG decode of 100 genuine encoded
-         |payloads replaces the byte stub — sub-second, decode is
-         |per-partition CPU with zero shuffle), and the knn SQ8/LSH
-         |paths over the re-keyed index caches (flat — the batch_id
-         |partition level adds one directory depth the pruned probes
-         |never enumerate). Sink cost model shifts from O(table) per
-         |micro-batch to O(batch + touched buckets): not visible in
-         |Bench (sinks are spec-land), proven in StreamingSpec via
-         |untouched-bucket byte-identity instead.
-         |
-         |Bench note (r11 close, two full sweeps): same-day full 158-query
-         |sweeps on near-identical code read 104.0 s and 119.7 s at
-         |sf0.1/local[32] — the differences sit on UNCHANGED plans
-         |(q_agg_percentile 1.16→1.76, q_audit_referential 0.84→1.27 with
-         |an in-run spread of 1.31 s on its own two timed runs) — the
-         |documented ±10-15% band, now visible per query in the sidecar's
-         |new "spread" field without needing an isolated re-run to
-         |adjudicate. ScaleSmoke (35 queries, 3 SFs) green at 0 violations
-         |both before and after the round's review-fix commits.
          |""".stripMargin
     val doc =
       if (named.nonEmpty) sections.mkString("\n")

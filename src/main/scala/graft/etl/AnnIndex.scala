@@ -49,9 +49,10 @@ object AnnIndex {
     * discipline as [[defaultIvfDir]]. */
   def defaultLshDir(sfDir: String, bands: Int, bits: Int): String =
     Paths.get(sys.props("java.io.tmpdir"), "graft-ann",
-      // "lshb": the r11 batch_id-partitioned layout — the key bump forces a
-      // rebuild over any stale pre-r11 flat-layout cache dir
-      s"lshb$bands-$bits-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
+      // "lshp": the band-partitioned layout (one directory per band, bkt a
+      // sorted data column) — the key bump forces a rebuild over any stale
+      // cache dir in an older layout
+      s"lshp$bands-$bits-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
 
   /** [[defaultIvfDir]]'s twin for the SQ8 (int8-quantized) scan index. */
   def defaultSq8Dir(sfDir: String): String =
@@ -1482,52 +1483,83 @@ object AnnIndex {
   /** The LSH half of the persisted-ANN story: materialize each vector's
     * random-hyperplane band buckets ([[graft.queries.Llm.rpBandBuckets]] —
     * seeded, data-independent hyperplanes) as `(vec_id, band, bkt)` posting
-    * rows written `partitionBy(band, bkt)`. At 100 TB the posting lists are
-    * directories, and a probe's multi-probe candidate fetch is a
-    * partition-PRUNED scan of `bands×(bits+1)` of `bands×2^bits` cells —
-    * the "bucket columns precomputed at ingest" layout, demonstrated. */
+    * rows written `partitionBy(band, batch_id)`, each file sorted by `bkt`.
+    * A probe's multi-probe candidate fetch reads only the probed `band=`
+    * directories (partition pruning) and pushes `bkt IN (…)` down as a data
+    * filter, so Parquet row-group min/max statistics on the sorted `bkt`
+    * column skip the rest ([[lshPostingScan]]). One directory per band, not
+    * one per `bands×2^bits` cell, keeps the file count of a write at one
+    * per band instead of one per touched cell. */
   def buildLsh(e: DataFrame, indexDir: String, bands: Int, bits: Int): Unit =
     writeLsh(e, indexDir, bands, bits, "overwrite")
 
   /** Incremental ingest: the hyperplanes are seeded and DATA-INDEPENDENT,
     * so a new batch's bucket assignment is identical whether computed at
     * build time or later — its posting rows simply land. Each ingest is
-    * O(batch) work touching only the `(band, bkt)` partition dirs the batch
-    * lands in; nothing is rebuilt, and probes immediately see old + new
-    * vectors through the same pruned scan (spec-asserted equal to a
-    * from-scratch build). This is the LSH mirror of
-    * [[IncrementalDedup]]'s posting table — including its replay story: a
-    * streaming caller passes a LINEAGE-SCOPED batch key (e.g.
-    * `<queryId prefix>-<batchId>`), the rows land under a trailing
-    * `batch_id=` partition level, and the write DYNAMICALLY overwrites
-    * exactly the (band, bkt, batch_id) cells present in the batch — an
-    * at-least-once replay rewrites its own cells instead of appending
+    * O(batch) work writing one file per band; nothing is rebuilt, and
+    * probes immediately see old + new vectors through the same pruned scan
+    * (spec-asserted equal to a from-scratch build). This is the LSH mirror
+    * of [[IncrementalDedup]]'s posting table — including its replay story:
+    * a streaming caller passes a LINEAGE-SCOPED batch key (e.g.
+    * `<queryId prefix>-<batchId>`), the rows land under a `batch_id=`
+    * partition level below `band=`, and the write DYNAMICALLY overwrites
+    * exactly the (band, batch_id) directories of the batch — an
+    * at-least-once replay rewrites its own files instead of appending
     * duplicate postings, while a fresh-checkpoint restart's restarting
     * batch numbers land under NEW keys and cannot clobber a prior
-    * lineage's cells. Ad-hoc callers (None) append under the
-    * `batch_id=-1` base level. Probes are unaffected: cell dirs stay
-    * addressable as `band=/bkt=` prefixes ([[lshPostingScan]]), with the
-    * batch level transparent below them. */
+    * lineage's files. Ad-hoc callers (None) append under the
+    * `batch_id=-1` base level.
+    *
+    * A table still in the older one-directory-per-cell layout (a `bkt=`
+    * level under `band=`, with or without `batch_id=` below it) is
+    * rewritten once into the band layout before the first append lands:
+    * the rewrite is [[Compaction.compactLshPostings]], so it publishes as
+    * a new generation and keeps `batchKey`'s rows under their own key (a
+    * replay of that batch then still overwrites them). */
   def appendLsh(batch: DataFrame, indexDir: String, bands: Int, bits: Int,
                 batchKey: Option[String] = None): Unit =
     writeLsh(batch, indexDir, bands, bits, "append", batchKey)
 
+  /** The posting table's schema: `vec_id` and `bkt` are data columns,
+    * `band` and `batch_id` are directory levels. Declared on every read, so
+    * no scan pays a schema-inference job, and `batch_id` reads as a string
+    * whatever keys the table holds. */
+  private val LshPostingSchema =
+    "vec_id BIGINT, bkt INT, band INT, batch_id STRING"
+
   private def writeLsh(e: DataFrame, indexDir: String, bands: Int, bits: Int,
                        mode: String, batchKey: Option[String] = None): Unit = {
+    if (mode == "append" && isCellLayout(cur(s"$indexDir/buckets")))
+      Compaction.compactLshPostings(e.sparkSession, indexDir,
+        preserveBatchKeys = batchKey.toSet)
     val root = cur(s"$indexDir/buckets")
-    if (batchKey.isDefined) migrateFlatLayout(root, depth = 2)
     val bk = graft.queries.Llm.rpBandBuckets(e, bands, bits)
     val bandArr = array((0 until bands).map(b => col(s"bkt$b")): _*)
+    // (band, batch_id) leads the sort, so it satisfies the writer's
+    // required ordering and Spark plans no second sort; bkt last gives each
+    // file narrow per-row-group bkt bounds
     val rows = bk
-      .select(col("vec_id"), posexplode(bandArr).as(Seq("band", "bkt")))
+      .select(col("vec_id").cast("long").as("vec_id"),
+        posexplode(bandArr).as(Seq("band", "bkt")))
       .withColumn("batch_id", lit(batchKey.getOrElse("-1")))
-      .write.partitionBy("band", "bkt", "batch_id")
+      .sortWithinPartitions("band", "batch_id", "bkt")
+      .write.partitionBy("band", "batch_id")
     (batchKey match {
       case Some(_) => rows.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
       case None => rows.mode(mode)
     }).parquet(root)
   }
+
+  /** Whether the posting table at `root` is in the one-directory-per-cell
+    * layout (`band=/bkt=/…`). Two driver listings: the root, and one band
+    * directory. */
+  private def isCellLayout(root: String): Boolean =
+    gfs.isDirectory(root) && gfs.list(root)
+      .find(d => Paths.get(d).getFileName.toString.startsWith("band=") &&
+        gfs.isDirectory(d))
+      .exists(gfs.list(_).exists(
+        Paths.get(_).getFileName.toString.startsWith("bkt=")))
 
   /** One-time in-place upgrade of a PRE-batch_id table to the r11 layout:
     * data files sitting directly in the partition-leaf directories (depth
@@ -1542,7 +1574,7 @@ object AnnIndex {
     if (!gfs.isDirectory(root)) return
     // once migrated (or verified already-batch-shaped), a durable marker
     // short-circuits the walk — without it every micro-batch would re-list
-    // the full bands x 2^bits cell tree just to find no strays
+    // the partition tree just to find no strays
     val marker = s"$root/_GRAFT_BATCH_LAYOUT"
     if (gfs.exists(marker)) return
     def leaves(p: String, d: Int): Seq[String] =
@@ -1570,15 +1602,8 @@ object AnnIndex {
     * holds the (band, bucket) pairs to visit — the probe's own buckets plus
     * its Hamming-≤radius XOR neighbors, computed driver-side from the
     * seeded hyperplanes (O(bands·bits) metadata math, data-independent).
-    *
-    * The probed cells are addressed DIRECTLY as `band=/bkt=` paths under a
-    * `basePath` — O(cells) existence checks instead of discovering the full
-    * `bands×2^bits` directory tree before pruning (measured: tree discovery
-    * cost ~1 s per query at sf0.1 locally, and on an object store a
-    * full-prefix listing is exactly the metadata storm a 100 TB probe must
-    * not make). The band/bkt partition predicate stays on the scan, so the
-    * plan still carries `PartitionFilters` over only the probed cells
-    * (plan-asserted in LlmSpec). */
+    * The scan reads only the probed bands' directories and skips row
+    * groups on `bkt` (see [[lshPostingScan]]). */
   def lshProbeScan(spark: SparkSession, indexDir: String,
                    cells: Seq[(Int, Int)]): DataFrame =
     lshPostingScan(spark, indexDir, cells).select("vec_id").distinct()
@@ -1586,20 +1611,29 @@ object AnnIndex {
   /** The raw pruned posting rows `(vec_id, band, bkt)` for a cell set —
     * [[lshProbeScan]] without the per-probe distinct, so a BATCH probe can
     * join the shared scan against a broadcast (probe, band, bkt) cell table
-    * and recover per-probe candidate sets from one read. */
+    * and recover per-probe candidate sets from one read.
+    *
+    * The probed bands' `band=` directories are addressed DIRECTLY under a
+    * `basePath` (O(bands) existence checks, never a listing of the whole
+    * table), with the declared [[LshPostingSchema]]. The cell predicate
+    * `(band = b AND bkt IN (…)) OR …` splits into a partition filter on
+    * `band` and a pushed data filter on `bkt`, which Parquet row-group
+    * statistics skip on because every file is sorted by `bkt` (both
+    * plan-asserted in LlmSpec). */
   def lshPostingScan(spark: SparkSession, indexDir: String,
                      cells: Seq[(Int, Int)]): DataFrame = {
     val base = cur(s"$indexDir/buckets")
-    val existing = cells.distinct
-      .filter { case (b, k) => gfs.exists(s"$base/band=$b/bkt=$k") }
-    if (existing.isEmpty)
+    val byBand = cells.distinct.groupBy(_._1).filter { case (b, _) =>
+      gfs.exists(s"$base/band=$b") }
+    if (byBand.isEmpty)
       return spark.range(0).select(col("id").as("vec_id"),
         lit(0).as("band"), lit(0).as("bkt"))
-    val pred = cells.groupBy(_._1).map { case (band, cs) =>
-      col("band") === band && col("bkt").isin(cs.map(_._2).distinct: _*)
+    val bands = byBand.keys.toSeq.sorted
+    val pred = bands.map { b =>
+      col("band") === b && col("bkt").isin(byBand(b).map(_._2).sorted: _*)
     }.reduce(_ || _)
-    spark.read.option("basePath", base)
-      .parquet(existing.map { case (b, k) => s"$base/band=$b/bkt=$k" }: _*)
+    spark.read.schema(LshPostingSchema).option("basePath", base)
+      .parquet(bands.map(b => s"$base/band=$b"): _*)
       .filter(pred)
       .select("vec_id", "band", "bkt")
   }

@@ -3,8 +3,8 @@ package graft.etl
 import java.nio.file.{Path, Paths}
 
 import graft.{GraftFs, NioFs}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, when}
 
 /** Small-file compaction for the append-maintained index tables — the
   * 100 TB maintenance job the incremental paths make necessary: every
@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions.col
   * Contract: compaction changes FILE LAYOUT only — the row set, the
   * partition-directory structure (so `PartitionFilters` pruning keeps
   * working), and every probe result are unchanged (spec-asserted for the
-  * LSH and dedup-posting tables).
+  * LSH and dedup-posting tables). The one exception is an LSH table still
+  * in the older per-cell layout, which [[compactLshPostings]] rewrites
+  * into the per-band layout (same rows, same probe results).
   *
   * PUBLISH = VERSIONED POINTER, not a rename swap (r12 judge #2): the
   * rewrite lands as a complete sibling generation `{path}.vN` and a one-line
@@ -100,10 +102,6 @@ object Compaction {
     }
   }
 
-  /** Rewrite the parquet table at `path` to one file per partition
-    * directory (or `numFiles` total when `partitionCols` is empty — size
-    * it to the table at scale; the default 1 fits the gate-SF indexes) and
-    * swap it into place. Returns (dataFilesBefore, dataFilesAfter). */
   /** Reclaim the garbage a crashed run can leave: legacy `.compact-*` /
     * `.old-*` swap leftovers (pre-pointer-era runs), a staged
     * `._CURRENT.tmp-*` pointer, and any FUTURE generation dir whose pointer
@@ -190,7 +188,13 @@ object Compaction {
     vacuumRetired(path, newVer, graceGenerations, fs)
   }
 
-  /** `coalesceBatchKeyed`: ONLY for the batch_id-partitioned streaming
+  /** Rewrite the parquet table at `path` to one file per partition
+    * directory (or `numFiles` total when `partitionCols` is empty — size
+    * it to the table at scale; the default 1 fits the gate-SF indexes) and
+    * publish it as the next generation. Returns (dataFilesBefore,
+    * dataFilesAfter).
+    *
+    * `coalesceBatchKeyed`: ONLY for the batch_id-partitioned streaming
     * index layouts (AnnIndex.appendLsh/appendSq8,
     * IncrementalDedup.commitPostings — the convenience wrappers below pass
     * it): compaction COALESCES the per-batch partitions into the single
@@ -218,11 +222,24 @@ object Compaction {
                      coalesceBatchKeyed: Boolean = false,
                      preserveBatchKeys: Set[String] = Set.empty,
                      graceGenerations: Int = 1,
-                     fs: GraftFs = GraftFs.default): (Long, Long) = {
+                     fs: GraftFs = GraftFs.default): (Long, Long) =
+    rewrite(spark, path, partitionCols, numFiles, coalesceBatchKeyed,
+      preserveBatchKeys, graceGenerations, fs, sortBy = Nil)(spark.read.parquet(_))
+
+  /** [[compactParquet]]'s body. `read` loads the current generation;
+    * `sortBy` columns follow the write's partition columns in each task's
+    * sort, so every file carries narrow min/max statistics on them. */
+  private def rewrite(spark: SparkSession, path: String,
+                      partitionCols: Seq[String], numFiles: Int,
+                      coalesceBatchKeyed: Boolean,
+                      preserveBatchKeys: Set[String],
+                      graceGenerations: Int, fs: GraftFs,
+                      sortBy: Seq[String])
+                     (read: String => DataFrame): (Long, Long) = {
     reclaimOrphans(path, fs)
     val src = currentPath(path, fs)
     val before = dataFileCount(src, fs)
-    val df0 = spark.read.parquet(src)
+    val df0 = read(src)
     // a pre-r11 FLAT table has no batch level yet — compact it as-is (the
     // first batch-keyed write migrates the layout; failing the maintenance
     // job on a table that compacted fine before would be a regression)
@@ -230,7 +247,6 @@ object Compaction {
       df0.columns.contains("batch_id") && !partitionCols.contains("batch_id")
     val df =
       if (coalesceBatches) {
-        import org.apache.spark.sql.functions.{lit, when}
         val folded =
           if (preserveBatchKeys.isEmpty) lit("-1")
           // compare as STRING: partition inference types an all-numeric
@@ -248,7 +264,10 @@ object Compaction {
     val repartitioned =
       if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
       else df.repartition(numFiles)
-    val writer = repartitioned.write.mode("overwrite")
+    val sorted =
+      if (sortBy.isEmpty) repartitioned
+      else repartitioned.sortWithinPartitions((writeCols ++ sortBy).map(col): _*)
+    val writer = sorted.write.mode("overwrite")
     (if (writeCols.nonEmpty) writer.partitionBy(writeCols: _*) else writer)
       .parquet(dst)
     carryHiddenDirs(src, dst, fs)
@@ -277,16 +296,28 @@ object Compaction {
     }
   }
 
-  /** [[AnnIndex]] convenience wrappers — partition columns match each
-    * index's declared layout. `graceGenerations` passes through to the
-    * publish (raise it when probes can outlive one maintenance cycle). */
+  // [[AnnIndex]] convenience wrappers — partition columns match each
+  // index's declared layout. `graceGenerations` passes through to the
+  // publish (raise it when probes can outlive one maintenance cycle).
+
+  /** The LSH posting table ([[AnnIndex.buildLsh]]): one file per band
+    * directory (per preserved batch key), its rows sorted by `bkt`, so a
+    * probe's pushed `bkt IN (…)` filter skips row groups. It also reads a
+    * table in the older one-directory-per-cell layout (`band=/bkt=/…`,
+    * with or without a `batch_id=` level) and writes it in the band
+    * layout: [[AnnIndex.appendLsh]] calls it for that one-time upgrade. */
   def compactLshPostings(spark: SparkSession, indexDir: String,
                          preserveBatchKeys: Set[String] = Set.empty,
                          graceGenerations: Int = 1,
                          fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactParquet(spark, s"$indexDir/buckets", Seq("band", "bkt"),
-      coalesceBatchKeyed = true, preserveBatchKeys = preserveBatchKeys,
-      graceGenerations = graceGenerations, fs = fs)
+    rewrite(spark, s"$indexDir/buckets", Seq("band"), numFiles = 1,
+      coalesceBatchKeyed = true, preserveBatchKeys, graceGenerations, fs,
+      sortBy = Seq("bkt")) { src =>
+      val df = spark.read.parquet(src)
+      // a table older than the batch level gets its base level here
+      if (df.columns.contains("batch_id")) df
+      else df.withColumn("batch_id", lit("-1"))
+    }
   /** IVF lists — batch-coalescing like LSH/SQ8, because a streaming
     * [[graft.stream.Streams.corpusIngest]] with an `ivfDir` feeds the lists
     * through batch-keyed [[AnnIndex.appendIvf]]; a flat ad-hoc table (no

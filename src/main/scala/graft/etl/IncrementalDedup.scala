@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Llm
+import graft.queries.Exprs.pinShared
 
 /** Continuous-ingest near-duplicate control — the 100 TB reality of dedup:
   * a corpus is never re-MinHashed per ingest; the pipeline keeps ONE
@@ -106,7 +107,7 @@ object IncrementalDedup {
                    audioCol: Option[String] = None,
                    videoCol: Option[String] = None): DataFrame = {
     val posts = postings(batch, bands, rowsPerBand, imageCol, audioCol, videoCol)
-      .localCheckpoint(true)
+      .transform(pinShared)
     // 1) drop batch docs colliding with the stored corpus (see
     // [[storedHitCells]] for the join direction)
     val survivorPosts = storedHitCells(posts, indexDir, excludeBatchKey) match {
@@ -164,7 +165,7 @@ object IncrementalDedup {
     // aggregation do not share an exchange (the probe side carries a
     // pushed-down null filter)
     val posts0 = postings(batch, bands, rowsPerBand, imageCol, audioCol, videoCol)
-      .localCheckpoint(true)
+      .transform(pinShared)
     val flagged = storedHitCells(posts0, indexDir, excludeBatchKey) match {
       case Some(cells) => posts0
         .join(broadcast(cells.withColumn("hit", lit(true))),
@@ -179,7 +180,7 @@ object IncrementalDedup {
       .withColumn("root", min(survivorId).over(byCell))
       .withColumn("crowded",
         coalesce(col("root") =!= max(survivorId).over(byCell), lit(false)))
-      .localCheckpoint(true)
+      .transform(pinShared)
     val edges = posts.filter(!col("doc_hit") && col("doc_id") =!= col("root"))
       .select(col("root").as("doc_a"), col("doc_id").as("doc_b"))
     val ccDrop = Llm.dedupGroups(edges)
@@ -236,7 +237,7 @@ object IncrementalDedup {
         // the signed-docs anti-join below — without the checkpoint every
         // image would be PNG-decoded and dHashed twice per batch
         graft.sources.Multimodal.imagePostingRows(batch, c)
-          .localCheckpoint(true)
+          .transform(pinShared)
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")
@@ -251,7 +252,7 @@ object IncrementalDedup {
           s"IncrementalDedup: audioCol '$c' is not a column of the batch " +
             s"(columns: ${batch.columns.mkString(", ")})")
         graft.sources.Multimodal.audioPostingRows(batch, c)
-          .localCheckpoint(true)
+          .transform(pinShared)
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")
@@ -266,7 +267,7 @@ object IncrementalDedup {
           s"IncrementalDedup: videoCol '$c' is not a column of the batch " +
             s"(columns: ${batch.columns.mkString(", ")})")
         graft.sources.Multimodal.videoPostingRows(batch, c)
-          .localCheckpoint(true)
+          .transform(pinShared)
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")

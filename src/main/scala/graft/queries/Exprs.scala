@@ -37,12 +37,12 @@ object Exprs {
     * full source scans included — once per consumer). Pin only frames that
     * are aggregate-narrow relative to their source.
     *
-    * THE pin policy, for every pin outside the stream path: a RELIABLE
+    * THE pin policy for every pin, batch and stream alike: a RELIABLE
     * checkpoint when the session has a checkpoint dir (it survives executor
     * loss on a cluster; `spark.cleaner.referenceTracking.cleanCheckpoints`,
     * set by [[graft.GraftSession]], reclaims its files), an executor-local
     * one otherwise (no write amplification). Both modes give identical
-    * results (LlmSpec). */
+    * results (LlmSpec; StreamingSpec for the corpus ingest). */
   def pinShared(df: DataFrame): DataFrame =
     if (reliable(df)) df.checkpoint() else df.localCheckpoint(true)
 

@@ -728,29 +728,6 @@ object Llm {
         coalesce(col("dropped"), lit(false)).as("dropped"))
   }
 
-  // ---- similarity search --------------------------------------------------
-
-  /** §2.9 Brute-force top-k cosine similarity vs a probe vector (vec_id 0):
-    * the exact baseline the ANN variant is tested against. */
-  /** §2.9 Feature covariance over the embedding corpus — the PCA/whitening
-    * prep statistic (and the input to every "decorrelate features before
-    * OPQ/IVF training" step). Computed with the augmented-Gram trick: each
-    * vector is prepended with a constant 1.0, so ONE map-side outer-product
-    * pass yields count (cell 0,0), per-dimension first moments (row 0) and
-    * second moments (the rest) simultaneously — covariance then derives
-    * entirely from the tiny d²-row aggregate, with no second scan for the
-    * means. The pass is two chained generators (posexplode of the vector,
-    * then posexplode of its tail slice — upper triangle only, d(d+1)/2
-    * products per row instead of d²) feeding a hash aggregation whose
-    * map-side partials reduce each partition to ≤ 2,145 rows before the
-    * only shuffle. No self-join: the naive ex⋈ex-on-vec_id formulation
-    * shuffles the exploded corpus twice; this shape shuffles ~2 k rows per
-    * partition regardless of corpus size. Products floor-snap to integer
-    * micro-units BEFORE the long sum (order-independent under any
-    * partitioning, SURVEY §5.3); the derived covariance is computed from
-    * those exact longs in an identical expression tree in both engines.
-    * The final enrich joins are broadcasts against d-row / 1-row slices of
-    * the pinned gram frame. */
   // ---- text analysis ------------------------------------------------------
 
   /** §2.9 Exact set-containment join (r8) — all document pairs with word

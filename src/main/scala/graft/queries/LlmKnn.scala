@@ -85,7 +85,7 @@ object LlmKnn {
   /** §2.9 RP-LSH ANN (no-oracle; recall + candidate-fraction asserted in
     * LlmSpec): coarse stage fetches candidates from the PERSISTED posting
     * lists ([[graft.etl.AnnIndex.ensureLsh]] — built once at ingest,
-    * `partitionBy(band, bkt)`), probing the probe's own 3×8-bit
+    * `partitionBy(band, batch_id)`, each file sorted by `bkt`), probing the probe's own 3×8-bit
     * random-hyperplane buckets plus every Hamming-1 XOR neighbor
     * (multi-probe); fine stage re-ranks the survivors by exact codegen'd
     * cosine.
@@ -93,9 +93,10 @@ object LlmKnn {
     * Scale shape — the same contract as the IVF twin: the query path never
     * hashes the corpus. `ensureLsh` is a metadata-only marker check after
     * the one-time build; probe-cell selection is O(bands·bits) driver math
-    * over the probe's own bucket row; the candidate fetch is a
-    * partition-PRUNED scan of `bands×(bits+1)` of `bands×2^bits` posting
-    * directories (plan-asserted in LlmSpec, which also proves the pruned
+    * over the probe's own bucket row; the candidate fetch reads only the
+    * probed bands' posting directories and skips row groups whose `bkt`
+    * range holds none of the `bands×(bits+1)` probed buckets
+    * (plan-asserted in LlmSpec, which also proves the pruned
     * candidate set identical to the in-query [[knnLshCandidates]] path and
     * the appended-index probe identical to a from-scratch build). Recall is
     * similarity-dependent (LSH property): near-duplicates
@@ -144,9 +145,10 @@ object LlmKnn {
     * Scale shape: all probes' own band buckets compute in ONE job over the
     * seeded data-independent hyperplanes (m rows — vs m 1-row jobs);
     * multi-probe cell expansion is O(m·bands·bits) driver metadata math;
-    * the candidate fetch is one partition-pruned scan of the UNION of all
-    * probed cells ([[graft.etl.AnnIndex.lshPostingScan]] — direct
-    * `band=/bkt=` path addressing, no directory-tree discovery), joined to
+    * the candidate fetch is one scan of the UNION of all probed cells
+    * ([[graft.etl.AnnIndex.lshPostingScan]] — only the probed `band=`
+    * directories, addressed directly, with `bkt IN (…)` pushed down so
+    * Parquet row-group statistics skip the unprobed buckets), joined to
     * a broadcast (probe_id, band, bkt) cell table so each posting row fans
     * out only to the probes whose cells it sits in; scoring re-ranks each
     * probe's distinct candidates by exact codegen cosine and cuts per probe

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, Group
   GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues,
   TTLConfig, ValueState}
 
-import graft.queries.Exprs.moneySum
+import graft.queries.Exprs.{moneySum, pinShared}
 
 /** Typed event row for the custom-state operators (schema of the `events`
   * table; top-level so Encoders derive cleanly). */
@@ -383,7 +383,7 @@ object Streams {
     // starved-probe anti-join — unpinned, the serve plan would execute twice
     val served = answers.withColumn("n_candidates",
         count(lit(1)).over(Window.partitionBy("probe_id")))
-      .localCheckpoint(true)
+      .transform(pinShared)
     val starved = probeIds.toDF("probe_id")
       .join(served.select("probe_id"), Seq("probe_id"), "left_anti")
       .withColumn("vec_id", lit(null).cast("long"))
@@ -529,7 +529,7 @@ object Streams {
       .filter(col("__rn") === 1)
       .drop("__rn")
       .withColumn(B, graft.etl.BucketedTable.bucketExpr(keyCols, nBuckets))
-      .localCheckpoint(true)
+      .transform(pinShared)
     // bounded driver metadata: at most nBuckets distinct ids
     val touched = latest.select(B).distinct().collect().map(_.getInt(0)).toSeq
     if (touched.nonEmpty) {
@@ -741,7 +741,7 @@ object Streams {
     val B = graft.etl.BucketedTable.BucketCol
     val bb = batch
       .withColumn(B, graft.etl.BucketedTable.bucketExpr(keyCols, nBuckets))
-      .localCheckpoint(true)
+      .transform(pinShared)
     val touched = bb.select(B).distinct().collect().map(_.getInt(0)).toSeq
     if (touched.nonEmpty) {
       val empty = batch.drop(seqCol, flagCol)
@@ -757,6 +757,17 @@ object Streams {
       graft.etl.BucketedTable.commit(spark, statePath, nBuckets, touched,
         dir => next.write.mode("overwrite").partitionBy(B).parquet(dir))
     }
+  }
+
+  /** The `_GRAFT_RETRAIN_PENDING` drift flag's payload: the cumulative
+    * appended-row count since the last retrain. Absent/legacy-empty/
+    * unparsable reads as 0 — which the growth gate treats as UNKNOWN
+    * growth and retrains (the conservative direction). One parser for
+    * both the increment and the gate, so the format cannot skew. */
+  private def readPendingCount(p: String): Long = {
+    val fs = graft.GraftFs.default
+    if (!fs.exists(p)) 0L
+    else scala.util.Try(fs.readString(p).trim.toLong).getOrElse(0L)
   }
 
   /** CONTINUOUS CORPUS INGEST — the end-to-end composition of the engine's
@@ -826,7 +837,7 @@ object Streams {
     * Maintenance: `vacuumEvery = n` reclaims superseded corpus bucket
     * versions and `_budget` ledger snapshots every n-th batch;
     * `compactEvery = m` folds the accumulated per-batch `batch_id=`
-    * index fragments (LSH cells, SQ8 table, dedup postings) into their
+    * index fragments (LSH bands, SQ8 table, dedup postings) into their
     * `batch_id=-1` base every m-th batch — preserving the in-flight
     * batch's own partitions for replay safety (see the in-line note).
     * With both set, steady-state on-disk footprint is O(live data +
@@ -931,17 +942,6 @@ object Streams {
     * streamed quantized scans without the second model takes `sq8Dir`
     * (data-independent, no retrain to run); one that wants PQ takes the
     * composite. */
-  /** The `_GRAFT_RETRAIN_PENDING` drift flag's payload: the cumulative
-    * appended-row count since the last retrain. Absent/legacy-empty/
-    * unparsable reads as 0 — which the growth gate treats as UNKNOWN
-    * growth and retrains (the conservative direction). One parser for
-    * both the increment and the gate, so the format cannot skew. */
-  private def readPendingCount(p: String): Long = {
-    val fs = graft.GraftFs.default
-    if (!fs.exists(p)) 0L
-    else scala.util.Try(fs.readString(p).trim.toLong).getOrElse(0L)
-  }
-
   def corpusIngest(docs: DataFrame, dedupDir: String, lshDir: String,
                    corpusDir: String, lshBands: Int = 3, lshBits: Int = 8,
                    sq8Dir: Option[String] = None,
@@ -1108,7 +1108,7 @@ object Streams {
               case (true, true) => g4.unionByName(a10)
               case (true, false) => g4
               case _ => a10
-            }).localCheckpoint(true))
+            }).transform(pinShared))
           }
         // ── NEAR-DUP GATE: the batch's posting rows pinned once, with the
         // stored-index evidence and the in-batch components; the per-doc
@@ -1156,7 +1156,7 @@ object Streams {
               }
             }
             val evalG = storedGrams.unionByName(holdoutGrams.get).distinct()
-              .localCheckpoint(true)
+              .transform(pinShared)
             // per-grain hit tests: each grain's doc-side unit matches its
             // eval-side unit (4-grams vs g4 rows, sliding 10-gram anchors
             // vs a10 rows) — O(batch) gram frames semi-joined against the
@@ -1312,7 +1312,7 @@ object Streams {
               .when(col("__cl"), lit("budget"))
               .when(col("__dd"), lit("eval_gram"))
               .otherwise(col("__gate")).as("__gate")): _*)
-          .localCheckpoint(true)
+          .transform(pinShared)
         val kept = decided.filter(col("__decision") === "admitted")
           .select(batch.columns.map(col): _*)
         // ADMISSION DECISION LOG (optional, r14 — the streaming twin of
@@ -1420,7 +1420,7 @@ object Streams {
           // novel; only the novel docs' buckets rewrite
           val novel = docCols
             .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
+            .transform(pinShared)
           val (touched, _) = bucketsAndCount(novel)
           if (touched.nonEmpty) {
             val out = existing
@@ -1490,9 +1490,9 @@ object Streams {
         // IN-STREAM MAINTENANCE CADENCE (r11 #1 — the last unbounded-growth
         // path): without it, every micro-batch leaves (a) one superseded
         // `_budget` ledger version, (b) superseded corpus bucket versions,
-        // and (c) one `batch_id=` parquet fragment per touched LSH cell /
-        // SQ8 table / posting table — all O(batches) forever, and since
-        // batch_id sits BELOW the band/bkt prune level, a pruned probe's
+        // and (c) one `batch_id=` parquet fragment per LSH band / SQ8
+        // table / posting table — all O(batches) forever, and since
+        // batch_id sits BELOW the band prune level, a pruned probe's
         // file-open cost grows linearly with batch count. Runs on the
         // sink's own thread AFTER the batch's commits (no writer race —
         // same single-writer discipline as upsertToParquet's vacuumEvery).

@@ -43,7 +43,7 @@ class CompactionSpec extends AnyFunSuite {
     val after = AnnIndex.lshPostingScan(spark, idx, cells)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
     assert(after === before, "compaction must not change the posting row set")
-    // direct band=/bkt= path addressing still works: the partition layout
+    // direct band= path addressing still works: the partition layout
     // survived the rewrite (lshPostingScan just proved it by reading paths)
     val aCell = AnnIndex.lshPostingScan(spark, idx, Seq(before.head._2 -> before.head._3))
     assert(aCell.collect().nonEmpty)

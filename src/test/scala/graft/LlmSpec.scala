@@ -962,14 +962,20 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(got === expected,
       "persisted-index candidate set diverges from the in-query LSH path")
-    // pruning proof: the posting scan reads at most |cells| of 3*256 dirs
+    // pruning proof: the posting scan reads only the probed bands' (band,
+    // batch_id) partitions — one batch level per band after a build — and
+    // pushes bkt down as a data filter for row-group skipping
     val postingScans = fileScans(probe.queryExecution.executedPlan)
       .filter(_.metadata.getOrElse("PartitionFilters", "").contains("band"))
     assert(postingScans.nonEmpty, "no partition-filtered scan over the posting lists")
+    val probedBands = cells.map(_._1).distinct.size
     postingScans.foreach { s =>
       val read = s.metrics("numPartitions").value
-      assert(read <= cells.distinct.size,
-        s"posting scan read $read cells — expected ≤ ${cells.distinct.size} of 768")
+      assert(read <= probedBands,
+        s"posting scan read $read partitions — expected ≤ $probedBands probed bands")
+      val dataFilters = s.metadata.getOrElse("DataFilters", "")
+      assert(dataFilters.contains("bkt"),
+        s"bkt is not a pushed data filter of the posting scan: $dataFilters")
     }
   }
 

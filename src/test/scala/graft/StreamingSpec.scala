@@ -1300,27 +1300,18 @@ class StreamingSpec extends AnyFunSuite {
         .parquet(graft.etl.Compaction.currentPath(s"$lshDir/buckets"))
         .select("vec_id").distinct().count() === nBatches * 2L)
       // (d2) READER-side proof of the cadence: a pruned LSH probe of every
-      // populated cell OPENS O(cadence) files per cell — base + at most
-      // compactEvery un-folded batch levels — never O(batches). All docs
-      // share one embedding, so each populated cell was appended to by all
-      // six batches: without the in-stream compaction this probe would open
-      // ≥ nBatches files per cell and the bound below would fail.
-      val lshRoot = graft.etl.Compaction.currentPath(s"$lshDir/buckets")
-      val cells = {
-        val s = Files.list(Paths.get(lshRoot))
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("band=")).toSeq.flatMap { bd =>
-            val b = bd.stripPrefix("band=").toInt
-            val s2 = Files.list(Paths.get(lshRoot, bd))
-            try s2.iterator().asScala.map(_.getFileName.toString)
-              .filter(_.startsWith("bkt=")).toSeq
-              .map(kd => (b, kd.stripPrefix("bkt=").toInt))
-            finally s2.close()
-          }
-        finally s.close()
-      }
+      // populated cell OPENS O(cadence) files per probed band — base + at
+      // most compactEvery un-folded batch levels — never O(batches). All
+      // docs share one embedding, so every band was appended to by all six
+      // batches: without the in-stream compaction this probe would open
+      // ≥ nBatches files per band and the bound below would fail.
+      val cells = spark.read
+        .parquet(graft.etl.Compaction.currentPath(s"$lshDir/buckets"))
+        .select("band", "bkt").distinct().collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSeq
       assert(cells.nonEmpty)
       val probe = graft.etl.AnnIndex.lshPostingScan(spark, lshDir, cells)
+      assert(probe.select("vec_id").distinct().count() === nBatches * 2L)
       probe.collect()
       import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -1332,9 +1323,10 @@ class StreamingSpec extends AnyFunSuite {
       val opened = scans(probe.queryExecution.executedPlan)
         .map(_.metrics("numFiles").value).sum
       val compactEvery = 2
-      assert(opened <= cells.size * (1L + compactEvery),
-        s"pruned probe opened $opened files over ${cells.size} cells — " +
-          s"cadenced compaction must bound per-cell files by 1+compactEvery, " +
+      val bands = cells.map(_._1).distinct.size
+      assert(opened <= bands * (1L + compactEvery),
+        s"pruned probe opened $opened files over $bands bands — " +
+          s"cadenced compaction must bound per-band files by 1+compactEvery, " +
           s"not O(batches)")
       val ledger = graft.etl.Warehouse.readCurrent(spark, s"$corpusDir/_budget")
         .collect().map(r => (r.getAs[String]("source"), r.getAs[Long]("cum_tokens")))
@@ -1816,6 +1808,53 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(_.getAs[Long]("doc_id")).toSet === corpusIds,
         "the re-sent batch must admit nothing new")
     } finally q.stop()
+  }
+
+  test("corpusIngest pins under a checkpoint dir: reliable and executor-local runs decide and publish identically") {
+    // the stream path pins through Exprs.pinShared, so a session with a
+    // checkpoint dir writes reliable checkpoints; the decisions must not
+    // depend on which kind of pin backs the micro-batch frames
+    import java.nio.file.Files
+    implicit val sqlCtx = spark.sqlContext
+    def emb(seed: Int): Array[Float] =
+      Array.tabulate(8)(i => math.sin(seed * 31 + i).toFloat)
+    def doc(id: Long, text: String) = SourcedDoc(id, text, "A", emb(id.toInt))
+    val batches = Seq(
+      Seq(doc(1, "alpha bravo charlie delta echo"),
+        doc(2, "foxtrot golf hotel india juliet")),
+      Seq(doc(3, "alpha bravo charlie delta echo"), // near_dup of doc 1
+        doc(4, "kilo lima mike november oscar"),    // one of 4/5 busts the
+        doc(5, "papa quebec romeo sierra tango")))  // 15-token budget
+    def run(): (Seq[(Long, String, String)], Set[Long]) = {
+      val root = Files.createTempDirectory("graft_pin_ingest").toString
+      val mem = MemoryStream[SourcedDoc]
+      val q = Streams.corpusIngest(mem.toDF(), s"$root/dedup", s"$root/lsh",
+        s"$root/corpus", budgetPerSource = Some(15L),
+        auditDir = Some(s"$root/audit")).start()
+      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      val log = spark.read.parquet(s"$root/audit").collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("decision"),
+          r.getAs[String]("gate"))).sortBy(_._1).toSeq
+      (log, graft.etl.BucketedTable.readCurrent(spark, s"$root/corpus")
+        .collect().map(_.getAs[Long]("doc_id")).toSet)
+    }
+    val local = run()
+    assert(local._1.map(_._1) === Seq(1L, 2L, 3L, 4L, 5L))
+    assert(local._1.map(_._2).toSet === Set("admitted", "near_dup", "budget_rejected"))
+    // TestSpark is shared across suites: restore the previous checkpoint dir
+    val prev = spark.sparkContext.getCheckpointDir
+    val tmp = Files.createTempDirectory("graft_pin_ckpt")
+    try {
+      spark.sparkContext.setCheckpointDir(tmp.toString)
+      assert(run() === local,
+        "reliable-checkpoint ingest diverged from the executor-local run")
+    } finally {
+      spark.sparkContext.setCheckpointDir(prev.orNull)
+      import scala.jdk.CollectionConverters._
+      Files.walk(tmp).iterator().asScala.toSeq.reverse
+        .foreach(Files.deleteIfExists(_))
+    }
   }
 
   test("corpusIngest with ALL FOUR modalities on one stream: each evidence channel gates independently in one posting table") {
