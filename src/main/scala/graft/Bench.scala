@@ -149,8 +149,9 @@ object Bench {
     }
     def canaryIoOnce(): Double = {
       val t0 = System.nanoTime()
-      // fresh relation each sample (no plan/statistics caching); hash(*)
-      // forces every column through the parquet decoder
+      // fresh relation each sample (no plan/statistics caching), so a raw
+      // read that also pays schema inference, not the Tables.load memo;
+      // hash(*) forces every column through the parquet decoder
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .selectExpr("sum(hash(*))").collect()
       (System.nanoTime() - t0) / 1e9
@@ -332,7 +333,7 @@ object Bench {
             referenceSec.map(r =>
               s""","vs_reference_adjudicated":${sec(t / r, 2)}""").getOrElse("")
         }.getOrElse("")
-    def render(dp: Int, withSpread: Boolean = false): String = {
+    def render(dp: Int, withSpread: Boolean): String = {
       val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + sec(v, dp) }
         .mkString("{", ",", "}")
       // per-query |run1 - run2|: sidecar-only (no stdout line budget there)

@@ -85,6 +85,10 @@ trait GraftFs extends Serializable {
   def copy(src: String, dst: String): Unit
   def size(path: String): Long
   def lastModifiedMillis(path: String): Long
+  /** Size+mtime stamp of `path`: it changes when the object is rewritten,
+    * so it keys anything derived from the content ([[Tables.load]]'s schema
+    * memo, [[graft.etl.WarehouseEtl]]'s extract directory). */
+  def fingerprint(path: String): String = s"${size(path)}-${lastModifiedMillis(path)}"
   /** Streaming read for container formats (Avro) — whole-object GET. */
   def openRead(path: String): java.io.InputStream
   /** Streaming write for container formats (parents created; truncate).

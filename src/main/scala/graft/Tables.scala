@@ -2,10 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md, FIXTURES.md §A).
   *
-  * Parquet carries its own schema, so no inference risk; explicit StructTypes are
+  * Parquet carries its own schema, but resolving it costs a one-stage Spark
+  * job plus driver-side footer work on every `spark.read.parquet`. A base
+  * table stored as one regular file is therefore inferred once and read
+  * afterwards with that schema: the memo is keyed on the path, the file's
+  * size+mtime [[GraftFs.fingerprint]] and the session confs that change
+  * parquet inference, so a file rewritten in place or a flipped conf infers
+  * afresh. A directory-form table (or any path that is not one regular
+  * file) infers on every load, as Spark does. Explicit StructTypes are
   * reserved for the text-format ingest paths in [[graft.etl]] where they are
   * mandatory (TPC-DI sources are header-less delimited / fixed-width text).
   *
@@ -18,8 +26,30 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Session confs that change the schema parquet inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[String]), StructType]()
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val fs = GraftFs.default
+    if (!fs.isFile(path)) return spark.read.parquet(path)
+    val key = (path, fs.fingerprint(path), inferenceConfs.map(spark.conf.get))
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        // concurrent first loads may both infer; they store the same schema
+        val df = spark.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+    }
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "nation")
@@ -31,8 +61,8 @@ object Tables {
 
   /** events.parquet stores `ts` as INT64 TIMESTAMP(NANOS), which Spark's parquet
     * reader rejects outright. Read it as a raw long (requires the session conf
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set by the Verify/Bench
-    * session builders and the test harness — NOT here: loaders stay pure) and
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, which [[GraftSession]]
+    * sets for every session — NOT here: loaders stay pure) and
     * convert to a microsecond TimestampType with exact integer division —
     * double division would lose precision above 2^53 ns.
     *

@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.{Llm, LlmKnn}
+import graft.queries.LlmKnn
 
 /** Unified ANN quality harness (r10): ONE planted-near-dup fixture, ONE
   * scoring pass over all ten ANN paths (five single-probe + five batch

@@ -663,7 +663,7 @@ object BucketedTable {
     * a duplicate column). Renaming a bucket-KEY column is also the
     * caller's to avoid — readers derive placement from the read schema.
     * Quiet-window contract like every maintenance entry point. */
-  def evolveRenameColumn(spark: SparkSession, tableDir: String,
+  def evolveRenameColumn(tableDir: String,
                          from: String, to: String): Long = {
     require(from != to, "rename to the same name is a no-op; skip it")
     require(Seq(from, to).forall(n =>
@@ -775,7 +775,7 @@ object BucketedTable {
     * column — the hash placement would no longer be derivable from the
     * read schema. Quiet-window contract like every maintenance entry
     * point. */
-  def evolveDropColumn(spark: SparkSession, tableDir: String,
+  def evolveDropColumn(tableDir: String,
                        name: String): Long = {
     require(!name.contains('\t') && !name.contains('\n'),
       "column names must not contain tabs/newlines (manifest format)")
@@ -818,7 +818,7 @@ object BucketedTable {
     * whose missing directory reads as zero rows). A crash before the
     * pointer rename leaves an unreferenced version directory — invisible
     * to readers, reclaimed by [[vacuum]]. */
-  def commit(spark: SparkSession, tableDir: String, nBuckets: Int,
+  def commit(tableDir: String, nBuckets: Int,
              touched: Seq[Int], write: String => Unit,
              lease: Option[WriterLease] = None): Long = {
     require(touched.nonEmpty, "commit with no touched buckets is a no-op; skip it")

@@ -223,13 +223,13 @@ object Compaction {
                      preserveBatchKeys: Set[String] = Set.empty,
                      graceGenerations: Int = 1,
                      fs: GraftFs = GraftFs.default): (Long, Long) =
-    rewrite(spark, path, partitionCols, numFiles, coalesceBatchKeyed,
+    rewrite(path, partitionCols, numFiles, coalesceBatchKeyed,
       preserveBatchKeys, graceGenerations, fs, sortBy = Nil)(spark.read.parquet(_))
 
   /** [[compactParquet]]'s body. `read` loads the current generation;
     * `sortBy` columns follow the write's partition columns in each task's
     * sort, so every file carries narrow min/max statistics on them. */
-  private def rewrite(spark: SparkSession, path: String,
+  private def rewrite(path: String,
                       partitionCols: Seq[String], numFiles: Int,
                       coalesceBatchKeyed: Boolean,
                       preserveBatchKeys: Set[String],
@@ -310,7 +310,7 @@ object Compaction {
                          preserveBatchKeys: Set[String] = Set.empty,
                          graceGenerations: Int = 1,
                          fs: GraftFs = GraftFs.default): (Long, Long) =
-    rewrite(spark, s"$indexDir/buckets", Seq("band"), numFiles = 1,
+    rewrite(s"$indexDir/buckets", Seq("band"), numFiles = 1,
       coalesceBatchKeyed = true, preserveBatchKeys, graceGenerations, fs,
       sortBy = Seq("bkt")) { src =>
       val df = spark.read.parquet(src)

@@ -64,7 +64,7 @@ object Warehouse {
     * The snapshot dir is pre-created to claim its number, so `write` must
     * use `mode("overwrite")` (or any writer tolerant of an existing empty
     * dir). */
-  def publish(spark: SparkSession, tableDir: String,
+  def publish(tableDir: String,
               write: String => Unit, fs: GraftFs = GraftFs.default): Long = {
     val version = claimVersion(tableDir, fs)
     write(s"$tableDir/v=$version")

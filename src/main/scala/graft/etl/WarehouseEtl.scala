@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.Tables
+import graft.{GraftFs, Tables}
 import graft.queries.Exprs.pinShared
 
 /** The composed TPC-DI load as ONE declared query (`q_warehouse_etl`,
@@ -54,18 +54,16 @@ object WarehouseEtl {
 
   // ---- extract (write-once per testdata fingerprint) ----------------------
 
-  /** Extract dir keyed by the source tables' size+mtime fingerprint: the
-    * driver regenerates /root/testdata between rounds, and a stale extract
-    * would silently desynchronize the funnel from the oracle's parquet. */
   /** Bump when the extract FORMAT changes — stale extracts from an older
     * serialization would otherwise survive the fingerprint check. */
   private val FormatVersion = 2
 
+  /** Extract dir keyed by the source tables' size+mtime fingerprint: the
+    * testdata can be regenerated in place, and a stale extract would
+    * silently desynchronize the funnel from the oracle's parquet. */
   private def extractRoot(dir: String): Path = {
-    val fp = s"v${FormatVersion}_" + Seq("customer", "supplier", "part", "orders", "region").map { t =>
-      val p = Paths.get(dir, s"$t.parquet")
-      s"${Files.size(p)}-${Files.getLastModifiedTime(p).toMillis}"
-    }.mkString("_")
+    val fp = s"v${FormatVersion}_" + Seq("customer", "supplier", "part", "orders", "region")
+      .map(t => GraftFs.default.fingerprint(s"$dir/$t.parquet")).mkString("_")
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(fp.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
     Paths.get(sys.props("java.io.tmpdir"), "graft-wh",

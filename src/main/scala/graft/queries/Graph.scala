@@ -47,7 +47,7 @@ object Graph {
     * itself shallow; a production run at higher iteration counts would pin
     * the rank frame every ~10 rounds like the CC operators do. */
   def qPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.lineitem(spark, dir)
     val e0 = li.select(concat(lit("S"), col("l_suppkey")).as("src"),
                        concat(lit("P"), col("l_partkey")).as("dst")).distinct()
     // Symmetrize via ONE explode over the distinct frame instead of

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.AnnIndex
 import graft.expr.GraftFunctions
 import graft.queries.Exprs.{pinLazy, pinShared}
 

@@ -1,12 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.AnnIndex
-import graft.expr.GraftFunctions
 
 /** §2.9 embedding analytics (split from Llm.scala along the SURVEY family
   * seams, r14 judge #7 — pure move, zero behavior): normalization,

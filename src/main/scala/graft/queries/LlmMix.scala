@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.AnnIndex
-import graft.expr.GraftFunctions
 
 /** §2.9 sampling / splitting / mixture curation (split from Llm.scala
   * along the SURVEY family seams, r14 judge #7 — pure move, zero behavior):

@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.AnnIndex
 import graft.expr.GraftFunctions
 
 /** §2.9 retrieval scoring (split from Llm.scala along the SURVEY family
@@ -252,7 +251,7 @@ object LlmRetrieval {
       }.toMap
     // greedy over ~N + N²/2 snapped ints (driver-bounded, corpus-free)
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Int, Long)]
-    val remaining = scala.collection.mutable.SortedSet(rels.map(_._1): _*)
+    val remaining = scala.collection.mutable.SortedSet(rels.map(_._1).toSeq: _*)
     val relOf = rels.toMap
     for (step <- 1 to math.min(K, rels.length)) {
       val best = remaining.map { c =>

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.AnnIndex
 import graft.expr.GraftFunctions
 
 /** §2.9 text analysis & quality (split from Llm.scala along the SURVEY

@@ -1,8 +1,5 @@
 package graft.stream
 
-import graft.queries.{LlmKnn, LlmMix}
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -543,7 +540,7 @@ object Streams {
         .filter(col("__rn") === 1)
         .drop("__rn")
         .withColumn(B, graft.etl.BucketedTable.bucketExpr(keyCols, nBuckets))
-      graft.etl.BucketedTable.commit(spark, statePath, nBuckets, touched,
+      graft.etl.BucketedTable.commit(statePath, nBuckets, touched,
         dir => merged.write.mode("overwrite").partitionBy(B).parquet(dir))
     }
   }
@@ -754,7 +751,7 @@ object Streams {
         else empty
       val next = scd2FoldBatch(history, bb.drop(B), keyCols, seqCol, flagCol, effCol)
         .withColumn(B, graft.etl.BucketedTable.bucketExpr(keyCols, nBuckets))
-      graft.etl.BucketedTable.commit(spark, statePath, nBuckets, touched,
+      graft.etl.BucketedTable.commit(statePath, nBuckets, touched,
         dir => next.write.mode("overwrite").partitionBy(B).parquet(dir))
     }
   }
@@ -1060,7 +1057,7 @@ object Streams {
               .withColumn("__g3", lit(true))
           else {
             val base = graft.queries.LlmText.withRepetitionMetrics(
-              batch.select(struct(batch.columns.map(col): _*).as("__doc"),
+              batch.select(struct(batch.columns.map(col).toSeq: _*).as("__doc"),
                 col("text"), split(col("text"), " ").as("words")))
             val g1 =
               if (holdoutSources.nonEmpty)
@@ -1078,7 +1075,7 @@ object Streams {
             base.select(col("__doc.*") +:
               Seq(g1.as("__g1"), g2.as("__g2"), g3.as("__g3")): _*)
           }
-        val admittable = flagged.filter(col("__g3")).select(batch.columns.map(col): _*)
+        val admittable = flagged.filter(col("__g3")).select(batch.columns.map(col).toSeq: _*)
         // held-out eval docs never enter the corpus; with `decontaminate`
         // their word 4-grams feed the persisted eval-gram posting table
         // (the same gram unit as q_decontaminate / the batch funnel —
@@ -1300,7 +1297,7 @@ object Streams {
         // `budget` for budget rejections, none for admitted docs and
         // map-gate decisions (which name themselves)
         val decided = budgeted
-          .select(batch.columns.map(col) ++ Seq(
+          .select(batch.columns.map(col).toSeq ++ Seq(
             when(!col("__g1"), lit("holdout_excluded"))
               .when(!col("__g2"), lit("quality_gate"))
               .when(!col("__g3"), lit("repetition_filter"))
@@ -1314,7 +1311,7 @@ object Streams {
               .otherwise(col("__gate")).as("__gate")): _*)
           .transform(pinShared)
         val kept = decided.filter(col("__decision") === "admitted")
-          .select(batch.columns.map(col): _*)
+          .select(batch.columns.map(col).toSeq: _*)
         // ADMISSION DECISION LOG (optional, r14 — the streaming twin of
         // q_curation_audit's explainability): one row per batch doc naming
         // its decision and deciding gate, projected straight off the
@@ -1385,7 +1382,7 @@ object Streams {
           // publish would leave a row-less ledger whose high-water-mark
           // read has nothing to aggregate
           if (!totals.isEmpty)
-            graft.etl.Warehouse.publish(spark, budgetDir,
+            graft.etl.Warehouse.publish(budgetDir,
               dir => totals.coalesce(1).write.mode("overwrite").parquet(dir))
         }
         // a frame's distinct corpus buckets and its row count in ONE job
@@ -1427,7 +1424,7 @@ object Streams {
               .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
               .filter(col(B).isin(touched: _*))
               .unionByName(novel)
-            BT.commit(spark, corpusDir, nBuckets, touched,
+            BT.commit(corpusDir, nBuckets, touched,
               dir => out.write.mode("overwrite").partitionBy(B).parquet(dir))
           }
           val vecs = kept.select(col("doc_id").as("vec_id"), col("embedding"))

@@ -26,7 +26,7 @@ class BucketedTableSpec extends AnyFunSuite {
 
   private def commitRows(dir: String, rows: Seq[(Long, String)]): Long = {
     val df = withBucket(rows)
-    BucketedTable.commit(spark, dir, nB,
+    BucketedTable.commit(dir, nB,
       rows.map(r => bucketOf(r._1)).distinct,
       d => df.write.mode("overwrite").partitionBy(BucketedTable.BucketCol).parquet(d))
   }
@@ -111,12 +111,12 @@ class BucketedTableSpec extends AnyFunSuite {
     // deterministic constant FOLDS of functions still pass
     val okV = BucketedTable.evolveAddColumn(spark, dir, "okc", "int", "1 + 2")
     assert(okV > ev)
-    BucketedTable.evolveDropColumn(spark, dir, "okc")
+    BucketedTable.evolveDropColumn(dir, "okc")
     // a post-evolution commit carries REAL values; the untouched bucket
     // keeps default-filling (and stays byte-identical)
     val df3 = Seq((kA, "a2", 42)).toDF("k", "v", "score")
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
-    BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kA)),
+    BucketedTable.commit(dir, nB, Seq(bucketOf(kA)),
       d => df3.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d))
     val mixed = BucketedTable.readCurrent(spark, dir).collect()
@@ -149,7 +149,7 @@ class BucketedTableSpec extends AnyFunSuite {
     def commit3(rows: Seq[(Long, String, Int)]): Long = {
       val df = rows.toDF("k", "v", "score")
         .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
-      BucketedTable.commit(spark, dir, nB,
+      BucketedTable.commit(dir, nB,
         rows.map(r => bucketOf(r._1)).distinct,
         d => df.write.mode("overwrite")
           .partitionBy(BucketedTable.BucketCol).parquet(d))
@@ -164,7 +164,7 @@ class BucketedTableSpec extends AnyFunSuite {
       finally s.close()
     }
     val before = treeBytes(v1)
-    val dv = BucketedTable.evolveDropColumn(spark, dir, "score")
+    val dv = BucketedTable.evolveDropColumn(dir, "score")
     val dvFiles = {
       val s = Files.list(java.nio.file.Paths.get(dir, s"v=$dv"))
       try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
@@ -179,7 +179,7 @@ class BucketedTableSpec extends AnyFunSuite {
     // post-drop commits carry the NARROW schema; mixed-era reads agree
     val df2 = Seq((kA, "a2")).toDF("k", "v")
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
-    BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kA)),
+    BucketedTable.commit(dir, nB, Seq(bucketOf(kA)),
       d => df2.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d))
     val mixed = BucketedTable.readCurrent(spark, dir).collect()
@@ -192,7 +192,7 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(err.getMessage.contains("DROP"))
     // add-then-drop retires the add in one step: the column never surfaces
     BucketedTable.evolveAddColumn(spark, dir, "tier", "string", "'basic'")
-    BucketedTable.evolveDropColumn(spark, dir, "tier")
+    BucketedTable.evolveDropColumn(dir, "tier")
     assert(!BucketedTable.readCurrent(spark, dir).columns.contains("tier"))
     // rebucket MATERIALIZES: declarations drop, stored files no longer
     // carry the dropped column, and the read is unchanged
@@ -218,7 +218,7 @@ class BucketedTableSpec extends AnyFunSuite {
       finally s.close()
     }
     val before = treeBytes(v1)
-    val rv = BucketedTable.evolveRenameColumn(spark, dir, "v", "val")
+    val rv = BucketedTable.evolveRenameColumn(dir, "v", "val")
     // METADATA-ONLY: the rename version holds nothing but its manifest and
     // every pre-rename data file is byte-identical on disk
     val rvFiles = {
@@ -235,7 +235,7 @@ class BucketedTableSpec extends AnyFunSuite {
     // a post-rename commit carries the new name; mixed-era read stitches
     val df2 = Seq((kA, "a2")).toDF("k", "val")
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
-    BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kA)),
+    BucketedTable.commit(dir, nB, Seq(bucketOf(kA)),
       d => df2.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d))
     assert(BucketedTable.readCurrent(spark, dir).collect()
@@ -243,10 +243,10 @@ class BucketedTableSpec extends AnyFunSuite {
       Seq(kA -> "a2", kB -> "b1").sorted)
     assert(treeBytes(v1) === before)
     // CHAIN: val -> txt; three eras on disk (v, val, txt) all read as txt
-    BucketedTable.evolveRenameColumn(spark, dir, "val", "txt")
+    BucketedTable.evolveRenameColumn(dir, "val", "txt")
     val df3 = Seq((kB, "b3")).toDF("k", "txt")
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
-    BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kB)),
+    BucketedTable.commit(dir, nB, Seq(bucketOf(kB)),
       d => df3.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d))
     val chained = BucketedTable.readCurrent(spark, dir)
@@ -273,10 +273,10 @@ class BucketedTableSpec extends AnyFunSuite {
     BucketedTable.evolveAddColumn(spark, dir, "score", "int", "7")
     val df2 = Seq((kB, "b1", 42)).toDF("k", "v", "score")
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
-    BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kB)),
+    BucketedTable.commit(dir, nB, Seq(bucketOf(kB)),
       d => df2.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d)) // era 2: stores score
-    BucketedTable.evolveRenameColumn(spark, dir, "score", "points")
+    BucketedTable.evolveRenameColumn(dir, "score", "points")
     // era 1 (predates the ADD) must default-fill under the RENAMED name;
     // era 2 (stores "score") must alias to "points"
     val rows = BucketedTable.readCurrent(spark, dir).collect()
@@ -284,21 +284,21 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(rows === Seq(kA -> 7, kB -> 42).sorted,
       "fill lands under the current name; stored values alias through the rename")
     // drop by the CURRENT name removes all eras (incl. pre-rename bytes)
-    BucketedTable.evolveDropColumn(spark, dir, "points")
+    BucketedTable.evolveDropColumn(dir, "points")
     assert(BucketedTable.readCurrent(spark, dir).columns.toSeq === Seq("k", "v"))
     // guards: dropping by the OLD name is a caller error named as such
     val oldName = intercept[IllegalArgumentException] {
-      BucketedTable.evolveDropColumn(spark, dir, "score")
+      BucketedTable.evolveDropColumn(dir, "score")
     }
     assert(oldName.getMessage.contains("CURRENT name"))
     // renaming onto an in-force-dropped name would resurface dropped bytes
     val ontoDropped = intercept[IllegalArgumentException] {
-      BucketedTable.evolveRenameColumn(spark, dir, "v", "points")
+      BucketedTable.evolveRenameColumn(dir, "v", "points")
     }
     assert(ontoDropped.getMessage.contains("dropped name"))
     // renaming a dropped column is refused too
     intercept[IllegalArgumentException] {
-      BucketedTable.evolveRenameColumn(spark, dir, "points", "elsewhere")
+      BucketedTable.evolveRenameColumn(dir, "points", "elsewhere")
     }
   }
 
@@ -310,19 +310,19 @@ class BucketedTableSpec extends AnyFunSuite {
     // default-fill withColumn would REPLACE the just-aliased real data on
     // pre-add eras — must be refused at declaration, not corrupt at read
     val clobber = intercept[IllegalArgumentException] {
-      BucketedTable.evolveRenameColumn(spark, dir, "v", "score")
+      BucketedTable.evolveRenameColumn(dir, "v", "score")
     }
     assert(clobber.getMessage.contains("ADDED column"))
     // ... and the add's name may itself be renamed; the vacated name then
     // becomes usable again while the STALE source is refused
-    BucketedTable.evolveRenameColumn(spark, dir, "v", "txt")
+    BucketedTable.evolveRenameColumn(dir, "v", "txt")
     val stale = intercept[IllegalArgumentException] {
-      BucketedTable.evolveRenameColumn(spark, dir, "v", "w")
+      BucketedTable.evolveRenameColumn(dir, "v", "w")
     }
     assert(stale.getMessage.contains("already renamed"))
     // renaming onto a live rename TARGET collides two live columns
     val occupied = intercept[IllegalArgumentException] {
-      BucketedTable.evolveRenameColumn(spark, dir, "score", "txt")
+      BucketedTable.evolveRenameColumn(dir, "score", "txt")
     }
     assert(occupied.getMessage.contains("current name of a renamed column"))
     // adding a column under a live rename target is the same collision
@@ -332,8 +332,8 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(addCollide.getMessage.contains("current name of a renamed column"))
     // dropping an added-then-renamed column retires the ADD declaration by
     // its current name
-    BucketedTable.evolveRenameColumn(spark, dir, "score", "pts")
-    BucketedTable.evolveDropColumn(spark, dir, "pts")
+    BucketedTable.evolveRenameColumn(dir, "score", "pts")
+    BucketedTable.evolveDropColumn(dir, "pts")
     val m = BucketedTable.readManifest(dir)
     assert(m.evolutions.isEmpty, "the renamed add must retire with the drop")
     assert(BucketedTable.readCurrent(spark, dir).columns.toSeq === Seq("k", "txt"))
@@ -401,11 +401,11 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(BucketedTable.readCurrent(spark, dir).count() === before.length)
     // later commits must agree with the NEW count, not the old one
     intercept[IllegalArgumentException] {
-      BucketedTable.commit(spark, dir, nB, Seq(0), _ => ())
+      BucketedTable.commit(dir, nB, Seq(0), _ => ())
     }
     val df = Seq(kA -> "a3").toDF("k", "v")
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nNew))
-    BucketedTable.commit(spark, dir, nNew, Seq(bucketOfNew(kA)),
+    BucketedTable.commit(dir, nNew, Seq(bucketOfNew(kA)),
       d => df.write.mode("overwrite").partitionBy(BucketedTable.BucketCol).parquet(d))
     assert(BucketedTable.readCurrent(spark, dir)
       .filter(col("k") === kA).collect().map(_.getAs[String]("v")).toSeq === Seq("a3"))
@@ -495,13 +495,13 @@ class BucketedTableSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_bt_req").resolve("t").toString
     commitRows(dir, Seq(1L -> "a"))
     intercept[IllegalArgumentException] {
-      BucketedTable.commit(spark, dir, nB * 2, Seq(0), _ => ())
+      BucketedTable.commit(dir, nB * 2, Seq(0), _ => ())
     }
     intercept[IllegalArgumentException] {
-      BucketedTable.commit(spark, dir, nB, Seq.empty, _ => ())
+      BucketedTable.commit(dir, nB, Seq.empty, _ => ())
     }
     intercept[IllegalArgumentException] {
-      BucketedTable.commit(spark, dir, nB, Seq(nB), _ => ()) // out of range
+      BucketedTable.commit(dir, nB, Seq(nB), _ => ()) // out of range
     }
   }
 
@@ -517,7 +517,7 @@ class BucketedTableSpec extends AnyFunSuite {
     // the prior data must survive untouched.
     val dfB = withBucket(Seq(kA -> "a-from-B"))
     val raised = intercept[java.util.ConcurrentModificationException] {
-      BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kA)), { d =>
+      BucketedTable.commit(dir, nB, Seq(bucketOf(kA)), { d =>
         dfB.write.mode("overwrite")
           .partitionBy(BucketedTable.BucketCol).parquet(d)
         commitRows(dir, Seq(kB -> "b-from-A")) // the racer wins
@@ -575,13 +575,13 @@ class BucketedTableSpec extends AnyFunSuite {
     val staleA = BucketedTable.acquireWriterLease(dir, "host-a", ttlMillis = 0L)
     val liveB = BucketedTable.acquireWriterLease(dir, "host-b")
     val dfB = withBucket(Seq(kB -> "b-from-B"))
-    BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kB)),
+    BucketedTable.commit(dir, nB, Seq(bucketOf(kB)),
       d => dfB.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d),
       lease = Some(liveB))
     val dfA = withBucket(Seq(kA -> "a-from-stale-A"))
     val fenced = intercept[java.util.ConcurrentModificationException] {
-      BucketedTable.commit(spark, dir, nB, Seq(bucketOf(kA)),
+      BucketedTable.commit(dir, nB, Seq(bucketOf(kA)),
         d => dfA.write.mode("overwrite")
           .partitionBy(BucketedTable.BucketCol).parquet(d),
         lease = Some(staleA))
@@ -616,7 +616,7 @@ class BucketedTableSpec extends AnyFunSuite {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def attempt(key: Long, value: String) = Future {
       val df = withBucket(Seq(key -> value))
-      try Right(BucketedTable.commit(spark, dir, nB, Seq(bucketOf(key)), { d =>
+      try Right(BucketedTable.commit(dir, nB, Seq(bucketOf(key)), { d =>
         df.write.mode("overwrite")
           .partitionBy(BucketedTable.BucketCol).parquet(d)
         bothFolded.await(60, TimeUnit.SECONDS): Unit
@@ -645,7 +645,7 @@ class BucketedTableSpec extends AnyFunSuite {
   test("legacy flat layout: readManifest raises the migration recipe; migrateLegacyLayout converts in place") {
     val root = Files.createTempDirectory("graft_bt_legacy").resolve("t").toString
     // a pre-r11 Warehouse-layout state dir: v=N bare parquet + _CURRENT
-    graft.etl.Warehouse.publish(spark, root, { d =>
+    graft.etl.Warehouse.publish(root, { d =>
       Seq((1L, "x", 1L), (2L, "y", 1L), (3L, "z", 1L)).toDF("k", "v", "seq")
         .write.mode("overwrite").parquet(d)
     })
@@ -683,7 +683,7 @@ class BucketedTableSpec extends AnyFunSuite {
     val kA = 1L
     val kB = (2L to 100L).find(bucketOf(_) != bucketOf(kA)).get
     def commitTyped(rows: org.apache.spark.sql.DataFrame, keys: Seq[Long]): Long =
-      BucketedTable.commit(spark, dir, nB, keys.map(bucketOf).distinct,
+      BucketedTable.commit(dir, nB, keys.map(bucketOf).distinct,
         d => rows
           .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
           .write.mode("overwrite").partitionBy(BucketedTable.BucketCol).parquet(d))
@@ -747,7 +747,7 @@ class BucketedTableSpec extends AnyFunSuite {
     val kA = 1L
     val kB = (2L to 100L).find(bucketOf(_) != bucketOf(kA)).get
     def commitDf(rows: org.apache.spark.sql.DataFrame, keys: Seq[Long]): Long =
-      BucketedTable.commit(spark, dir, nB, keys.map(bucketOf).distinct,
+      BucketedTable.commit(dir, nB, keys.map(bucketOf).distinct,
         d => rows
           .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
           .write.mode("overwrite").partitionBy(BucketedTable.BucketCol).parquet(d))
@@ -777,7 +777,7 @@ class BucketedTableSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq ===
       Seq(kA -> 3.5d, kB -> 2.5d).sorted)
     // RENAME-AFTER-WIDEN: old eras alias AND cast; widen resolves the chain
-    BucketedTable.evolveRenameColumn(spark, dir, "d", "amount")
+    BucketedTable.evolveRenameColumn(dir, "d", "amount")
     val renamed = BucketedTable.readCurrent(spark, dir)
     assert(renamed.schema("amount").dataType === DecimalType(12, 4))
     // WIDEN-AFTER-RENAME by current name; the stale name is refused
@@ -787,7 +787,7 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(BucketedTable.readCurrent(spark, dir)
       .schema("amount").dataType === DecimalType(14, 4))
     // DROP retires the widen declarations with the column
-    BucketedTable.evolveDropColumn(spark, dir, "amount")
+    BucketedTable.evolveDropColumn(dir, "amount")
     val m = BucketedTable.readManifest(dir)
     assert(!m.widens.exists(w => w.name == "d" || w.name == "amount"),
       s"drop must retire the dropped column's widens, got ${m.widens}")
@@ -823,10 +823,10 @@ class BucketedTableSpec extends AnyFunSuite {
     // were spuriously refused before r17
     val dir2 = Files.createTempDirectory("graft_bt_wid4").resolve("t").toString
     commitRows(dir2, Seq(kA -> "a1"))
-    BucketedTable.evolveRenameColumn(spark, dir2, "v", "w")
+    BucketedTable.evolveRenameColumn(dir2, "v", "w")
     BucketedTable.evolveAddColumn(spark, dir2, "v", "string", "'fresh'")
     // the re-added v is LIVE: renaming it must work...
-    BucketedTable.evolveRenameColumn(spark, dir2, "v", "z")
+    BucketedTable.evolveRenameColumn(dir2, "v", "z")
     val after = BucketedTable.readCurrent(spark, dir2)
     assert(after.columns.sorted.toSeq === Seq("k", "w", "z"))
     assert(after.select("w", "z").collect()
@@ -834,18 +834,18 @@ class BucketedTableSpec extends AnyFunSuite {
     // ...and so must dropping a re-added vacated-source name
     val dir3 = Files.createTempDirectory("graft_bt_wid5").resolve("t").toString
     commitRows(dir3, Seq(kA -> "a1"))
-    BucketedTable.evolveRenameColumn(spark, dir3, "v", "w")
+    BucketedTable.evolveRenameColumn(dir3, "v", "w")
     BucketedTable.evolveAddColumn(spark, dir3, "v", "string", "'fresh'")
-    BucketedTable.evolveDropColumn(spark, dir3, "v")
+    BucketedTable.evolveDropColumn(dir3, "v")
     val after3 = BucketedTable.readCurrent(spark, dir3)
     assert(after3.columns.sorted.toSeq === Seq("k", "w"))
     // a name still renamed away (never re-occupied) stays refused
     val dir4 = Files.createTempDirectory("graft_bt_wid6").resolve("t").toString
     commitRows(dir4, Seq(kA -> "a1"))
-    BucketedTable.evolveRenameColumn(spark, dir4, "v", "w")
+    BucketedTable.evolveRenameColumn(dir4, "v", "w")
     assertThrows[IllegalArgumentException] {
-      BucketedTable.evolveRenameColumn(spark, dir4, "v", "z") }
+      BucketedTable.evolveRenameColumn(dir4, "v", "z") }
     assertThrows[IllegalArgumentException] {
-      BucketedTable.evolveDropColumn(spark, dir4, "v") }
+      BucketedTable.evolveDropColumn(dir4, "v") }
   }
 }

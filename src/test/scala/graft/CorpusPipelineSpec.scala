@@ -100,7 +100,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val tableDir = java.nio.file.Files
       .createTempDirectory("graft_funnel_stage4").toString
     val d4 = stages(4)._2.select("doc_id", "text")
-    graft.etl.Warehouse.publish(spark, tableDir,
+    graft.etl.Warehouse.publish(tableDir,
       dir => d4.write.mode("overwrite").parquet(dir))
     val resumed = graft.etl.CorpusPipeline.finishFromExactDeduped(
         graft.etl.Warehouse.readCurrent(spark, tableDir),

@@ -19,7 +19,7 @@ class DoctorSpec extends AnyFunSuite {
       .withColumn(BucketedTable.BucketCol, BucketedTable.bucketExpr(Seq("k"), nB))
     val touched = rows.map(r => Seq(r._1).toDF("k")
       .select(BucketedTable.bucketExpr(Seq("k"), nB)).head().getInt(0)).distinct
-    BucketedTable.commit(spark, dir, nB, touched,
+    BucketedTable.commit(dir, nB, touched,
       d => df.write.mode("overwrite")
         .partitionBy(BucketedTable.BucketCol).parquet(d))
   }

@@ -174,11 +174,11 @@ class InMemoryFsSpec extends AnyFunSuite {
     withFs { fs =>
       val t = "/mem/warehouse/t"
       val spark = TestSpark.spark // unused by the write callback below
-      val v1 = Warehouse.publish(spark, t,
+      val v1 = Warehouse.publish(t,
         dir => fs.writeString(s"$dir/part-0", "gen1"), fs)
       assert(v1 === 1L)
       assert(Warehouse.currentVersion(t, fs) === 1L)
-      val v2 = Warehouse.publish(spark, t,
+      val v2 = Warehouse.publish(t,
         dir => fs.writeString(s"$dir/part-0", "gen2"), fs)
       assert(v2 === 2L, "version claim is monotone through the in-memory CAS")
       assert(Warehouse.currentVersion(t, fs) === 2L)

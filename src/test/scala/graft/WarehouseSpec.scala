@@ -68,13 +68,13 @@ class WarehouseSpec extends AnyFunSuite {
     import graft.etl.Warehouse
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest").toString
-    val v1 = Warehouse.publish(spark, dir,
+    val v1 = Warehouse.publish(dir,
       d => Seq((1, "a"), (2, "b")).toDF("k", "v").write.mode("overwrite").parquet(d))
     // a reader that resolved the pointer BEFORE the republish keeps its
     // snapshot: the v1 dir is immutable, only the pointer moves
     val pinnedV1 = Warehouse.readCurrent(spark, dir)
     assert(Warehouse.currentVersion(dir) === v1)
-    val v2 = Warehouse.publish(spark, dir,
+    val v2 = Warehouse.publish(dir,
       d => Seq((1, "a2"), (3, "c")).toDF("k", "v").write.mode("overwrite").parquet(d))
     assert(Warehouse.currentVersion(dir) === v2)
     assert(Warehouse.readCurrent(spark, dir).collect().map(_.getString(1)).sorted
