@@ -15,17 +15,16 @@ import java.nio.file.{Path, Paths}
   *      `_MANIFEST` whose bucket map references version dirs and whose
   *      parent header chains commits);
   *   3. [[Compaction]] versioned-pointer generations
-  *      (`X._CURRENT` → `X.vN` sibling trees, grace-window retirement,
-  *      legacy rename-swap leftovers);
+  *      (`X._CURRENT` → `X.vN` sibling trees, grace-window retirement);
   *   4. [[AnnIndex]] model-pairing sidecars (`lists/.../_centroids`,
   *      `codes/.../_codebooks`, and the `_lists_gen/root` pairing that
   *      anchors IVF-PQ composite probes).
   *
   * REPORT-ONLY, structurally: Doctor never writes, moves, or deletes —
   * healing belongs to the writers' own entry points
-  * ([[Compaction.reclaimOrphans]]/`recoverInterrupted`, `vacuum`,
-  * `rebucket`), and a reader-side tool that mutated state would violate
-  * the same readers-never-heal contract the index readers honor. Pure
+  * ([[Compaction.reclaimOrphans]], `vacuum`, `rebucket`), and a
+  * reader-side tool that mutated state would violate the same
+  * readers-never-heal contract the index readers honor. Pure
   * filesystem walks: no SparkSession, so it runs on a dead cluster's disk.
   *
   * `sbt "runMain graft.Doctor <root> [graceGenerations]"` — prints one
@@ -237,14 +236,9 @@ object Doctor {
         if (!n.startsWith("v=") ||
             !fs.exists(p.resolve("_MANIFEST").toString)) None
         else scala.util.Try {
-          // only manifests carrying an EXPLICIT parent= header join fork
-          // grouping: readManifest also reports -1 for header-less pre-r12
-          // legacy manifests, and grouping those would flag every legacy
-          // table's whole history as one giant false fork
-          val lines = fs.readLines(p.resolve("_MANIFEST").toString)
-          lines.find(_.startsWith("parent=")).map(h =>
-            n.stripPrefix("v=").toLong -> h.stripPrefix("parent=").toLong)
-        }.toOption.flatten
+          val v = n.stripPrefix("v=").toLong
+          v -> BucketedTable.readManifest(d, Some(v), fs).parent
+        }.toOption
       }
       // parent=-1 groups are NOT excluded (r15 ADVICE): two competing
       // table-CREATING commits (both explicitly claiming parent=-1) are
@@ -430,16 +424,7 @@ object Doctor {
         s"$beyondGrace retired generation(s) older than the grace window " +
           s"($grace)",
         "the next publish vacuums them; reclaimable footprint, not a hazard"))
-    val legacy = siblings.filter { p =>
-      val n = p.getFileName.toString
-      n.startsWith(prefix + ".old-") || n.startsWith(prefix + ".compact-")
-    }.map(p => warn("compaction-table", d,
-      s"legacy rename-swap leftover ${p.getFileName} (pre-pointer-era crash)",
-      "Compaction.recoverInterrupted / the next write-side entry point " +
-        "heals it; do not delete the .old-* tree by hand — it may be the " +
-        "only complete copy",
-      "graft.etl.Compaction.recoverInterrupted", Seq(d)))
-    future ++ footprint ++ legacy ++ checkAnnSidecars(logical, curDir, fs)
+    future ++ footprint ++ checkAnnSidecars(logical, curDir, fs)
   }
 
   /** Layer 4: model sidecars inside a resolved lists/codes generation. */

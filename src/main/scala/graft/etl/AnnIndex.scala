@@ -13,10 +13,13 @@ import org.apache.spark.sql.functions._
   * [[build]] trains cosine k-means ONCE over the corpus and persists two
   * artifacts under `indexDir`:
   *
-  *   - `lists/`     — the corpus re-written `partitionBy("list_id")`, so a
-  *                    probe's candidate fetch is a partition-PRUNED scan of
-  *                    `nprobe` directories (`PartitionFilters` on `list_id`),
-  *                    never a full-corpus scan;
+  *   - `lists/`     — the corpus re-written `partitionBy("list_id",
+  *                    "batch_id")`, so a probe's candidate fetch is a
+  *                    partition-PRUNED scan of `nprobe` directories
+  *                    (`PartitionFilters` on `list_id`), never a
+  *                    full-corpus scan. The build writes the `batch_id=-1`
+  *                    base level; stream appends add their own keys below
+  *                    the same list directories;
   *   - `centroids/` — `nlist` rows of `(list_id, centroid)` — driver-resident
   *                    model metadata, O(nlist·dim) bytes.
   *
@@ -25,6 +28,12 @@ import org.apache.spark.sql.functions._
   * anything — it ranks centroids with O(nlist·dim) driver math
   * ([[nearestLists]]) and scans nprobe/nlist of the data ([[probeScan]]).
   * The pruning is plan-asserted in LlmSpec (numPartitions metric ≤ nprobe).
+  *
+  * Every index table here (IVF lists, IVF-PQ codes, LSH postings, SQ8)
+  * has one on-disk layout from its first write: a trailing `batch_id=`
+  * partition level, `-1` for builds and unkeyed appends. Readers declare
+  * each table's schema, so no scan pays a schema-inference job and
+  * `batch_id` always reads as a string.
   */
 object AnnIndex {
 
@@ -43,7 +52,9 @@ object AnnIndex {
     * the corpus (seeded k-means ⇒ deterministic). */
   def defaultIvfDir(sfDir: String, nlist: Int): String =
     Paths.get(sys.props("java.io.tmpdir"), "graft-ann",
-      s"ivf$nlist-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
+      // "ivfb": lists carry the batch_id level from the build on — the key
+      // bump rebuilds any stale cache dir in the older flat layout
+      s"ivfb$nlist-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
 
   /** Default on-disk location for the LSH posting-list index — same keying
     * discipline as [[defaultIvfDir]]. */
@@ -150,14 +161,34 @@ object AnnIndex {
     val spark = e.sparkSession
     val withVec = e.withColumn("features", array_to_vector(col("embedding")))
     val model = fitCentroids(withVec, nlist, seed)
-    model.transform(withVec)
-      .select(col("vec_id"), col("label"), col("embedding"),
-              col("prediction").as("list_id"))
-      .write.mode("overwrite").partitionBy("list_id")
+    listRows(model.transform(withVec).withColumn("list_id", col("prediction")),
+        "-1")
+      .write.mode("overwrite").partitionBy("list_id", "batch_id")
       .parquet(cur(s"$indexDir/lists"))
     writeCentroids(spark, model, s"$indexDir/centroids")
     gfs.writeBytes(readyMarker(indexDir), Array.emptyByteArray)
   }
+
+  /** The IVF lists table's schema: `vec_id`, `label` and `embedding` are
+    * data columns, `list_id` and `batch_id` directory levels. */
+  private[graft] val ListsSchema =
+    "vec_id BIGINT, label INT, embedding ARRAY<FLOAT>, list_id INT, batch_id STRING"
+
+  /** The IVF-PQ code table's schema (the lists' directory levels, with
+    * the code and its reconstruction norm as data). */
+  private[graft] val CodesSchema =
+    "vec_id BIGINT, code BINARY, rnorm DOUBLE, list_id INT, batch_id STRING"
+
+  /** An assigned row set (`list_id` present) in [[ListsSchema]]'s column
+    * types, under batch key `key`. */
+  private def listRows(assigned: DataFrame, key: String): DataFrame =
+    assigned.select(col("vec_id").cast("long").as("vec_id"),
+      col("label").cast("int").as("label"), col("embedding"),
+      col("list_id").cast("int").as("list_id"), lit(key).as("batch_id"))
+
+  /** Every row of a resolved lists generation. */
+  private[graft] def readLists(spark: SparkSession, listsRoot: String): DataFrame =
+    spark.read.schema(ListsSchema).parquet(listsRoot)
 
   private def deleteRecursively(dir: String): Unit = gfs.deleteRecursively(dir)
 
@@ -208,9 +239,8 @@ object AnnIndex {
 
   /** The centroid table PAIRED with a resolved lists generation: a
     * [[retrainIvf]] publish embeds its centroids INSIDE the generation dir
-    * as `_centroids/` (Spark's scan ignores `_`-prefixed paths, and
-    * [[Compaction.compactParquet]] carries hidden dirs through layout
-    * rewrites), so resolving the lists pointer ONCE pins a mutually
+    * as `_centroids/` (Spark's scan ignores `_`-prefixed paths, and the
+    * [[Compaction]] layout rewrites carry hidden dirs through), so resolving the lists pointer ONCE pins a mutually
     * consistent (centroids, assignments) pair even while a retrain
     * publishes the next generation. A build-era generation has no embedded
     * copy and falls back to the flat `{indexDir}/centroids` table [[build]]
@@ -221,15 +251,28 @@ object AnnIndex {
     else s"$indexDir/centroids"
   }
 
-  /** The `(list_id, centroid)` rows [[writeCentroids]] wrote for a lists
-    * generation, by list id. The read declares their schema, so it runs no
-    * schema-inference job. */
-  private def readCentroids(spark: SparkSession, listsRoot: String,
-                            indexDir: String): Array[(Int, Array[Double])] =
-    spark.read.schema("list_id INT, centroid ARRAY<DOUBLE>")
-      .parquet(centroidsPathFor(listsRoot, indexDir)).collect()
+  /** A model table (centroids, codebooks, rotation, list means) read with
+    * its declared schema, so no schema-inference job runs. The part files
+    * are listed and named directly: most model tables are `_`-prefixed
+    * sidecar dirs, and Spark warns about a hidden-named root path. */
+  private def readModel(spark: SparkSession, path: String,
+                        schema: String): DataFrame =
+    spark.read.schema(schema)
+      .parquet(gfs.list(path).filter(_.endsWith(".parquet")): _*)
+
+  /** A `(id, vector)` model table's rows, sorted by id. */
+  private def readIndexed(spark: SparkSession, path: String,
+                          schema: String): Array[(Int, Array[Double])] =
+    readModel(spark, path, schema).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
+
+  /** The `(list_id, centroid)` rows [[writeCentroids]] wrote for a lists
+    * generation, by list id. */
+  private def readCentroids(spark: SparkSession, listsRoot: String,
+                            indexDir: String): Array[(Int, Array[Double])] =
+    readIndexed(spark, centroidsPathFor(listsRoot, indexDir),
+      "list_id INT, centroid ARRAY<DOUBLE>")
 
   /** Resolve the IVF composite ONCE: the current lists generation root and
     * its paired centroid rows `(list_id, centroid)`. Probe flows that rank
@@ -287,7 +330,7 @@ object AnnIndex {
     * not replicate per batch. A `label` column is
     * optional for batch-keyed ingest (streams carry none): absent, it is
     * stored as 0 so the lists schema stays probe-compatible. Ad-hoc
-    * callers (None) keep the legacy layout-preserving append. */
+    * callers (None) append under the `batch_id=-1` base level. */
   def appendIvf(batch: DataFrame, indexDir: String,
                 batchKey: Option[String] = None): Unit = {
     val spark = batch.sparkSession
@@ -310,8 +353,7 @@ object AnnIndex {
         val (r, centsD) = ivfSnapshot(spark, indexDir)
         (assignAgainst(labelled, centsD), r)
       }
-    appendListKeyed(assigned.select("vec_id", "label", "embedding", "list_id"),
-      root, batchKey)
+    appendListKeyed(listRows(assigned, batchKey.getOrElse("-1")), root, batchKey)
   }
 
   /** The frozen-model assignment rule: argmax over nlist (cos, list_id)
@@ -343,8 +385,8 @@ object AnnIndex {
   /** The shared KEYED WRITE-THEN-CLEAN protocol for list-partitioned index
     * appends whose placement depends on mutable model state ([[appendIvf]],
     * [[appendIvfPq]] — see the replay paragraph on [[appendIvf]] for the
-    * ordering argument). `rows` must already carry `list_id`; the batch
-    * level is appended here. */
+    * ordering argument). `rows` must already carry `list_id` and the
+    * `batch_id` they land under. */
   private def appendListKeyed(rows: DataFrame, root: String,
                               batchKey: Option[String]): Unit = {
     batchKey.foreach(k =>
@@ -354,43 +396,20 @@ object AnnIndex {
       // keyed "-1" would delete the folded base)
       require(k.nonEmpty && !k.contains("/") && !k.contains("..") && k != "-1",
         s"malformed batch key: $k"))
-    // a table that has EVER taken a batch-keyed write carries the batch
-    // level uniformly; flat ad-hoc tables stay flat for None callers
-    val batchLayout = batchKey.isDefined || hasBatchLevel(root)
-    if (batchLayout) {
-      migrateFlatLayout(root, depth = 1)
-      val stale = batchKey.toSeq.flatMap(ivfBatchCellFiles(root, _))
-      rows
-        .withColumn("batch_id", lit(batchKey.getOrElse("-1")))
-        .write.mode("append").partitionBy("list_id", "batch_id").parquet(root)
-      // replay hygiene, AFTER the fresh rows are readable (see scaladoc):
-      // drop exactly the previous attempt's files (plus their .crc
-      // sidecars — local committers leave one per part file), then any
-      // cell dir the delete left data-less (a moved assignment leaves its
-      // old cell empty)
-      stale.foreach { f =>
-        gfs.deleteIfExists(f)
-        val fp = Paths.get(f)
-        gfs.deleteIfExists(
-          fp.resolveSibling("." + fp.getFileName.toString + ".crc").toString)
-      }
-      batchKey.foreach(pruneEmptyIvfBatchCells(root, _))
-    } else
-      rows.write.mode("append").partitionBy("list_id").parquet(root)
-  }
-
-  /** Whether the resolved lists generation carries the trailing `batch_id=`
-    * level (migration marker, or any observed batch subdir — the marker is
-    * a plain file and a layout rewrite may not carry it). */
-  private def hasBatchLevel(root: String): Boolean = {
-    if (!gfs.isDirectory(root)) return false
-    if (gfs.exists(s"$root/_GRAFT_BATCH_LAYOUT")) return true
-    gfs.list(root).exists { d =>
-      gfs.isDirectory(d) &&
-        Paths.get(d).getFileName.toString.startsWith("list_id=") &&
-        gfs.list(d).exists(
-          c => Paths.get(c).getFileName.toString.startsWith("batch_id="))
+    val stale = batchKey.toSeq.flatMap(ivfBatchCellFiles(root, _))
+    rows.write.mode("append").partitionBy("list_id", "batch_id").parquet(root)
+    // replay hygiene, AFTER the fresh rows are readable (see scaladoc):
+    // drop exactly the previous attempt's files (plus their .crc
+    // sidecars — local committers leave one per part file), then any
+    // cell dir the delete left data-less (a moved assignment leaves its
+    // old cell empty)
+    stale.foreach { f =>
+      gfs.deleteIfExists(f)
+      val fp = Paths.get(f)
+      gfs.deleteIfExists(
+        fp.resolveSibling("." + fp.getFileName.toString + ".crc").toString)
     }
+    batchKey.foreach(pruneEmptyIvfBatchCells(root, _))
   }
 
   /** The key's cell dirs across every list partition (replay-hygiene
@@ -481,15 +500,14 @@ object AnnIndex {
     * there); the plain IVF/SQ8 paths need nothing else. Returns the
     * published generation number.
     *
-    * Batch-keyed (streaming) tables: a lists tree fed by batch-keyed
-    * [[appendIvf]] carries a trailing `batch_id=` level, and the retrain is
-    * then ALSO a compaction — every checkpoint-committed batch partition
-    * folds into the `batch_id=-1` base of the new generation, EXCEPT the
+    * The retrain is ALSO a compaction of the trailing `batch_id=` level —
+    * every checkpoint-committed batch partition folds into the
+    * `batch_id=-1` base of the new generation, EXCEPT the
     * keys in `preserveBatchKeys` (the in-flight batch the streaming
     * maintenance cadence is still committing), which keep their key —
     * re-assigned to the new clustering, but still addressable by the
     * replay's cell drop ([[appendIvf]]'s hygiene pass). Same
-    * high-water-mark guard as [[Compaction.compactParquet]], same reason.
+    * high-water-mark guard as [[Compaction.compactBatchKeyed]], same reason.
     * `graceGenerations` sizes the retired-generation retention for
     * concurrent probes. */
   def retrainIvf(spark: SparkSession, indexDir: String, nlist: Int,
@@ -499,13 +517,7 @@ object AnnIndex {
     import org.apache.spark.ml.functions.array_to_vector
     val listsTable = s"$indexDir/lists"
     Compaction.reclaimOrphans(listsTable)
-    val root = cur(listsTable)
-    val corpus0 = spark.read.parquet(root)
-    val hasBatch = corpus0.columns.contains("batch_id")
-    val corpus =
-      if (hasBatch) corpus0.select(col("vec_id"), col("label"),
-        col("embedding"), col("batch_id").cast("string").as("batch_id"))
-      else corpus0.select(col("vec_id"), col("label"), col("embedding"))
+    val corpus = readLists(spark, cur(listsTable)).drop("list_id")
     // three passes share the corpus (count, the k-means fit's iterations,
     // the assignment rewrite) — persist so each is a cache read, not a
     // fresh parquet scan of the whole table
@@ -518,26 +530,11 @@ object AnnIndex {
       // the target nlist — grow toward it as the corpus does
       val k = math.max(1L, math.min(nlist.toLong, withVec.count())).toInt
       val model = fitCentroids(withVec, k, seed)
-      val assigned0 = model.transform(withVec)
-        .withColumn("list_id", col("prediction"))
-      val (assigned, partCols) =
-        if (hasBatch) {
-          val folded =
-            if (preserveBatchKeys.isEmpty) lit("-1")
-            // compare as STRING: partition inference types an all-numeric
-            // batch_id set (e.g. only the folded `-1` base) as int, and an
-            // int `isin` of a lineage key fails the cast under ANSI
-            else when(col("batch_id").cast("string").isin(preserveBatchKeys.toSeq: _*),
-              col("batch_id").cast("string")).otherwise(lit("-1"))
-          (assigned0.select(col("vec_id"), col("label"), col("embedding"),
-             col("list_id"), folded.as("batch_id")),
-           Seq("list_id", "batch_id"))
-        } else
-          (assigned0.select(col("vec_id"), col("label"), col("embedding"),
-             col("list_id")),
-           Seq("list_id"))
-      assigned
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(dst)
+      model.transform(withVec)
+        .select(col("vec_id"), col("label"), col("embedding"),
+          col("prediction").as("list_id"),
+          Compaction.foldedBatchId(preserveBatchKeys).as("batch_id"))
+        .write.mode("overwrite").partitionBy("list_id", "batch_id").parquet(dst)
       writeCentroids(spark, model, s"$dst/_centroids")
     } finally withVec.unpersist(false)
     Compaction.publishRewrite(listsTable, newVer, graceGenerations)
@@ -589,8 +586,7 @@ object AnnIndex {
     * [[ivfSnapshot]] discipline for retrain-consistent probe flows). */
   def probeScanAt(spark: SparkSession, listsRoot: String,
                   lists: Seq[Int]): DataFrame =
-    spark.read.parquet(listsRoot)
-      .filter(col("list_id").isin(lists: _*))
+    readLists(spark, listsRoot).filter(col("list_id").isin(lists: _*))
 
   // ---- SQ8 quantized scan index ------------------------------------------
 
@@ -630,12 +626,15 @@ object AnnIndex {
                 batchKey: Option[String] = None): Unit =
     writeSq8(batch, indexDir, "append", batchKey)
 
+  /** The SQ8 table's schema (`batch_id` the one directory level). */
+  private[graft] val Sq8Schema =
+    "vec_id BIGINT, qvec BINARY, qnorm DOUBLE, batch_id STRING"
+
   private def writeSq8(e: DataFrame, indexDir: String, mode: String,
                        batchKey: Option[String] = None): Unit = {
     graft.expr.GraftFunctions.ensureRegistered(e.sparkSession)
     val root = cur(s"$indexDir/sq8")
-    if (batchKey.isDefined) migrateFlatLayout(root, depth = 0)
-    val rows = e.select(col("vec_id"),
+    val rows = e.select(col("vec_id").cast("long").as("vec_id"),
         call_function("int8_pack", col("embedding")).as("qvec"))
       .withColumn("qnorm",
         sqrt(call_function("int8_dot", col("qvec"), col("qvec")).cast("double")))
@@ -691,7 +690,7 @@ object AnnIndex {
     val codebooks = trainPqBooks(rotatedFrame(e.select(col("embedding")), rot),
       m, k, seed)
     val codesRoot = cur(s"$indexDir/codes")
-    writePqCodes(e, codesRoot, codebooks, Some(rot), "overwrite")
+    writePqCodes(e, codesRoot, codebooks, rot, "overwrite")
     writeRotation(spark, codesRoot, rot)
     codebooks.toDF("sub_id", "code_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
@@ -760,7 +759,8 @@ object AnnIndex {
   def pqSnapshot(spark: SparkSession, indexDir: String)
       : (String, Seq[(Int, Int, Array[Double])]) = {
     val root = cur(s"$indexDir/codes")
-    val books = spark.read.parquet(codebooksPathFor(root, indexDir)).collect()
+    val books = readModel(spark, codebooksPathFor(root, indexDir),
+        "sub_id INT, code_id INT, centroid ARRAY<DOUBLE>").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray)).toSeq
     (root, books)
   }
@@ -801,7 +801,7 @@ object AnnIndex {
     Compaction.reclaimOrphans(table)
     val newVer = Compaction.currentVersion(table) + 1
     val dst = s"$table.v$newVer"
-    writePqCodes(e, dst, codebooks, Some(rot), "overwrite")
+    writePqCodes(e, dst, codebooks, rot, "overwrite")
     writeRotation(spark, dst, rot)
     codebooks.toDF("sub_id", "code_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dst/_codebooks")
@@ -900,7 +900,8 @@ object AnnIndex {
     buckets.flatten.map(vecs(_))
   }
 
-  /** R·v (raw matrix form — executors; see [[rotate]] for the Option form). */
+  /** R·v — the OPQ rotation applied to one vector (the encoders on the
+    * executors, the probe LUT builders on the driver). */
   private[graft] def rotateArr(rot: Array[Array[Double]],
                              v: Array[Double]): Array[Double] = {
     val out = new Array[Double](rot.length)
@@ -914,11 +915,6 @@ object AnnIndex {
     }
     out
   }
-
-  /** R·v for an optional rotation (identity when the codes generation
-    * predates OPQ — the probe LUT builders call this on every probe). */
-  def rotate(rot: Option[Array[Array[Double]]], v: Array[Double]): Array[Double] =
-    rot.fold(v)(rotateArr(_, v))
 
   /** The rotated-embedding frame for codebook training (typed
     * mapPartitions — a plain JVM matrix-vector per row, no UDF). */
@@ -945,33 +941,17 @@ object AnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$codesRoot/_rotation")
   }
 
-  private def readRotation(spark: SparkSession, codesRoot: String)
-      : Option[Array[Array[Double]]] = {
-    val p = s"$codesRoot/_rotation"
-    if (!gfs.isDirectory(p)) None
-    else Some(spark.read.parquet(p).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1).map(_._2))
-  }
-
-  /** The codes generation's encoding discipline: "residual" (r18 — codes
-    * store `x − centroid[list]`, the FAISS IVF-PQ default; probes add the
-    * per-list ⟨q, centroid⟩ bias back) vs "raw" (flat PQ, and composite
-    * generations predating r18). Self-describing per generation so a
-    * probe can never score codes under the wrong arithmetic. */
-  private def writeEncodingKind(codesRoot: String, kind: String): Unit =
-    gfs.writeString(s"$codesRoot/_encoding/kind", kind)
-
-  private def encodingKind(codesRoot: String): String = {
-    val p = s"$codesRoot/_encoding/kind"
-    if (gfs.exists(p)) gfs.readString(p).trim else "raw"
-  }
+  /** The `_rotation/` sidecar [[writeRotation]] wrote, as the matrix. */
+  private def readRotation(spark: SparkSession,
+                           codesRoot: String): Array[Array[Double]] =
+    readIndexed(spark, s"$codesRoot/_rotation", "dim_id INT, row ARRAY<DOUBLE>")
+      .map(_._2)
 
   /** The flat-PQ probe-side model: one snapshot's codes root, books, and
-    * optional OPQ rotation (None on pre-r18 generations → identity). */
+    * OPQ rotation. */
   final case class PqModel(codesRoot: String,
                            books: Seq[(Int, Int, Array[Double])],
-                           rot: Option[Array[Array[Double]]])
+                           rot: Array[Array[Double]])
 
   def pqModel(spark: SparkSession, indexDir: String): PqModel = {
     val (root, books) = pqSnapshot(spark, indexDir)
@@ -979,11 +959,11 @@ object AnnIndex {
   }
 
   /** The composite probe-side model — [[ivfPqSnapshot]] plus the r18
-    * sidecars: the OPQ rotation, whether codes are residual-encoded (which
-    * decides the probe's per-list bias term), and the per-list MEANS the
-    * residuals subtract. The means are deliberately distinct from `cents`:
-    * Spark's cosine k-means centroids are UNIT-normalized (direction-only
-    * model — right for ranking lists by cosine), while the residual anchor
+    * sidecars: the OPQ rotation and the per-list MEANS the residuals
+    * subtract (the probe adds ⟨q, mean⟩ back as a per-list bias). The
+    * means are deliberately distinct from `cents`: Spark's cosine k-means
+    * centroids are UNIT-normalized (direction-only model — right for
+    * ranking lists by cosine), while the residual anchor
     * must be the per-cluster L2-optimal offset, i.e. the cluster MEAN
     * (measured r18: unit-centroid residuals were WORSE than raw coding on
     * the ~8-norm test embeddings; mean residuals win). */
@@ -991,21 +971,16 @@ object AnnIndex {
                               cents: Array[(Int, Array[Double])],
                               codesRoot: String,
                               books: Seq[(Int, Int, Array[Double])],
-                              rot: Option[Array[Array[Double]]],
-                              residual: Boolean,
+                              rot: Array[Array[Double]],
                               means: Array[(Int, Array[Double])])
 
   def ivfPqModel(spark: SparkSession, ivfDir: String,
                  indexDir: String): IvfPqModel = {
     val (listsRoot, cents, codesRoot, books) =
       ivfPqSnapshot(spark, ivfDir, indexDir)
-    val residual = encodingKind(codesRoot) == "residual"
-    val means =
-      if (!residual) Array.empty[(Int, Array[Double])]
-      else spark.read.parquet(s"$codesRoot/_list_means").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     IvfPqModel(listsRoot, cents, codesRoot, books,
-      readRotation(spark, codesRoot), residual, means)
+      readRotation(spark, codesRoot),
+      readIndexed(spark, s"$codesRoot/_list_means", "list_id INT, mean ARRAY<DOUBLE>"))
   }
 
   /** Per-list means of the lists corpus — the residual anchors. One
@@ -1014,7 +989,7 @@ object AnnIndex {
   private def listMeans(spark: SparkSession, listsRoot: String)
       : Array[(Int, Array[Double])] = {
     import spark.implicits._
-    val partials = spark.read.parquet(listsRoot)
+    val partials = readLists(spark, listsRoot)
       .select(col("embedding"), col("list_id"))
       .as[(Array[Float], Int)]
       .mapPartitions { it =>
@@ -1129,7 +1104,7 @@ object AnnIndex {
     val bcM = spark.sparkContext.broadcast(centArrOf(means))
     // the residual frame feeds two passes (moment, m k-means fits) —
     // persist so each is a cache read, not a source scan + re-subtract
-    val resid = spark.read.parquet(listsRoot)
+    val resid = readLists(spark, listsRoot)
       .select(col("embedding"), col("list_id"))
       .as[(Array[Float], Int)]
       .mapPartitions { it =>
@@ -1161,7 +1136,7 @@ object AnnIndex {
     * function does no resolution of its own). */
   private def writePqCodes(e: DataFrame, codesRoot: String,
                            codebooks: Seq[(Int, Int, Array[Double])],
-                           rot: Option[Array[Array[Double]]],
+                           rot: Array[Array[Double]],
                            mode: String): Unit = {
     val spark = e.sparkSession
     import spark.implicits._
@@ -1172,7 +1147,7 @@ object AnnIndex {
         val bk = bc.value
         val r = bcR.value
         it.map { case (id, emb) =>
-          val (code, rnorm) = encodePqRow(bk, rotate(r, emb.map(_.toDouble)))
+          val (code, rnorm) = encodePqRow(bk, rotateArr(r, emb.map(_.toDouble)))
           (id, code, rnorm)
         }
       }.toDF("vec_id", "code", "rnorm")
@@ -1181,12 +1156,12 @@ object AnnIndex {
 
   // ---- IVF-PQ (composite) -------------------------------------------------
 
-  /** [[defaultIvfDir]]'s twin for the IVF-PQ composite index. "ivfpqr":
-    * the r18 residual-encoded + OPQ-rotated layout — key bump forces a
-    * rebuild over stale raw-encoded cache dirs. */
+  /** [[defaultIvfDir]]'s twin for the IVF-PQ composite index. "ivfpqb":
+    * residual-encoded, OPQ-rotated codes under the batch_id level — the key
+    * bump rebuilds any stale cache dir in an older layout. */
   def defaultIvfPqDir(sfDir: String, nlist: Int, m: Int, k: Int): String =
     Paths.get(sys.props("java.io.tmpdir"), "graft-ann",
-      s"ivfpqr$nlist-$m-$k-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
+      s"ivfpqb$nlist-$m-$k-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
 
   /** Build the IVF-PQ composite over an EXISTING IVF index — the standard
     * production ANN layout (FAISS's IVFPQ): the IVF half prunes WHICH
@@ -1204,8 +1179,8 @@ object AnnIndex {
     * [[AnnQuality.pqParamsFor]] sizing rule. Probes add the per-list
     * ⟨q, centroid⟩ bias back driver-side (nprobe scalars) and score
     * `(bias + ADC(residual))/rnorm`. Codes re-use the IVF `list_id`
-    * assignment and land `partitionBy(list_id)`, so a probe's candidate
-    * fetch is a partition-PRUNED scan of m-byte codes. */
+    * assignment and land `partitionBy(list_id, batch_id)`, so a probe's
+    * candidate fetch is a partition-PRUNED scan of m-byte codes. */
   def buildIvfPq(e: DataFrame, ivfDir: String, indexDir: String,
                  m: Int, k: Int, seed: Long = 7L): Unit = {
     val spark = e.sparkSession
@@ -1223,18 +1198,17 @@ object AnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebooks")
     writeRotation(spark, codesRoot, rot)
     writeListMeans(spark, codesRoot, means)
-    writeEncodingKind(codesRoot, "residual")
     writeListsGenSidecar(codesRoot, listsRoot)
   }
 
   /** Encode the lists corpus at the RESOLVED `listsRoot` against
-    * `codebooks` into `codesRoot` (overwrite), `partitionBy(list_id)` —
+    * `codebooks` into `codesRoot` (overwrite), `partitionBy(list_id,
+    * batch_id)` —
     * callers resolve the lists generation ONCE and use it for both
     * codebook training and encoding, so the two halves can never straddle
-    * an IVF publish. A batch-keyed lists table (streaming ingest) carries
-    * its `batch_id` level through VERBATIM — the codes MIRROR the lists,
-    * including the lists' own fold policy, so a crash-replay's keyed sweep
-    * finds its cells in both tables. */
+    * an IVF publish. The lists' `batch_id` level carries through VERBATIM —
+    * the codes MIRROR the lists, including the lists' own fold policy, so a
+    * crash-replay's keyed sweep finds its cells in both tables. */
   private def encodeIvfPqCodes(spark: SparkSession, listsRoot: String,
                                codesRoot: String,
                                codebooks: Seq[(Int, Int, Array[Double])],
@@ -1244,35 +1218,19 @@ object AnnIndex {
     val bc = spark.sparkContext.broadcast(booksArray(codebooks))
     val bcM = spark.sparkContext.broadcast(centArrOf(means))
     val bcR = spark.sparkContext.broadcast(rot)
-    val src = spark.read.parquet(listsRoot)
-    val hasBatch = src.columns.contains("batch_id")
-    if (hasBatch)
-      src.select(col("vec_id"), col("embedding"), col("list_id"),
-          col("batch_id").cast("string").as("batch_id"))
-        .as[(Long, Array[Float], Int, String)]
-        .mapPartitions { it =>
-          val bk = bc.value; val ma = bcM.value; val r = bcR.value
-          it.map { case (id, emb, list, key) =>
-            val (code, rnorm) =
-              encodeResidualRow(bk, r, anchorOf(ma, list, emb.length), emb)
-            (id, code, rnorm, list, key)
-          }
-        }.toDF("vec_id", "code", "rnorm", "list_id", "batch_id")
-        .write.mode("overwrite").partitionBy("list_id", "batch_id")
-        .parquet(codesRoot)
-    else
-      src.select(col("vec_id"), col("embedding"), col("list_id"))
-        .as[(Long, Array[Float], Int)]
-        .mapPartitions { it =>
-          val bk = bc.value; val ma = bcM.value; val r = bcR.value
-          it.map { case (id, emb, list) =>
-            val (code, rnorm) =
-              encodeResidualRow(bk, r, anchorOf(ma, list, emb.length), emb)
-            (id, code, rnorm, list)
-          }
-        }.toDF("vec_id", "code", "rnorm", "list_id")
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(codesRoot)
+    readLists(spark, listsRoot)
+      .select(col("vec_id"), col("embedding"), col("list_id"), col("batch_id"))
+      .as[(Long, Array[Float], Int, String)]
+      .mapPartitions { it =>
+        val bk = bc.value; val ma = bcM.value; val r = bcR.value
+        it.map { case (id, emb, list, key) =>
+          val (code, rnorm) =
+            encodeResidualRow(bk, r, anchorOf(ma, list, emb.length), emb)
+          (id, code, rnorm, list, key)
+        }
+      }.toDF("vec_id", "code", "rnorm", "list_id", "batch_id")
+      .write.mode("overwrite").partitionBy("list_id", "batch_id")
+      .parquet(codesRoot)
   }
 
   /** MAINTENANCE RETRAIN for the IVF-PQ composite: re-train the codebooks
@@ -1301,7 +1259,6 @@ object AnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$dst/_codebooks")
     writeRotation(spark, dst, rot)
     writeListMeans(spark, dst, means)
-    writeEncodingKind(dst, "residual")
     writeListsGenSidecar(dst, listsRoot)
     Compaction.publishRewrite(table, newVer, graceGenerations)
     newVer
@@ -1334,7 +1291,6 @@ object AnnIndex {
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/codebooks")
       writeRotation(spark, s"$tmp/codes", rot)
       writeListMeans(spark, s"$tmp/codes", means)
-      writeEncodingKind(s"$tmp/codes", "residual")
       writeListsGenSidecar(s"$tmp/codes", listsRoot)
       gfs.writeBytes(readyMarker(tmp), Array.emptyByteArray)
     }
@@ -1418,7 +1374,7 @@ object AnnIndex {
     * batch-keyed append runs the same write-then-clean protocol over the
     * codes tree (`list_id=✶/batch_id=<key>`): snapshot the key's prior
     * files, append, sweep — exactly-once end state, never-empty reads.
-    * Ad-hoc callers (None) keep the layout-preserving append. */
+    * Ad-hoc callers (None) append under the `batch_id=-1` base level. */
   def appendIvfPq(batch: DataFrame, ivfDir: String, indexDir: String,
                   batchKey: Option[String] = None): Unit = {
     val spark = batch.sparkSession
@@ -1436,35 +1392,20 @@ object AnnIndex {
       if (batch.columns.contains("list_id")) batch
       else assignAgainst(batch, model.cents)
     val bc = spark.sparkContext.broadcast(booksArray(model.books))
-    val typed = assigned
+    val bcM = spark.sparkContext.broadcast(centArrOf(model.means))
+    val bcR = spark.sparkContext.broadcast(model.rot)
+    val key = batchKey.getOrElse("-1")
+    val rows = assigned
       .select(col("vec_id"), col("embedding"), col("list_id"))
       .as[(Long, Array[Float], Int)]
-    val rows =
-      if (model.residual) {
-        val rotM = model.rot.getOrElse(throw new IllegalStateException(
-          s"residual codes generation ${model.codesRoot} lacks its _rotation sidecar"))
-        val bcM = spark.sparkContext.broadcast(centArrOf(model.means))
-        val bcR = spark.sparkContext.broadcast(rotM)
-        typed.mapPartitions { it =>
-          val bk = bc.value; val ma = bcM.value; val r = bcR.value
-          it.map { case (id, emb, list) =>
-            val (code, rnorm) =
-              encodeResidualRow(bk, r, anchorOf(ma, list, emb.length), emb)
-            (id, code, rnorm, list)
-          }
-        }.toDF("vec_id", "code", "rnorm", "list_id")
-      } else {
-        // legacy raw generation (pre-r18): keep its own encoding so the
-        // generation never mixes disciplines; a retrain upgrades it
-        val bcR = spark.sparkContext.broadcast(model.rot)
-        typed.mapPartitions { it =>
-          val bk = bc.value; val r = bcR.value
-          it.map { case (id, emb, list) =>
-            val (code, rnorm) = encodePqRow(bk, rotate(r, emb.map(_.toDouble)))
-            (id, code, rnorm, list)
-          }
-        }.toDF("vec_id", "code", "rnorm", "list_id")
-      }
+      .mapPartitions { it =>
+        val bk = bc.value; val ma = bcM.value; val r = bcR.value
+        it.map { case (id, emb, list) =>
+          val (code, rnorm) =
+            encodeResidualRow(bk, r, anchorOf(ma, list, emb.length), emb)
+          (id, code, rnorm, list, key)
+        }
+      }.toDF("vec_id", "code", "rnorm", "list_id", "batch_id")
     appendListKeyed(rows, model.codesRoot, batchKey)
   }
 
@@ -1475,7 +1416,7 @@ object AnnIndex {
   /** [[ivfPqScan]] against an already-resolved generation root. */
   def ivfPqScanAt(spark: SparkSession, codesRoot: String,
                   lists: Seq[Int]): DataFrame =
-    spark.read.parquet(codesRoot)
+    spark.read.schema(CodesSchema).parquet(codesRoot)
       .filter(col("list_id").isInCollection(lists))
 
   // ---- LSH posting lists --------------------------------------------------
@@ -1508,14 +1449,7 @@ object AnnIndex {
     * duplicate postings, while a fresh-checkpoint restart's restarting
     * batch numbers land under NEW keys and cannot clobber a prior
     * lineage's files. Ad-hoc callers (None) append under the
-    * `batch_id=-1` base level.
-    *
-    * A table still in the older one-directory-per-cell layout (a `bkt=`
-    * level under `band=`, with or without `batch_id=` below it) is
-    * rewritten once into the band layout before the first append lands:
-    * the rewrite is [[Compaction.compactLshPostings]], so it publishes as
-    * a new generation and keeps `batchKey`'s rows under their own key (a
-    * replay of that batch then still overwrites them). */
+    * `batch_id=-1` base level. */
   def appendLsh(batch: DataFrame, indexDir: String, bands: Int, bits: Int,
                 batchKey: Option[String] = None): Unit =
     writeLsh(batch, indexDir, bands, bits, "append", batchKey)
@@ -1524,14 +1458,11 @@ object AnnIndex {
     * `band` and `batch_id` are directory levels. Declared on every read, so
     * no scan pays a schema-inference job, and `batch_id` reads as a string
     * whatever keys the table holds. */
-  private val LshPostingSchema =
+  private[graft] val LshPostingSchema =
     "vec_id BIGINT, bkt INT, band INT, batch_id STRING"
 
   private def writeLsh(e: DataFrame, indexDir: String, bands: Int, bits: Int,
                        mode: String, batchKey: Option[String] = None): Unit = {
-    if (mode == "append" && isCellLayout(cur(s"$indexDir/buckets")))
-      Compaction.compactLshPostings(e.sparkSession, indexDir,
-        preserveBatchKeys = batchKey.toSet)
     val root = cur(s"$indexDir/buckets")
     val bk = graft.queries.Llm.rpBandBuckets(e, bands, bits)
     val bandArr = array((0 until bands).map(b => col(s"bkt$b")): _*)
@@ -1549,53 +1480,6 @@ object AnnIndex {
         .option("partitionOverwriteMode", "dynamic")
       case None => rows.mode(mode)
     }).parquet(root)
-  }
-
-  /** Whether the posting table at `root` is in the one-directory-per-cell
-    * layout (`band=/bkt=/…`). Two driver listings: the root, and one band
-    * directory. */
-  private def isCellLayout(root: String): Boolean =
-    gfs.isDirectory(root) && gfs.list(root)
-      .find(d => Paths.get(d).getFileName.toString.startsWith("band=") &&
-        gfs.isDirectory(d))
-      .exists(gfs.list(_).exists(
-        Paths.get(_).getFileName.toString.startsWith("bkt=")))
-
-  /** One-time in-place upgrade of a PRE-batch_id table to the r11 layout:
-    * data files sitting directly in the partition-leaf directories (depth
-    * levels of `key=value` dirs below `root`) MOVE into a `batch_id=-1/`
-    * subdir — a metadata-only rename per file, no rewrite. Without it, the
-    * first batch_id-keyed write would leave leaf files at two depths and
-    * Spark's partition discovery would reject the whole table
-    * ("conflicting directory structures"). Idempotent and cheap (driver
-    * FS listing); called only from batch-keyed writers, since legacy-mode
-    * writes keep the legacy shape consistent by themselves. */
-  private[etl] def migrateFlatLayout(root: String, depth: Int): Unit = {
-    if (!gfs.isDirectory(root)) return
-    // once migrated (or verified already-batch-shaped), a durable marker
-    // short-circuits the walk — without it every micro-batch would re-list
-    // the partition tree just to find no strays
-    val marker = s"$root/_GRAFT_BATCH_LAYOUT"
-    if (gfs.exists(marker)) return
-    def leaves(p: String, d: Int): Seq[String] =
-      if (d == 0) Seq(p)
-      else gfs.list(p)
-        .filter(c => gfs.isDirectory(c) &&
-          Paths.get(c).getFileName.toString.contains("="))
-        .flatMap(leaves(_, d - 1))
-    leaves(root, depth).foreach { leaf =>
-      val strays = gfs.list(leaf).filter { f =>
-        val n = Paths.get(f).getFileName.toString
-        gfs.isFile(f) && !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (strays.nonEmpty) {
-        val base = s"$leaf/batch_id=-1"
-        gfs.createDirectories(base)
-        strays.foreach(f =>
-          gfs.moveIfAbsent(f, s"$base/${Paths.get(f).getFileName}"))
-      }
-    }
-    gfs.writeBytes(marker, Array.emptyByteArray)
   }
 
   /** Multi-probe candidate fetch over the persisted posting lists: `cells`

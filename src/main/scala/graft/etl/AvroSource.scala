@@ -42,10 +42,8 @@ import org.apache.spark.sql.types._
   * at any point leaves the previous generation current. [[readAvro]]
   * resolves the pointer and only ever scans an immutable complete tree —
   * it performs NO healing (ADVICE r12: a reader must never mutate table
-  * state out from under a live writer); the one legacy crash state the
-  * pre-pointer rename swap could leave (flat path absent, `.old-*` tree
-  * complete) fails the read loudly and is healed by the next WRITE's
-  * [[Compaction.reclaimOrphans]].
+  * state out from under a live writer); a crashed write's orphan
+  * generation is reclaimed by the next WRITE's [[Compaction.reclaimOrphans]].
   *
   * Deployment note: file IO goes through `java.io.File` (this repo's
   * local-FS persistence, same as the manifest layers). An object-store
@@ -481,8 +479,7 @@ object AvroSource {
     * generation survives one grace cycle for in-flight readers). A task or
     * job failure therefore leaves the prior table fully intact and current;
     * the orphaned future generation is reclaimed by the next write's
-    * [[Compaction.reclaimOrphans]] (which also heals pre-pointer-era swap
-    * leftovers). An empty input yields a READABLE empty table (one
+    * [[Compaction.reclaimOrphans]]. An empty input yields a READABLE empty table (one
     * zero-record container file carrying the schema), matching the parquet
     * sinks. Returns the number of container files written. */
   def writeAvro(df: DataFrame, path: String,

@@ -169,15 +169,13 @@ object BucketedTable {
                    fs: graft.GraftFs = gfs): Manifest = {
     val v = version.getOrElse(currentVersion(tableDir, fs))
     val mPath = s"$tableDir/v=$v/_MANIFEST"
-    // a _CURRENT without a _MANIFEST is the pre-r11 flat Warehouse layout
-    // (v=N holds bare parquet, no bucket map): fail with the migration
-    // recipe instead of a raw NoSuchFileException deep in a sink fold
+    // a _CURRENT without a _MANIFEST (a plain Warehouse snapshot, not a
+    // bucketed table) fails here, named, instead of with a raw
+    // NoSuchFileException deep in a sink fold
     if (!fs.exists(mPath))
       throw new IllegalStateException(
-        s"$tableDir: _CURRENT names v=$v but no _MANIFEST exists — this is " +
-          "a legacy flat Warehouse snapshot, not a bucketed table. Run " +
-          "BucketedTable.migrateLegacyLayout(spark, tableDir, keyCols, " +
-          "nBuckets) once to convert it in place, then restart the sink.")
+        s"$tableDir: _CURRENT names v=$v but $mPath does not exist — not a " +
+          "bucketed table")
     val lines = fs.readLines(mPath)
     val n = lines.head.stripPrefix("nBuckets=").toInt
     val rest = lines.drop(1).filter(_.nonEmpty)
@@ -210,8 +208,8 @@ object BucketedTable {
     Manifest(n, m, parent, evolutions, drops, renames, widens)
   }
 
-  /** One serializer for the manifest body (commit / evolve / rebucket /
-    * migrate all write the same format). */
+  /** One serializer for the manifest body (commit / evolve / rebucket
+    * all write the same format). */
   private def manifestBody(nBuckets: Int, buckets: Map[Int, Long],
                            parent: Long, evolutions: Seq[Evolution],
                            drops: Seq[Dropped] = Nil,
@@ -223,29 +221,6 @@ object BucketedTable {
         renames.map(r => s"erename=${r.since}\t${r.from}\t${r.to}") ++
         widens.map(w => s"ewiden=${w.since}\t${w.name}\t${w.toDdl}") ++
         buckets.toSeq.sortBy(_._1).map { case (b, v) => s"$b $v" })).mkString("\n")
-
-  /** One-time in-place conversion of a pre-r11 flat [[Warehouse]] snapshot
-    * (`v=N/` bare parquet + `_CURRENT`, no `_MANIFEST`) into a bucketed
-    * table: the current snapshot is re-hashed onto `nBuckets` buckets and
-    * committed as one fresh fully-referenced version; [[vacuum]] then
-    * reclaims the legacy snapshot dirs. No-op (returns the current version)
-    * if the table is already bucketed. Quiet-window contract: run with the
-    * owning sink stopped. */
-  def migrateLegacyLayout(spark: SparkSession, tableDir: String,
-                          keyCols: Seq[String], nBuckets: Int): Long = {
-    require(exists(tableDir), s"$tableDir was never committed; nothing to migrate")
-    val cur = currentVersion(tableDir)
-    if (gfs.exists(s"$tableDir/v=$cur/_MANIFEST")) return cur
-    val snapshot = spark.read.parquet(s"$tableDir/v=$cur")
-      .withColumn(BucketCol, bucketExpr(keyCols, nBuckets))
-    val version = Warehouse.claimVersion(tableDir)
-    snapshot.write.mode("overwrite").partitionBy(BucketCol)
-      .parquet(s"$tableDir/v=$version")
-    gfs.writeString(s"$tableDir/v=$version/_MANIFEST",
-      manifestBody(nBuckets, (0 until nBuckets).map(_ -> version).toMap, cur, Nil))
-    publishChecked(tableDir, version, cur)
-    version
-  }
 
   // ---- writer-lease fencing (multi-host, r14 judge #6) --------------------
 

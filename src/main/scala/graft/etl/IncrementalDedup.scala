@@ -1,5 +1,6 @@
 package graft.etl
 
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -45,17 +46,9 @@ object IncrementalDedup {
   private def postingsPath(indexDir: String) =
     Compaction.currentPath(s"$indexDir/postings")
 
-  private def hasIndex(indexDir: String): Boolean = {
-    val fs = graft.GraftFs.default
-    val root = postingsPath(indexDir)
-    // legacy append layout marks the root with _SUCCESS; the batch_id-keyed
-    // dynamic-overwrite path ([[commitPostings]] with a batch id) only
-    // creates its partition dir — either signals a committed index
-    if (fs.exists(s"$root/_SUCCESS")) return true
-    if (!fs.isDirectory(root)) return false
-    fs.list(root).exists(
-      p => java.nio.file.Paths.get(p).getFileName.toString.startsWith("batch_id="))
-  }
+  /** The posting table's schema: `batch_id` is its one directory level. */
+  private[graft] val PostingsSchema =
+    "band INT, bkey STRING, doc_id BIGINT, batch_id STRING"
 
   /** Dedup `batch` (`doc_id`, `text`, …) against the index at `indexDir`
     * and within itself, append the survivors' postings, and return the kept
@@ -83,11 +76,12 @@ object IncrementalDedup {
   }
 
   /** Steps 1–2 of [[ingest]] as a PURE computation — the batch's surviving
-    * posting rows against the CURRENT index, no writes. Exposed so a
+    * posting rows against the CURRENT index, no writes: the posting rows
+    * of the docs [[gateBatch]] admits (`dd`), so batch ingest and
+    * [[graft.stream.Streams.corpusIngest]] run one gate. Exposed so a
     * composed at-least-once pipeline can stage its effects BEFORE
-    * [[commitPostings]] ([[graft.stream.Streams.corpusIngest]] uses the
-    * per-doc form, [[gateBatch]]). Deterministic for a fixed index state,
-    * so a preview and a later commit in the same micro-batch agree.
+    * [[commitPostings]]. Deterministic for a fixed index state, so a
+    * preview and a later commit in the same micro-batch agree.
     *
     * `excludeBatchKey`: a streaming pipeline passes its LINEAGE-SCOPED
     * batch key (`<queryId prefix>-<batchId>`) so the stored-index read
@@ -106,23 +100,10 @@ object IncrementalDedup {
                    imageCol: Option[String] = None,
                    audioCol: Option[String] = None,
                    videoCol: Option[String] = None): DataFrame = {
-    val posts = postings(batch, bands, rowsPerBand, imageCol, audioCol, videoCol)
-      .transform(pinShared)
-    // 1) drop batch docs colliding with the stored corpus (see
-    // [[storedHitCells]] for the join direction)
-    val survivorPosts = storedHitCells(posts, indexDir, excludeBatchKey) match {
-      case None => posts
-      case Some(cells) =>
-        val hit = posts
-          .join(broadcast(cells), Seq("band", "bkey"), "left_semi")
-          .select("doc_id").distinct()
-        posts.join(hit, Seq("doc_id"), "left_anti")
-    }
-    // 2) full CC dedup within the surviving batch (q_dedup_keep semantics)
-    val nonCanonical = Llm.dedupGroups(Llm.bandStarEdges(survivorPosts))
-      .filter(col("doc_id") =!= col("group_id"))
-      .select("doc_id")
-    survivorPosts.join(nonCanonical, Seq("doc_id"), "left_anti")
+    val (posts, verdict) = gateBatch(batch, indexDir, bands, rowsPerBand,
+      excludeBatchKey, imageCol, audioCol, videoCol)
+    posts.join(verdict.filter(col("dd")).select("doc_id"), Seq("doc_id"),
+      "left_semi")
   }
 
   /** The near-dup gate of ONE streamed micro-batch
@@ -133,7 +114,8 @@ object IncrementalDedup {
     *     rows the caller commits for its admitted docs;
     *   - a LAZY per-doc verdict `(doc_id, dd, gate)` over that pin: `dd`
     *     is true when the doc survives both the stored-index gate and the
-    *     in-batch CC (exactly [[keptPostings]]' doc set); for a dropped doc
+    *     in-batch CC (the full connected-components semantics of
+    *     `q_dedup_keep`: min doc per component wins); for a dropped doc
     *     `gate` names WHICH modality's collision decided it (the "why isn't
     *     my doc in the corpus?" question). The gate comes from the doc's
     *     posting rows IMPLICATED in a collision — a stored-index hit cell,
@@ -309,8 +291,14 @@ object IncrementalDedup {
   }
 
   /** The stored-index cells a batch's postings hit, or None before the
-    * index exists. Join DIRECTION matters at scale: `posts SEMI stored`
-    * builds on the stored table (LeftSemi can only broadcast its
+    * index holds any `batch_id=` partition. A root holding anything else
+    * besides hidden files is in a layout no code here writes; reading it
+    * as an empty index would re-admit every stored doc's near-dups, so the
+    * gate fails instead, naming the table (one root listing covers both
+    * checks).
+    *
+    * Join DIRECTION matters at scale: `posts SEMI stored` builds on the
+    * stored table (LeftSemi can only broadcast its
     * right/build side), and since the index is the corpus-sized side Spark
     * would shuffle the ENTIRE posting table per micro-batch. Flipped —
     * `stored SEMI broadcast(batch cells)` — the index is STREAMED once
@@ -320,23 +308,25 @@ object IncrementalDedup {
     * result (set intersection is symmetric), spec-asserted shuffle-free on
     * the stored side. */
   private def storedHitCells(posts: DataFrame, indexDir: String,
-                             excludeBatchKey: Option[String]): Option[DataFrame] =
-    if (!hasIndex(indexDir)) None
+                             excludeBatchKey: Option[String]): Option[DataFrame] = {
+    val fs = graft.GraftFs.default
+    val root = postingsPath(indexDir)
+    val entries =
+      if (!fs.isDirectory(root)) Nil
+      else fs.list(root).map(p => Paths.get(p).getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    entries.find(!_.startsWith("batch_id=")).foreach(n =>
+      throw new IllegalStateException(
+        s"$root: the posting table holds $n outside a batch_id= " +
+          "partition — a layout this code does not write; rebuild the index"))
+    if (entries.isEmpty) None
     else {
-      val root = postingsPath(indexDir)
-      val batchLayout = graft.GraftFs.default.list(root).exists(p =>
-        java.nio.file.Paths.get(p).getFileName.toString.startsWith("batch_id="))
       // the gate reads only the cell columns, so it declares them: no
-      // schema-inference job per batch, and `batch_id` reads as the STRING
-      // it is written as (inference would type an all-numeric batch_id dir
-      // set as int, and int-vs-string comparison would cast the
-      // non-numeric key to null and drop every stored row from the gate)
-      val storedAll = posts.sparkSession.read
-        .schema("band INT, bkey STRING" + (if (batchLayout) ", batch_id STRING" else ""))
-        .parquet(root)
+      // schema-inference job per batch
+      val storedAll = posts.sparkSession.read.schema(PostingsSchema).parquet(root)
       val storedOwn = excludeBatchKey match {
-        case Some(k) if batchLayout => storedAll.filter(col("batch_id") =!= k)
-        case _ => storedAll
+        case Some(k) => storedAll.filter(col("batch_id") =!= k)
+        case None => storedAll
       }
       // neither side is de-duplicated: a semi join's build side needs no
       // distinct, and a cell stored twice only repeats a HIT posting,
@@ -346,6 +336,7 @@ object IncrementalDedup {
         .join(broadcast(posts.select("band", "bkey")),
           Seq("band", "bkey"), "left_semi"))
     }
+  }
 
   /** Step 3 of [[ingest]]: land the kept docs' postings — the only write,
     * and the batch's commit point. The index stays bucket-unique: EVERY doc
@@ -360,12 +351,9 @@ object IncrementalDedup {
     * of duplicating them — a partially-landed commit is healed whole — and
     * a fresh-checkpoint restart's restarting batch numbers land under NEW
     * keys, never over a prior lineage's committed postings. Batch-mode
-    * callers (None) append under the `batch_id=-1` base partition; a
-    * pre-r11 flat table is first upgraded in place (file moves, no
-    * rewrite) by [[AnnIndex.migrateFlatLayout]]. */
+    * callers (None) append under the `batch_id=-1` base partition. */
   def commitPostings(keptPosts: DataFrame, indexDir: String,
                      batchKey: Option[String] = None): Unit = {
-    if (batchKey.isDefined) AnnIndex.migrateFlatLayout(postingsPath(indexDir), depth = 0)
     val rows = keptPosts.select("band", "bkey", "doc_id")
       .withColumn("batch_id", lit(batchKey.getOrElse("-1")))
       .write.partitionBy("batch_id")

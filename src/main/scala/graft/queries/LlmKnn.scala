@@ -311,13 +311,10 @@ object LlmKnn {
     * `score = (bias(list_id) + Σ_s lut[code_s]) / rnorm` reconstructs
     * ⟨q, anchor + residual̂⟩, where the anchor is the list's stored MEAN
     * (`_list_means` sidecar — a list without one anchors at zero, matching
-    * the encoder). On a raw (pre-r18) generation the bias is identically 0
-    * and the arithmetic degrades to the old form. */
-  private def listBiasCol(residual: Boolean, pv: Array[Double],
-                          meanMap: Map[Int, Array[Double]],
+    * the encoder). */
+  private def listBiasCol(pv: Array[Double], meanMap: Map[Int, Array[Double]],
                           lists: Seq[Int]): Column =
-    if (!residual) lit(0.0)
-    else element_at(
+    element_at(
       typedLit(lists.map(l =>
         l -> meanMap.get(l).fold(0.0)(dotv(pv, _))).toMap), col("list_id"))
 
@@ -333,7 +330,7 @@ object LlmKnn {
     val books = model.books
     val m = books.map(_._1).max + 1
     val nCodes = books.map(_._2).max + 1
-    val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotate(model.rot, probeVec))
+    val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotateArr(model.rot, probeVec))
     val cand = AnnIndex.pqScanAt(spark, model.codesRoot)
       .filter(col("rnorm") > 0)
       .withColumn("score_pq",
@@ -386,8 +383,8 @@ object LlmKnn {
     // residual; the per-list ⟨q, centroid⟩ bias (nprobe driver scalars)
     // adds the cell position back — together ⟨q, ĉ+r̂⟩, normalized by the
     // stored exact reconstruction norm
-    val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotate(model.rot, probeVec))
-    val bias = listBiasCol(model.residual, probeVec, model.means.toMap, lists)
+    val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotateArr(model.rot, probeVec))
+    val bias = listBiasCol(probeVec, model.means.toMap, lists)
     val cand = AnnIndex.ivfPqScanAt(spark, model.codesRoot, lists)
       .filter(col("rnorm") > 0)
       .withColumn("score_pq",
@@ -443,9 +440,8 @@ object LlmKnn {
     // rotated-probe LUT plus the ⟨q, list mean⟩ bias for ITS list, so the
     // list-equality join scores `(cbias + ADC)/rnorm` per matched pair
     val probeLists = probes.zip(probed).flatMap { case ((pid, pv), ls) =>
-      val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotate(model.rot, pv))
-      ls.map(l => (pid, lut, l,
-        if (model.residual) meanMap.get(l).fold(0.0)(dotv(pv, _)) else 0.0))
+      val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotateArr(model.rot, pv))
+      ls.map(l => (pid, lut, l, meanMap.get(l).fold(0.0)(dotv(pv, _))))
     }.toDF("probe_id", "lut", "list_id", "cbias")
     val coarse = AnnIndex.ivfPqScanAt(spark, model.codesRoot, probed.flatten.distinct)
       .filter(col("rnorm") > 0)
@@ -506,9 +502,8 @@ object LlmKnn {
     // broadcast row, exactly as the batch query core
     val probeLists = probes.zip(probed).flatMap { case ((pid, pv), ls) =>
       val pvD = pv.map(_.toDouble)
-      val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotate(model.rot, pvD))
-      ls.map(l => (pid, lut, l,
-        if (model.residual) meanMap.get(l).fold(0.0)(dotv(pvD, _)) else 0.0))
+      val lut = pqAdcLut(books, m, nCodes, AnnIndex.rotateArr(model.rot, pvD))
+      ls.map(l => (pid, lut, l, meanMap.get(l).fold(0.0)(dotv(pvD, _))))
     }.toDF("probe_id", "lut", "list_id", "cbias")
     val coarse = AnnIndex.ivfPqScanAt(spark, model.codesRoot, lists)
       .filter(col("rnorm") > 0)
@@ -564,7 +559,7 @@ object LlmKnn {
     val m = books.map(_._1).max + 1
     val nCodes = books.map(_._2).max + 1
     val luts = probes.map { case (pid, pv) =>
-      (pid, pqAdcLut(books, m, nCodes, AnnIndex.rotate(model.rot, pv)))
+      (pid, pqAdcLut(books, m, nCodes, AnnIndex.rotateArr(model.rot, pv)))
     }
     val coarse = AnnIndex.pqScanAt(spark, model.codesRoot)
       .filter(col("rnorm") > 0)

@@ -1009,29 +1009,12 @@ object Streams {
         // the gates below call registered codegen functions (word_ngrams
         // for the span-grain gate; the index appends' cosine) — idempotent
         graft.expr.GraftFunctions.ensureRegistered(spark)
-        // Pointer-era crashes need no heal (a compaction death at any point
-        // leaves the previous generation current and complete), but a table
-        // last maintained by the PRE-r13 RENAME-swap code can still sit in
-        // its crashed-swap state (flat path absent, `.old-*` retired tree
-        // complete, no pointer) — and this batch body reads the index BEFORE
-        // any compaction entry point would heal it, so skipping the heal
-        // here would read that state as an EMPTY index, re-admit near-dups
-        // of the whole corpus, and let the batch's own commit recreate the
-        // dir so the restore can never fire again. The heal is a no-op the
-        // moment a pointer exists or the flat dir is present (a few
-        // metadata checks per batch), and this is the WRITER's entry point,
-        // so healing here honors the readers-never-mutate contract.
-        graft.etl.Compaction.recoverInterrupted(s"$dedupDir/postings")
-        graft.etl.Compaction.recoverInterrupted(s"$lshDir/buckets")
-        sq8Dir.foreach(d => graft.etl.Compaction.recoverInterrupted(s"$d/sq8"))
-        ivfDir.foreach(d => graft.etl.Compaction.recoverInterrupted(s"$d/lists"))
+        // the two batch-keyed gram tables this body keeps beside the corpus
         val evalGramsTable = s"$corpusDir/_eval_grams"
+        val evalGramsSchema = "gram STRING, grain STRING, batch_id STRING"
         val anyDecon = decontaminate || spanDecontaminate
-        if (anyDecon)
-          graft.etl.Compaction.recoverInterrupted(evalGramsTable)
         val spanAnchorsTable = s"$corpusDir/_span_anchors"
-        if (spanExcise)
-          graft.etl.Compaction.recoverInterrupted(spanAnchorsTable)
+        val spanAnchorsSchema = "gram STRING, batch_id STRING"
         // ── MAP-SIDE CURATION GATES (r17 — streaming/batch funnel parity).
         // The batch funnel (CorpusPipeline) runs holdout-exclusion, the
         // quality score and the Gopher repetition rules BEFORE any dedup
@@ -1138,19 +1121,9 @@ object Streams {
                 java.nio.file.Paths.get(p).getFileName.toString
                   .startsWith("batch_id="))
               if (!committed) holdoutGrams.get.limit(0)
-              else {
-                val t = spark.read.parquet(root)
-                  // string-compare: partition inference may type an
-                  // all-numeric batch_id set as int (same guard as the
-                  // dedup postings read)
-                  .filter(col("batch_id").cast("string") =!= batchKey)
-                // grain column (r18): a pre-r18 table stores only 4-grams —
-                // absent or null grain reads as "g4"
-                (if (t.columns.contains("grain"))
-                   t.select(col("gram"),
-                     coalesce(col("grain"), lit("g4")).as("grain"))
-                 else t.select(col("gram"), lit("g4").as("grain")))
-              }
+              else spark.read.schema(evalGramsSchema).parquet(root)
+                .filter(col("batch_id") =!= batchKey)
+                .select("gram", "grain")
             }
             val evalG = storedGrams.unionByName(holdoutGrams.get).distinct()
               .transform(pinShared)
@@ -1256,8 +1229,8 @@ object Streams {
                   .startsWith("batch_id="))
               if (!committed)
                 Seq.empty[String].toDF("gram")
-              else spark.read.parquet(root)
-                .filter(col("batch_id").cast("string") =!= batchKey)
+              else spark.read.schema(spanAnchorsSchema).parquet(root)
+                .filter(col("batch_id") =!= batchKey)
                 .select("gram")
             }
             val cut = graft.queries.Llm.exciseIncremental(
@@ -1544,7 +1517,7 @@ object Streams {
               val appended = readPendingCount(p)
               appended <= 0L ||
                 !graft.etl.Compaction.tableExists(s"$d/lists") || {
-                  val corpus = spark.read.parquet(
+                  val corpus = graft.etl.AnnIndex.readLists(spark,
                     graft.etl.Compaction.currentPath(s"$d/lists")).count()
                   appended.toDouble >=
                     ivfRetrainMinGrowth * math.max(1L, corpus - appended)
@@ -1571,16 +1544,14 @@ object Streams {
           // holdout-carrying batch — fold it on the same cadence (same
           // preserve-own-key replay guard)
           if (anyDecon && existsTbl(evalGramsTable))
-            graft.etl.Compaction.compactParquet(spark, evalGramsTable,
-              Seq.empty, coalesceBatchKeyed = true,
-              preserveBatchKeys = preserve, graceGenerations = compactGrace)
+            graft.etl.Compaction.compactBatchKeyed(spark, evalGramsTable,
+              evalGramsSchema, Nil, preserve, compactGrace)
           // the span-anchor posting table grows one fragment per admitting
           // batch (corpus-anchor-scaled — the honest cost of exact
           // substring hygiene); fold it on the same cadence
           if (spanExcise && existsTbl(spanAnchorsTable))
-            graft.etl.Compaction.compactParquet(spark, spanAnchorsTable,
-              Seq.empty, coalesceBatchKeyed = true,
-              preserveBatchKeys = preserve, graceGenerations = compactGrace)
+            graft.etl.Compaction.compactBatchKeyed(spark, spanAnchorsTable,
+              spanAnchorsSchema, Nil, preserve, compactGrace)
           if (!ivfRetrainNow) {
             ivfDir.filter(d => existsTbl(s"$d/lists"))
               .foreach(d => graft.etl.Compaction.compactIvfLists(spark, d,

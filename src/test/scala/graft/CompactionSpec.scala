@@ -14,7 +14,6 @@ class CompactionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def vecRows(ids: Range): Seq[(Long, Int, Array[Float])] = {
-    val rnd = new scala.util.Random(7)
     ids.map { i =>
       // draw per-id deterministic vectors (order-independent across calls)
       val r = new scala.util.Random(1000 + i)
@@ -177,34 +176,6 @@ class CompactionSpec extends AnyFunSuite {
       s"y span sum $ySum must beat the full-span-per-file worst case")
   }
 
-  test("recoverInterrupted: a death between the swap's two moves restores the retired tree whole") {
-    import java.nio.file.{Files, Paths}
-    val idx = Files.createTempDirectory("graft_cmp_recover").toString
-    val docs = Tables.documents(spark, TestSpark.sfDir)
-    IncrementalDedup.ingest(docs.filter(col("doc_id") < 100), idx)
-    val postings = s"$idx/postings"
-    val rows0 = spark.read.parquet(postings)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(rows0.nonEmpty)
-    // simulate the crash window: path retired to .old-*, rewrite tmp left
-    // half-written, process dies before the second move
-    Files.move(Paths.get(postings), Paths.get(postings + ".old-crash"))
-    Files.createDirectories(Paths.get(postings + ".compact-crash"))
-    assert(Compaction.recoverInterrupted(postings),
-      "recovery must restore the retired tree when the path is absent")
-    assert(spark.read.parquet(postings)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq === rows0,
-      "the restored table must be byte-for-byte the pre-compaction state")
-    // idempotent no-op once the path exists again
-    assert(!Compaction.recoverInterrupted(postings))
-    // the stale half-written rewrite is reclaimed by the next compaction
-    val (_, _) = Compaction.compactDedupPostings(spark, idx)
-    assert(!Files.exists(Paths.get(postings + ".compact-crash")),
-      "the next compaction entry must reclaim the crashed rewrite dir")
-    assert(spark.read.parquet(Compaction.currentPath(postings))
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq === rows0)
-  }
-
   test("versioned publish: a reader racing repeated compactions always sees a complete snapshot") {
     import java.nio.file.Files
     val idx = Files.createTempDirectory("graft_cmp_race").toString
@@ -263,9 +234,6 @@ class CompactionSpec extends AnyFunSuite {
     assert(spark.read.parquet(Compaction.currentPath(postings))
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq === rows0,
       "readers during the crash window must see the full old generation")
-    // under a pointer layout an absent flat root is NORMAL, never a crash:
-    // the legacy heal must not fire even though `postings` itself is gone
-    assert(!Compaction.recoverInterrupted(postings))
     // the next maintenance run reclaims the orphan and publishes cleanly
     Compaction.compactDedupPostings(spark, idx) // reclaims, publishes v2
     assert(Compaction.currentVersion(postings) === 2L)

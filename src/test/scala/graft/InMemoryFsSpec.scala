@@ -173,7 +173,6 @@ class InMemoryFsSpec extends AnyFunSuite {
   test("Warehouse pointer protocol runs unchanged on a non-NIO store: claim CAS, commit, current, vacuum") {
     withFs { fs =>
       val t = "/mem/warehouse/t"
-      val spark = TestSpark.spark // unused by the write callback below
       val v1 = Warehouse.publish(t,
         dir => fs.writeString(s"$dir/part-0", "gen1"), fs)
       assert(v1 === 1L)
@@ -190,7 +189,7 @@ class InMemoryFsSpec extends AnyFunSuite {
     }
   }
 
-  test("Compaction generation resolution + legacy crash heal run unchanged on a non-NIO store") {
+  test("Compaction generation resolution runs unchanged on a non-NIO store") {
     withFs { fs =>
       val t = "/mem/idx/postings"
       fs.writeString(s"$t/part-0.parquet", "gen0")
@@ -201,13 +200,6 @@ class InMemoryFsSpec extends AnyFunSuite {
       fs.writeString(s"$t._CURRENT", "3")
       assert(Compaction.currentVersion(t, fs) === 3L)
       assert(Compaction.currentPath(t, fs) === s"$t.v3")
-      // legacy rename-swap crash: no flat tree, no pointer, an .old- copy
-      val u = "/mem/idx2/postings"
-      fs.writeString(s"$u.old-123/part-0.parquet", "whole")
-      assert(Compaction.recoverInterrupted(u, fs),
-        "the retired tree is restored whole on the in-memory store")
-      assert(fs.readString(s"$u/part-0.parquet") === "whole")
-      assert(Compaction.tableExists(u, fs))
     }
   }
 

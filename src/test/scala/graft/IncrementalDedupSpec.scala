@@ -66,10 +66,24 @@ class IncrementalDedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.QueryExecution
     val idx = Files.createTempDirectory("graft_inc_idx_plan").toString
     IncrementalDedup.ingest(docs.filter(col("doc_id") < 250), idx).count()
-    val frame = IncrementalDedup.keptPostings(docs.filter(col("doc_id") >= 250), idx)
-    frame.collect()
+    // the gate scans the stored postings inside one of its eager pins, so
+    // the plans to check are every execution the gate and its collect run
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      IncrementalDedup.keptPostings(docs.filter(col("doc_id") >= 250), idx)
+        .collect()
+      assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(
+        spark.sparkContext, 30000L))
+    } finally spark.listenerManager.unregister(listener)
     def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
@@ -94,14 +108,17 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // at 100 TB the posting index is the corpus-sized side: it must be the
     // STREAMED side of a broadcast gate — corpus-volume rows must never
     // enter an exchange (exchanges above the gate carry only reduced hits)
-    val all = nodes(frame.queryExecution.executedPlan)
+    val scanning = executed.toArray(Array.empty[QueryExecution]).toSeq
+      .map(qe => nodes(qe.executedPlan)).filter(_.exists(isPostingsScan))
+    assert(scanning.nonEmpty, "no executed plan scanned the stored postings")
+    val all = scanning.flatten
     val offenders = all.collect {
       case e: BroadcastExchangeExec if rawPostings(e.child) => "broadcast(raw postings)"
       case e: ShuffleExchangeExec if rawPostings(e.child) => "shuffle(raw postings)"
     }
     assert(offenders.isEmpty,
       s"corpus-volume posting rows entered an exchange: ${offenders.mkString(", ")}")
-    val gated = all.exists {
+    val gated = scanning.forall(_.exists {
       case j: BroadcastHashJoinExec =>
         val streamed = j.buildSide match {
           case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.right
@@ -109,8 +126,22 @@ class IncrementalDedupSpec extends AnyFunSuite {
         }
         rawPostings(streamed)
       case _ => false
-    }
+    })
     assert(gated, "expected the postings scan streamed into a broadcast gate join")
+  }
+
+  test("a postings root without its batch_id= level fails the gate, naming the table") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("graft_inc_flat").toString
+    // data files straight under the root: no code here writes this layout,
+    // and reading it as an empty index would re-admit the stored docs' dups
+    Seq((0, "k1", 1L)).toDF("band", "bkey", "doc_id")
+      .write.parquet(s"$idx/postings")
+    val err = intercept[IllegalStateException] {
+      IncrementalDedup.ingest(docs.filter(col("doc_id") < 20), idx)
+    }
+    assert(err.getMessage.contains(s"$idx/postings"),
+      s"the failure must name the table, got: ${err.getMessage}")
   }
 
   test("a misnamed imageCol fails loudly instead of silently disabling the image gate") {

@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.{LlmKnn}
-
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
@@ -28,15 +26,35 @@ class IvfRetrainSpec extends AnyFunSuite {
       (i.toLong, axis, v)
     }
 
+  /** Assert every data file of the lists generation at `root` sits at
+    * a `list_id=✶/batch_id=✶` cell (sidecar dirs and hidden files aside), and
+    * return the batch keys present. */
+  private def batchLayoutKeys(root: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val r = Paths.get(root)
+    val files = Files.walk(r).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => r.relativize(p).iterator().asScala.map(_.toString).toSeq)
+      .filterNot(_.exists(n => n.startsWith("_") || n.startsWith(".")))
+      .toSeq
+    assert(files.nonEmpty, s"$root holds no data files")
+    files.foreach(f => assert(f.length == 3 && f(0).startsWith("list_id=") &&
+      f(1).startsWith("batch_id="),
+      s"$root holds ${f.mkString("/")} outside list_id=*/batch_id=*"))
+    files.map(_(1).stripPrefix("batch_id=")).toSet
+  }
+
   test("retrainIvf re-clusters drifted appends into an atomically published composite") {
     val ivf = Files.createTempDirectory("graft_ivf_retrain").toString
     val base = (clusterRows(0, 0 until 30) ++ clusterRows(1, 30 until 60))
       .toDF("vec_id", "label", "embedding")
     AnnIndex.build(base, ivf, nlist = 2)
+    // one layout from the first write: the build lands at the base level
+    assert(batchLayoutKeys(s"$ivf/lists") === Set("-1"))
     // DRIFT: a third cluster the built centroids know nothing about — the
     // frozen-assignment append buries it in whichever existing list wins
     val drifted = clusterRows(2, 100 until 120).toDF("vec_id", "label", "embedding")
-    AnnIndex.appendIvf(drifted, ivf)
+    AnnIndex.appendIvf(drifted, ivf, Some("q1-0"))
+    assert(batchLayoutKeys(s"$ivf/lists") === Set("-1", "q1-0"))
 
     val ver = AnnIndex.retrainIvf(spark, ivf, nlist = 3)
     // (a) the publish is the composite: pointer flipped, centroids EMBEDDED
@@ -47,6 +65,8 @@ class IvfRetrainSpec extends AnyFunSuite {
     assert(Files.isDirectory(Paths.get(root, "_centroids")),
       "the retrained centroids must live inside the published generation")
     assert(cents.length === 3, "the retrain's nlist may differ from the build's")
+    assert(batchLayoutKeys(root) === Set("-1"),
+      "the retrain folds the committed batch into the base level")
     // (b) the row set is preserved exactly — one assignment per vector
     val assigned = spark.read.parquet(root)
       .select("vec_id", "list_id").collect()
@@ -73,9 +93,12 @@ class IvfRetrainSpec extends AnyFunSuite {
     // (e) layout compaction AFTER a retrain carries the embedded centroids
     // and changes nothing about the snapshot's answers
     AnnIndex.appendIvf(clusterRows(2, 200 until 205).toDF("vec_id", "label", "embedding"), ivf)
+    val before = AnnIndex.probeScanAt(spark, root, lists)
+      .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     Compaction.compactIvfLists(spark, ivf)
     val (root2, cents2) = AnnIndex.ivfSnapshot(spark, ivf)
     assert(root2 !== root, "compaction publishes a fresh generation")
+    assert(batchLayoutKeys(root2) === Set("-1"))
     assert(Files.isDirectory(Paths.get(root2, "_centroids")),
       "compaction must carry the centroid sidecar through the rewrite")
     assert(cents2.map(_._1).toSeq === cents.map(_._1).toSeq &&
@@ -86,6 +109,7 @@ class IvfRetrainSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got2 === ((100L until 120L) ++ (200L until 205L)),
       "the compacted snapshot must serve the retrained assignment plus the post-retrain append")
+    assert(got2 === before, "compaction must not change the probe's answer")
   }
 
   test("retrainPq republishes codes + codebooks as one snapshot; appends encode against their own generation") {

@@ -432,12 +432,11 @@ class LlmSpec extends AnyFunSuite {
     graft.etl.AnnIndex.ensurePq(e, flatDir, m = 4, k = 16)
     val compDir = graft.etl.AnnIndex.defaultIvfPqDir(TestSpark.sfDir, nlist = 16, m = 4, k = 16)
     graft.etl.AnnIndex.ensureIvfPq(e, ivfDir, compDir, m = 4, k = 16)
-    // (a) the generation is self-describing: residual marker + rotation +
-    // books all ride the codes snapshot
+    // (a) the generation is self-describing: rotation + means + books all
+    // ride the codes snapshot
     val model = graft.etl.AnnIndex.ivfPqModel(spark, ivfDir, compDir)
-    assert(model.residual, "composite builds must declare residual encoding")
-    assert(model.rot.isDefined, "residual codes must carry their OPQ rotation")
-    val rot = model.rot.get
+    assert(model.rot.nonEmpty, "residual codes must carry their OPQ rotation")
+    val rot = model.rot
     val dim = 64
     assert(rot.length === dim && rot.forall(_.length === dim))
     // the rotation is orthonormal (rows from the deterministic PCA basis)
@@ -481,7 +480,7 @@ class LlmSpec extends AnyFunSuite {
       errResid += (0 until dim).map(i => { val d = emb(i) - xhat(i); d * d }).sum
     }
     val flatModel = graft.etl.AnnIndex.pqModel(spark, flatDir)
-    val flatRot = flatModel.rot.get
+    val flatRot = flatModel.rot
     val flatBookMap = flatModel.books.map { case (s, c, v) => (s, c) -> v }.toMap
     var errRaw = 0.0
     graft.etl.AnnIndex.pqScan(spark, flatDir)
@@ -1169,7 +1168,6 @@ class LlmSpec extends AnyFunSuite {
     // the smaller side is ~1.0 while Jaccard is ~0.2 — the asymmetric
     // near-dup the symmetric metrics under-score. doc 3 shares nothing
     // (4 words → exactly one 4-gram, absent from both others).
-    import org.apache.spark.sql.functions._
     val filler = (1 to 80).map(i => s"w$i").mkString(" ")
     val d = docs(1L -> base, 2L -> s"$base $filler", 3L -> "alpha beta gamma delta")
     val rows = Llm.containmentPairs(d).collect()
@@ -1260,7 +1258,6 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("semdedup: near-identical vector dropped, its lower-id twin and distinct vectors kept") {
-    import org.apache.spark.sql.functions.lit
     graft.expr.GraftFunctions.ensureRegistered(spark)
     val base = Array.tabulate(64)(i => (if (i % 2 == 0) 0.2f else -0.2f))
     val twin = base.clone(); twin(3) = twin(3) + 0.01f // same signs, dot >> threshold
@@ -1382,7 +1379,6 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("bloom dedup: crafted corpus — shared-prefix doc flagged, unique docs not") {
-    import org.apache.spark.sql.functions.lit
     val prefixA = "alpha beta gamma delta epsilon zeta eta theta"
     val d = Seq(
       (1L, "src0", prefixA + " tail one two three"),

@@ -5,7 +5,7 @@ import org.scalacheck.Prop.forAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expr.MisraGriesAgg
-import graft.queries.{Llm, LlmText}
+import graft.queries.LlmText
 
 /** Misra–Gries sketch contract (SURVEY.md §2.9 `q_heavy_hitters`, §2.11):
   * the candidate set must be COMPLETE for every item above n/(k+1) — that

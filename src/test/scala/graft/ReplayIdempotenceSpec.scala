@@ -127,89 +127,6 @@ class ReplayIdempotenceSpec extends AnyFunSuite {
       s"run 2's batch 0 must not wipe run 1's batch-0 postings, got $docIds")
   }
 
-  test("legacy flat layouts upgrade in place on the first batch-keyed write") {
-    // a pre-r11 index holds data files directly at the table root / cell
-    // dirs; the first batch-keyed write must MOVE them under batch_id=-1
-    // (metadata renames, no rewrite) so partition discovery keeps working
-    val posts = Files.createTempDirectory("graft_legacy_posts").toString
-    Seq((0, "old-a", 1L), (1, "old-b", 2L)).toDF("band", "bkey", "doc_id")
-      .write.mode("append").parquet(s"$posts/postings") // the pre-r11 shape
-    IncrementalDedup.commitPostings(
-      Seq((0, "new-c", 3L)).toDF("band", "bkey", "doc_id"), posts, Some("q3-0"))
-    val all = spark.read.parquet(s"$posts/postings")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(all === Seq(1L, 2L, 3L),
-      s"legacy + batch-keyed postings must both be readable, got $all")
-
-    val sq8 = Files.createTempDirectory("graft_legacy_sq8").toString
-    graft.etl.AnnIndex.buildSq8(vecs(0 until 5), sq8) // writes batch_id=-1 already
-    // craft a TRULY flat legacy sq8 dir: write without the batch col
-    val flat = Files.createTempDirectory("graft_legacy_sq8b").toString
-    spark.read.parquet(s"$sq8/sq8").drop("batch_id")
-      .write.mode("overwrite").parquet(s"$flat/sq8")
-    AnnIndex.appendSq8(vecs(5 until 8), flat, Some("q3-0"))
-    assert(spark.read.parquet(s"$flat/sq8").count() === 8,
-      "flat legacy sq8 rows must survive the layout upgrade")
-
-    val lsh = Files.createTempDirectory("graft_legacy_lsh").toString
-    // hand-write the pre-r11 cell layout: band=/bkt= leaf dirs, no batch level
-    cellLayout(vecs(0 until 5), s"$lsh/buckets", Nil)
-    AnnIndex.appendLsh(vecs(5 until 8), lsh, bands = 3, bits = 8, Some("q3-0"))
-    // the upgrade publishes a new generation: read through the pointer
-    assert(spark.read.parquet(graft.etl.Compaction.currentPath(s"$lsh/buckets"))
-      .select("vec_id").distinct().count() === 8,
-      "legacy LSH cells must survive the layout upgrade")
-  }
-
-  /** Write `v`'s LSH postings (3 bands, 8 bits) at `root` in the
-    * one-directory-per-cell layout: `band=/bkt=/` dirs, then one
-    * `batch_id=` level when `batchIds` is non-empty (each row keyed by the
-    * first matching `(key, ids)` entry, "-1" otherwise). */
-  private def cellLayout(v: org.apache.spark.sql.DataFrame, root: String,
-                         batchIds: Seq[(String, Range)]): Unit = {
-    val rows = graft.queries.Llm.rpBandBuckets(v, 3, 8)
-      .select(col("vec_id"), posexplode(array(col("bkt0"), col("bkt1"), col("bkt2")))
-        .as(Seq("band", "bkt")))
-    if (batchIds.isEmpty) rows.write.partitionBy("band", "bkt").parquet(root)
-    else {
-      val key = batchIds.foldRight(lit("-1")) { case ((k, ids), rest) =>
-        when(col("vec_id").between(ids.head, ids.last), lit(k)).otherwise(rest)
-      }
-      rows.withColumn("batch_id", key)
-        .write.partitionBy("band", "bkt", "batch_id").parquet(root)
-    }
-  }
-
-  test("cell-layout LSH table: the first keyed append rewrites it to the band layout; probes and replays unchanged") {
-    // an r11 table: band=/bkt=/batch_id= cells, with batch q1-5 already
-    // landed (its replay arrives after the upgrade)
-    val lsh = Files.createTempDirectory("graft_cell_lsh").toString
-    cellLayout(vecs(0 until 30), s"$lsh/buckets", Seq("q1-5" -> (20 until 30)))
-    def table = spark.read
-      .parquet(graft.etl.Compaction.currentPath(s"$lsh/buckets"))
-    AnnIndex.appendLsh(vecs(20 until 30), lsh, bands = 3, bits = 8, Some("q1-5"))
-    val root = graft.etl.Compaction.currentPath(s"$lsh/buckets")
-    import scala.jdk.CollectionConverters._
-    val cellDirs = Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-      .count(_.getFileName.toString.startsWith("bkt="))
-    assert(cellDirs === 0, s"$root still holds $cellDirs bkt= directories")
-    assert(table.count() === 30L * 3,
-      "a replay of the batch that landed in the cell layout must not grow the table")
-    AnnIndex.appendLsh(vecs(30 until 40), lsh, bands = 3, bits = 8, Some("q1-6"))
-    val c = table.count()
-    AnnIndex.appendLsh(vecs(30 until 40), lsh, bands = 3, bits = 8, Some("q1-6"))
-    assert(table.count() === c, "a replay after the upgrade must not grow the table")
-    assert(c === 40L * 3)
-    // probes equal a fresh band-layout build of the same vectors
-    val fresh = Files.createTempDirectory("graft_cell_lsh_fresh").toString
-    AnnIndex.buildLsh(vecs(0 until 40), fresh, bands = 3, bits = 8)
-    val cells = for (b <- 0 until 3; k <- 0 until 256) yield (b, k)
-    def probe(dir: String) = AnnIndex.lshPostingScan(spark, dir, cells)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
-    assert(probe(lsh) === probe(fresh))
-    assert(probe(lsh).map(_._1).distinct.size === 40)
-  }
-
   test("coalescing compaction preserves the in-flight batch key: a post-compaction replay still re-derives its survivors") {
     val idx = Files.createTempDirectory("graft_compact_preserve").toString
     val b0 = Seq((1L, "alpha bravo charlie delta echo")).toDF("doc_id", "text")

@@ -14,7 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * the construction is factor- and SF-agnostic. */
 class ScaleUpSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  import spark.implicits._
 
   private lazy val out: String = {
     val dir = Files.createTempDirectory("graft_scaleup").toString

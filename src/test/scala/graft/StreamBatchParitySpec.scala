@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.{LlmMix}
-
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.{LlmKnn}
-
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -1531,7 +1529,6 @@ class StreamingSpec extends AnyFunSuite {
     // existed are servable through the composite from the first
     // post-attach batch (no silent pre-attach blind spot).
     import java.nio.file.Files
-    import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val dedupDir = Files.createTempDirectory("graft_attach_dedup").toString
     val lshDir = Files.createTempDirectory("graft_attach_lsh").toString
@@ -1589,7 +1586,6 @@ class StreamingSpec extends AnyFunSuite {
     // pair, so it sees complete (centroids, lists) and (codes, books)
     // pairs whether it lands before or after a retrain publish.
     import java.nio.file.Files
-    import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val dedupDir = Files.createTempDirectory("graft_loop_dedup").toString
     val lshDir = Files.createTempDirectory("graft_loop_lsh").toString
@@ -1638,43 +1634,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(byProbe(101L) === Seq(2L, 6L, 10L),
         s"the post-retrain serve must find the grown cluster through the new model, got $byProbe")
     } finally { serve.stop(); ingest.stop() }
-  }
-
-  test("corpusIngest heals a pre-pointer crashed-swap index state before its first read (legacy upgrade)") {
-    import java.nio.file.{Files, Paths}
-    implicit val sqlCtx = spark.sqlContext
-    val dedupDir = Files.createTempDirectory("graft_heal_dedup").toString
-    val lshDir = Files.createTempDirectory("graft_heal_lsh").toString
-    val corpusDir = Files.createTempDirectory("graft_heal_corpus").toString
-    def emb(seed: Int): Array[Float] =
-      Array.tabulate(8)(i => math.sin(seed * 31 + i).toFloat)
-    val mem = MemoryStream[IngestDoc]
-    val q = Streams.corpusIngest(mem.toDF(), dedupDir, lshDir, corpusDir).start()
-    try {
-      mem.addData(IngestDoc(1, "alpha bravo charlie delta echo", emb(1)))
-      q.processAllAvailable()
-      // simulate the PRE-r13 rename-swap crash state between batches: the
-      // flat postings dir retired to `.old-*`, no pointer, path absent —
-      // the one legacy state where an absent dir does NOT mean empty
-      val postings = s"$dedupDir/postings"
-      Files.move(Paths.get(postings), Paths.get(postings + ".old-crash"))
-      assert(!Files.exists(Paths.get(postings)))
-      // batch 2 carries an exact dup of doc 1 plus a novel doc: without the
-      // batch-body heal the gate would read an EMPTY index and re-admit the
-      // dup (and its commit would recreate the dir, burying the retired
-      // copy for good)
-      mem.addData(
-        IngestDoc(2, "alpha bravo charlie delta echo", emb(2)), // dup of 1
-        IngestDoc(3, "foxtrot golf hotel india juliet", emb(3)))
-      q.processAllAvailable()
-      val corpus = graft.etl.BucketedTable.readCurrent(spark, corpusDir)
-        .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-      assert(corpus === Seq(1L, 3L),
-        s"the healed index must still drop the cross-batch dup, got $corpus")
-      assert(!Files.exists(Paths.get(postings + ".old-crash")) &&
-        Files.exists(Paths.get(postings)),
-        "the retired tree must have been restored onto the live path")
-    } finally q.stop()
   }
 
   test("corpusIngest with audioCol: cross-batch audio near-dups drop at admission; replay no-ops") {

@@ -13,7 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * the whole fact table. */
 class WarehouseSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  import spark.implicits._
 
   test("date-partitioned fact + filtered dim join plans dynamic partition pruning") {
     val whDir = Files.createTempDirectory("graft_wh").toString
