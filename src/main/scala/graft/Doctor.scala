@@ -456,9 +456,19 @@ object Doctor {
             "the codebooks/ table",
           "graft.etl.AnnIndex.retrainIvfPq", Seq(indexDir.toString)))
       val rec = curDir.resolve("_lists_gen").resolve("root").toString
+      // only IVF-PQ composite codes (list-mean anchors, `_list_means/`)
+      // pair with a lists generation; plain PQ codes carry neither
+      val composite = fs.isDirectory(curDir.resolve("_list_means").toString)
       val pairing =
-        if (!fs.exists(rec)) Nil // pre-pairing codes: current-lists fallback by design
-        else {
+        if (!fs.exists(rec)) {
+          if (!composite) Nil
+          else Seq(fail("ann-ivfpq", logical.toString,
+            "the current IVF-PQ codes generation records no lists pairing " +
+              "(no _lists_gen/root sidecar) — a layout no writer produces; " +
+              "composite probes refuse it",
+            "retrainIvfPq re-encodes the composite and records its pairing",
+            "graft.etl.AnnIndex.retrainIvfPq", Seq(indexDir.toString)))
+        } else {
           val recorded =
             scala.util.Try(fs.readString(rec).trim).getOrElse("")
           if (recorded.nonEmpty && fs.isDirectory(recorded)) Nil

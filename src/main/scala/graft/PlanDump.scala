@@ -27,7 +27,7 @@ object PlanDump {
     "q_join_range_scd2" -> "point-in-time join as equi-key sort-merge with the interval residual as join condition",
     "q_win_topk_group" -> "per-group top-N: window over pre-aggregated rows, rank filter",
     "q_sort_limit" -> "global top-k as TakeOrderedAndProject (no full sort)",
-    "q_dedup_minhash" -> "banded LSH: signature aggregation, posexplode band frame, bucket equi-join (no all-pairs)",
+    "q_dedup_minhash" -> "banded LSH: row-local MinHash kernel, posexplode band frame, bucket equi-join (no all-pairs)",
     "q_knn_cosine" -> "one scan + native codegen cosine_similarity + TakeOrderedAndProject",
     "q_gap_fill" -> "1-row spine aggregate exploded and broadcast into the daily-count join",
     "q_skew_salt" -> "salted composite-key equi-join: dim replicated per salt, no hot reducer",

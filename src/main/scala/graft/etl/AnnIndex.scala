@@ -1327,10 +1327,13 @@ object AnnIndex {
     * [[retrainIvfPq]] that mirrors it reads ONE mutually consistent
     * (centroids, lists, codes, books) state — the old one — instead of
     * pruning old-clustering codes by new-clustering list ids. Falls back
-    * to the current lists generation when the sidecar is absent
-    * (pre-pairing codes) or the recorded generation has been vacuumed past
-    * its grace window — `graceGenerations` on the retrain/compaction calls
-    * is the knob that sizes how long the paired state stays resolvable.
+    * to the current lists generation when the recorded generation has been
+    * vacuumed past its grace window — `graceGenerations` on the
+    * retrain/compaction calls is the knob that sizes how long the paired
+    * state stays resolvable. A codes generation WITHOUT the sidecar is in
+    * a layout no writer produces (every composite publish records its
+    * pairing); its lists pairing is unknown, so the snapshot fails, naming
+    * the table, instead of guessing the current lists.
     * Steady state pairs the LIVE lists root, so appends are visible
     * immediately; in the crash window between the two retrain publishes
     * the composite serves the old pair (rows appended inside the window
@@ -1339,8 +1342,12 @@ object AnnIndex {
       : (String, Array[(Int, Array[Double])], String, Seq[(Int, Int, Array[Double])]) = {
     val (codesRoot, books) = pqSnapshot(spark, indexDir)
     val recorded = s"$codesRoot/_lists_gen/root"
+    if (!gfs.exists(recorded)) throw new IllegalStateException(
+      s"$codesRoot: the IVF-PQ codes generation records no lists pairing " +
+        "(_lists_gen/root) — a layout no writer produces; run " +
+        "AnnIndex.retrainIvfPq to re-encode the composite")
     val listsRoot = {
-      val r = if (gfs.exists(recorded)) gfs.readString(recorded).trim else ""
+      val r = gfs.readString(recorded).trim
       if (r.nonEmpty && gfs.isDirectory(r)) r
       else cur(s"$ivfDir/lists")
     }

@@ -17,12 +17,15 @@ import graft.queries.Exprs.pinShared
   * Per [[ingest]] call:
   *   1. posting rows are computed for the BATCH only
   *      ([[graft.queries.Llm.minhashBandRows]] — the same signatures as the
-  *      batch dedup path, so batch and incremental agree);
+  *      batch dedup path, so batch and incremental agree; a row-local
+  *      kernel, so hashing a batch is map-only and costs no exchange);
   *   2. batch docs colliding with a stored posting are dropped (hash
   *      EQUI-join on `(band, bkey)` — candidates stay data-proportional,
   *      no all-pairs anything);
   *   3. the surviving batch self-dedups with the full connected-components
-  *      semantics of `q_dedup_keep` (min doc per component wins);
+  *      semantics of `q_dedup_keep` (min doc per component wins); in-batch
+  *      near-dup components are usually stars around their minimum,
+  *      which [[graft.queries.Llm.dedupGroups]] settles with no round;
   *   4. the kept docs' postings APPEND to the index — the only write.
   *
   * Invariant after any ingest sequence: every `(band, bkey)` cell holds at
@@ -143,9 +146,13 @@ object IncrementalDedup {
                                videoCol: Option[String] = None)
       : (DataFrame, DataFrame) = {
     // pinned on its own first: the stored probe's broadcast side and the
-    // flagged rows both read it, and the two copies of the signature
-    // aggregation do not share an exchange (the probe side carries a
-    // pushed-down null filter)
+    // flagged rows both read it. The signatures are map-only, so the pin
+    // saves no exchange; it saves re-reading the micro-batch and re-running
+    // the kernels for the second reader, and that measured faster than the
+    // job it costs: traced corpus_ingest seed 1 on a 4-core host, four runs
+    // a side, append batch 1 median 2.67 s pinned vs 2.75 s unpinned
+    // (batch 2: 2.16 vs 2.18 s), although the unpinned form runs one job
+    // fewer per batch
     val posts0 = postings(batch, bands, rowsPerBand, imageCol, audioCol, videoCol)
       .transform(pinShared)
     val flagged = storedHitCells(posts0, indexDir, excludeBatchKey) match {

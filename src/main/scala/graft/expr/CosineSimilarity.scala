@@ -100,17 +100,35 @@ object GraftFunctions {
     new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams")
   private[expr] val ngramsBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "word_ngrams takes exactly 2 arguments")
-    val n = children(1) match {
-      case lit if lit.foldable => lit.eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"word_ngrams n must be an int literal, got $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "word_ngrams n must be a literal")
-    }
-    WordNgrams(children.head, n)
+    WordNgrams(children.head, intLiteral("word_ngrams n", children(1)))
   }
+
+  private[expr] val minhashIdent = FunctionIdentifier("minhash_bands")
+  private[expr] val minhashInfo =
+    new ExpressionInfo(classOf[MinhashBands].getName, "minhash_bands")
+  private[expr] val minhashBuilder: Seq[Expression] => Expression = { children =>
+    require(children.length == 3, "minhash_bands takes exactly 3 arguments")
+    MinhashBands(children.head, intLiteral("minhash_bands bands", children(1)),
+      intLiteral("minhash_bands rowsPerBand", children(2)))
+  }
+
+  private[expr] val rpIdent = FunctionIdentifier("rp_buckets")
+  private[expr] val rpInfo =
+    new ExpressionInfo(classOf[RpBuckets].getName, "rp_buckets")
+  private[expr] val rpBuilder: Seq[Expression] => Expression = { children =>
+    require(children.length == 3, "rp_buckets takes exactly 3 arguments")
+    RpBuckets(children.head, intLiteral("rp_buckets bands", children(1)),
+      intLiteral("rp_buckets bits", children(2)))
+  }
+
+  /** A builder argument that must be an int literal (it sizes the kernel). */
+  private def intLiteral(what: String, e: Expression): Int =
+    if (!e.foldable) throw new IllegalArgumentException(s"$what must be a literal")
+    else e.eval() match {
+      case i: Int => i
+      case other => throw new IllegalArgumentException(
+        s"$what must be an int literal, got $other")
+    }
 
   private[expr] val packIdent = FunctionIdentifier("int8_pack")
   private[expr] val packInfo =
@@ -171,6 +189,8 @@ object GraftFunctions {
   private val all = Seq(
     (ident, info, builder),
     (ngramsIdent, ngramsInfo, ngramsBuilder),
+    (minhashIdent, minhashInfo, minhashBuilder),
+    (rpIdent, rpInfo, rpBuilder),
     (packIdent, packInfo, packBuilder),
     (dotIdent, dotInfo, dotBuilder),
     (adcIdent, adcInfo, adcBuilder),
@@ -193,6 +213,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((GraftFunctions.ident, GraftFunctions.info, GraftFunctions.builder))
     ext.injectFunction((GraftFunctions.ngramsIdent, GraftFunctions.ngramsInfo,
       GraftFunctions.ngramsBuilder))
+    ext.injectFunction((GraftFunctions.minhashIdent, GraftFunctions.minhashInfo,
+      GraftFunctions.minhashBuilder))
+    ext.injectFunction((GraftFunctions.rpIdent, GraftFunctions.rpInfo,
+      GraftFunctions.rpBuilder))
     ext.injectFunction((GraftFunctions.packIdent, GraftFunctions.packInfo,
       GraftFunctions.packBuilder))
     ext.injectFunction((GraftFunctions.dotIdent, GraftFunctions.dotInfo,

@@ -29,7 +29,8 @@ import graft.queries.Exprs.{pinLazy, pinShared}
   *  - every dedup is blocked (hash buckets / LSH bands / sign buckets) —
   *    no all-pairs joins anywhere; candidate pairs come from equi-joins on
   *    bucket keys, so they hash-partition and AQE handles band skew;
-  *  - signatures are per-doc aggregations with map-side partials;
+  *  - MinHash and RP-LSH signatures are row-local native kernels (no
+  *    exchange); SimHash is a per-doc aggregation with map-side partials;
   *  - knn is one scan + TakeOrderedAndProject (no global sort); the LSH
   *    variant prunes the scan to candidate buckets first.
   */
@@ -112,21 +113,17 @@ object Llm {
   /** Random-hyperplane band buckets: `bands`×`bits` dense ±1 hyperplanes with
     * coefficients seeded from xxhash64(band, bit, coordinate) — a real RP-LSH
     * sketch (every coordinate participates in every bit, unlike the
-    * axis-aligned oracle-parity bands). One explode + one grouped aggregation
-    * with map-side partials; emits (vec_id, bkt0..bkt{bands-1}).
+    * axis-aligned oracle-parity bands). One projection of the native
+    * [[graft.expr.RpBuckets]] kernel per vector — no explode, no exchange;
+    * emits (vec_id, bkt0..bkt{bands-1}), dropping null and empty vectors.
+    * Precondition: `vec_id` is a key (each row is hashed on its own).
     * Spark-specific hashing is fine here: the consumers are no-oracle. */
   private[graft] def rpBandBuckets(e: DataFrame, bands: Int, bits: Int): DataFrame = {
-    val ex = e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .withColumn("xd", col("x").cast("double"))
-    val dots: Seq[Column] = for (b <- 0 until bands; j <- 0 until bits) yield
-      sum(when(pmod(xxhash64(lit(b), lit(j), col("pos")), lit(2)) === 0,
-        col("xd")).otherwise(-col("xd"))).as(s"d_${b}_$j")
-    val agg = ex.groupBy("vec_id").agg(dots.head, dots.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      (0 until bits).map(j => when(col(s"d_${b}_$j") > 0, lit(1 << j)).otherwise(lit(0)))
-        .reduce(_ + _).as(s"bkt$b")
-    }
-    agg.select(col("vec_id") +: bandCols: _*)
+    GraftFunctions.ensureRegistered(e.sparkSession)
+    e.filter(size(col("embedding")) > 0)
+      .select(col("vec_id"),
+        call_function("rp_buckets", col("embedding"), lit(bands), lit(bits)).as("__b"))
+      .select(col("vec_id") +: (0 until bands).map(b => col("__b")(b).as(s"bkt$b")): _*)
   }
 
   // ---- deduplication ------------------------------------------------------
@@ -208,11 +205,9 @@ object Llm {
     * (more rows/band → higher precision, more bands → higher recall) without
     * touching the pipeline shape. Property-tested in LlmSpec.
     *
-    * Hashes are 8-hex-char windows of seeded md5s computed once per shingle
-    * in a projection BEFORE the aggregation (⌈hashes/4⌉ md5s per row, not
-    * one per hash — the signature stage dominates minhash cost at bench
-    * scale); band keys come out of ONE posexplode frame so the signature
-    * aggregation is never re-evaluated per band branch. */
+    * Hashes are 8-hex-char windows of seeded md5s, ⌈hashes/4⌉ md5s per
+    * shingle, not one per hash; a doc's band keys come out of one row-local
+    * kernel call ([[minhashBandRows]]). */
   def minhashPairs(docs: DataFrame, bands: Int = 4, rowsPerBand: Int = 2): DataFrame =
     pairsFromBandRows(minhashBandRows(docs, bands, rowsPerBand))
 
@@ -238,9 +233,8 @@ object Llm {
   private[graft] def pairRowsFromBandRows(bandRows0: DataFrame): DataFrame = {
     // the self-join consumes the band frame twice, and exchange reuse does
     // not fire across the two aliased copies (plan-probed) — unpinned, the
-    // full MinHash computation (shingle explode + md5 minima + band keys)
-    // ran once per side; the pinned frame is ~`bands` rows of three small
-    // columns per doc
+    // source scan and the per-row MinHash kernel ran once per side; the
+    // pinned frame is `bands` rows of three small columns per doc
     val bandRows = pinShared(bandRows0)
     val a = bandRows.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
     val b = bandRows.select(col("doc_id").as("doc_b"), col("band").as("band_b"),
@@ -294,27 +288,20 @@ object Llm {
     * stage of MinHash-LSH. [[minhashPairs]] self-joins these in one pass for
     * the batch path; the continuous-ingest path persists them and joins each
     * new batch's postings against the stored table instead of re-hashing the
-    * corpus ([[graft.etl.IncrementalDedup]]). */
+    * corpus ([[graft.etl.IncrementalDedup]]).
+    *
+    * Map-only: the native [[graft.expr.MinhashBands]] kernel computes a
+    * doc's band keys inside its row, then one posexplode — no shingle
+    * explode, no aggregate, no exchange. Null-text docs have no signature
+    * and no rows. Precondition: `doc_id` is a key (each row is hashed on
+    * its own; two rows sharing an id are not merged). */
   private[graft] def minhashBandRows(docs: DataFrame, bands: Int = 4,
                                      rowsPerBand: Int = 2): DataFrame = {
-    val nHashes = bands * rowsPerBand
-    val nSeeds = (nHashes + 3) / 4
-    val sh = shingleRows(docs).select(
-      col("doc_id") +: (0 until nSeeds).map { s =>
-        md5(concat(lit(('a' + s).toChar.toString + ":"), col("gram"))).as(s"m$s")
-      }: _*)
-    val mins = (0 until nHashes).map { h =>
-      min(substring(col(s"m${h / 4}"), (h % 4) * 8 + 1, 8)).as(s"h$h")
-    }
-    val sig = sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-    val bandKeys = (0 until bands).map { b =>
-      md5(concat((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*))
-        .as(s"bk$b")
-    }
-    sig.select(col("doc_id") +: bandKeys: _*)
+    GraftFunctions.ensureRegistered(docs.sparkSession)
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
-        posexplode(array((0 until bands).map(b => col(s"bk$b")): _*))
-          .as(Seq("band", "bkey")))
+        posexplode(call_function("minhash_bands", split(col("text"), " "),
+          lit(bands), lit(rowsPerBand))).as(Seq("band", "bkey")))
   }
 
   /** §2.9 SimHash near-dup: 64-bit fingerprint (four 16-bit bands) from the
@@ -475,7 +462,10 @@ object Llm {
     * round, so a chain component of diameter d needs d rounds; the jump
     * halves remaining distance every round (O(log d) total), which is what
     * makes long near-dup chains converge inside the iteration budget.
-    * Labels always reference existing nodes, so the jump join is total. */
+    * Labels always reference existing nodes, so the jump join is total.
+    * When every component is a star around its minimum, the seed labels
+    * are already the fixpoint and no round runs (the star exit below;
+    * `maxIters = 0` then still returns). */
   private[graft] def dedupGroups(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     // Lineage is pinned per round under the one pin policy (Exprs): a
     // reliable checkpoint when the session has a checkpoint dir — losing an
@@ -484,7 +474,7 @@ object Llm {
     // Symmetrize via ONE explode over the pairs subtree instead of a union
     // of two scans of it (r19 — the pagerank construction trick, guide
     // §1.2): the union form planned the whole candidate-edge lineage
-    // (signature aggregation included) once per branch. Same edge multiset.
+    // (signatures included) once per branch. Same edge multiset.
     val sym = pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
@@ -502,9 +492,23 @@ object Llm {
     // neighbor-min, computed during the init aggregation instead of a full
     // round (one fewer checkpoint + convergence action; the fixpoint is
     // unchanged, it's just entered one hop closer).
-    var labels = pinShared(edges.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("nbmin"))
-      .select(col("node"), least(col("node"), col("nbmin")).as("label")))
+    //
+    // STAR EXIT: the seed pin is lazy, and its materializing count is the
+    // number of nodes that are neither a centre (every neighbor above it)
+    // nor a leaf (one distinct neighbor). When that count is 0 every
+    // component is a star whose minimum is its centre — a non-leaf is a
+    // centre, so its neighbors are all leaves hanging off it; an all-leaf
+    // component is one edge — and the seed labels are already the
+    // fixpoint, so no round runs. Self-loops and leaves with two distinct
+    // roots fail the test and take the rounds. The in-batch near-dup
+    // components of a streamed micro-batch are usually such stars: each
+    // cell's edges already hang off its lowest doc.
+    val seeded = pinLazy(edges.groupBy(col("src").as("node"))
+      .agg(min(col("dst")).as("nbmin"), max(col("dst")).as("nbmax"))
+      .select(col("node"), least(col("node"), col("nbmin")).as("label"),
+        (col("nbmin") > col("node") || col("nbmin") === col("nbmax")).as("star")))
+    val nonStar = seeded.filter(!col("star")).rdd.count()
+    var labels = seeded.select("node", "label")
     // FRONTIER propagation (r18 optimization, guide §2.3 "shuffle fewer
     // bytes"): a node's label can only drop when a NEIGHBOR's label dropped
     // in the previous round (or via its own pointer jump, which needs no
@@ -520,7 +524,7 @@ object Llm {
     // it); the frontier frame is a lazy filter over the already-pinned
     // round result, so it adds no job.
     var frontier = labels
-    var converged = false
+    var converged = nonStar == 0
     var iter = 0
     while (!converged && iter < maxIters) {
       val neighborLabels = edges

@@ -70,7 +70,7 @@ object LlmKnn {
     val bk = Llm.rpBandBuckets(e, bands, bits)
     val bandArr = array((0 until bands).map(b => col(s"bkt$b")): _*)
     // ONE posexplode band frame per side (a union of per-band projections
-    // would re-evaluate the bucket aggregation once per band per side)
+    // would re-evaluate the bucket kernel once per band per side)
     val bandRows = bk.select(col("vec_id"),
       posexplode(bandArr).as(Seq("band", "bval")))
     val masks = lit(0) +: (if (radius >= 1) (0 until bits).map(j => lit(1 << j)) else Nil)

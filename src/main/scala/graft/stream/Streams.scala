@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, Group
   GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues,
   TTLConfig, ValueState}
 
-import graft.queries.Exprs.{moneySum, pinShared}
+import graft.queries.Exprs.{moneySum, pinLazy, pinShared}
 
 /** Typed event row for the custom-state operators (schema of the `events`
   * table; top-level so Encoders derive cleanly). */
@@ -1387,10 +1387,12 @@ object Streams {
             else kept.drop("embedding").limit(0)
           // admitted docs an earlier attempt of this batch already
           // published (a replay after the corpus commit landed) are not
-          // novel; only the novel docs' buckets rewrite
+          // novel; only the novel docs' buckets rewrite. The pin is lazy:
+          // the bucket pass below computes every partition, so it
+          // materializes the pin in its own job
           val novel = docCols
             .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
-            .transform(pinShared)
+            .transform(pinLazy)
           val (touched, _) = bucketsAndCount(novel)
           if (touched.nonEmpty) {
             val out = existing

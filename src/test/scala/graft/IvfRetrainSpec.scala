@@ -299,6 +299,31 @@ class IvfRetrainSpec extends AnyFunSuite {
       "the advanced pairing still serves the probe's cluster")
   }
 
+  test("a codes generation without its lists pairing fails the snapshot and Doctor, naming the remedy") {
+    // every composite writer records `_lists_gen`; a generation without it
+    // has an unknown lists pairing, which neither probes nor Doctor guess
+    val ivf = Files.createTempDirectory("graft_ivfpq_unpaired_ivf").toString
+    val pq = Files.createTempDirectory("graft_ivfpq_unpaired_pq").toString
+    val base = (clusterRows(0, 0 until 30) ++ clusterRows(1, 30 until 60))
+      .toDF("vec_id", "label", "embedding")
+    AnnIndex.build(base, ivf, nlist = 2)
+    AnnIndex.buildIvfPq(base, ivf, pq, m = 4, k = 4)
+    val codes = Compaction.currentPath(s"$pq/codes")
+    graft.GraftFs.default.deleteRecursively(s"$codes/_lists_gen")
+    val e = intercept[IllegalStateException](AnnIndex.ivfPqSnapshot(spark, ivf, pq))
+    assert(e.getMessage.contains(codes) && e.getMessage.contains("retrainIvfPq"),
+      e.getMessage)
+    val fails = graft.Doctor.diagnose(pq).filter(_.level == "FAIL")
+    assert(fails.exists(f => f.layer == "ann-ivfpq" &&
+      f.remedy.contains("retrainIvfPq")),
+      s"Doctor must FAIL the unpaired codes, got:\n${fails.map(_.render).mkString("\n")}")
+    // the named remedy heals both
+    AnnIndex.retrainIvfPq(spark, ivf, pq, m = 4, k = 4)
+    val (lr, _, _, _) = AnnIndex.ivfPqSnapshot(spark, ivf, pq)
+    assert(lr === Compaction.currentPath(s"$ivf/lists"))
+    assert(!graft.Doctor.diagnose(pq).exists(_.level == "FAIL"))
+  }
+
   test("a layout compaction realigns the codes' lists pairing so post-compaction appends stay servable") {
     // compactIvfLists retires the lists generation the codes' carried
     // `_lists_gen` sidecar names; without realignListsGenSidecar the
