@@ -1,7 +1,13 @@
 package org.apache.spark.sql
 
+import java.util.concurrent.{CompletableFuture, CompletionException}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.util.ThreadUtils
 
 /** The package-private Spark crossings graft needs, kept in one place:
   *   - plan→Dataset construction: the custom-operator path turns a
@@ -15,7 +21,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *   - re-declaring a checkpointed frame's partitioning
   *     ([[withHashPartitioning]]);
   *   - draining the listener bus before counters are read
-  *     ([[drainListenerBus]]).
+  *     ([[drainListenerBus]]);
+  *   - running independent effects as concurrent jobs of the caller
+  *     ([[concurrently]]).
   * Everything else in [[graft.plans]] uses public/DeveloperApi surfaces. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -74,4 +82,44 @@ object GraftSqlBridge {
   def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** Run `effects` as concurrent Spark jobs and return their values in
+    * submission order. Each effect runs on a pool thread that carries a
+    * copy of the caller's local properties and active session
+    * (`SQLExecution.withThreadLocalCaptured`), so its jobs keep the
+    * caller's job group, streaming query and batch ids and SQL root
+    * execution: listeners attribute them to the caller, and cancelling the
+    * caller's job group cancels them.
+    *
+    * Returns or throws only once EVERY effect has ended, so none is still
+    * running when the caller goes on. If any failed, the first failure in
+    * submission order is rethrown with the later ones suppressed. An
+    * interrupt of the waiting thread does not cut the wait short: once all
+    * effects have ended it surfaces as that first failure with the thread's
+    * interrupt flag set, or as an `InterruptedException` when none failed. */
+  def concurrently[A](spark: SparkSession)(effects: (() => A)*): Seq[A] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val running = effects.map(e =>
+      SQLExecution.withThreadLocalCaptured(session, effectPool)(e()))
+    // allOf completes once every effect has completed, failed or not; join
+    // waits through interrupts and sets the flag again afterwards
+    Try(CompletableFuture.allOf(running: _*).join())
+    val outcomes = running.map(f => Try(f.join()).recoverWith {
+      case e: CompletionException if e.getCause != null => Failure(e.getCause)
+    })
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: later =>
+        later.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ =>
+        if (Thread.interrupted())
+          throw new InterruptedException("interrupted while concurrent effects ran")
+        outcomes.map(_.get)
+    }
+  }
+
+  /** [[concurrently]]'s threads: named daemon threads, created on demand and
+    * retired after a minute idle, so there are never more of them than
+    * effects running at once. */
+  private lazy val effectPool = ThreadUtils.newDaemonCachedThreadPool("graft-effect")
 }

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
@@ -771,46 +771,56 @@ object Streams {
     * incremental pieces, each individually spec-proven, as one foreachBatch
     * pipeline: documents arrive as a stream →
     *
-    *   1. near-dup gate: [[graft.etl.IncrementalDedup.gateBatch]] dedups
-    *      the batch against the posting index and within itself (O(batch)
-    *      work, banded equi-joins, never all-pairs) — EXCLUDING the batch's
-    *      own `batch_id` posting partition, so a replay recomputes against
-    *      the exact pre-batch index state and re-derives the original
-    *      survivor set deterministically. With `imageCol` / `audioCol` /
-    *      `videoCol` set, decodable image/audio/video payloads ALSO post
-    *      their perceptual fingerprint bands through the same machinery
-    *      (disjoint band namespaces: 1000+ image, 2000+ audio, 3000+
-    *      video), so cross-batch media near-dups are gated exactly like
-    *      text minhash dups;
-    *   2. mixture-budget gate (optional): prior per-source spend comes from
-    *      the COMPACTED ledger at `corpusDir/_budget` — O(|sources|) rows
-    *      read per batch, never an O(corpus) re-aggregation;
-    *   3. corpus commit: only NOVEL survivors trigger a
-    *      [[graft.etl.BucketedTable]] commit (hash-bucketed on doc_id), and
-    *      only their buckets rewrite — untouched corpus buckets carry over
-    *      by manifest reference under the same atomic-pointer read
-    *      contract;
-    *   4. ANN maintenance: survivors' embeddings land in the LSH posting
-    *      lists ([[graft.etl.AnnIndex.appendLsh]]) and the SQ8 scan index
-    *      ([[graft.etl.AnnIndex.appendSq8]]) under this batch's
-    *      `batch_id=` partition — a replayed batch OVERWRITES its own
-    *      partitions instead of appending duplicate postings;
-    *   5. ledger commit: the batch's admitted per-source token delta folds
-    *      into the totals table (atomic manifest publish; the stored
+    *   1. DECIDE. The near-dup gate ([[graft.etl.IncrementalDedup.gateBatch]])
+    *      dedups the batch against the posting index and within itself
+    *      (O(batch) work, banded equi-joins, never all-pairs) — EXCLUDING
+    *      the batch's own `batch_id` posting partition, so a replay
+    *      recomputes against the exact pre-batch index state and re-derives
+    *      the original survivor set deterministically. With `imageCol` /
+    *      `audioCol` / `videoCol` set, decodable image/audio/video payloads
+    *      ALSO post their perceptual fingerprint bands through the same
+    *      machinery (disjoint band namespaces: 1000+ image, 2000+ audio,
+    *      3000+ video), so cross-batch media near-dups are gated exactly
+    *      like text minhash dups. The optional mixture-budget gate reads
+    *      prior per-source spend from the COMPACTED ledger at
+    *      `corpusDir/_budget` — O(|sources|) rows per batch, never an
+    *      O(corpus) re-aggregation. Every gate lands in one pinned decision
+    *      frame (below).
+    *   2. PUBLISH, as ONE concurrent set of Spark jobs
+    *      ([[org.apache.spark.sql.GraftSqlBridge.concurrently]]): each
+    *      effect writes its own table and reads only the pinned decision
+    *      frame, so none waits on another, and each keeps its own internal
+    *      order. The set is the decision log (`auditDir`), the eval-gram
+    *      and span-anchor commits, the corpus commit (only NOVEL survivors'
+    *      [[graft.etl.BucketedTable]] buckets rewrite; untouched buckets
+    *      carry over by manifest reference under the same atomic-pointer
+    *      read contract), the LSH posting and SQ8 appends
+    *      ([[graft.etl.AnnIndex.appendLsh]], [[graft.etl.AnnIndex.appendSq8]])
+    *      under this batch's `batch_id=` partition, the IVF unit (seed,
+    *      assign, append, IVF-PQ, drift flag, in that order) and the budget
+    *      ledger fold (atomic manifest publish; the stored
     *      `last_delta`/`last_batch_id` pair lets a replayed batch roll its
-    *      own contribution back out before re-deciding — see the gate);
-    *   6. dedup-index commit: [[graft.etl.IncrementalDedup.commitPostings]]
-    *      lands the survivors' posting rows LAST, also under `batch_id=`.
+    *      own contribution back out before re-deciding — see the gate).
+    *      The set ends only when EVERY effect has ended: a failure in one
+    *      surfaces after the others finish (the first failure in
+    *      submission order, the rest suppressed), so no effect of a failed
+    *      batch is still writing when the stream stops or retries it.
+    *   3. POSTINGS LAST: [[graft.etl.IncrementalDedup.commitPostings]]
+    *      lands the survivors' posting rows under `batch_id=` only after
+    *      the whole set succeeded. A batch that failed part-way therefore
+    *      leaves no postings behind, and a fresh-checkpoint restart — a new
+    *      lineage, whose gate sees every other lineage's postings — can
+    *      still admit its docs.
     *
     * At-least-once story: foreachBatch may replay a batch after a crash at
-    * ANY point in 3–6. Because stage 1 excludes the batch's own posting
+    * ANY point in 2–3. Because the gate excludes the batch's own posting
     * partition, the replay's survivor set is IDENTICAL to the original
     * run's regardless of which effects landed — and every effect is then
     * an idempotent rewrite: the corpus commit no-ops (no novel docs) or
-    * rewrites the same buckets, the LSH/SQ8/posting writes overwrite their
-    * own `batch_id=` partitions with identical content, and the ledger
-    * rollback re-derives the same totals. No duplicates, no loss, and no
-    * stage can un-publish a doc a reader already saw.
+    * rewrites the same buckets, the LSH/SQ8/IVF/posting writes overwrite
+    * their own `batch_id=` partitions with identical content, and the
+    * ledger rollback re-derives the same totals. No duplicates, no loss,
+    * and no stage can un-publish a doc a reader already saw.
     *
     * ONE DECISION FRAME per micro-batch: the gates run as a single plan
     * over the near-dup gate's pinned postings and are pinned ONCE — one
@@ -834,9 +844,13 @@ object Streams {
     * Maintenance: `vacuumEvery = n` reclaims superseded corpus bucket
     * versions and `_budget` ledger snapshots every n-th batch;
     * `compactEvery = m` folds the accumulated per-batch `batch_id=`
-    * index fragments (LSH bands, SQ8 table, dedup postings) into their
-    * `batch_id=-1` base every m-th batch — preserving the in-flight
-    * batch's own partitions for replay safety (see the in-line note).
+    * index fragments (LSH bands, SQ8 table, dedup postings, the two gram
+    * tables, the IVF lists and IVF-PQ codes) into their `batch_id=-1` base
+    * every m-th batch — preserving the in-flight batch's own partitions
+    * for replay safety (see the in-line note). The vacuum runs first; the
+    * per-table compactions then run as one concurrent set through the same
+    * helper as the publish stage, the IVF tables (compaction or retrain)
+    * as one sequential unit beside the others.
     * With both set, steady-state on-disk footprint is O(live data +
     * cadence·batch), not O(batches); with both 0 (the default), run the
     * spec-proven [[graft.etl.Compaction]] / vacuum helpers externally
@@ -1293,13 +1307,12 @@ object Streams {
         // rows (the decisions replay identically) and a fresh lineage lands
         // under new keys: the log is exactly-once like every other effect
         // here. Read it back with a plain spark.read.parquet(auditDir).
-        auditDir.foreach { ad =>
+        def writeAuditLog(ad: String): Unit =
           decided.select(col("doc_id"), col("__decision").as("decision"),
               col("__gate").as("gate"), lit(batchKey).as("batch_id"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id").parquet(ad)
-        }
         // eval-gram channel commit: this batch's holdout grams land under
         // the batch's OWN `batch_id=` partition (dynamic overwrite — a
         // replay rewrites identical rows; the decontamination read above
@@ -1307,21 +1320,20 @@ object Streams {
         // Runs regardless of admission outcome: an all-holdout batch
         // admits nothing, but its grams ARE the batch's durable effect —
         // every later batch must gate against them.
-        holdoutGrams.foreach { g =>
+        def commitEvalGrams(g: DataFrame): Unit =
           if (!g.isEmpty)
             g.withColumn("batch_id", lit(batchKey))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch_id")
               .parquet(graft.etl.Compaction.currentPath(evalGramsTable))
-        }
         // span-anchor channel commit (r18): the PUBLISHED (budget-admitted,
         // post-excision) docs' surviving sliding 10-gram anchors land under
         // this batch's own partition — the stored set always describes the
         // corpus as published, so a future copy of an excised span still
         // hits the first corpus occurrence, which survived. Same dynamic
         // overwrite replay discipline as the eval grams.
-        if (spanExcise) {
+        def commitSpanAnchors(): Unit = {
           val anchors = kept
             .select(explode(call_function("word_ngrams",
               split(col("text"), " "), lit(10))).as("gram"))
@@ -1339,8 +1351,10 @@ object Streams {
         // batches read O(|sources|) rows instead of re-aggregating the
         // corpus every trigger. Seed-only publishes record this batch as
         // the high-water mark with delta 0 — a replay rolls back 0 and
-        // decides identically.
-        def commitLedger(): Unit = budgetPerSource.foreach { _ =>
+        // decides identically. The seed's corpus read resolved its files
+        // when the prior was built and excludes this batch's docs, so the
+        // concurrent corpus commit cannot change it.
+        def commitLedger(): Unit = {
           val delta = kept
             .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
             .groupBy("source").agg(sum("n_tok").as("d"))
@@ -1371,25 +1385,21 @@ object Streams {
           }.collect()
           (parts.flatMap(_._1).distinct.sorted.toSeq, parts.map(_._2).sum)
         }
-        // whether THIS batch bootstrapped the IVF model (its clustering is
-        // minutes old — retraining it again the same batch is pure waste)
-        var ivfSeededThisBatch = false
         val docCols = kept.drop("embedding")
           .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
         val (candBuckets, nKept) = bucketsAndCount(docCols)
-        if (nKept == 0) {
-          if (!ledgerExists) commitLedger()
-        } else {
+        val vecs = kept.select(col("doc_id").as("vec_id"), col("embedding"))
+        // the corpus commit: admitted docs an earlier attempt of this batch
+        // already published (a replay after the corpus commit landed) are
+        // not novel; only the novel docs' buckets rewrite. The pin is lazy:
+        // the bucket pass below computes every partition, so it
+        // materializes the pin in its own job
+        def commitCorpus(): Unit = {
           val existing =
             if (BT.exists(corpusDir))
               BT.readBuckets(spark, corpusDir, candBuckets,
                 empty = kept.drop("embedding").limit(0))
             else kept.drop("embedding").limit(0)
-          // admitted docs an earlier attempt of this batch already
-          // published (a replay after the corpus commit landed) are not
-          // novel; only the novel docs' buckets rewrite. The pin is lazy:
-          // the bucket pass below computes every partition, so it
-          // materializes the pin in its own job
           val novel = docCols
             .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
             .transform(pinLazy)
@@ -1402,72 +1412,106 @@ object Streams {
             BT.commit(corpusDir, nBuckets, touched,
               dir => out.write.mode("overwrite").partitionBy(B).parquet(dir))
           }
-          val vecs = kept.select(col("doc_id").as("vec_id"), col("embedding"))
-          graft.etl.AnnIndex.appendLsh(vecs, lshDir, lshBands, lshBits,
-            Some(batchKey))
-          sq8Dir.foreach(graft.etl.AnnIndex.appendSq8(vecs, _, Some(batchKey)))
-          // the TRAINABLE rung of the ladder: first admitting batch seeds
-          // the centroid model (centroids only — its rows enter through the
-          // keyed append below, so batch 0 replays exactly-once too); every
-          // batch then assigns against the current snapshot's frozen
-          // centroids, with appendIvf's write-then-clean hygiene making the
-          // keyed write idempotent even when a retrain moved the replay's
-          // assignment (see its scaladoc)
-          ivfDir.foreach { d =>
-            ivfSeededThisBatch = graft.etl.AnnIndex.ensureIvfSeeded(
-              vecs, d, ivfNlist)
-            // ONE frozen-model assignment feeds both the lists and the
-            // composite's codes (placements mirror by construction, and
-            // the argmax runs once, not once per index table); persisted
-            // because with the composite both appends evaluate it
-            val assigned = graft.etl.AnnIndex.assignIvfLists(vecs, d)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              graft.etl.AnnIndex.appendIvf(assigned, d, Some(batchKey))
-              // the IVF-PQ composite rides the same model lifecycle: the
-              // first admitting batch bootstraps it from the CURRENT lists
-              // corpus (which, this late in the batch body, already holds
-              // this batch's keyed append — and, on an ivfPqDir attached to
-              // a pre-existing stream, the whole prior corpus: the encode
-              // BACKFILLS it); every batch then encodes against the frozen
-              // books with the same write-then-clean keyed hygiene, the
-              // keyed append sweeping-and-rewriting exactly its own cells
-              // even on the bootstrap batch
-              ivfPqDir.foreach { pd =>
-                graft.etl.AnnIndex.ensureIvfPqFromLists(spark, d, pd, pqM, pqK)
-                graft.etl.AnnIndex.appendIvfPq(assigned, d, pd, Some(batchKey))
-              }
-              // drift flag for the retrain cadence below: set by every
-              // append (carrying the CUMULATIVE appended-row count since
-              // the last retrain — the growth gate's numerator; the
-              // assignment is one row per admitted doc, so the count is
-              // the one the bucket pass above already took), cleared
-              // by a completed retrain — so cadence batches with nothing
-              // new since the last retrain skip the O(corpus) re-cluster
-              // instead of republishing an identical model. A crash-replay
-              // recounts its own batch (the rows themselves stay
-              // exactly-once) — the gate is a maintenance heuristic and
-              // over-counting only retrains marginally earlier.
-              val pending = s"$d/_GRAFT_RETRAIN_PENDING"
-              graft.GraftFs.default.writeString(pending,
-                (readPendingCount(pending) + nKept).toString)
-            } finally assigned.unpersist(false)
-          }
-          commitLedger()
+        }
+        // the TRAINABLE rung of the ladder, one sequential unit: the first
+        // admitting batch seeds the centroid model (centroids only — its
+        // rows enter through the keyed append below, so batch 0 replays
+        // exactly-once too); every batch then assigns against the current
+        // snapshot's frozen centroids, with appendIvf's write-then-clean
+        // hygiene making the keyed write idempotent even when a retrain
+        // moved the replay's assignment (see its scaladoc). Returns whether
+        // THIS batch seeded the model (its clustering is minutes old —
+        // retraining it again the same batch is pure waste).
+        def publishIvf(d: String): Boolean = {
+          val seeded = graft.etl.AnnIndex.ensureIvfSeeded(vecs, d, ivfNlist)
+          // ONE frozen-model assignment feeds both the lists and the
+          // composite's codes (placements mirror by construction, and
+          // the argmax runs once, not once per index table); persisted
+          // because with the composite both appends evaluate it
+          val assigned = graft.etl.AnnIndex.assignIvfLists(vecs, d)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            graft.etl.AnnIndex.appendIvf(assigned, d, Some(batchKey))
+            // the IVF-PQ composite rides the same model lifecycle: the
+            // first admitting batch bootstraps it from the CURRENT lists
+            // corpus (which, after the append just above, already holds
+            // this batch's keyed append — and, on an ivfPqDir attached to
+            // a pre-existing stream, the whole prior corpus: the encode
+            // BACKFILLS it); every batch then encodes against the frozen
+            // books with the same write-then-clean keyed hygiene, the
+            // keyed append sweeping-and-rewriting exactly its own cells
+            // even on the bootstrap batch
+            ivfPqDir.foreach { pd =>
+              graft.etl.AnnIndex.ensureIvfPqFromLists(spark, d, pd, pqM, pqK)
+              graft.etl.AnnIndex.appendIvfPq(assigned, d, pd, Some(batchKey))
+            }
+            // drift flag for the retrain cadence below: set by every
+            // append (carrying the CUMULATIVE appended-row count since
+            // the last retrain — the growth gate's numerator; the
+            // assignment is one row per admitted doc, so the count is
+            // the one the bucket pass above already took), cleared
+            // by a completed retrain — so cadence batches with nothing
+            // new since the last retrain skip the O(corpus) re-cluster
+            // instead of republishing an identical model. A crash-replay
+            // recounts its own batch (the rows themselves stay
+            // exactly-once) — the gate is a maintenance heuristic and
+            // over-counting only retrains marginally earlier.
+            val pending = s"$d/_GRAFT_RETRAIN_PENDING"
+            graft.GraftFs.default.writeString(pending,
+              (readPendingCount(pending) + nKept).toString)
+          } finally assigned.unpersist(false)
+          seeded
+        }
+        // ── PUBLISH. The effects above each write their own table and read
+        // only the pinned decision frame (the corpus commit also reads the
+        // corpus's own buckets), so they run as ONE concurrent set of Spark
+        // jobs: their jobs are mostly single-task writes that would leave
+        // cores idle one after another, and a wide one just runs first
+        // under FIFO. Each effect's internal order is unchanged. The set
+        // returns only once every effect has ended; a failure in one
+        // surfaces after the others finish, and no effect is left running
+        // when the batch body exits.
+        val admits = nKept > 0
+        val publishSet: Seq[() => Any] =
+          auditDir.map(ad => () => writeAuditLog(ad)).toSeq ++
+            holdoutGrams.map(g => () => commitEvalGrams(g)) ++
+            Option.when(spanExcise)(() => commitSpanAnchors()) ++
+            Option.when(admits)(() => commitCorpus()) ++
+            Option.when(admits)(() => graft.etl.AnnIndex.appendLsh(vecs, lshDir,
+              lshBands, lshBits, Some(batchKey))) ++
+            sq8Dir.filter(_ => admits).map(d =>
+              () => graft.etl.AnnIndex.appendSq8(vecs, d, Some(batchKey))) ++
+            ivfDir.filter(_ => admits).map(d => () => publishIvf(d)) ++
+            Option.when(budgetPerSource.nonEmpty && (admits || !ledgerExists))(
+              () => commitLedger())
+        // the IVF unit is the one effect with a value
+        val ivfSeededThisBatch =
+          GraftSqlBridge.concurrently(spark)(publishSet: _*)
+            .collectFirst { case seeded: Boolean => seeded }.getOrElse(false)
+        // the dedup-index commit lands the survivors' posting rows LAST,
+        // only once every other effect succeeded: a batch that failed part
+        // way leaves no postings, so a fresh-checkpoint restart (new
+        // lineage, whose gate sees every other lineage's postings) still
+        // admits its docs instead of near-dup-rejecting them against
+        // postings of a publish that never completed
+        if (admits)
           graft.etl.IncrementalDedup.commitPostings(
             posts.join(broadcast(kept.select("doc_id")), Seq("doc_id"),
               "left_semi"),
             dedupDir, Some(batchKey))
-        }
         // IN-STREAM MAINTENANCE CADENCE (r11 #1 — the last unbounded-growth
         // path): without it, every micro-batch leaves (a) one superseded
         // `_budget` ledger version, (b) superseded corpus bucket versions,
         // and (c) one `batch_id=` parquet fragment per LSH band / SQ8
         // table / posting table — all O(batches) forever, and since
         // batch_id sits BELOW the band prune level, a pruned probe's
-        // file-open cost grows linearly with batch count. Runs on the
-        // sink's own thread AFTER the batch's commits (no writer race —
-        // same single-writer discipline as upsertToParquet's vacuumEvery).
+        // file-open cost grows linearly with batch count. Runs AFTER the
+        // batch's commits: the vacuum first, then each table's compaction
+        // as one concurrent set (the helper the publish stage uses). Every
+        // table still has one writer at a time — the set holds at most one
+        // rewrite per table, and the IVF lists and IVF-PQ codes share ONE
+        // sequential unit — the single-writer discipline of
+        // upsertToParquet's vacuumEvery.
         //
         // Replay safety of the coalescing compaction: THIS batch is not
         // yet durably checkpointed when its body runs, so its own
@@ -1526,84 +1570,88 @@ object Streams {
                 }
             })
           }
-        if (compactEvery > 0 && batchId % compactEvery == 0) {
-          val preserve = Set(batchKey)
-          def existsTbl(p: String) = graft.etl.Compaction.tableExists(p)
-          // compactGrace: how many retired index generations each publish
-          // keeps for concurrent probes — raise it when external probe
-          // scans can outlive `compactEvery` micro-batches (see
-          // Compaction.vacuumRetired for the sizing rule)
-          if (existsTbl(s"$lshDir/buckets"))
+        val compactNow = compactEvery > 0 && batchId % compactEvery == 0
+        val preserve = Set(batchKey)
+        def existsTbl(p: String) = graft.etl.Compaction.tableExists(p)
+        // compactGrace: how many retired index generations each publish
+        // keeps for concurrent probes — raise it when external probe
+        // scans can outlive `compactEvery` micro-batches (see
+        // Compaction.vacuumRetired for the sizing rule)
+        val compactions: Seq[() => Any] = if (!compactNow) Nil else
+          Option.when(existsTbl(s"$lshDir/buckets"))(() =>
             graft.etl.Compaction.compactLshPostings(spark, lshDir, preserve,
-              graceGenerations = compactGrace)
-          sq8Dir.filter(d => existsTbl(s"$d/sq8"))
-            .foreach(d => graft.etl.Compaction.compactSq8(spark, d, preserve,
-              graceGenerations = compactGrace))
-          if (existsTbl(s"$dedupDir/postings"))
+              graceGenerations = compactGrace)).toSeq ++
+          sq8Dir.filter(d => existsTbl(s"$d/sq8")).map(d => () =>
+            graft.etl.Compaction.compactSq8(spark, d, preserve,
+              graceGenerations = compactGrace)) ++
+          Option.when(existsTbl(s"$dedupDir/postings"))(() =>
             graft.etl.Compaction.compactDedupPostings(spark, dedupDir, preserve,
-              graceGenerations = compactGrace)
+              graceGenerations = compactGrace)) ++
           // the eval-gram posting table accumulates one fragment per
           // holdout-carrying batch — fold it on the same cadence (same
           // preserve-own-key replay guard)
-          if (anyDecon && existsTbl(evalGramsTable))
+          Option.when(anyDecon && existsTbl(evalGramsTable))(() =>
             graft.etl.Compaction.compactBatchKeyed(spark, evalGramsTable,
-              evalGramsSchema, Nil, preserve, compactGrace)
+              evalGramsSchema, Nil, preserve, compactGrace)) ++
           // the span-anchor posting table grows one fragment per admitting
           // batch (corpus-anchor-scaled — the honest cost of exact
           // substring hygiene); fold it on the same cadence
-          if (spanExcise && existsTbl(spanAnchorsTable))
+          Option.when(spanExcise && existsTbl(spanAnchorsTable))(() =>
             graft.etl.Compaction.compactBatchKeyed(spark, spanAnchorsTable,
-              spanAnchorsSchema, Nil, preserve, compactGrace)
-          if (!ivfRetrainNow) {
-            ivfDir.filter(d => existsTbl(s"$d/lists"))
-              .foreach(d => graft.etl.Compaction.compactIvfLists(spark, d,
-                preserve, graceGenerations = compactGrace))
-            ivfPqDir.filter(d => existsTbl(s"$d/codes"))
-              .foreach(d => graft.etl.Compaction.compactIvfPqCodes(spark, d,
-                preserve, graceGenerations = compactGrace))
-            // the two layout rewrites carry the SAME model, but the codes'
-            // carried `_lists_gen` sidecar still names the now-RETIRED
-            // lists generation (which stops receiving appends) — realign
-            // the pairing to the fresh generation or composite probes
-            // would serve a frozen corpus view until the next codes publish
-            for (d <- ivfDir; pd <- ivfPqDir
-                 if existsTbl(s"$d/lists") && existsTbl(s"$pd/codes"))
-              graft.etl.AnnIndex.realignListsGenSidecar(d, pd)
-          }
+              spanAnchorsSchema, Nil, preserve, compactGrace))
+        // the IVF lists and the IVF-PQ codes: one sequential unit beside the
+        // other tables' compactions, since the codes follow the lists
+        def compactIvf(): Unit = {
+          ivfDir.filter(d => existsTbl(s"$d/lists"))
+            .foreach(d => graft.etl.Compaction.compactIvfLists(spark, d,
+              preserve, graceGenerations = compactGrace))
+          ivfPqDir.filter(d => existsTbl(s"$d/codes"))
+            .foreach(d => graft.etl.Compaction.compactIvfPqCodes(spark, d,
+              preserve, graceGenerations = compactGrace))
+          // the two layout rewrites carry the SAME model, but the codes'
+          // carried `_lists_gen` sidecar still names the now-RETIRED
+          // lists generation (which stops receiving appends) — realign
+          // the pairing to the fresh generation or composite probes
+          // would serve a frozen corpus view until the next codes publish
+          for (d <- ivfDir; pd <- ivfPqDir
+               if existsTbl(s"$d/lists") && existsTbl(s"$pd/codes"))
+            graft.etl.AnnIndex.realignListsGenSidecar(d, pd)
         }
         // MODEL-DRIFT maintenance, the cadence compaction can't provide:
         // every `ivfRetrainEvery`-th batch re-clusters the full lists corpus
         // (frozen-centroid appends only ASSIGN — recall decays as the data
         // distribution drifts away from the trained centroids), publishing
         // the (centroids, lists) composite atomically. Runs AFTER this
-        // batch's commits on the sink's own thread — exactly the writer
-        // quiet window retrainIvf's contract asks for — and preserves this
-        // batch's (not yet checkpointed) key so a crash-replay's cell-drop
-        // append stays exactly-once. A replay re-runs the retrain too:
-        // seeded k-means over the same folded corpus is deterministic, so
-        // the republished model matches.
-        if (ivfRetrainNow)
-          ivfDir.filter(d => graft.etl.Compaction.tableExists(s"$d/lists"))
-            .foreach { d =>
-              graft.etl.AnnIndex.retrainIvf(spark, d, ivfNlist,
-                preserveBatchKeys = Set(batchKey),
-                graceGenerations = compactGrace)
-              // the composite follows ITS documented discipline — retrain
-              // AFTER the IVF publish, so the new codes generation mirrors
-              // the retrained lists (assignments, batch fold and all); a
-              // crash between the two publishes leaves the flag set, and
-              // the deterministic seeded re-cluster of the retry converges
-              // on the same pair
-              ivfPqDir
-                .filter(pd => graft.etl.Compaction.tableExists(s"$pd/codes"))
-                .foreach(pd => graft.etl.AnnIndex.retrainIvfPq(spark, d, pd,
-                  pqM, pqK, graceGenerations = compactGrace))
-              // drift consumed — cleared only AFTER the publish, so a crash
-              // mid-retrain leaves the flag set and the next cadence batch
-              // retries
-              graft.GraftFs.default.deleteIfExists(
-                s"$d/_GRAFT_RETRAIN_PENDING")
-            }
+        // batch's commits, with no other writer of the IVF tables —
+        // exactly the writer quiet window retrainIvf's contract asks for —
+        // and preserves this batch's (not yet checkpointed) key so a
+        // crash-replay's cell-drop append stays exactly-once. A replay
+        // re-runs the retrain too: seeded k-means over the same folded
+        // corpus is deterministic, so the republished model matches.
+        def retrainIvfModel(d: String): Unit = {
+          graft.etl.AnnIndex.retrainIvf(spark, d, ivfNlist,
+            preserveBatchKeys = Set(batchKey),
+            graceGenerations = compactGrace)
+          // the composite follows ITS documented discipline — retrain
+          // AFTER the IVF publish, so the new codes generation mirrors
+          // the retrained lists (assignments, batch fold and all); a
+          // crash between the two publishes leaves the flag set, and
+          // the deterministic seeded re-cluster of the retry converges
+          // on the same pair
+          ivfPqDir
+            .filter(pd => graft.etl.Compaction.tableExists(s"$pd/codes"))
+            .foreach(pd => graft.etl.AnnIndex.retrainIvfPq(spark, d, pd,
+              pqM, pqK, graceGenerations = compactGrace))
+          // drift consumed — cleared only AFTER the publish, so a crash
+          // mid-retrain leaves the flag set and the next cadence batch
+          // retries
+          graft.GraftFs.default.deleteIfExists(s"$d/_GRAFT_RETRAIN_PENDING")
+        }
+        val ivfMaintenance: Option[() => Any] =
+          if (ivfRetrainNow)
+            ivfDir.filter(d => existsTbl(s"$d/lists")).map(d => () => retrainIvfModel(d))
+          else Option.when(compactNow && ivfDir.nonEmpty)(() => compactIvf())
+        GraftSqlBridge.concurrently(spark)(compactions ++ ivfMaintenance: _*)
         ()
     }
   }

@@ -13,7 +13,10 @@ import graft.queries.Exprs
   * cannot check, so its contract is pinned here: a frame pinned after
   * `repartition(n, key)` and re-declared joins to exactly the rows of the
   * undeclared plan, with one exchange fewer; and the key must name ONE
-  * column under the session's resolver. */
+  * column under the session's resolver. [[GraftSqlBridge.concurrently]]'s
+  * contract too: the effects overlap on daemon threads carrying the
+  * caller's local properties and session, and the call ends only after
+  * every effect has ended, whatever failed or interrupted. */
 class GraftSqlBridgeSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -71,5 +74,62 @@ class GraftSqlBridgeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       GraftSqlBridge.withHashPartitioning(pinned, "nope", 2)
     }
+  }
+
+  test("concurrently: the effects overlap, carry the caller's properties and session, and return in submission order") {
+    val sc = spark.sparkContext
+    val key = "graft.test.concurrently"
+    sc.setLocalProperty(key, "caller")
+    // each effect waits for all three at the barrier: sequential effects
+    // would time out there
+    val barrier = new java.util.concurrent.CyclicBarrier(3)
+    try {
+      val seen = GraftSqlBridge.concurrently(spark)((0 until 3).map { i => () =>
+        barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        val t = Thread.currentThread()
+        (i, t.getName, t.isDaemon, sc.getLocalProperty(key),
+          org.apache.spark.sql.SparkSession.getActiveSession.contains(spark),
+          spark.range(100).count())
+      }: _*)
+      assert(seen.map(_._1) === Seq(0, 1, 2))
+      seen.foreach { case (_, name, daemon, prop, session, n) =>
+        assert(name.startsWith("graft-effect") && daemon, s"thread $name, daemon $daemon")
+        assert(prop === "caller" && session && n === 100L)
+      }
+    } finally sc.setLocalProperty(key, null)
+  }
+
+  test("concurrently: waits for every effect, then rethrows the first failure in submission order with the rest suppressed") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      GraftSqlBridge.concurrently(spark)(
+        () => { Thread.sleep(500); slowDone.set(true) },
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(100); throw new IllegalArgumentException("second") })
+    }
+    assert(slowDone.get, "the call surfaced a failure while an effect was still running")
+    assert(err.getMessage === "first")
+    assert(err.getSuppressed.map(_.getMessage).toSeq === Seq("second"))
+  }
+
+  test("concurrently: an interrupt of the caller waits for the effects, then surfaces as InterruptedException") {
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val effectDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val effectDoneAtExit = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val caller = new Thread(() =>
+      try GraftSqlBridge.concurrently(spark)(() => {
+        started.countDown(); Thread.sleep(500); effectDone.set(true)
+      })
+      catch { case t: Throwable =>
+        effectDoneAtExit.set(effectDone.get)
+        outcome.set(t)
+      })
+    caller.start()
+    assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(30000)
+    assert(outcome.get.isInstanceOf[InterruptedException], s"got ${outcome.get}")
+    assert(effectDoneAtExit.get, "the interrupt cut the wait short")
   }
 }

@@ -803,6 +803,127 @@ class StreamingSpec extends AnyFunSuite {
       s"vec $id: codes list $l != lists assignment ${la(id)}") }
   }
 
+  test("corpusIngest effect failure: the batch's other effects end first, no postings land, and a checkpoint restart publishes what a clean run does") {
+    // the publish stage runs a batch's effects concurrently; one failing
+    // must not leave the others running past the failure, must keep the
+    // postings (committed last) from landing, and must leave a state the
+    // checkpointed replay completes exactly as an unbroken run would
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.streaming.Trigger
+    def emb(seed: Int): Array[Float] =
+      Array.tabulate(8)(i => math.sin(seed * 31 + i).toFloat)
+    val feed = Seq(
+      Seq(IngestDoc(1, "alpha bravo charlie delta echo", emb(1)),
+          IngestDoc(2, "foxtrot golf hotel india juliet", emb(2)),
+          IngestDoc(3, "kilo lima mike november oscar", emb(3))),
+      Seq(IngestDoc(4, "alpha bravo charlie delta echo", emb(4)), // dup of 1
+          IngestDoc(5, "papa quebec romeo sierra tango", emb(5))))
+    final class Dirs(tag: String) {
+      private def tmp(n: String) =
+        Files.createTempDirectory(s"graft_fx_${tag}_$n").toString
+      val src = tmp("src"); val ckpt = tmp("ck"); val dedup = tmp("dedup")
+      val lsh = tmp("lsh"); val sq8 = tmp("sq8"); val corpus = tmp("corpus")
+      val ivf = tmp("ivf"); val audit = s"${tmp("audit")}/log"
+      def land(rows: Seq[IngestDoc]): Unit =
+        rows.toDF().coalesce(1).write.mode("append").parquet(src)
+      def start() = Streams.corpusIngest(
+          spark.readStream.schema(Seq.empty[IngestDoc].toDF().schema).parquet(src),
+          dedup, lsh, corpus, sq8Dir = Some(sq8), ivfDir = Some(ivf),
+          ivfNlist = 2, auditDir = Some(audit))
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      // what a run published: corpus doc ids, (doc, decision, gate, batch
+      // number) audit rows, and the LSH and IVF vector ids
+      def published() = {
+        val batchNo = org.apache.spark.sql.functions.substring_index(
+          org.apache.spark.sql.functions.col("batch_id"), "-", -1)
+        (graft.etl.BucketedTable.readCurrent(spark, corpus)
+            .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq,
+          spark.read.parquet(audit).select($"doc_id", $"decision", $"gate", batchNo)
+            .collect().map(_.toString).sorted.toSeq,
+          spark.read.parquet(s"$lsh/buckets").select("vec_id").distinct()
+            .collect().map(_.getLong(0)).sorted.toSeq,
+          spark.read.parquet(graft.etl.Compaction.currentPath(s"$ivf/lists"))
+            .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq)
+      }
+    }
+    val clean = new Dirs("clean")
+    feed.foreach { b => clean.land(b); clean.start().awaitTermination() }
+
+    val faulty = new Dirs("faulty")
+    // the fault: the decision log's directory is a regular file, so the
+    // audit effect of batch 0 fails while the other effects run
+    Files.createDirectories(Paths.get(faulty.audit).getParent)
+    Files.write(Paths.get(faulty.audit), Array[Byte](1))
+    faulty.land(feed.head)
+    // every job's (job group, batch id, start time) and end time; the job
+    // group is the run id, which tells the failed run's jobs from the
+    // restart's (same query id, same batch 0). The listener stays on
+    // until the end, so a job the failed run started late is seen too.
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, String, Long)]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties);
+             group <- Option(p.getProperty("spark.jobGroup.id"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          starts.put(e.jobId, (group, b, e.time))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    try {
+      val q = faulty.start()
+      val (err, surfaced) = try {
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.awaitTermination()
+        }
+        (e, System.currentTimeMillis())
+      } finally q.stop()
+      // every job of the failed batch started and ended before the failure
+      // surfaced: no effect of it outlived the batch body. Checked now and
+      // again at the end, for a job the failed run might start late.
+      def failedBatchEndedFirst(): Unit = {
+        assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext, 60000L),
+          "listener bus did not drain")
+        val failedBatch = starts.asScala.collect {
+          case (id, (group, "0", t)) if group == q.runId.toString => (id, t) }
+        assert(failedBatch.nonEmpty, "no job of the failed batch was seen")
+        failedBatch.toSeq.sorted.foreach { case (id, started) =>
+          val end = Option(ends.get(id)).map(_.longValue)
+          assert(started <= surfaced && end.exists(_ <= surfaced),
+            s"job $id of the failed batch ran $started..$end, past the failure at $surfaced")
+        }
+      }
+      failedBatchEndedFirst()
+      def messages(t: Throwable): Seq[String] = Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ e.getSuppressed.flatMap(messages) ++
+          messages(e.getCause))
+      assert(messages(err).exists(_.contains(faulty.audit)),
+        s"the failure must name the audit path, got: $err")
+      val key = s"${q.id}-0"
+      val postings = {
+        val s = Files.walk(Paths.get(faulty.dedup))
+        try s.iterator().asScala.filter(_.getFileName.toString == s"batch_id=$key").toSeq
+        finally s.close()
+      }
+      assert(postings.isEmpty, s"a failed batch must leave no postings, found $postings")
+
+      // remove the fault and restart from the same checkpoint: batch 0
+      // replays under its own key, then batch 1 runs
+      Files.delete(Paths.get(faulty.audit))
+      val replay = faulty.start()
+      replay.awaitTermination()
+      assert(replay.id === q.id, "a checkpoint restart keeps the lineage")
+      faulty.land(feed(1))
+      faulty.start().awaitTermination()
+      failedBatchEndedFirst()
+      assert(faulty.published() === clean.published())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("budget activation over a pre-existing corpus seeds prior spend from the published corpus") {
     // a corpus built WITHOUT a budget already holds 5 tokens for source A;
     // enabling the budget later must count that spend (seeded from the
@@ -1370,30 +1491,53 @@ class StreamingSpec extends AnyFunSuite {
     // no seeding, retrain or compaction) must stay within the budget below.
     val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long),
       java.util.concurrent.atomic.AtomicInteger]()
+    // ATTRIBUTION: every job's (query id, batch id) properties in bus
+    // order, None where a job arrived without them — the batch body's
+    // effects run on pool threads, and the per-op counters and
+    // stop/cancel both rely on those threads carrying the batch's ids
+    val tags = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(Option[String], Option[String])]())
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        for (p <- Option(e.properties);
-             qid <- Option(p.getProperty("sql.streaming.queryId"));
-             b <- Option(p.getProperty("streaming.sql.batchId")))
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val tag = (prop("sql.streaming.queryId"), prop("streaming.sql.batchId"))
+        tags.add(tag)
+        for (qid <- tag._1; b <- tag._2)
           jobs.computeIfAbsent((qid, b.toLong),
             _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     val q = Streams.corpusIngest(mem.toDF(), dedupDir, lshDir, corpusDir,
       ivfDir = Some(ivfDir), ivfNlist = 4, ivfRetrainEvery = 2,
       compactEvery = 3, ivfPqDir = Some(ivfPqDir), pqM = 4, pqK = 4).start()
-    try {
-      val nBatches = 5
-      for (i <- 0 until nBatches) {
-        mem.addData((0 until 4).map(c => doc(i * 4L + c)): _*)
-        q.processAllAvailable()
-      }
+    def drained(): Unit =
       assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext, 60000L),
         "listener bus did not drain")
+    try {
+      val nBatches = 5
+      // the jobs started while the append batch (batch 1) ran: every job
+      // the bus delivers between the end of batch 0 and the end of batch 1
+      var appendWindow = Seq.empty[(Option[String], Option[String])]
+      for (i <- 0 until nBatches) {
+        if (i == 1) drained()
+        val before = tags.size
+        mem.addData((0 until 4).map(c => doc(i * 4L + c)): _*)
+        q.processAllAvailable()
+        if (i == 1) {
+          drained()
+          appendWindow = tags.synchronized(
+            (before until tags.size).map(tags.get))
+        }
+      }
+      drained()
       val appendJobs = Option(jobs.get((q.id.toString, 1L))).map(_.get).getOrElse(0)
       assert(appendJobs > 0 && appendJobs <= AppendBatchJobBudget,
         s"append micro-batch ran $appendJobs Spark jobs, budget $AppendBatchJobBudget " +
           s"(jobs per (query, batch): $jobs)")
+      assert(appendWindow.size === appendJobs &&
+        appendWindow.forall(_ == ((Some(q.id.toString), Some("1")))),
+        s"every job of the append batch must carry its query and batch ids, got $appendWindow")
       val listsTable = s"$ivfDir/lists"
       // (a) every admitted doc's vector is in the index exactly once —
       // across bootstrap-seeded batch 0, frozen-centroid appends, retrains
