@@ -71,7 +71,7 @@ object AnnIndex {
       s"sq8b-${Paths.get(sfDir).getFileName}-${corpusFingerprint(Paths.get(sfDir, "embeddings.parquet"))}").toString
 
   /** [[defaultIvfDir]]'s twin for the PQ (product-quantized) scan index.
-    * "pqo": the r18 OPQ-rotated layout — the key bump forces a rebuild over
+    * "pqo": the OPQ-rotated layout — the key bump forces a rebuild over
     * any stale pre-rotation cache dir (whose codes a rotated probe LUT
     * would silently mis-score). */
   def defaultPqDir(sfDir: String, m: Int, k: Int): String =
@@ -171,13 +171,22 @@ object AnnIndex {
 
   /** The IVF lists table's schema: `vec_id`, `label` and `embedding` are
     * data columns, `list_id` and `batch_id` directory levels. */
-  private[graft] val ListsSchema =
+  private val ListsSchema =
     "vec_id BIGINT, label INT, embedding ARRAY<FLOAT>, list_id INT, batch_id STRING"
+
+  /** The IVF lists table. Its appends keep their own write-then-clean path
+    * ([[appendIvf]]); compaction folds it like every batch-keyed table. */
+  private[graft] def listsTable(indexDir: String): BatchKeyed =
+    BatchKeyed(s"$indexDir/lists", ListsSchema, Seq("list_id"))
 
   /** The IVF-PQ code table's schema (the lists' directory levels, with
     * the code and its reconstruction norm as data). */
-  private[graft] val CodesSchema =
+  private val CodesSchema =
     "vec_id BIGINT, code BINARY, rnorm DOUBLE, list_id INT, batch_id STRING"
+
+  /** The IVF-PQ code table; appended like [[listsTable]] ([[appendIvfPq]]). */
+  private[graft] def codesTable(indexDir: String): BatchKeyed =
+    BatchKeyed(s"$indexDir/codes", CodesSchema, Seq("list_id"))
 
   /** An assigned row set (`list_id` present) in [[ListsSchema]]'s column
     * types, under batch key `key`. */
@@ -221,8 +230,8 @@ object AnnIndex {
         .foreach(d => gfs.createDirectories(d.toString))
       gfs.moveIfAbsent(tmp, indexDir)
     } catch {
-      // exception types pinned by the GraftFs.moveIfAbsent contract (r15
-      // ADVICE): every implementation must raise exactly these on an
+      // exception types pinned by the GraftFs.moveIfAbsent contract: every
+      // implementation must raise exactly these on an
       // existing destination, so a lost build race is recoverable on any
       // store, not just NIO
       case _: java.nio.file.FileAlreadyExistsException |
@@ -389,13 +398,8 @@ object AnnIndex {
     * `batch_id` they land under. */
   private def appendListKeyed(rows: DataFrame, root: String,
                               batchKey: Option[String]): Unit = {
-    batchKey.foreach(k =>
-      // the key names FS cells this method later deletes — reject anything
-      // that could traverse out of the index tree or alias the base level
-      // (the same guard as Streams.dropServedBatches, plus "-1": a replay
-      // keyed "-1" would delete the folded base)
-      require(k.nonEmpty && !k.contains("/") && !k.contains("..") && k != "-1",
-        s"malformed batch key: $k"))
+    // the key names FS cells this method later deletes
+    batchKey.foreach(BatchKeyed.check)
     val stale = batchKey.toSeq.flatMap(ivfBatchCellFiles(root, _))
     rows.write.mode("append").partitionBy("list_id", "batch_id").parquet(root)
     // replay hygiene, AFTER the fresh rows are readable (see scaladoc):
@@ -515,16 +519,16 @@ object AnnIndex {
                  preserveBatchKeys: Set[String] = Set.empty,
                  graceGenerations: Int = 1): Long = {
     import org.apache.spark.ml.functions.array_to_vector
-    val listsTable = s"$indexDir/lists"
-    Compaction.reclaimOrphans(listsTable)
-    val corpus = readLists(spark, cur(listsTable)).drop("list_id")
+    val lists = listsTable(indexDir).root
+    Compaction.reclaimOrphans(lists)
+    val corpus = readLists(spark, cur(lists)).drop("list_id")
     // three passes share the corpus (count, the k-means fit's iterations,
     // the assignment rewrite) — persist so each is a cache read, not a
     // fresh parquet scan of the whole table
     val withVec = corpus.withColumn("features", array_to_vector(col("embedding")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newVer = Compaction.currentVersion(listsTable) + 1
-    val dst = s"$listsTable.v$newVer"
+    val newVer = Compaction.currentVersion(lists) + 1
+    val dst = s"$lists.v$newVer"
     try {
       // k-means needs k ≤ n: a young streaming table can be smaller than
       // the target nlist — grow toward it as the corpus does
@@ -533,11 +537,11 @@ object AnnIndex {
       model.transform(withVec)
         .select(col("vec_id"), col("label"), col("embedding"),
           col("prediction").as("list_id"),
-          Compaction.foldedBatchId(preserveBatchKeys).as("batch_id"))
+          BatchKeyed.folded(preserveBatchKeys).as("batch_id"))
         .write.mode("overwrite").partitionBy("list_id", "batch_id").parquet(dst)
       writeCentroids(spark, model, s"$dst/_centroids")
     } finally withVec.unpersist(false)
-    Compaction.publishRewrite(listsTable, newVer, graceGenerations)
+    Compaction.publishRewrite(lists, newVer, graceGenerations)
     newVer
   }
 
@@ -598,7 +602,7 @@ object AnnIndex {
     * norms; no scale column exists. Build is one codegen projection over
     * the corpus ([[graft.expr.Int8Pack]]). */
   def buildSq8(e: DataFrame, indexDir: String): Unit =
-    writeSq8(e, indexDir, "overwrite")
+    sq8Table(indexDir).write(sq8Rows(e), None, build = true)
 
   /** [[ensure]]'s twin for the SQ8 index. */
   def ensureSq8(e: DataFrame, indexDir: String): Unit =
@@ -614,37 +618,29 @@ object AnnIndex {
   /** Incremental SQ8 ingest: quantization is per-vector (no corpus
     * statistics), so a batch's quantized rows simply land — the cheapest
     * of the three index-append paths (one codegen projection, no driver
-    * metadata at all). A streaming caller passes a LINEAGE-SCOPED batch
-    * key (e.g. `<queryId prefix>-<batchId>` — see
-    * [[graft.stream.Streams.corpusIngest]]) and the write OVERWRITES that
-    * `batch_id=` partition, so an at-least-once replay rewrites its own
-    * rows instead of duplicating them — while a fresh-checkpoint restart
-    * (new query id, batch numbering restarting at 0) lands under NEW keys
-    * and can never destroy a prior lineage's partitions. Ad-hoc callers
-    * (None) append under the `batch_id=-1` base partition. */
+    * metadata at all). A streaming caller passes its batch key (see
+    * [[BatchKeyed$ BatchKeyed]]) and the write OVERWRITES that `batch_id=`
+    * partition, so an at-least-once replay rewrites its own rows instead
+    * of duplicating them — while a fresh-checkpoint restart (new query id,
+    * batch numbering restarting at 0) lands under NEW keys and can never
+    * destroy a prior lineage's partitions. Ad-hoc callers (None) append
+    * under the `batch_id=-1` base partition. */
   def appendSq8(batch: DataFrame, indexDir: String,
                 batchKey: Option[String] = None): Unit =
-    writeSq8(batch, indexDir, "append", batchKey)
+    sq8Table(indexDir).write(sq8Rows(batch), batchKey)
 
-  /** The SQ8 table's schema (`batch_id` the one directory level). */
-  private[graft] val Sq8Schema =
-    "vec_id BIGINT, qvec BINARY, qnorm DOUBLE, batch_id STRING"
+  /** The SQ8 table (`batch_id` the one directory level). */
+  private[graft] def sq8Table(indexDir: String): BatchKeyed =
+    BatchKeyed(s"$indexDir/sq8",
+      "vec_id BIGINT, qvec BINARY, qnorm DOUBLE, batch_id STRING")
 
-  private def writeSq8(e: DataFrame, indexDir: String, mode: String,
-                       batchKey: Option[String] = None): Unit = {
+  /** The SQ8 rows `(vec_id, qvec, qnorm)` of an `embedding` frame. */
+  private def sq8Rows(e: DataFrame): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(e.sparkSession)
-    val root = cur(s"$indexDir/sq8")
-    val rows = e.select(col("vec_id").cast("long").as("vec_id"),
+    e.select(col("vec_id").cast("long").as("vec_id"),
         call_function("int8_pack", col("embedding")).as("qvec"))
       .withColumn("qnorm",
         sqrt(call_function("int8_dot", col("qvec"), col("qvec")).cast("double")))
-      .withColumn("batch_id", lit(batchKey.getOrElse("-1")))
-      .write.partitionBy("batch_id")
-    (batchKey match {
-      case Some(_) => rows.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-      case None => rows.mode(mode)
-    }).parquet(root)
   }
 
   /** Driver-side probe quantization — the same formula as
@@ -683,7 +679,7 @@ object AnnIndex {
   def buildPq(e: DataFrame, indexDir: String, m: Int, k: Int, seed: Long = 7L): Unit = {
     val spark = e.sparkSession
     import spark.implicits._
-    // OPQ-lite (r18): rotate before the subspace split; books train on and
+    // OPQ-lite: rotate before the subspace split; books train on and
     // codes store the ROTATED coordinates, the rotation rides the codes
     // generation as the `_rotation/` sidecar, probes rotate their LUT input
     val rot = opqRotation(secondMoment(e.select(col("embedding"))), m)
@@ -842,7 +838,7 @@ object AnnIndex {
     (code, math.sqrt(rn2))
   }
 
-  // ---- OPQ-lite rotation + residual encoding (r18) -------------------------
+  // ---- OPQ-lite rotation + residual encoding --------------------------------
 
   /** Second moment M = Σ v·vᵀ of a vector column — ONE distributed pass
     * folding a d×d partial sum per partition (model-metadata sized:
@@ -874,7 +870,7 @@ object AnnIndex {
     Array.tabulate(d, d)((i, j) => packed(i * d + j))
   }
 
-  /** OPQ-lite rotation (r18, judge #3): the PCA eigenbasis of the encoded
+  /** OPQ-lite rotation: the PCA eigenbasis of the encoded
     * vectors' second moment with EIGENVALUE-BALANCED subspace allocation —
     * the parametric OPQ initialization (Ge et al., "Optimized Product
     * Quantization", CVPR 2013): decorrelate via PCA, then deal the d
@@ -958,14 +954,14 @@ object AnnIndex {
     PqModel(root, books, readRotation(spark, root))
   }
 
-  /** The composite probe-side model — [[ivfPqSnapshot]] plus the r18
+  /** The composite probe-side model — [[ivfPqSnapshot]] plus the two
     * sidecars: the OPQ rotation and the per-list MEANS the residuals
     * subtract (the probe adds ⟨q, mean⟩ back as a per-list bias). The
     * means are deliberately distinct from `cents`: Spark's cosine k-means
     * centroids are UNIT-normalized (direction-only model — right for
     * ranking lists by cosine), while the residual anchor
     * must be the per-cluster L2-optimal offset, i.e. the cluster MEAN
-    * (measured r18: unit-centroid residuals were WORSE than raw coding on
+    * (measured: unit-centroid residuals were WORSE than raw coding on
     * the ~8-norm test embeddings; mean residuals win). */
   final case class IvfPqModel(listsRoot: String,
                               cents: Array[(Int, Array[Double])],
@@ -1026,7 +1022,7 @@ object AnnIndex {
     a
   }
 
-  /** Residual encode of one composite row (r18, judge #1): code the ROTATED
+  /** Residual encode of one composite row: code the ROTATED
     * residual `x − c_list` against the books; rnorm is the exact
     * reconstruction norm `‖c_list + Rᵀ·decode(code)‖` — per-row, because
     * the centroid×residual cross term does not cancel (unlike flat PQ's
@@ -1089,7 +1085,7 @@ object AnnIndex {
     * `listsRoot`: its paired centroids (cosine ranking), the per-list MEANS
     * (residual anchors), the OPQ rotation of the RESIDUAL second moment,
     * and the m per-subspace codebooks fit on the rotated residuals — the
-    * r18 residual-encoding pipeline every composite writer shares
+    * residual-encoding pipeline every composite writer shares
     * ([[buildIvfPq]], [[ensureIvfPqFromLists]], [[retrainIvfPq]]).
     * Residuals concentrate the codebooks on within-cell variance (the
     * FAISS IVF-PQ default), which at the same code budget is what lifted
@@ -1169,7 +1165,7 @@ object AnnIndex {
     * WHAT is read per row (m code bytes instead of the float vector) — the
     * two compressions are orthogonal and multiply.
     *
-    * r18 (judge #1): codes store the RESIDUAL `x − centroid[list_id]`
+    * Codes store the RESIDUAL `x − centroid[list_id]`
     * (OPQ-rotated), the FAISS IVF-PQ default — at the same code budget the
     * codebooks model within-cell variance instead of re-spending bits on
     * the cell position the list id already encodes. This DELIBERATELY
@@ -1185,7 +1181,7 @@ object AnnIndex {
                  m: Int, k: Int, seed: Long = 7L): Unit = {
     val spark = e.sparkSession
     import spark.implicits._
-    // r18: the model trains on the LISTS corpus (the rows actually encoded
+    // the model trains on the LISTS corpus (the rows actually encoded
     // — identical content to `e` at build time), because residuals need the
     // per-row list assignment; `e` names the corpus for the caller's API
     // symmetry with buildPq
@@ -1313,7 +1309,7 @@ object AnnIndex {
     * sidecar naming the RETIRED lists generation — which stops receiving
     * appends — pinning composite probes to a frozen corpus view until the
     * next codes publish. [[graft.stream.Streams.corpusIngest]] calls this
-    * right after its paired `compactIvfLists` + `compactIvfPqCodes`;
+    * right after compacting the paired lists and codes tables;
     * ad-hoc maintenance that compacts a composite's lists must do the
     * same. */
   def realignListsGenSidecar(ivfDir: String, indexDir: String): Unit =
@@ -1371,8 +1367,8 @@ object AnnIndex {
     * orphan every stored code/list row). O(batch·(nlist + m·k)·dim)
     * map-side work, nothing shuffles, and probes immediately see old + new
     * codes through the same pruned scan. Appends fragment the per-list
-    * dirs over time — [[Compaction.compactIvfPqCodes]] is the matching
-    * maintenance job.
+    * dirs over time — [[Compaction.compactBatchKeyed]] over [[codesTable]]
+    * is the matching maintenance job.
     *
     * Streaming replay story — the [[appendIvf]] discipline applies DOUBLY:
     * a replay's rows can move cells because EITHER frozen model changed
@@ -1439,7 +1435,7 @@ object AnnIndex {
     * one per `bands×2^bits` cell, keeps the file count of a write at one
     * per band instead of one per touched cell. */
   def buildLsh(e: DataFrame, indexDir: String, bands: Int, bits: Int): Unit =
-    writeLsh(e, indexDir, bands, bits, "overwrite")
+    lshTable(indexDir).write(lshRows(e, bands, bits), None, build = true)
 
   /** Incremental ingest: the hyperplanes are seeded and DATA-INDEPENDENT,
     * so a new batch's bucket assignment is identical whether computed at
@@ -1448,9 +1444,9 @@ object AnnIndex {
     * probes immediately see old + new vectors through the same pruned scan
     * (spec-asserted equal to a from-scratch build). This is the LSH mirror
     * of [[IncrementalDedup]]'s posting table — including its replay story:
-    * a streaming caller passes a LINEAGE-SCOPED batch key (e.g.
-    * `<queryId prefix>-<batchId>`), the rows land under a `batch_id=`
-    * partition level below `band=`, and the write DYNAMICALLY overwrites
+    * a streaming caller passes its batch key (see [[BatchKeyed$ BatchKeyed]]),
+    * the rows land under a `batch_id=` partition level below `band=`, and
+    * the write DYNAMICALLY overwrites
     * exactly the (band, batch_id) directories of the batch — an
     * at-least-once replay rewrites its own files instead of appending
     * duplicate postings, while a fresh-checkpoint restart's restarting
@@ -1459,35 +1455,29 @@ object AnnIndex {
     * `batch_id=-1` base level. */
   def appendLsh(batch: DataFrame, indexDir: String, bands: Int, bits: Int,
                 batchKey: Option[String] = None): Unit =
-    writeLsh(batch, indexDir, bands, bits, "append", batchKey)
+    lshTable(indexDir).write(lshRows(batch, bands, bits), batchKey)
 
-  /** The posting table's schema: `vec_id` and `bkt` are data columns,
-    * `band` and `batch_id` are directory levels. Declared on every read, so
-    * no scan pays a schema-inference job, and `batch_id` reads as a string
-    * whatever keys the table holds. */
-  private[graft] val LshPostingSchema =
-    "vec_id BIGINT, bkt INT, band INT, batch_id STRING"
+  /** The posting table: `vec_id` and `bkt` are data columns, `band` and
+    * `batch_id` are directory levels, and each file is sorted by `bkt`,
+    * so its row groups carry narrow `bkt` bounds. The schema is declared
+    * on every read, so no scan pays a schema-inference job, and
+    * `batch_id` reads as a string whatever keys the table holds. */
+  private[graft] def lshTable(indexDir: String): BatchKeyed =
+    BatchKeyed(s"$indexDir/buckets",
+      "vec_id BIGINT, bkt INT, band INT, batch_id STRING",
+      levels = Seq("band"), sortBy = Seq("bkt"))
 
-  private def writeLsh(e: DataFrame, indexDir: String, bands: Int, bits: Int,
-                       mode: String, batchKey: Option[String] = None): Unit = {
-    val root = cur(s"$indexDir/buckets")
-    val bk = graft.queries.Llm.rpBandBuckets(e, bands, bits)
-    val bandArr = array((0 until bands).map(b => col(s"bkt$b")): _*)
-    // (band, batch_id) leads the sort, so it satisfies the writer's
-    // required ordering and Spark plans no second sort; bkt last gives each
-    // file narrow per-row-group bkt bounds
-    val rows = bk
+  /** The LSH shape of the index [[graft.stream.Streams.corpusIngest]]
+    * maintains: 3 bands of 8-bit buckets. */
+  private[graft] val LshBands = 3
+  private[graft] val LshBits = 8
+
+  /** The posting rows `(vec_id, band, bkt)` of an `embedding` frame. */
+  private def lshRows(e: DataFrame, bands: Int, bits: Int): DataFrame =
+    graft.queries.Llm.rpBandBuckets(e, bands, bits)
       .select(col("vec_id").cast("long").as("vec_id"),
-        posexplode(bandArr).as(Seq("band", "bkt")))
-      .withColumn("batch_id", lit(batchKey.getOrElse("-1")))
-      .sortWithinPartitions("band", "batch_id", "bkt")
-      .write.partitionBy("band", "batch_id")
-    (batchKey match {
-      case Some(_) => rows.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-      case None => rows.mode(mode)
-    }).parquet(root)
-  }
+        posexplode(array((0 until bands).map(b => col(s"bkt$b")): _*))
+          .as(Seq("band", "bkt")))
 
   /** Multi-probe candidate fetch over the persisted posting lists: `cells`
     * holds the (band, bucket) pairs to visit — the probe's own buckets plus
@@ -1506,14 +1496,15 @@ object AnnIndex {
     *
     * The probed bands' `band=` directories are addressed DIRECTLY under a
     * `basePath` (O(bands) existence checks, never a listing of the whole
-    * table), with the declared [[LshPostingSchema]]. The cell predicate
+    * table), with the declared [[lshTable]] schema. The cell predicate
     * `(band = b AND bkt IN (…)) OR …` splits into a partition filter on
     * `band` and a pushed data filter on `bkt`, which Parquet row-group
     * statistics skip on because every file is sorted by `bkt` (both
     * plan-asserted in LlmSpec). */
   def lshPostingScan(spark: SparkSession, indexDir: String,
                      cells: Seq[(Int, Int)]): DataFrame = {
-    val base = cur(s"$indexDir/buckets")
+    val table = lshTable(indexDir)
+    val base = table.path
     val byBand = cells.distinct.groupBy(_._1).filter { case (b, _) =>
       gfs.exists(s"$base/band=$b") }
     if (byBand.isEmpty)
@@ -1523,7 +1514,7 @@ object AnnIndex {
     val pred = bands.map { b =>
       col("band") === b && col("bkt").isin(byBand(b).map(_._2).sorted: _*)
     }.reduce(_ || _)
-    spark.read.schema(LshPostingSchema).option("basePath", base)
+    spark.read.schema(table.schema).option("basePath", base)
       .parquet(bands.map(b => s"$base/band=$b"): _*)
       .filter(pred)
       .select("vec_id", "band", "bkt")

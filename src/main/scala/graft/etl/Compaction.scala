@@ -3,8 +3,8 @@ package graft.etl
 import java.nio.file.{Path, Paths}
 
 import graft.{GraftFs, NioFs}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Small-file compaction for the append-maintained index tables — the
   * 100 TB maintenance job the incremental paths make necessary: every
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * working), and every probe result are unchanged (spec-asserted for the
   * LSH and dedup-posting tables).
   *
-  * PUBLISH = VERSIONED POINTER, not a rename swap (r12 judge #2): the
+  * PUBLISH = VERSIONED POINTER, not a rename swap: the
   * rewrite lands as a complete sibling generation `{path}.vN` and a one-line
   * `{path}._CURRENT` pointer file is atomically renamed over — the same
   * `_CURRENT` discipline [[Warehouse]] and [[BucketedTable]] already use.
@@ -161,47 +161,34 @@ object Compaction {
     rewrite(path, partitionCols, batchKeyed = false, numFiles,
       graceGenerations, fs, sortBy = Nil)(spark.read.parquet(_))
 
-  /** [[compactParquet]] for a table with a trailing `batch_id=` partition
-    * level — every index table a stream appends to: the LSH, SQ8, IVF and
-    * IVF-PQ tables, the dedup postings, and
-    * [[graft.stream.Streams.corpusIngest]]'s gram tables. Besides the
-    * layout rewrite it COALESCES the per-batch partitions into the single
-    * `batch_id=-1` base level — sound under the object-level quiet-window
-    * contract (every batch folded here is checkpoint-committed, so none
-    * can replay and collide with the base). `schema` declares the table's
-    * columns, `batch_id STRING` among them, so the read runs no
-    * schema-inference job.
+  /** [[compactParquet]] for a [[BatchKeyed]] table — every index table a
+    * stream appends to. Besides the layout rewrite it folds the per-batch
+    * partitions into the `batch_id=-1` base level ([[BatchKeyed.folded]]):
+    * every batch folded here is checkpoint-committed, so none can replay
+    * and collide with the base. The read declares the table's schema, so
+    * it runs no schema-inference job, and each file is sorted by the
+    * table's `sortBy` columns.
     *
-    * `preserveBatchKeys` is the REPLAY HIGH-WATER-MARK GUARD on that
-    * contract: batch partitions named here are NOT folded into the base —
-    * they keep their `batch_id` value through the rewrite. The in-stream
-    * maintenance cadence ([[graft.stream.Streams.corpusIngest]]) passes
-    * the batch key it is currently committing, because that batch is not
-    * yet durably checkpointed: folding it would defeat its replay's
-    * `excludeBatchKey` filter — the replay would see its OWN postings as
-    * pre-existing index state, drop its own docs, and diverge from the
-    * original survivor set. Every EARLIER batch of the same lineage is
-    * checkpoint-committed by the time batch N's body runs, so folding
-    * those (and any dead lineage's keys) is safe. */
-  private[graft] def compactBatchKeyed(spark: SparkSession, path: String,
-                                       schema: String,
-                                       partitionCols: Seq[String],
-                                       preserveBatchKeys: Set[String],
-                                       graceGenerations: Int,
-                                       fs: GraftFs = GraftFs.default,
-                                       sortBy: Seq[String] = Nil): (Long, Long) =
-    rewrite(path, partitionCols, batchKeyed = true, numFiles = 1,
-      graceGenerations, fs, sortBy) { src =>
-      spark.read.schema(schema).parquet(src)
-        .withColumn("batch_id", foldedBatchId(preserveBatchKeys))
+    * `preserveBatchKeys` names the batches that are NOT folded: they keep
+    * their `batch_id` through the rewrite. The in-stream maintenance
+    * cadence ([[graft.stream.Streams.corpusIngest]]) passes the key it is
+    * committing, because that batch is not yet checkpointed: folding it
+    * would defeat its replay's read, which skips only its own key — the
+    * replay would see its OWN postings as pre-existing index state, drop
+    * its own docs, and diverge from the original survivor set. Every
+    * earlier batch of the same lineage is checkpoint-committed by the time
+    * batch N's body runs, so folding those (and any dead lineage's keys) is
+    * safe. `graceGenerations` passes through to the publish (raise it when
+    * probes can outlive one maintenance cycle). */
+  private[graft] def compactBatchKeyed(spark: SparkSession, table: BatchKeyed,
+                                       preserveBatchKeys: Set[String] = Set.empty,
+                                       graceGenerations: Int = 1,
+                                       fs: GraftFs = GraftFs.default): (Long, Long) =
+    rewrite(table.root, table.levels, batchKeyed = true, numFiles = 1,
+      graceGenerations, fs, table.sortBy) { src =>
+      spark.read.schema(table.schema).parquet(src)
+        .withColumn(BatchKeyed.Col, BatchKeyed.folded(preserveBatchKeys))
     }
-
-  /** A batch-keyed table's `batch_id` after a fold: `-1` (the base level)
-    * except for the keys in `preserve`, which keep their own. */
-  private[etl] def foldedBatchId(preserve: Set[String]): Column =
-    if (preserve.isEmpty) lit("-1")
-    else when(col("batch_id").isin(preserve.toSeq: _*), col("batch_id"))
-      .otherwise(lit("-1"))
 
   /** The compactions' body. `read` loads the current generation;
     * `batchKeyed` writes `batch_id` as a partition level below
@@ -255,55 +242,6 @@ object Compaction {
       }
     }
   }
-
-  // Wrappers for the batch-keyed index tables — each declares its table's
-  // schema and partition levels. `graceGenerations` passes through to the
-  // publish (raise it when probes can outlive one maintenance cycle).
-
-  /** The LSH posting table ([[AnnIndex.buildLsh]]): one file per band
-    * directory (per preserved batch key), its rows sorted by `bkt`, so a
-    * probe's pushed `bkt IN (…)` filter skips row groups. */
-  def compactLshPostings(spark: SparkSession, indexDir: String,
-                         preserveBatchKeys: Set[String] = Set.empty,
-                         graceGenerations: Int = 1,
-                         fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactBatchKeyed(spark, s"$indexDir/buckets", AnnIndex.LshPostingSchema,
-      Seq("band"), preserveBatchKeys, graceGenerations, fs, sortBy = Seq("bkt"))
-
-  /** IVF lists ([[AnnIndex.build]] / `appendIvf`). */
-  def compactIvfLists(spark: SparkSession, indexDir: String,
-                      preserveBatchKeys: Set[String] = Set.empty,
-                      graceGenerations: Int = 1,
-                      fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactBatchKeyed(spark, s"$indexDir/lists", AnnIndex.ListsSchema,
-      Seq("list_id"), preserveBatchKeys, graceGenerations, fs)
-
-  def compactSq8(spark: SparkSession, indexDir: String,
-                 preserveBatchKeys: Set[String] = Set.empty,
-                 graceGenerations: Int = 1,
-                 fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactBatchKeyed(spark, s"$indexDir/sq8", AnnIndex.Sq8Schema, Nil,
-      preserveBatchKeys, graceGenerations, fs)
-
-  /** The IVF-PQ composite's per-list code dirs ([[AnnIndex.buildIvfPq]] /
-    * `appendIvfPq`; the `codebooks` table is a single coalesced file and
-    * never fragments). */
-  def compactIvfPqCodes(spark: SparkSession, indexDir: String,
-                        preserveBatchKeys: Set[String] = Set.empty,
-                        graceGenerations: Int = 1,
-                        fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactBatchKeyed(spark, s"$indexDir/codes", AnnIndex.CodesSchema,
-      Seq("list_id"), preserveBatchKeys, graceGenerations, fs)
-
-  /** The dedup posting table ([[IncrementalDedup]]) — unpartitioned
-    * appends, joined on (band, bkey) per ingest batch. */
-  def compactDedupPostings(spark: SparkSession, indexDir: String,
-                           preserveBatchKeys: Set[String] = Set.empty,
-                           graceGenerations: Int = 1,
-                           fs: GraftFs = GraftFs.default): (Long, Long) =
-    compactBatchKeyed(spark, s"$indexDir/postings",
-      IncrementalDedup.PostingsSchema, Nil, preserveBatchKeys,
-      graceGenerations, fs)
 
   /** Z-ORDERED compaction — the OPTIMIZE ZORDER maintenance form: rewrite
     * the table CLUSTERED on the Morton interleave of two numeric columns

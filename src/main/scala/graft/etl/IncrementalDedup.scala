@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,30 +41,17 @@ import graft.queries.Exprs.pinShared
   * the kept corpus. */
 object IncrementalDedup {
 
-  /** The postings table's CURRENT generation — resolved through the
-    * compaction pointer, so reads and batch-keyed commits keep targeting one
-    * immutable tree across in-stream compactions ([[Compaction.currentPath]]). */
-  private def postingsPath(indexDir: String) =
-    Compaction.currentPath(s"$indexDir/postings")
-
-  /** The posting table's schema: `batch_id` is its one directory level. */
-  private[graft] val PostingsSchema =
-    "band INT, bkey STRING, doc_id BIGINT, batch_id STRING"
+  /** The posting table: `batch_id` is its one directory level. */
+  private[graft] def postingsTable(indexDir: String): BatchKeyed =
+    BatchKeyed(s"$indexDir/postings",
+      "band INT, bkey STRING, doc_id BIGINT, batch_id STRING")
 
   /** Dedup `batch` (`doc_id`, `text`, …) against the index at `indexDir`
     * and within itself, append the survivors' postings, and return the kept
     * rows (original batch columns). `imageCol` / `audioCol` / `videoCol`
     * name optional binary media-payload columns: decodable images/clips/
     * videos then ALSO post their perceptual fingerprint bands, extending
-    * the near-dup gate across those modalities (see [[keptPostings]]).
-    *
-    * INDEX-FORMAT NOTE (r13): when a media column is configured, the
-    * sentinel band -1 bkey for signature-less docs hashes the text AND
-    * every configured media payload ("|"-delimited) — an index whose
-    * sentinel cells were written by the pre-r13 text-only md5 will
-    * re-admit an exact replay of such a doc ONCE (its new-format cell then
-    * sticks). Rebuild media-configured indexes written before that change,
-    * or accept the one-time re-admission per legacy signature-less doc. */
+    * the near-dup gate across those modalities (see [[keptPostings]]). */
   def ingest(batch: DataFrame, indexDir: String,
              bands: Int = 4, rowsPerBand: Int = 2,
              imageCol: Option[String] = None,
@@ -86,10 +71,10 @@ object IncrementalDedup {
     * [[commitPostings]]. Deterministic for a fixed index state, so a
     * preview and a later commit in the same micro-batch agree.
     *
-    * `excludeBatchKey`: a streaming pipeline passes its LINEAGE-SCOPED
-    * batch key (`<queryId prefix>-<batchId>`) so the stored-index read
-    * SKIPS that batch's own `batch_id=` posting partition (a pruned
-    * partition filter — no extra scan cost). A replayed micro-batch then
+    * `excludeBatchKey`: a streaming pipeline passes its batch key
+    * ([[BatchKeyed$ BatchKeyed]]) so the stored-index read SKIPS that
+    * batch's own `batch_id=` posting partition (a pruned partition filter
+    * — no extra scan cost). A replayed micro-batch then
     * sees the exact pre-batch index state — even if its own commit
     * partially landed before the crash — and re-derives the ORIGINAL
     * survivor set deterministically, which is what makes every downstream
@@ -202,13 +187,13 @@ object IncrementalDedup {
     // the media namespaces (image 1000+, audio 2000+, video 3000+) are
     // disjoint from text minhash bands STRUCTURALLY, not by convention: a
     // caller asking for >= 1000 text bands would silently collide text
-    // posting cells with the image namespace (ADVICE r13)
+    // posting cells with the image namespace
     require(bands < 1000,
       s"IncrementalDedup: text band count must stay below the media band " +
         s"namespaces (image 1000+, audio 2000+, video 3000+), got $bands")
     // hash the batch ONCE; every later step reuses these postings
     val hashed = Llm.minhashBandRows(batch, bands, rowsPerBand)
-    // IMAGE MODALITY (r12 #5): decodable image payloads post their four
+    // IMAGE MODALITY: decodable image payloads post their four
     // 16-bit dHash bands into the SAME table under a disjoint band-id
     // range — cross-batch image near-dups (Hamming ≤ 3 always shares a
     // band; pigeonhole) then collide exactly like text minhash dups, and
@@ -231,7 +216,7 @@ object IncrementalDedup {
         import spark.implicits._
         Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")
     }
-    // AUDIO MODALITY (r13): decodable clips post their four 16-bit
+    // AUDIO MODALITY: decodable clips post their four 16-bit
     // slice-gradient fingerprint bands under band ids 2000+ — the third
     // disjoint namespace in the one posting table; everything downstream
     // applies unchanged (see [[Multimodal.audioPostingRows]]).
@@ -246,7 +231,7 @@ object IncrementalDedup {
         import spark.implicits._
         Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")
     }
-    // VIDEO MODALITY (r14): demuxable MJPEG-in-AVI clips post their four
+    // VIDEO MODALITY: demuxable MJPEG-in-AVI clips post their four
     // 16-bit temporal-gradient fingerprint bands under band ids 3000+ —
     // the fourth disjoint namespace, closing the dedup × modality matrix
     // (see [[Multimodal.videoPostingRows]]).
@@ -298,11 +283,10 @@ object IncrementalDedup {
   }
 
   /** The stored-index cells a batch's postings hit, or None before the
-    * index holds any `batch_id=` partition. A root holding anything else
-    * besides hidden files is in a layout no code here writes; reading it
-    * as an empty index would re-admit every stored doc's near-dups, so the
-    * gate fails instead, naming the table (one root listing covers both
-    * checks).
+    * index holds any `batch_id=` partition. A root in any other layout
+    * fails the gate, naming the table ([[BatchKeyed.readCommitted]]):
+    * reading it as an empty index would re-admit every stored doc's
+    * near-dups.
     *
     * Join DIRECTION matters at scale: `posts SEMI stored` builds on the
     * stored table (LeftSemi can only broadcast its
@@ -313,37 +297,16 @@ object IncrementalDedup {
     * and never shuffles; only the batch-bounded hits go on (one row per
     * matching stored posting). Bit-identical
     * result (set intersection is symmetric), spec-asserted shuffle-free on
-    * the stored side. */
+    * the stored side. Neither side is de-duplicated: a semi join's build
+    * side needs no distinct, and a cell stored twice only repeats a HIT
+    * posting, whose doc is dropped whatever its multiplicity (each
+    * distinct would cost an exchange, i.e. a job per batch). */
   private def storedHitCells(posts: DataFrame, indexDir: String,
-                             excludeBatchKey: Option[String]): Option[DataFrame] = {
-    val fs = graft.GraftFs.default
-    val root = postingsPath(indexDir)
-    val entries =
-      if (!fs.isDirectory(root)) Nil
-      else fs.list(root).map(p => Paths.get(p).getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    entries.find(!_.startsWith("batch_id=")).foreach(n =>
-      throw new IllegalStateException(
-        s"$root: the posting table holds $n outside a batch_id= " +
-          "partition — a layout this code does not write; rebuild the index"))
-    if (entries.isEmpty) None
-    else {
-      // the gate reads only the cell columns, so it declares them: no
-      // schema-inference job per batch
-      val storedAll = posts.sparkSession.read.schema(PostingsSchema).parquet(root)
-      val storedOwn = excludeBatchKey match {
-        case Some(k) => storedAll.filter(col("batch_id") =!= k)
-        case None => storedAll
-      }
-      // neither side is de-duplicated: a semi join's build side needs no
-      // distinct, and a cell stored twice only repeats a HIT posting,
-      // whose doc is dropped whatever its multiplicity (each distinct
-      // would cost an exchange, i.e. a job per batch)
-      Some(storedOwn.select(col("band"), col("bkey"))
+                             excludeBatchKey: Option[String]): Option[DataFrame] =
+    postingsTable(indexDir).readCommitted(posts.sparkSession, excludeBatchKey)
+      .map(_.select(col("band"), col("bkey"))
         .join(broadcast(posts.select("band", "bkey")),
           Seq("band", "bkey"), "left_semi"))
-    }
-  }
 
   /** Step 3 of [[ingest]]: land the kept docs' postings — the only write,
     * and the batch's commit point. The index stays bucket-unique: EVERY doc
@@ -351,23 +314,16 @@ object IncrementalDedup {
     * cell), so the kept corpus is exactly the kept-posting docs.
     *
     * The table is laid out in `batch_id=` partitions. A streaming caller
-    * passes a LINEAGE-SCOPED batch key (`<queryId prefix>-<batchId>`): the
-    * commit then OVERWRITES its own partition, so an at-least-once replay
-    * (which, with the matching `excludeBatchKey` on [[keptPostings]],
-    * recomputes the identical survivor set) rewrites the same rows instead
-    * of duplicating them — a partially-landed commit is healed whole — and
-    * a fresh-checkpoint restart's restarting batch numbers land under NEW
+    * passes its batch key ([[BatchKeyed$ BatchKeyed]]): the commit then
+    * OVERWRITES its own partition, so an at-least-once replay (which, with
+    * the matching `excludeBatchKey` on [[keptPostings]], recomputes the
+    * identical survivor set) rewrites the same rows instead of duplicating
+    * them — a partially-landed commit is healed whole — and a
+    * fresh-checkpoint restart's restarting batch numbers land under NEW
     * keys, never over a prior lineage's committed postings. Batch-mode
     * callers (None) append under the `batch_id=-1` base partition. */
   def commitPostings(keptPosts: DataFrame, indexDir: String,
-                     batchKey: Option[String] = None): Unit = {
-    val rows = keptPosts.select("band", "bkey", "doc_id")
-      .withColumn("batch_id", lit(batchKey.getOrElse("-1")))
-      .write.partitionBy("batch_id")
-    (batchKey match {
-      case Some(_) => rows.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-      case None => rows.mode("append")
-    }).parquet(postingsPath(indexDir))
-  }
+                     batchKey: Option[String] = None): Unit =
+    postingsTable(indexDir).write(keptPosts.select("band", "bkey", "doc_id"),
+      batchKey)
 }

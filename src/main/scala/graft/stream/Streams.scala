@@ -283,10 +283,10 @@ object Streams {
     * the 100 TB scan-bandwidth shape, served straight off the tables
     * [[corpusIngest]] maintains.
     *
-    * At-least-once safety: results land under a LINEAGE-scoped
-    * `batch_id=<queryId>-<id>` partition with overwrite, so a replayed
-    * micro-batch rewrites its own partition instead of appending
-    * duplicates — readers see each batch's answers exactly once — and a
+    * At-least-once safety: results land under the batch's key
+    * ([[graft.etl.BatchKeyed$ BatchKeyed]]) as a `batch_id=` partition
+    * with overwrite, so a replayed micro-batch rewrites its own partition
+    * instead of appending duplicates — readers see each batch's answers exactly once — and a
     * fresh-checkpoint restart (batch numbering restarting at 0) lands
     * under new keys instead of silently deleting the prior run's served
     * answers.
@@ -301,7 +301,7 @@ object Streams {
     * the cap should aggregate its source into smaller triggers (or raise
     * the cap alongside driver memory).
     *
-    * RETENTION CONTRACT (r11 #8 sweep): `outDir` grows one `batch_id=`
+    * RETENTION CONTRACT: `outDir` grows one `batch_id=`
     * partition per micro-batch BY DESIGN — these are the stream's OUTPUT
     * (served answers with provenance), not maintained state, so no
     * compaction may ever fold or rewrite their `batch_id` values (a
@@ -333,15 +333,7 @@ object Streams {
             s"annServe: probe micro-batch exceeds maxProbesPerBatch=" +
               s"$maxProbesPerBatch; shrink the trigger or raise the cap")
         if (ps.nonEmpty) {
-          // fail fast on a missing queryId (same contract as corpusIngest):
-          // a shared-constant fallback would let a fresh-checkpoint restart
-          // overwrite a prior run's served answers under batch_id=<const>-0
-          val lineage = Option(
-              spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
-            .getOrElse(throw new IllegalStateException(
-              "annServe: sql.streaming.queryId local property is not set " +
-                "inside foreachBatch — cannot derive a lineage-scoped " +
-                "result partition; refusing a shared-constant fallback"))
+          val key = graft.etl.BatchKeyed.key(spark, batchId)
           // ivfPqDir routes the batch through the COMPOSITE serve core:
           // ADC-coarse over m-byte codes in the probed lists, exact
           // re-rank fetched partition-pruned from the same lists snapshot
@@ -353,12 +345,12 @@ object Streams {
           }
           withServeEnvelope(answers, ps.map(_._1))
             .write.mode("overwrite")
-            .parquet(s"$outDir/batch_id=$lineage-$batchId")
+            .parquet(s"$outDir/batch_id=$key")
         }
         ()
     }
 
-  /** The r18 (judge #6) SERVING ENVELOPE: every [[annServe]] answer row
+  /** The SERVING ENVELOPE: every [[annServe]] answer row
     * carries `n_candidates` — how many rows this probe's serve actually
     * returned (saturates at k; `< k` means the pruned candidate set was
     * SMALLER than k, which on the pruned/quantized families is a
@@ -400,8 +392,7 @@ object Streams {
   def dropServedBatches(outDir: String, batchKeys: Seq[String]): Int = {
     val fs = graft.GraftFs.default
     batchKeys.count { k =>
-      require(k.nonEmpty && !k.contains("/") && !k.contains(".."),
-        s"malformed batch key: $k")
+      graft.etl.BatchKeyed.check(k)
       val d = s"$outDir/batch_id=$k"
       if (!fs.isDirectory(d)) false
       else { fs.deleteRecursively(d); true }
@@ -651,7 +642,7 @@ object Streams {
     * folded: a correction must carry a fresh eff (the natural CDC
     * discipline — a correction IS a later change) or be applied through an
     * offline history rebuild. The contract is ASSERTED, not merely
-    * documented (r11 #7): a non-delete batch winner matching history on
+    * documented: a non-delete batch winner matching history on
     * (key, eff) with DIFFERING non-envelope attributes raises instead of
     * silently no-opping as a presumed replay — silent data loss becomes a
     * loud error. A true replay (identical attributes) still folds to a
@@ -833,13 +824,16 @@ object Streams {
     * count) are collected. Nothing is re-derived by joins over
     * per-stage frames, so an append micro-batch runs a few dozen Spark
     * jobs rather than one per cascade stage. Idempotence is keyed on the
-    * LINEAGE-SCOPED batch key
-    * `<streaming queryId prefix>-<batchId>` — the query id is stable
-    * across checkpointed restarts and fresh per new checkpoint, so a true
-    * replay overwrites exactly its own partitions and rolls back exactly
-    * its own ledger delta, while a fresh-checkpoint restart (batch ids
-    * restarting at 0) writes under new keys and accumulates onto the
-    * ledger without ever touching a prior lineage's data.
+    * batch key ([[graft.etl.BatchKeyed$ BatchKeyed]]): a true replay
+    * overwrites exactly its own partitions and rolls back exactly its own
+    * ledger delta (the ledger records the key's query id), while a
+    * fresh-checkpoint restart (batch ids restarting at 0) writes under new
+    * keys and accumulates onto the ledger without ever touching a prior
+    * lineage's data. The LSH index has a fixed shape
+    * ([[graft.etl.AnnIndex.LshBands]] bands of
+    * [[graft.etl.AnnIndex.LshBits]] bits), and each maintenance publish
+    * keeps one retired generation for concurrent probes (the
+    * `graceGenerations` default of [[graft.etl.Compaction]]).
     *
     * Maintenance: `vacuumEvery = n` reclaims superseded corpus bucket
     * versions and `_budget` ledger snapshots every n-th batch;
@@ -877,11 +871,10 @@ object Streams {
     * the running count). The `compactEvery` cadence covers the
     * IVF lists' layout on the batches a retrain doesn't run.
     *
-    * CURATION GATES (r17 — streaming/batch funnel parity): the batch
-    * funnel ([[graft.etl.CorpusPipeline]]) rejects documents a streamed
-    * ingest would previously have admitted and only killed in a later
-    * batch re-curation. Four opt-in parameters close that gap, each
-    * reusing the funnel's OWN shared predicate/gram definitions so the two
+    * CURATION GATES (streaming/batch funnel parity): the stream rejects
+    * the documents the batch funnel ([[graft.etl.CorpusPipeline]])
+    * rejects, at admission rather than in a later batch re-curation.
+    * Opt-in parameters, each reusing the funnel's OWN shared predicate/gram definitions so the two
     * paths cannot drift (StreamingSpec proves one-batch admission ≡
     * `CorpusPipeline.curate` row-for-row, decisions ≡ `q_curation_audit`
     * drop stages):
@@ -898,7 +891,7 @@ object Streams {
     *     replay/compaction discipline as the dedup postings — so
     *     contamination evidence accumulates across the stream's life and
     *     each batch's check is O(batch) probe work, never a corpus scan;
-    *   - `spanDecontaminate` (r18, judge #5): the SPAN-GRAIN twin — the
+    *   - `spanDecontaminate`: the SPAN-GRAIN twin — the
     *     eval table additionally stores the holdout docs' SLIDING 10-word
     *     anchors (the `q_substring_dedup` unit, grain="a10" rows beside
     *     the 4-gram grain="g4" rows), and a dedup survivor whose own
@@ -907,9 +900,8 @@ object Streams {
     *     whole-doc MinHash structurally misses), at far higher precision
     *     than the 4-gram scrub; each grain gates only against its own
     *     rows, the two knobs compose, audit gate stays `eval_gram`.
-    *   - `spanExcise` (r18): the ingest-side ACTION closing the last
-    *     batch/stream asymmetry — words of an admitted doc that verbatim-
-    *     duplicate a sliding 10-word anchor already in the published
+    *   - `spanExcise`: the ingest-side ACTION, not a gate — words of an
+    *     admitted doc that verbatim-duplicate a sliding 10-word anchor already in the published
     *     corpus (or an earlier occurrence in the same batch) are EXCISED
     *     before publication, the streaming counterpart of
     *     `q_substring_excise` ([[graft.queries.Llm.exciseIncremental]]).
@@ -927,7 +919,7 @@ object Streams {
     * `auditDir = Some(dir)` writes the ADMISSION DECISION LOG — one row
     * per batch doc naming the decision (admitted / holdout_excluded /
     * quality_gate / repetition_filter / near_dup / decontaminated /
-    * budget_rejected) AND, since r15 (judge #7), the deciding `gate`: for
+    * budget_rejected) AND the deciding `gate`: for
     * a near_dup the MODALITY whose band collided (`text` / `image` /
     * `audio` / `video`, or `exact` for the signature-less content-hash
     * sentinel — lowest implicated namespace when several collide), for a
@@ -954,7 +946,7 @@ object Streams {
     * (data-independent, no retrain to run); one that wants PQ takes the
     * composite. */
   def corpusIngest(docs: DataFrame, dedupDir: String, lshDir: String,
-                   corpusDir: String, lshBands: Int = 3, lshBits: Int = 8,
+                   corpusDir: String,
                    sq8Dir: Option[String] = None,
                    budgetPerSource: Option[Long] = None,
                    nBuckets: Int = 64,
@@ -962,7 +954,6 @@ object Streams {
                    imageCol: Option[String] = None,
                    audioCol: Option[String] = None,
                    videoCol: Option[String] = None,
-                   compactGrace: Int = 1,
                    ivfDir: Option[String] = None,
                    ivfNlist: Int = 16,
                    ivfRetrainEvery: Int = 0,
@@ -982,7 +973,7 @@ object Streams {
     require(ivfPqDir.isEmpty || ivfDir.nonEmpty,
       "ivfPqDir requires ivfDir — the IVF-PQ composite assigns, prunes and " +
         "retrains through the paired IVF index's lists")
-    // r18 (ADVICE r17): the eval-gram table is sourced ONLY from
+    // the eval-gram table is sourced ONLY from
     // holdout-source documents — decontamination with no holdout sources
     // would persist an empty gram table and gate nothing, silently
     // ignoring the caller's request
@@ -997,39 +988,18 @@ object Streams {
         import spark.implicits._
         val BT = graft.etl.BucketedTable
         val B = BT.BucketCol
-        // LINEAGE-scoped batch key: the streaming query id (stable across
-        // checkpointed restarts, fresh per new checkpoint) prefixes the
-        // batch number, so a replay targets exactly its own partitions
-        // while a fresh-checkpoint restart — whose batch numbering starts
-        // over at 0 — lands under NEW keys and can never overwrite a prior
-        // lineage's committed index data.
-        // FAIL FAST if the property is absent (ADVICE r11): a constant
-        // fallback would collapse all lineages onto one shared key, so a
-        // fresh-checkpoint restart reusing batch 0 would overwrite a prior
-        // run's partitions and roll back the wrong ledger delta — silently
-        // reintroducing exactly the bug lineage scoping exists to prevent.
-        // Inside foreachBatch the property is always set by the stream
-        // execution thread; its absence means a Spark-internal contract
-        // changed and must surface, not degrade.
-        val lineage = Option(
-            spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(throw new IllegalStateException(
-            "corpusIngest: sql.streaming.queryId local property is not set " +
-              "inside foreachBatch — cannot derive a lineage-scoped batch " +
-              "key; refusing to fall back to a shared constant (idempotent " +
-              "replay and ledger rollback would target the wrong data)"))
-          // full id: a truncated prefix could collide
-        val batchKey = s"$lineage-$batchId"
+        val BK = graft.etl.BatchKeyed
+        val lineage = BK.queryId(spark)
+        val batchKey = BK.key(spark, batchId)
         // the gates below call registered codegen functions (word_ngrams
         // for the span-grain gate; the index appends' cosine) — idempotent
         graft.expr.GraftFunctions.ensureRegistered(spark)
         // the two batch-keyed gram tables this body keeps beside the corpus
-        val evalGramsTable = s"$corpusDir/_eval_grams"
-        val evalGramsSchema = "gram STRING, grain STRING, batch_id STRING"
+        val evalGrams =
+          BK(s"$corpusDir/_eval_grams", "gram STRING, grain STRING, batch_id STRING")
         val anyDecon = decontaminate || spanDecontaminate
-        val spanAnchorsTable = s"$corpusDir/_span_anchors"
-        val spanAnchorsSchema = "gram STRING, batch_id STRING"
-        // ── MAP-SIDE CURATION GATES (r17 — streaming/batch funnel parity).
+        val spanAnchors = BK(s"$corpusDir/_span_anchors", "gram STRING, batch_id STRING")
+        // ── MAP-SIDE CURATION GATES (streaming/batch funnel parity).
         // The batch funnel (CorpusPipeline) runs holdout-exclusion, the
         // quality score and the Gopher repetition rules BEFORE any dedup
         // work; a streamed ingest must not admit documents that funnel
@@ -1077,7 +1047,7 @@ object Streams {
         // their word 4-grams feed the persisted eval-gram posting table
         // (the same gram unit as q_decontaminate / the batch funnel —
         // Llm.gram4Rows — so the contamination contract cannot drift).
-        // r18 (judge #5): `spanDecontaminate` adds the SLIDING 10-WORD
+        // `spanDecontaminate` adds the SLIDING 10-WORD
         // ANCHOR grain — the q_substring_dedup unit — under grain="a10"
         // in the SAME table: a 10-gram hit is verbatim-passage evidence
         // (an ingested doc embedding a holdout span at ANY offset is
@@ -1112,7 +1082,7 @@ object Streams {
         val (posts, dedupVerdict) = graft.etl.IncrementalDedup.gateBatch(
           admittable, dedupDir, excludeBatchKey = Some(batchKey),
           imageCol = imageCol, audioCol = audioCol, videoCol = videoCol)
-        // ── EVAL-GRAM DECONTAMINATION (r17): dedup survivors sharing any
+        // ── EVAL-GRAM DECONTAMINATION: dedup survivors sharing any
         // word 4-gram with the held-out eval set are rejected at admission
         // — the batch funnel's stage-6 gate, streamed. The gram evidence is
         // a PERSISTED batch-keyed posting table (same replay discipline as
@@ -1128,17 +1098,8 @@ object Streams {
         val contaminated: Option[DataFrame] =
           if (!anyDecon) None
           else Some {
-            val storedGrams = {
-              val root = graft.etl.Compaction.currentPath(evalGramsTable)
-              val fs = graft.GraftFs.default
-              val committed = fs.isDirectory(root) && fs.list(root).exists(p =>
-                java.nio.file.Paths.get(p).getFileName.toString
-                  .startsWith("batch_id="))
-              if (!committed) holdoutGrams.get.limit(0)
-              else spark.read.schema(evalGramsSchema).parquet(root)
-                .filter(col("batch_id") =!= batchKey)
-                .select("gram", "grain")
-            }
+            val storedGrams = evalGrams.readCommitted(spark, Some(batchKey))
+              .fold(holdoutGrams.get.limit(0))(_.select("gram", "grain"))
             val evalG = storedGrams.unionByName(holdoutGrams.get).distinct()
               .transform(pinShared)
             // per-grain hit tests: each grain's doc-side unit matches its
@@ -1218,8 +1179,8 @@ object Streams {
             case None => d.withColumn("__cl", col("__dd"))
           }
         }
-        // ── SPAN-GRAIN EXCISION (r18 — the ingest-side ACTION closing the
-        // last batch/stream asymmetry): an admitted doc's words that
+        // ── SPAN-GRAIN EXCISION (the ingest-side ACTION): an admitted doc's
+        // words that
         // verbatim-duplicate a sliding 10-word anchor already in the
         // PUBLISHED corpus (or an earlier occurrence in this batch) are
         // excised before publication — the streaming counterpart of
@@ -1235,18 +1196,8 @@ object Streams {
         val excised =
           if (!spanExcise) gated
           else {
-            val stored = {
-              val root = graft.etl.Compaction.currentPath(spanAnchorsTable)
-              val fs = graft.GraftFs.default
-              val committed = fs.isDirectory(root) && fs.list(root).exists(p =>
-                java.nio.file.Paths.get(p).getFileName.toString
-                  .startsWith("batch_id="))
-              if (!committed)
-                Seq.empty[String].toDF("gram")
-              else spark.read.schema(spanAnchorsSchema).parquet(root)
-                .filter(col("batch_id") =!= batchKey)
-                .select("gram")
-            }
+            val stored = spanAnchors.readCommitted(spark, Some(batchKey))
+              .fold(Seq.empty[String].toDF("gram"))(_.select("gram"))
             val cut = graft.queries.Llm.exciseIncremental(
                 gated.filter(col("__cl")).select("doc_id", "text"), stored)
               .select(col("doc_id"), col("text").as("__excised"))
@@ -1299,7 +1250,7 @@ object Streams {
           .transform(pinShared)
         val kept = decided.filter(col("__decision") === "admitted")
           .select(batch.columns.map(col).toSeq: _*)
-        // ADMISSION DECISION LOG (optional, r14 — the streaming twin of
+        // ADMISSION DECISION LOG (optional — the streaming twin of
         // q_curation_audit's explainability): one row per batch doc naming
         // its decision and deciding gate, projected straight off the
         // decision frame and landed under this batch's OWN batch_id
@@ -1308,11 +1259,9 @@ object Streams {
         // under new keys: the log is exactly-once like every other effect
         // here. Read it back with a plain spark.read.parquet(auditDir).
         def writeAuditLog(ad: String): Unit =
-          decided.select(col("doc_id"), col("__decision").as("decision"),
-              col("__gate").as("gate"), lit(batchKey).as("batch_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(ad)
+          BK(ad, "doc_id BIGINT, decision STRING, gate STRING, batch_id STRING")
+            .write(decided.select(col("doc_id"), col("__decision").as("decision"),
+              col("__gate").as("gate")), Some(batchKey))
         // eval-gram channel commit: this batch's holdout grams land under
         // the batch's OWN `batch_id=` partition (dynamic overwrite — a
         // replay rewrites identical rows; the decontamination read above
@@ -1321,13 +1270,8 @@ object Streams {
         // admits nothing, but its grams ARE the batch's durable effect —
         // every later batch must gate against them.
         def commitEvalGrams(g: DataFrame): Unit =
-          if (!g.isEmpty)
-            g.withColumn("batch_id", lit(batchKey))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(graft.etl.Compaction.currentPath(evalGramsTable))
-        // span-anchor channel commit (r18): the PUBLISHED (budget-admitted,
+          if (!g.isEmpty) evalGrams.write(g, Some(batchKey))
+        // span-anchor channel commit: the PUBLISHED (budget-admitted,
         // post-excision) docs' surviving sliding 10-gram anchors land under
         // this batch's own partition — the stored set always describes the
         // corpus as published, so a future copy of an excised span still
@@ -1338,12 +1282,7 @@ object Streams {
             .select(explode(call_function("word_ngrams",
               split(col("text"), " "), lit(10))).as("gram"))
             .distinct()
-          if (!anchors.isEmpty)
-            anchors.withColumn("batch_id", lit(batchKey))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(graft.etl.Compaction.currentPath(spanAnchorsTable))
+          if (!anchors.isEmpty) spanAnchors.write(anchors, Some(batchKey))
         }
         // fold the batch's admitted per-source delta into the ledger. Runs
         // even for an all-rejected batch WHEN the ledger does not exist yet:
@@ -1478,7 +1417,8 @@ object Streams {
             Option.when(spanExcise)(() => commitSpanAnchors()) ++
             Option.when(admits)(() => commitCorpus()) ++
             Option.when(admits)(() => graft.etl.AnnIndex.appendLsh(vecs, lshDir,
-              lshBands, lshBits, Some(batchKey))) ++
+              graft.etl.AnnIndex.LshBands, graft.etl.AnnIndex.LshBits,
+              Some(batchKey))) ++
             sq8Dir.filter(_ => admits).map(d =>
               () => graft.etl.AnnIndex.appendSq8(vecs, d, Some(batchKey))) ++
             ivfDir.filter(_ => admits).map(d => () => publishIvf(d)) ++
@@ -1499,8 +1439,8 @@ object Streams {
             posts.join(broadcast(kept.select("doc_id")), Seq("doc_id"),
               "left_semi"),
             dedupDir, Some(batchKey))
-        // IN-STREAM MAINTENANCE CADENCE (r11 #1 — the last unbounded-growth
-        // path): without it, every micro-batch leaves (a) one superseded
+        // IN-STREAM MAINTENANCE CADENCE (bounds the stream's on-disk
+        // growth): without it, every micro-batch leaves (a) one superseded
         // `_budget` ledger version, (b) superseded corpus bucket versions,
         // and (c) one `batch_id=` parquet fragment per LSH band / SQ8
         // table / posting table — all O(batches) forever, and since
@@ -1573,41 +1513,26 @@ object Streams {
         val compactNow = compactEvery > 0 && batchId % compactEvery == 0
         val preserve = Set(batchKey)
         def existsTbl(p: String) = graft.etl.Compaction.tableExists(p)
-        // compactGrace: how many retired index generations each publish
-        // keeps for concurrent probes — raise it when external probe
-        // scans can outlive `compactEvery` micro-batches (see
-        // Compaction.vacuumRetired for the sizing rule)
-        val compactions: Seq[() => Any] = if (!compactNow) Nil else
-          Option.when(existsTbl(s"$lshDir/buckets"))(() =>
-            graft.etl.Compaction.compactLshPostings(spark, lshDir, preserve,
-              graceGenerations = compactGrace)).toSeq ++
-          sq8Dir.filter(d => existsTbl(s"$d/sq8")).map(d => () =>
-            graft.etl.Compaction.compactSq8(spark, d, preserve,
-              graceGenerations = compactGrace)) ++
-          Option.when(existsTbl(s"$dedupDir/postings"))(() =>
-            graft.etl.Compaction.compactDedupPostings(spark, dedupDir, preserve,
-              graceGenerations = compactGrace)) ++
-          // the eval-gram posting table accumulates one fragment per
-          // holdout-carrying batch — fold it on the same cadence (same
-          // preserve-own-key replay guard)
-          Option.when(anyDecon && existsTbl(evalGramsTable))(() =>
-            graft.etl.Compaction.compactBatchKeyed(spark, evalGramsTable,
-              evalGramsSchema, Nil, preserve, compactGrace)) ++
-          // the span-anchor posting table grows one fragment per admitting
-          // batch (corpus-anchor-scaled — the honest cost of exact
-          // substring hygiene); fold it on the same cadence
-          Option.when(spanExcise && existsTbl(spanAnchorsTable))(() =>
-            graft.etl.Compaction.compactBatchKeyed(spark, spanAnchorsTable,
-              spanAnchorsSchema, Nil, preserve, compactGrace))
+        def compact(t: graft.etl.BatchKeyed) =
+          graft.etl.Compaction.compactBatchKeyed(spark, t, preserve)
+        // every batch-keyed table but the IVF pair, one compaction each;
+        // the eval-gram and span-anchor tables grow one fragment per
+        // holdout-carrying or admitting batch
+        val keyedTables =
+          Seq(graft.etl.AnnIndex.lshTable(lshDir)) ++
+            sq8Dir.map(graft.etl.AnnIndex.sq8Table) ++
+            Seq(graft.etl.IncrementalDedup.postingsTable(dedupDir)) ++
+            Option.when(anyDecon)(evalGrams) ++
+            Option.when(spanExcise)(spanAnchors)
+        val compactions: Seq[() => Any] =
+          if (!compactNow) Nil
+          else keyedTables.filter(t => existsTbl(t.root)).map(t => () => compact(t))
         // the IVF lists and the IVF-PQ codes: one sequential unit beside the
         // other tables' compactions, since the codes follow the lists
         def compactIvf(): Unit = {
-          ivfDir.filter(d => existsTbl(s"$d/lists"))
-            .foreach(d => graft.etl.Compaction.compactIvfLists(spark, d,
-              preserve, graceGenerations = compactGrace))
-          ivfPqDir.filter(d => existsTbl(s"$d/codes"))
-            .foreach(d => graft.etl.Compaction.compactIvfPqCodes(spark, d,
-              preserve, graceGenerations = compactGrace))
+          (ivfDir.map(graft.etl.AnnIndex.listsTable) ++
+            ivfPqDir.map(graft.etl.AnnIndex.codesTable))
+            .filter(t => existsTbl(t.root)).foreach(compact)
           // the two layout rewrites carry the SAME model, but the codes'
           // carried `_lists_gen` sidecar still names the now-RETIRED
           // lists generation (which stops receiving appends) — realign
@@ -1630,8 +1555,7 @@ object Streams {
         // corpus is deterministic, so the republished model matches.
         def retrainIvfModel(d: String): Unit = {
           graft.etl.AnnIndex.retrainIvf(spark, d, ivfNlist,
-            preserveBatchKeys = Set(batchKey),
-            graceGenerations = compactGrace)
+            preserveBatchKeys = preserve)
           // the composite follows ITS documented discipline — retrain
           // AFTER the IVF publish, so the new codes generation mirrors
           // the retrained lists (assignments, batch fold and all); a
@@ -1640,8 +1564,7 @@ object Streams {
           // on the same pair
           ivfPqDir
             .filter(pd => graft.etl.Compaction.tableExists(s"$pd/codes"))
-            .foreach(pd => graft.etl.AnnIndex.retrainIvfPq(spark, d, pd,
-              pqM, pqK, graceGenerations = compactGrace))
+            .foreach(pd => graft.etl.AnnIndex.retrainIvfPq(spark, d, pd, pqM, pqK))
           // drift consumed — cleared only AFTER the publish, so a crash
           // mid-retrain leaves the flag set and the next cadence batch
           // retries

@@ -36,7 +36,7 @@ class CompactionSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
     assert(before.nonEmpty)
 
-    val (nBefore, nAfter) = Compaction.compactLshPostings(spark, idx)
+    val (nBefore, nAfter) = Compaction.compactBatchKeyed(spark, AnnIndex.lshTable(idx))
     assert(nAfter < nBefore, s"compaction must reduce files ($nBefore -> $nAfter)")
 
     val after = AnnIndex.lshPostingScan(spark, idx, cells)
@@ -69,7 +69,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(before.map(_._1).distinct.size === 400,
       "every built + appended vector must carry exactly one code row")
 
-    val (nBefore, nAfter) = Compaction.compactIvfPqCodes(spark, idx)
+    val (nBefore, nAfter) = Compaction.compactBatchKeyed(spark, AnnIndex.codesTable(idx))
     assert(nAfter < nBefore, s"compaction must reduce files ($nBefore -> $nAfter)")
     assert(snap() === before, "compaction must not change the code row set")
     // pruned single-list read still works post-rewrite
@@ -86,7 +86,7 @@ class CompactionSpec extends AnyFunSuite {
     IncrementalDedup.ingest(b2, idx)
     assert(kept1.nonEmpty)
 
-    val (nBefore, nAfter) = Compaction.compactDedupPostings(spark, idx)
+    val (nBefore, nAfter) = Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx))
     assert(nAfter < nBefore, s"compaction must reduce files ($nBefore -> $nAfter)")
 
     // replay guarantee must survive: every INDEXED doc collides with its
@@ -195,7 +195,7 @@ class CompactionSpec extends AnyFunSuite {
     @volatile var maintainerDone = false
     @volatile var maintainerErr: Option[Throwable] = None
     val maintainer = new Thread(() => {
-      try (1 to 4).foreach(_ => Compaction.compactLshPostings(spark, idx))
+      try (1 to 4).foreach(_ => Compaction.compactBatchKeyed(spark, AnnIndex.lshTable(idx)))
       catch { case t: Throwable => maintainerErr = Some(t) }
       finally maintainerDone = true
     })
@@ -220,7 +220,7 @@ class CompactionSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sfDir)
     IncrementalDedup.ingest(docs.filter(col("doc_id") < 100), idx)
     val postings = s"$idx/postings"
-    Compaction.compactDedupPostings(spark, idx) // publish v1
+    Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx)) // publish v1
     assert(Compaction.currentVersion(postings) === 1L)
     val rows0 = spark.read.parquet(Compaction.currentPath(postings))
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -235,7 +235,7 @@ class CompactionSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq === rows0,
       "readers during the crash window must see the full old generation")
     // the next maintenance run reclaims the orphan and publishes cleanly
-    Compaction.compactDedupPostings(spark, idx) // reclaims, publishes v2
+    Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx)) // reclaims, publishes v2
     assert(Compaction.currentVersion(postings) === 2L)
     assert(!Files.exists(Paths.get(postings + "._CURRENT.tmp-2")),
       "the staged pointer of the crashed publish must be reclaimed")
@@ -245,7 +245,7 @@ class CompactionSpec extends AnyFunSuite {
     // one cycle; one more publish vacuums it
     assert(Files.isDirectory(Paths.get(postings + ".v1")),
       "the just-retired generation must be kept as the reader grace copy")
-    Compaction.compactDedupPostings(spark, idx) // v3: v1 leaves grace, dies
+    Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx)) // v3: v1 leaves grace, dies
     assert(Compaction.currentVersion(postings) === 3L)
     assert(!Files.exists(Paths.get(postings + ".v1")),
       "generations beyond the grace one must be vacuumed")
@@ -264,7 +264,7 @@ class CompactionSpec extends AnyFunSuite {
     // four publishes at grace=2: after v4, v2 and v3 must survive as the
     // two-reader-cycle window, v1 and the flat gen-0 tree must be gone
     (1 to 4).foreach(_ =>
-      Compaction.compactDedupPostings(spark, idx, graceGenerations = 2))
+      Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx), graceGenerations = 2))
     assert(Compaction.currentVersion(postings) === 4L)
     assert(!Files.exists(Paths.get(postings)), "flat gen-0 beyond the window")
     assert(!Files.exists(Paths.get(postings + ".v1")), "v1 beyond the window")
@@ -277,7 +277,7 @@ class CompactionSpec extends AnyFunSuite {
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq === rows0)
     // lowering the grace back to 1 reclaims the extra generation at the
     // next publish
-    Compaction.compactDedupPostings(spark, idx)
+    Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx))
     assert(Compaction.currentVersion(postings) === 5L)
     assert(!Files.exists(Paths.get(postings + ".v2")) &&
       !Files.exists(Paths.get(postings + ".v3")),

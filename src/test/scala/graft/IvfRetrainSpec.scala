@@ -95,7 +95,7 @@ class IvfRetrainSpec extends AnyFunSuite {
     AnnIndex.appendIvf(clusterRows(2, 200 until 205).toDF("vec_id", "label", "embedding"), ivf)
     val before = AnnIndex.probeScanAt(spark, root, lists)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    Compaction.compactIvfLists(spark, ivf)
+    Compaction.compactBatchKeyed(spark, AnnIndex.listsTable(ivf))
     val (root2, cents2) = AnnIndex.ivfSnapshot(spark, ivf)
     assert(root2 !== root, "compaction publishes a fresh generation")
     assert(batchLayoutKeys(root2) === Set("-1"))
@@ -325,7 +325,7 @@ class IvfRetrainSpec extends AnyFunSuite {
   }
 
   test("a layout compaction realigns the codes' lists pairing so post-compaction appends stay servable") {
-    // compactIvfLists retires the lists generation the codes' carried
+    // compacting the lists retires the lists generation the codes' carried
     // `_lists_gen` sidecar names; without realignListsGenSidecar the
     // composite would pair the RETIRED generation — which stops receiving
     // appends — and the serve-side exact re-rank would silently drop every
@@ -343,8 +343,8 @@ class IvfRetrainSpec extends AnyFunSuite {
       clusterRows(1, 100 until 105).toDF("vec_id", "label", "embedding"),
       ivf, pq, Some("k1"))
     // the maintenance pair, as the stream cadence runs it
-    Compaction.compactIvfLists(spark, ivf)
-    Compaction.compactIvfPqCodes(spark, pq)
+    Compaction.compactBatchKeyed(spark, AnnIndex.listsTable(ivf))
+    Compaction.compactBatchKeyed(spark, AnnIndex.codesTable(pq))
     AnnIndex.realignListsGenSidecar(ivf, pq)
     val (lr, _, _, _) = AnnIndex.ivfPqSnapshot(spark, ivf, pq)
     assert(lr === Compaction.currentPath(s"$ivf/lists"),

@@ -142,7 +142,7 @@ class ReplayIdempotenceSpec extends AnyFunSuite {
     IncrementalDedup.commitPostings(kept1, idx, Some("q1-1"))
     // in-stream maintenance runs right after batch 1's commit, BEFORE the
     // checkpoint commits its offsets — batch 1 must survive the fold
-    graft.etl.Compaction.compactDedupPostings(spark, idx,
+    graft.etl.Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx),
       preserveBatchKeys = Set("q1-1"))
     val keys = spark.read
       .parquet(graft.etl.Compaction.currentPath(s"$idx/postings"))
@@ -162,11 +162,99 @@ class ReplayIdempotenceSpec extends AnyFunSuite {
     // the hazard the guard exists for: an UNGUARDED coalesce folds q1-1
     // into the base, the replay sees its own postings as stored state,
     // and drops its own doc — divergence
-    graft.etl.Compaction.compactDedupPostings(spark, idx)
+    graft.etl.Compaction.compactBatchKeyed(spark, IncrementalDedup.postingsTable(idx))
     assert(IncrementalDedup
       .keptPostings(b1, idx, excludeBatchKey = Some("q1-1"))
       .select("doc_id").distinct().count() === 0,
       "unguarded coalesce demonstrably defeats the replay exclusion " +
         "(this is why corpusIngest passes preserveBatchKeys)")
+  }
+
+  test("keyed writes reject a malformed batch key before anything is written") {
+    val lsh = Files.createTempDirectory("graft_badkey_lsh").toString
+    val sq8 = Files.createTempDirectory("graft_badkey_sq8").toString
+    val idx = Files.createTempDirectory("graft_badkey_posts").toString
+    val posts = Seq((0, "k1", 1L), (0, "k2", 2L)).toDF("band", "bkey", "doc_id")
+    IncrementalDedup.commitPostings(posts, idx)
+    // "-1" is the folded base: a write keyed "-1" would replace it
+    for (k <- Seq("-1", "a/b", "..", "")) {
+      intercept[IllegalArgumentException] {
+        IncrementalDedup.commitPostings(posts.limit(1), idx, Some(k))
+      }
+      intercept[IllegalArgumentException] {
+        AnnIndex.appendLsh(vecs(0 until 5), lsh, bands = 3, bits = 8, Some(k))
+      }
+      intercept[IllegalArgumentException] {
+        AnnIndex.appendSq8(vecs(0 until 5), sq8, Some(k))
+      }
+    }
+    assert(spark.read.parquet(s"$idx/postings").count() === 2,
+      "a rejected key must leave the base postings as they were")
+    assert(!Files.exists(java.nio.file.Paths.get(lsh, "buckets")) &&
+      !Files.exists(java.nio.file.Paths.get(sq8, "sq8")),
+      "a rejected key must write nothing")
+  }
+
+  test("the LSH append's write plan sorts once: (band, batch_id, bkt) satisfies the writer's ordering") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val idx = Files.createTempDirectory("graft_lsh_sort").toString
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      AnnIndex.appendLsh(vecs(0 until 20), idx, bands = 3, bits = 8, Some("q1-0"))
+      assert(org.apache.spark.sql.GraftSqlBridge.drainListenerBus(
+        spark.sparkContext, 30000L))
+    } finally spark.listenerManager.unregister(listener)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case n => Seq(n)
+    }.flatten
+    val writes = executed.toArray(Array.empty[QueryExecution]).toSeq
+      .map(qe => nodes(qe.executedPlan))
+      .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.size === 1, s"expected one write, got ${writes.size}")
+    val sorts = writes.head.collect { case s: SortExec => s }
+    assert(sorts.size === 1,
+      s"expected exactly one SortExec in the write plan, got ${sorts.size}:\n" +
+        sorts.mkString("\n"))
+    assert(sorts.head.sortOrder.last.child.references.map(_.name).toSeq === Seq("bkt"),
+      s"the one sort must end on bkt, got ${sorts.head.sortOrder}")
+  }
+
+  test("a gram table holding a directory outside batch_id= fails the batch, naming the path") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val dedupDir = Files.createTempDirectory("graft_stray_dedup").toString
+    val lshDir = Files.createTempDirectory("graft_stray_lsh").toString
+    val corpusDir = Files.createTempDirectory("graft_stray_corpus").toString
+    val grams = s"$corpusDir/_eval_grams"
+    Files.createDirectories(java.nio.file.Paths.get(grams, "stray"))
+    def emb(seed: Int): Array[Float] =
+      Array.tabulate(8)(i => math.sin(seed * 31 + i).toFloat)
+    val mem = MemoryStream[SourcedDoc]
+    val q = graft.stream.Streams.corpusIngest(mem.toDF(), dedupDir, lshDir,
+      corpusDir, holdoutSources = Seq("eval"), decontaminate = true).start()
+    try {
+      mem.addData(
+        SourcedDoc(1, "alpha bravo charlie delta echo foxtrot", "eval", emb(1)),
+        SourcedDoc(2, "kilo lima mike november oscar papa", "web", emb(2)))
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+      assert(messages(err).exists(m => m.contains(grams) && m.contains("stray")),
+        s"the failure must name the gram table and the stray entry, got: $err")
+      assert(!graft.etl.BucketedTable.exists(corpusDir),
+        "a failed batch must publish nothing")
+    } finally q.stop()
   }
 }
