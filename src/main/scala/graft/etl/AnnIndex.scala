@@ -133,13 +133,34 @@ object AnnIndex {
   /** THE training recipe every IVF model producer shares — [[build]], the
     * stream bootstrap ([[ensureIvfSeeded]]) and [[retrainIvf]] must fit the
     * exact same estimator or their models silently diverge: one seeded
-    * cosine k-means over a `features` vector column. */
-  private def fitCentroids(withFeatures: DataFrame, k: Int,
+    * cosine k-means over the `features` column of a [[fitInput]] frame. */
+  private def fitCentroids(input: DataFrame, k: Int,
                            seed: Long): org.apache.spark.ml.clustering.KMeansModel =
     new org.apache.spark.ml.clustering.KMeans()
       .setK(k).setSeed(seed).setMaxIter(10)
       .setDistanceMeasure("cosine")
-      .fit(withFeatures)
+      .fit(input)
+
+  /** The fit's input: `vecs` (`n` rows) with its `embedding` as the
+    * `features` vector, in a layout the rows alone determine —
+    * hash-partitioned on `vec_id` into one partition per
+    * [[FitRowsPerPartition]] rows, sorted by `vec_id` within each. The
+    * seeded `k-means||` init samples by partition and by row order, so the
+    * same rows and seed fit the same model whatever files or partitions
+    * they were read from, and a write of the assigned rows lands the same
+    * files. */
+  private def fitInput(vecs: DataFrame, n: Long): DataFrame =
+    vecs.repartition(math.max(1L, (n + FitRowsPerPartition - 1) / FitRowsPerPartition).toInt,
+        col("vec_id"))
+      .sortWithinPartitions("vec_id")
+      .withColumn("features",
+        org.apache.spark.ml.functions.array_to_vector(col("embedding")))
+
+  /** Rows per partition of the fit's input: the partition count follows
+    * the row count, never the input's files or the host's cores, and a
+    * small corpus fits in one task instead of paying a task per partition
+    * on every Lloyd iteration. */
+  private val FitRowsPerPartition = 100000L
 
   /** The shared `(list_id, centroid)` model table write (one coalesced
     * file — nlist rows of metadata). */
@@ -157,9 +178,8 @@ object AnnIndex {
   /** Train + persist the IVF index. `e` must carry
     * `(vec_id long, label int, embedding array&lt;float&gt;)`. */
   def build(e: DataFrame, indexDir: String, nlist: Int, seed: Long = 7L): Unit = {
-    import org.apache.spark.ml.functions.array_to_vector
     val spark = e.sparkSession
-    val withVec = e.withColumn("features", array_to_vector(col("embedding")))
+    val withVec = fitInput(e, e.count())
     val model = fitCentroids(withVec, nlist, seed)
     listRows(model.transform(withVec).withColumn("list_id", col("prediction")),
         "-1")
@@ -468,12 +488,12 @@ object AnnIndex {
                       seed: Long = 7L): Boolean = {
     val had = gfs.exists(readyMarker(indexDir))
     if (!had) ensureBuilt(indexDir) { tmp =>
-      import org.apache.spark.ml.functions.array_to_vector
       val spark = vecs.sparkSession
-      val withVec = vecs.withColumn("features", array_to_vector(col("embedding")))
+      val n = vecs.count()
+      val withVec = fitInput(vecs, n)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val k = math.max(1L, math.min(nlist.toLong, withVec.count())).toInt
+        val k = math.max(1L, math.min(nlist.toLong, n)).toInt
         writeCentroids(spark, fitCentroids(withVec, k, seed), s"$tmp/centroids")
       } finally withVec.unpersist(false)
       gfs.writeBytes(readyMarker(tmp), Array.emptyByteArray)
@@ -518,21 +538,21 @@ object AnnIndex {
                  seed: Long = 7L,
                  preserveBatchKeys: Set[String] = Set.empty,
                  graceGenerations: Int = 1): Long = {
-    import org.apache.spark.ml.functions.array_to_vector
     val lists = listsTable(indexDir).root
     Compaction.reclaimOrphans(lists)
     val corpus = readLists(spark, cur(lists)).drop("list_id")
-    // three passes share the corpus (count, the k-means fit's iterations,
+    val n = corpus.count()
+    // two passes share the laid-out corpus (the k-means fit's iterations,
     // the assignment rewrite) — persist so each is a cache read, not a
-    // fresh parquet scan of the whole table
-    val withVec = corpus.withColumn("features", array_to_vector(col("embedding")))
+    // fresh scan and shuffle of the whole table
+    val withVec = fitInput(corpus, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newVer = Compaction.currentVersion(lists) + 1
     val dst = s"$lists.v$newVer"
     try {
       // k-means needs k ≤ n: a young streaming table can be smaller than
       // the target nlist — grow toward it as the corpus does
-      val k = math.max(1L, math.min(nlist.toLong, withVec.count())).toInt
+      val k = math.max(1L, math.min(nlist.toLong, n)).toInt
       val model = fitCentroids(withVec, k, seed)
       model.transform(withVec)
         .select(col("vec_id"), col("label"), col("embedding"),
@@ -1266,7 +1286,7 @@ object AnnIndex {
     * `ivfPqDir` to a stream whose IVF corpus pre-exists serves the whole
     * corpus through the composite from the first post-attach batch, not
     * just post-attach rows. Runs once (ready marker — a metadata no-op on
-    * every later call). In [[graft.stream.Streams.corpusIngest]] it runs
+    * every later call). In [[CorpusIngest.publish]] it runs
     * AFTER the batch's keyed lists append, so the encode covers this
     * batch's rows too; the keyed [[appendIvfPq]] that follows
     * sweeps-and-rewrites exactly its own cells, keeping batch-0 replays
@@ -1308,7 +1328,7 @@ object AnnIndex {
     * Without the realign, a compaction cadence would leave the carried
     * sidecar naming the RETIRED lists generation — which stops receiving
     * appends — pinning composite probes to a frozen corpus view until the
-    * next codes publish. [[graft.stream.Streams.corpusIngest]] calls this
+    * next codes publish. [[CorpusIngest.maintain]] calls this
     * right after compacting the paired lists and codes tables;
     * ad-hoc maintenance that compacts a composite's lists must do the
     * same. */

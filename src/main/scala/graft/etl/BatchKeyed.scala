@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * `batch_id=` level, and the data columns each file is sorted by. The
   * tables a stream appends to are values of this type: the dedup postings
   * ([[IncrementalDedup.postingsTable]]), the LSH, SQ8, IVF-list and IVF-PQ
-  * code tables ([[AnnIndex]]), and [[graft.stream.Streams.corpusIngest]]'s
+  * code tables ([[AnnIndex]]), and [[CorpusIngest]]'s
   * gram tables and decision log. Their writer, their reader and
   * [[Compaction.compactBatchKeyed]] all work from this one value. */
 final case class BatchKeyed(root: String, schema: String,

@@ -171,7 +171,7 @@ object Compaction {
     *
     * `preserveBatchKeys` names the batches that are NOT folded: they keep
     * their `batch_id` through the rewrite. The in-stream maintenance
-    * cadence ([[graft.stream.Streams.corpusIngest]]) passes the key it is
+    * cadence ([[CorpusIngest.maintain]]) passes the key it is
     * committing, because that batch is not yet checkpointed: folding it
     * would defeat its replay's read, which skips only its own key — the
     * replay would see its OWN postings as pre-existing index state, drop

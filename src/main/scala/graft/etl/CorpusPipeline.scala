@@ -110,14 +110,14 @@ object CorpusPipeline {
     * sums, not seven jobs).
     *
     * The stage-1..3 gates are pure per-row predicates, so they compute as
-    * ONE fused scan projection via the shared gate columns ([[LlmText.qualityZ]],
-    * [[LlmText.withRepetitionMetrics]] — the same definitions the declared
-    * queries evaluate) and the gated frame is PINNED (stage-boundary
-    * materialization — reliable checkpoint when a checkpoint dir is set,
-    * executor-local otherwise, the same discipline as the CC loop). Both
-    * matter, measured at sf0.1/local[32]: joining the declared queries'
-    * outputs on doc_id re-evaluated that join lineage in the CC-edge job
-    * and again under the final aggregate — 10.8 s; fusing the gates
+    * ONE fused scan projection via the shared gate definition
+    * ([[mapGates]], over the columns the declared queries evaluate) and the
+    * gated frame is PINNED (stage-boundary materialization — reliable
+    * checkpoint when a checkpoint dir is set, executor-local otherwise, the
+    * same discipline as the CC loop). Both matter, measured at
+    * sf0.1/local[32]: joining the declared queries' outputs on doc_id
+    * re-evaluated that join lineage in the CC-edge job and again under the
+    * final aggregate — 10.8 s; fusing the gates
     * map-side WITHOUT pinning made it 18.3 s, because the higher-order-
     * function gate expressions (interpreted, outside codegen CSE)
     * re-evaluated in every consumer branch — the join shuffles had been
@@ -156,6 +156,39 @@ object CorpusPipeline {
       .orderBy("stage_idx")
   }
 
+  /** The funnel's map-side gates as cumulative per-row flags on `docs`
+    * (which carries `source` and `text`): `__g1` holdout exclusion (source
+    * not in `holdoutSources`), `__g2` also quality score z ≥ 0
+    * ([[LlmText.qualityZ]]), `__g3` also the Gopher repetition rules
+    * ([[LlmText.withRepetitionMetrics]]). A gate whose switch is off (no
+    * holdout sources, `qualityGate` or `repetitionGate` false) passes
+    * every row; a null predicate fails its gate, as a SQL `WHERE` drops
+    * it. Row-local expressions, no exchange: the batch funnel
+    * ([[survivalFlags]]) and the streaming ingest
+    * ([[CorpusIngest.decide]]) both gate through this one definition. The
+    * docs' own columns ride through a struct, so none of their names can
+    * clash with the metric columns. */
+  def mapGates(docs: DataFrame, holdoutSources: Seq[String],
+               qualityGate: Boolean, repetitionGate: Boolean): DataFrame =
+    if (holdoutSources.isEmpty && !qualityGate && !repetitionGate)
+      docs.withColumn("__g1", lit(true)).withColumn("__g2", lit(true))
+        .withColumn("__g3", lit(true))
+    else {
+      val base = LlmText.withRepetitionMetrics(
+        docs.select(struct(docs.columns.map(col).toSeq: _*).as("__doc"),
+          col("text"), split(col("text"), " ").as("words")))
+      def gate(on: Boolean, pass: => Column): Column =
+        if (on) coalesce(pass, lit(false)) else lit(true)
+      val g1 = gate(holdoutSources.nonEmpty,
+        !col("__doc.source").isin(holdoutSources: _*))
+      val g2 = g1 && gate(qualityGate,
+        LlmText.qualityZ(col("text"), col("words")) >= 0)
+      val g3 = g2 && gate(repetitionGate,
+        col("n_words") >= 2 && !col("flagged"))
+      base.select(col("__doc.*") +:
+        Seq(g1.as("__g1"), g2.as("__g2"), g3.as("__g3")): _*)
+    }
+
   /** Per-doc survival FLAGS through the funnel `(doc_id, s1..s6)` — the
     * shared core of [[qCorpusCurate]] (which aggregates it to stage counts)
     * and [[qCurationAudit]] (which emits it as the per-doc decision log).
@@ -164,14 +197,10 @@ object CorpusPipeline {
   private def survivalFlags(spark: SparkSession, dir: String): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(spark)
     val d0 = Tables.documents(spark, dir)
-    val gated = LlmText.withRepetitionMetrics(
-        d0.select(col("doc_id"), col("source"), col("text"))
-          .withColumn("words", split(col("text"), " ")))
-      .withColumn("s1", col("source") =!= "src0")
-      .withColumn("s2", col("s1") && LlmText.qualityZ(col("text"), col("words")) >= 0)
-      .withColumn("s3", col("s2") && col("n_words") >= 2 && !col("flagged"))
-      .withColumn("h", md5(col("text")))
-      .select("doc_id", "h", "s1", "s2", "s3")
+    val gated = mapGates(d0.select(col("doc_id"), col("source"), col("text")),
+        Seq("src0"), qualityGate = true, repetitionGate = true)
+      .select(col("doc_id"), md5(col("text")).as("h"), col("__g1").as("s1"),
+        col("__g2").as("s2"), col("__g3").as("s3"))
     val f3 = Exprs.pinShared(gated)
     // The pinned frame is flags + a 16-byte content hash — NOT the corpus:
     // the exact-dedup stage groups on the pinned `h` directly (no text

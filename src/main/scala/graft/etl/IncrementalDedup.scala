@@ -66,7 +66,7 @@ object IncrementalDedup {
   /** Steps 1–2 of [[ingest]] as a PURE computation — the batch's surviving
     * posting rows against the CURRENT index, no writes: the posting rows
     * of the docs [[gateBatch]] admits (`dd`), so batch ingest and
-    * [[graft.stream.Streams.corpusIngest]] run one gate. Exposed so a
+    * [[CorpusIngest.decide]] run one gate. Exposed so a
     * composed at-least-once pipeline can stage its effects BEFORE
     * [[commitPostings]]. Deterministic for a fixed index state, so a
     * preview and a later commit in the same micro-batch agree.
@@ -95,7 +95,7 @@ object IncrementalDedup {
   }
 
   /** The near-dup gate of ONE streamed micro-batch
-    * ([[graft.stream.Streams.corpusIngest]]): [[keptPostings]]' decisions
+    * ([[CorpusIngest.decide]]): [[keptPostings]]' decisions
     * plus the DROP-GATE diagnosis, staged so the caller decides every doc
     * in one frame. Returns
     *   - the batch's posting rows `(doc_id, band, bkey)`, PINNED — the

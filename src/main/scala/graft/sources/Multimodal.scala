@@ -283,7 +283,8 @@ object Multimodal {
     * deterministic synthetic corpus — the sfDir carries no media, so the
     * corpus is generated (`sfDir` ignored); the feature vector is flattened
     * to a CSV string so every output column is scalar. */
-  def qMultimodalFeatures(spark: SparkSession, dir: String): DataFrame =
+  def qMultimodalFeatures(spark: SparkSession,
+      @scala.annotation.unused dir: String): DataFrame =
     featureFrame(syntheticAssets(spark, 300))
       .select(col("asset_id"), col("kind"), col("n_bytes"), col("checksum"),
         array_join(transform(col("features"), f => f.cast("string")), ",")
@@ -524,7 +525,8 @@ object Multimodal {
     * fingerprint family (e.g. keypoint or radial-projection hashes) — a
     * deliberate non-goal here; do not over-trust image dedup beyond this
     * envelope. */
-  def qImageDedup(spark: SparkSession, dir: String): DataFrame =
+  def qImageDedup(spark: SparkSession,
+      @scala.annotation.unused dir: String): DataFrame =
     imageDedupPairs(syntheticImageCorpus(spark, 200, everyK = 5))
       .orderBy("asset_a", "asset_b")
 
@@ -783,7 +785,8 @@ object Multimodal {
     * (base, volume-scale) and (base, tone-burst) pair must surface;
     * unrelated clips sit at Hamming ≈ 32 and never join. Transform
     * envelope on [[audioHash64]]. */
-  def qAudioDedup(spark: SparkSession, dir: String): DataFrame =
+  def qAudioDedup(spark: SparkSession,
+      @scala.annotation.unused dir: String): DataFrame =
     audioDedupPairs(syntheticAudioCorpus(spark, 200, everyK = 5))
       .orderBy("asset_a", "asset_b")
 
@@ -1308,7 +1311,8 @@ object Multimodal {
     * (`dir` ignored): every (base, re-container), (base, brightness) and
     * (base, frame-edit) pair must surface; unrelated clips sit at
     * Hamming ≈ 32 and never join. Transform envelope on [[videoHash64]]. */
-  def qVideoDedup(spark: SparkSession, dir: String): DataFrame =
+  def qVideoDedup(spark: SparkSession,
+      @scala.annotation.unused dir: String): DataFrame =
     videoDedupPairs(syntheticVideoCorpus(spark, 200, everyK = 5))
       .orderBy("asset_a", "asset_b")
 }

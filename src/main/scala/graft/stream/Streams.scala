@@ -1,13 +1,13 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues,
   TTLConfig, ValueState}
 
-import graft.queries.Exprs.{moneySum, pinLazy, pinShared}
+import graft.queries.Exprs.{moneySum, pinShared}
 
 /** Typed event row for the custom-state operators (schema of the `events`
   * table; top-level so Encoders derive cleanly). */
@@ -747,204 +747,11 @@ object Streams {
     }
   }
 
-  /** The `_GRAFT_RETRAIN_PENDING` drift flag's payload: the cumulative
-    * appended-row count since the last retrain. Absent/legacy-empty/
-    * unparsable reads as 0 — which the growth gate treats as UNKNOWN
-    * growth and retrains (the conservative direction). One parser for
-    * both the increment and the gate, so the format cannot skew. */
-  private def readPendingCount(p: String): Long = {
-    val fs = graft.GraftFs.default
-    if (!fs.exists(p)) 0L
-    else scala.util.Try(fs.readString(p).trim.toLong).getOrElse(0L)
-  }
-
-  /** CONTINUOUS CORPUS INGEST — the end-to-end composition of the engine's
-    * incremental pieces, each individually spec-proven, as one foreachBatch
-    * pipeline: documents arrive as a stream →
-    *
-    *   1. DECIDE. The near-dup gate ([[graft.etl.IncrementalDedup.gateBatch]])
-    *      dedups the batch against the posting index and within itself
-    *      (O(batch) work, banded equi-joins, never all-pairs) — EXCLUDING
-    *      the batch's own `batch_id` posting partition, so a replay
-    *      recomputes against the exact pre-batch index state and re-derives
-    *      the original survivor set deterministically. With `imageCol` /
-    *      `audioCol` / `videoCol` set, decodable image/audio/video payloads
-    *      ALSO post their perceptual fingerprint bands through the same
-    *      machinery (disjoint band namespaces: 1000+ image, 2000+ audio,
-    *      3000+ video), so cross-batch media near-dups are gated exactly
-    *      like text minhash dups. The optional mixture-budget gate reads
-    *      prior per-source spend from the COMPACTED ledger at
-    *      `corpusDir/_budget` — O(|sources|) rows per batch, never an
-    *      O(corpus) re-aggregation. Every gate lands in one pinned decision
-    *      frame (below).
-    *   2. PUBLISH, as ONE concurrent set of Spark jobs
-    *      ([[org.apache.spark.sql.GraftSqlBridge.concurrently]]): each
-    *      effect writes its own table and reads only the pinned decision
-    *      frame, so none waits on another, and each keeps its own internal
-    *      order. The set is the decision log (`auditDir`), the eval-gram
-    *      and span-anchor commits, the corpus commit (only NOVEL survivors'
-    *      [[graft.etl.BucketedTable]] buckets rewrite; untouched buckets
-    *      carry over by manifest reference under the same atomic-pointer
-    *      read contract), the LSH posting and SQ8 appends
-    *      ([[graft.etl.AnnIndex.appendLsh]], [[graft.etl.AnnIndex.appendSq8]])
-    *      under this batch's `batch_id=` partition, the IVF unit (seed,
-    *      assign, append, IVF-PQ, drift flag, in that order) and the budget
-    *      ledger fold (atomic manifest publish; the stored
-    *      `last_delta`/`last_batch_id` pair lets a replayed batch roll its
-    *      own contribution back out before re-deciding — see the gate).
-    *      The set ends only when EVERY effect has ended: a failure in one
-    *      surfaces after the others finish (the first failure in
-    *      submission order, the rest suppressed), so no effect of a failed
-    *      batch is still writing when the stream stops or retries it.
-    *   3. POSTINGS LAST: [[graft.etl.IncrementalDedup.commitPostings]]
-    *      lands the survivors' posting rows under `batch_id=` only after
-    *      the whole set succeeded. A batch that failed part-way therefore
-    *      leaves no postings behind, and a fresh-checkpoint restart — a new
-    *      lineage, whose gate sees every other lineage's postings — can
-    *      still admit its docs.
-    *
-    * At-least-once story: foreachBatch may replay a batch after a crash at
-    * ANY point in 2–3. Because the gate excludes the batch's own posting
-    * partition, the replay's survivor set is IDENTICAL to the original
-    * run's regardless of which effects landed — and every effect is then
-    * an idempotent rewrite: the corpus commit no-ops (no novel docs) or
-    * rewrites the same buckets, the LSH/SQ8/IVF/posting writes overwrite
-    * their own `batch_id=` partitions with identical content, and the
-    * ledger rollback re-derives the same totals. No duplicates, no loss,
-    * and no stage can un-publish a doc a reader already saw.
-    *
-    * ONE DECISION FRAME per micro-batch: the gates run as a single plan
-    * over the near-dup gate's pinned postings and are pinned ONCE — one
-    * row per batch doc with its decision (admitted / holdout_excluded /
-    * quality_gate / repetition_filter / near_dup / decontaminated /
-    * budget_rejected), its deciding gate and the doc as it would publish.
-    * Every effect is a projection or filter of that frame: the kept set,
-    * the decision log, the ledger delta, the corpus commit, the index
-    * appends and the posting commit; only corpus bucket ids (and the kept
-    * count) are collected. Nothing is re-derived by joins over
-    * per-stage frames, so an append micro-batch runs a few dozen Spark
-    * jobs rather than one per cascade stage. Idempotence is keyed on the
-    * batch key ([[graft.etl.BatchKeyed$ BatchKeyed]]): a true replay
-    * overwrites exactly its own partitions and rolls back exactly its own
-    * ledger delta (the ledger records the key's query id), while a
-    * fresh-checkpoint restart (batch ids restarting at 0) writes under new
-    * keys and accumulates onto the ledger without ever touching a prior
-    * lineage's data. The LSH index has a fixed shape
-    * ([[graft.etl.AnnIndex.LshBands]] bands of
-    * [[graft.etl.AnnIndex.LshBits]] bits), and each maintenance publish
-    * keeps one retired generation for concurrent probes (the
-    * `graceGenerations` default of [[graft.etl.Compaction]]).
-    *
-    * Maintenance: `vacuumEvery = n` reclaims superseded corpus bucket
-    * versions and `_budget` ledger snapshots every n-th batch;
-    * `compactEvery = m` folds the accumulated per-batch `batch_id=`
-    * index fragments (LSH bands, SQ8 table, dedup postings, the two gram
-    * tables, the IVF lists and IVF-PQ codes) into their `batch_id=-1` base
-    * every m-th batch — preserving the in-flight batch's own partitions
-    * for replay safety (see the in-line note). The vacuum runs first; the
-    * per-table compactions then run as one concurrent set through the same
-    * helper as the publish stage, the IVF tables (compaction or retrain)
-    * as one sequential unit beside the others.
-    * With both set, steady-state on-disk footprint is O(live data +
-    * cadence·batch), not O(batches); with both 0 (the default), run the
-    * spec-proven [[graft.etl.Compaction]] / vacuum helpers externally
-    * during a quiet window. StreamingSpec asserts the bounded-growth
-    * claim empirically.
-    *
-    * `ivfDir = Some(dir)` additionally rides the TRAINABLE rung of the ANN
-    * ladder on the stream: the first admitting batch seeds a centroid model
-    * ([[graft.etl.AnnIndex.ensureIvfSeeded]] — centroids only, capped at
-    * the batch size), every batch's survivors enter via batch-keyed
-    * [[graft.etl.AnnIndex.appendIvf]] (whose cell-drop hygiene keeps
-    * replays exactly-once even when the model moved between attempts), and
-    * `ivfRetrainEvery = r` re-clusters the whole lists corpus to `ivfNlist`
-    * centroids every r-th batch — the model-DRIFT maintenance frozen-
-    * centroid assignment defers, published as one atomic (centroids,
-    * lists) generation that also batch-folds like a compaction. A cadence
-    * batch only retrains when appends landed since the last retrain (a
-    * persistent drift flag — re-clustering an unchanged corpus would
-    * republish an identical model at full O(corpus) cost) and never on the
-    * batch that seeded the model. `ivfRetrainMinGrowth = f` strengthens
-    * the gate further: a cadence batch re-clusters only once the rows
-    * appended since the last retrain reach fraction f of the pre-growth
-    * corpus (the "retrain after +10% data" heuristic — the flag carries
-    * the running count). The `compactEvery` cadence covers the
-    * IVF lists' layout on the batches a retrain doesn't run.
-    *
-    * CURATION GATES (streaming/batch funnel parity): the stream rejects
-    * the documents the batch funnel ([[graft.etl.CorpusPipeline]])
-    * rejects, at admission rather than in a later batch re-curation.
-    * Opt-in parameters, each reusing the funnel's OWN shared predicate/gram definitions so the two
-    * paths cannot drift (StreamingSpec proves one-batch admission ≡
-    * `CorpusPipeline.curate` row-for-row, decisions ≡ `q_curation_audit`
-    * drop stages):
-    *   - `holdoutSources`: docs from these sources never enter the corpus
-    *     (the funnel's stage-1 holdout exclusion);
-    *   - `qualityGate`: map-side [[graft.queries.LlmText.qualityZ]] ≥ 0
-    *     (stage 2) — fused into the batch scan, zero extra shuffles;
-    *   - `repetitionGate`: the Gopher repetition rules via
-    *     [[graft.queries.LlmText.withRepetitionMetrics]] (stage 3);
-    *   - `decontaminate`: dedup survivors sharing any word 4-gram
-    *     ([[graft.queries.Llm.gram4Rows]]) with the held-out eval set are
-    *     rejected (stage 6). The eval grams PERSIST in a batch-keyed
-    *     posting table at `corpusDir/_eval_grams` — the same
-    *     replay/compaction discipline as the dedup postings — so
-    *     contamination evidence accumulates across the stream's life and
-    *     each batch's check is O(batch) probe work, never a corpus scan;
-    *   - `spanDecontaminate`: the SPAN-GRAIN twin — the
-    *     eval table additionally stores the holdout docs' SLIDING 10-word
-    *     anchors (the `q_substring_dedup` unit, grain="a10" rows beside
-    *     the 4-gram grain="g4" rows), and a dedup survivor whose own
-    *     sliding anchors hit any stored/in-batch holdout anchor is
-    *     rejected — verbatim-passage evidence at ANY offset (what
-    *     whole-doc MinHash structurally misses), at far higher precision
-    *     than the 4-gram scrub; each grain gates only against its own
-    *     rows, the two knobs compose, audit gate stays `eval_gram`.
-    *   - `spanExcise`: the ingest-side ACTION, not a gate — words of an
-    *     admitted doc that verbatim-duplicate a sliding 10-word anchor already in the published
-    *     corpus (or an earlier occurrence in the same batch) are EXCISED
-    *     before publication, the streaming counterpart of
-    *     `q_substring_excise` ([[graft.queries.Llm.exciseIncremental]]).
-    *     A transform, not a gate: no doc drops (a fully-excised doc
-    *     publishes empty text; its near-dup postings — computed on the
-    *     ORIGINAL text — still gate future copies). The corpus's anchor
-    *     grams persist batch-keyed at `corpusDir/_span_anchors` (the
-    *     _eval_grams replay/compaction discipline), the batch's probe is
-    *     an O(batch) gram-keyed semi-join, and the budget counts the
-    *     words actually published.
-    * Gate order matches the funnel: holdout → quality → repetition →
-    * near-dup → decontaminate → span-excise → budget; rejected docs
-    * consume no budget and are never indexed.
-    *
-    * `auditDir = Some(dir)` writes the ADMISSION DECISION LOG — one row
-    * per batch doc naming the decision (admitted / holdout_excluded /
-    * quality_gate / repetition_filter / near_dup / decontaminated /
-    * budget_rejected) AND the deciding `gate`: for
-    * a near_dup the MODALITY whose band collided (`text` / `image` /
-    * `audio` / `video`, or `exact` for the signature-less content-hash
-    * sentinel — lowest implicated namespace when several collide), for a
-    * budget rejection `budget`, null for admitted docs. Batch-keyed and
-    * replay-idempotent like every other effect: the streaming twin of
-    * `q_curation_audit`'s per-doc explainability ("why isn't my doc in
-    * the corpus?" now answers WHICH dedup gate said no).
-    *
-    * `ivfPqDir` (requires `ivfDir`) extends the lifecycle to the IVF-PQ
-    * COMPOSITE — the production two-model layout: codebooks seed from the
-    * first admitting batch, every batch encodes against the frozen
-    * (centroids, books) snapshot pair through the keyed write-then-clean
-    * append, the retrain cadence republishes the composite right after the
-    * IVF publish it mirrors, and the compaction cadence batch-coalesces
-    * the per-list code fragments on the batches in between.
-    *
-    * Why the FLAT-PQ index deliberately does NOT ride the stream: its
-    * codes table stores only m-byte codes, so an in-stream
-    * [[graft.etl.AnnIndex.retrainPq]] would have no raw vectors to
-    * re-encode from — a streaming flat PQ would need its own shadow
-    * vector table, which is exactly what the composite's IVF lists
-    * already are (plus partition pruning). A pipeline that wants
-    * streamed quantized scans without the second model takes `sq8Dir`
-    * (data-independent, no retrain to run); one that wants PQ takes the
-    * composite. */
+  /** CONTINUOUS CORPUS INGEST: the streaming curation funnel over
+    * `docs`, one [[graft.etl.CorpusIngest]] micro-batch per trigger —
+    * decide, publish, maintain. The parameters are that type's fields; its
+    * scaladoc and each stage's describe the gates, the effects, the
+    * at-least-once story and the maintenance cadences. */
   def corpusIngest(docs: DataFrame, dedupDir: String, lshDir: String,
                    corpusDir: String,
                    sq8Dir: Option[String] = None,
@@ -967,615 +774,10 @@ object Streams {
                    decontaminate: Boolean = false,
                    spanDecontaminate: Boolean = false,
                    spanExcise: Boolean = false)
-      : DataStreamWriter[Row] = {
-    // the composite's coarse half IS the IVF index: list assignment,
-    // partition pruning, and the retrain corpus all come from its lists
-    require(ivfPqDir.isEmpty || ivfDir.nonEmpty,
-      "ivfPqDir requires ivfDir — the IVF-PQ composite assigns, prunes and " +
-        "retrains through the paired IVF index's lists")
-    // the eval-gram table is sourced ONLY from
-    // holdout-source documents — decontamination with no holdout sources
-    // would persist an empty gram table and gate nothing, silently
-    // ignoring the caller's request
-    require(!(decontaminate || spanDecontaminate) || holdoutSources.nonEmpty,
-      "decontaminate/spanDecontaminate require holdoutSources — the " +
-        "eval-gram posting table is derived solely from holdout-source " +
-        "documents, so an empty holdout set would make decontamination a " +
-        "silent no-op")
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val BT = graft.etl.BucketedTable
-        val B = BT.BucketCol
-        val BK = graft.etl.BatchKeyed
-        val lineage = BK.queryId(spark)
-        val batchKey = BK.key(spark, batchId)
-        // the gates below call registered codegen functions (word_ngrams
-        // for the span-grain gate; the index appends' cosine) — idempotent
-        graft.expr.GraftFunctions.ensureRegistered(spark)
-        // the two batch-keyed gram tables this body keeps beside the corpus
-        val evalGrams =
-          BK(s"$corpusDir/_eval_grams", "gram STRING, grain STRING, batch_id STRING")
-        val anyDecon = decontaminate || spanDecontaminate
-        val spanAnchors = BK(s"$corpusDir/_span_anchors", "gram STRING, batch_id STRING")
-        // ── MAP-SIDE CURATION GATES (streaming/batch funnel parity).
-        // The batch funnel (CorpusPipeline) runs holdout-exclusion, the
-        // quality score and the Gopher repetition rules BEFORE any dedup
-        // work; a streamed ingest must not admit documents that funnel
-        // would reject, and the cheap per-row gates belong at admission
-        // (they shrink the batch before the posting-index joins, exactly
-        // the cheap-gates-first ordering the batch pipeline documents).
-        // The predicates are the SAME shared Column definitions the batch
-        // funnel fuses into its scan (LlmText.qualityZ /
-        // withRepetitionMetrics) — parity by construction, and
-        // StreamingSpec asserts the one-batch admission set equals
-        // CorpusPipeline.curate row-for-row. All gates default OFF.
-        val anyMapGate = holdoutSources.nonEmpty || qualityGate || repetitionGate
-        // per-doc gate flags, cumulative like the batch funnel's s1..s3
-        // (g1 holdout, g2 quality, g3 repetition), as columns on the batch
-        // rows themselves (the batch's own columns ride in a struct, so no
-        // name of theirs can clash with the metric columns). A null
-        // predicate fails its gate. Row-local expressions, no pin: they
-        // evaluate inside the dedup gate's pin (its input filter) and the
-        // decision pin below.
-        val flagged = if (!anyMapGate)
-            batch.withColumn("__g1", lit(true)).withColumn("__g2", lit(true))
-              .withColumn("__g3", lit(true))
-          else {
-            val base = graft.queries.LlmText.withRepetitionMetrics(
-              batch.select(struct(batch.columns.map(col).toSeq: _*).as("__doc"),
-                col("text"), split(col("text"), " ").as("words")))
-            val g1 =
-              if (holdoutSources.nonEmpty)
-                coalesce(!col("__doc.source").isin(holdoutSources: _*), lit(false))
-              else lit(true)
-            val g2 = g1 && (
-              if (qualityGate) coalesce(
-                graft.queries.LlmText.qualityZ(col("text"), col("words")) >= 0,
-                lit(false))
-              else lit(true))
-            val g3 = g2 && (
-              if (repetitionGate)
-                coalesce(col("n_words") >= 2 && !col("flagged"), lit(false))
-              else lit(true))
-            base.select(col("__doc.*") +:
-              Seq(g1.as("__g1"), g2.as("__g2"), g3.as("__g3")): _*)
-          }
-        val admittable = flagged.filter(col("__g3")).select(batch.columns.map(col).toSeq: _*)
-        // held-out eval docs never enter the corpus; with `decontaminate`
-        // their word 4-grams feed the persisted eval-gram posting table
-        // (the same gram unit as q_decontaminate / the batch funnel —
-        // Llm.gram4Rows — so the contamination contract cannot drift).
-        // `spanDecontaminate` adds the SLIDING 10-WORD
-        // ANCHOR grain — the q_substring_dedup unit — under grain="a10"
-        // in the SAME table: a 10-gram hit is verbatim-passage evidence
-        // (an ingested doc embedding a holdout span at ANY offset is
-        // caught even when whole-doc MinHash misses it), with far fewer
-        // incidental matches than the recall-maximizing 4-gram scrub;
-        // the two grains compose and each gates only its own rows.
-        val holdoutDocs =
-          if (holdoutSources.nonEmpty)
-            batch.filter(col("source").isin(holdoutSources: _*))
-          else batch.limit(0)
-        val holdoutGrams: Option[DataFrame] =
-          if (!anyDecon) None
-          else {
-            val g4 = graft.queries.Llm
-              .gram4Rows(holdoutDocs.select(col("doc_id"), col("text")))
-              .select("gram").distinct().withColumn("grain", lit("g4"))
-            val a10 = holdoutDocs
-              .select(explode(call_function("word_ngrams",
-                split(col("text"), " "), lit(10))).as("gram"))
-              .distinct().withColumn("grain", lit("a10"))
-            Some(((decontaminate, spanDecontaminate) match {
-              case (true, true) => g4.unionByName(a10)
-              case (true, false) => g4
-              case _ => a10
-            }).transform(pinShared))
-          }
-        // ── NEAR-DUP GATE: the batch's posting rows pinned once, with the
-        // stored-index evidence and the in-batch components; the per-doc
-        // verdict (survivor flag + deciding modality) is a lazy frame over
-        // that pin, so it lands in the decision frame without a pin of its
-        // own
-        val (posts, dedupVerdict) = graft.etl.IncrementalDedup.gateBatch(
-          admittable, dedupDir, excludeBatchKey = Some(batchKey),
-          imageCol = imageCol, audioCol = audioCol, videoCol = videoCol)
-        // ── EVAL-GRAM DECONTAMINATION: dedup survivors sharing any
-        // word 4-gram with the held-out eval set are rejected at admission
-        // — the batch funnel's stage-6 gate, streamed. The gram evidence is
-        // a PERSISTED batch-keyed posting table (same replay discipline as
-        // the dedup postings: reads exclude this batch's own partition so a
-        // crash-replay sees the exact pre-batch state and decides
-        // identically), unioned with THIS batch's holdout grams so
-        // same-batch contamination gates too. O(batch) probe work: the
-        // batch-bounded gram frame semi-joins the gram table — never a
-        // corpus re-scan. Contamination is per doc, so it is tested over
-        // every admittable doc and only counts for dedup survivors
-        // (`__cl` below): the same set as testing the survivors alone, with
-        // no dependency on the dedup verdict.
-        val contaminated: Option[DataFrame] =
-          if (!anyDecon) None
-          else Some {
-            val storedGrams = evalGrams.readCommitted(spark, Some(batchKey))
-              .fold(holdoutGrams.get.limit(0))(_.select("gram", "grain"))
-            val evalG = storedGrams.unionByName(holdoutGrams.get).distinct()
-              .transform(pinShared)
-            // per-grain hit tests: each grain's doc-side unit matches its
-            // eval-side unit (4-grams vs g4 rows, sliding 10-gram anchors
-            // vs a10 rows) — O(batch) gram frames semi-joined against the
-            // bounded eval table, never a corpus re-scan
-            val docFrame = admittable.select(col("doc_id"), col("text"))
-            val hit4 =
-              if (!decontaminate) docFrame.select("doc_id").limit(0)
-              else graft.queries.Llm.gram4Rows(docFrame)
-                .join(evalG.filter(col("grain") === "g4").select("gram"),
-                  Seq("gram"), "left_semi")
-                .select("doc_id")
-            val hit10 =
-              if (!spanDecontaminate) docFrame.select("doc_id").limit(0)
-              else docFrame
-                .select(col("doc_id"), explode(call_function("word_ngrams",
-                  split(col("text"), " "), lit(10))).as("gram"))
-                .join(evalG.filter(col("grain") === "a10").select("gram"),
-                  Seq("gram"), "left_semi")
-                .select("doc_id")
-            hit4.unionByName(hit10).distinct()
-              .withColumn("__con", lit(true))
-          }
-        // the admission base: per-source cumulative spend BEFORE this batch.
-        // One bounded ledger read; a replay is recognized by BOTH the batch
-        // id AND the lineage matching the recorded high-water mark — its
-        // own already-folded delta rolls back so the replay decides
-        // identically, while an id collision from a DIFFERENT lineage
-        // (fresh-checkpoint restart) keeps accumulating. First activation
-        // of the budget over a PRE-EXISTING corpus seeds the prior from
-        // the published corpus itself (a one-time O(corpus) pass — the
-        // first admitting batch folds it into the ledger and every later
-        // batch reads O(|sources|) rows).
-        val budgetDir = s"$corpusDir/_budget"
-        val ledgerExists = graft.GraftFs.default.exists(
-          s"$budgetDir/_CURRENT")
-        val priorBase: Option[DataFrame] = budgetPerSource.map { _ =>
-          if (ledgerExists) {
-            val t = graft.etl.Warehouse.readCurrent(spark, budgetDir)
-            // a ledger written before the last_lineage column existed reads
-            // as unknown-lineage: never roll back (over-counting is the
-            // budget-safe direction; a rollback against the wrong lineage
-            // would over-admit)
-            val hwm = t.select(max(col("last_batch_id")),
-              (if (t.columns.contains("last_lineage")) first(col("last_lineage"))
-               else first(lit(null.asInstanceOf[String]))).as("ll")).head()
-            val isReplay = !hwm.isNullAt(0) && batchId == hwm.getLong(0) &&
-              !hwm.isNullAt(1) && lineage == hwm.getString(1)
-            val base =
-              if (isReplay) col("cum_tokens") - col("last_delta")
-              else col("cum_tokens")
-            t.select(col("source"), base.as("t0"))
-          } else if (BT.exists(corpusDir)) {
-            BT.readCurrent(spark, corpusDir)
-              .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-              .groupBy("source")
-              .agg(sum(size(split(col("text"), " ")).cast("long")).as("t0"))
-          } else Seq.empty[(String, Long)].toDF("source", "t0")
-        }
-        // ── THE DECISION FRAME: one row per batch doc carrying its gate
-        // flags in funnel order — `__dd` near-dup survivor, `__cl` also
-        // uncontaminated, `__bk` also within budget — and the doc as it
-        // would publish. Built as ONE plan over the dedup pin and pinned
-        // ONCE; every effect below (decision log, corpus commit, index
-        // appends, ledger delta, posting and anchor commits) is a
-        // projection or filter of it.
-        val gated = {
-          val d = flagged
-            .join(dedupVerdict.select(col("doc_id"), col("dd").as("__dd"),
-              col("gate").as("__gate")), Seq("doc_id"), "left")
-            .withColumn("__dd", col("__g3") && coalesce(col("__dd"), lit(false)))
-          contaminated match {
-            case Some(c) => d.join(broadcast(c), Seq("doc_id"), "left")
-              .withColumn("__cl", col("__dd") && col("__con").isNull)
-              .drop("__con")
-            case None => d.withColumn("__cl", col("__dd"))
-          }
-        }
-        // ── SPAN-GRAIN EXCISION (the ingest-side ACTION): an admitted doc's
-        // words that
-        // verbatim-duplicate a sliding 10-word anchor already in the
-        // PUBLISHED corpus (or an earlier occurrence in this batch) are
-        // excised before publication — the streaming counterpart of
-        // q_substring_excise, riding a persisted batch-keyed anchor-gram
-        // posting table at `corpusDir/_span_anchors` with the _eval_grams
-        // replay discipline (reads exclude this batch's own partition, so
-        // a crash-replay decides from the exact pre-batch state). A
-        // TRANSFORM, not a gate: no doc is dropped here (a fully-excised
-        // doc publishes empty text and its near-dup postings — computed on
-        // the ORIGINAL text — still gate future copies of the original).
-        // Only the clean docs' text is rewritten; the budget below then
-        // counts the words actually published.
-        val excised =
-          if (!spanExcise) gated
-          else {
-            val stored = spanAnchors.readCommitted(spark, Some(batchKey))
-              .fold(Seq.empty[String].toDF("gram"))(_.select("gram"))
-            val cut = graft.queries.Llm.exciseIncremental(
-                gated.filter(col("__cl")).select("doc_id", "text"), stored)
-              .select(col("doc_id"), col("text").as("__excised"))
-            gated.join(cut, Seq("doc_id"), "left")
-              .withColumn("text",
-                when(col("__cl"), col("__excised")).otherwise(col("text")))
-              .drop("__excised")
-          }
-        // In-batch admission follows the batch query's seeded-hash order
-        // (md5 of doc_id — q_source_budget parity): a clean doc's spend is
-        // its source's prior plus the running sum of the clean docs up to
-        // it in that order (other docs add 0). Budget-rejected docs
-        // consume nothing, are not published, and are NOT indexed — their
-        // postings never commit, so a later budget raise can still admit
-        // them.
-        val budgeted = budgetPerSource match {
-          case None => excised.withColumn("__bk", col("__cl"))
-          case Some(budget) =>
-            val w = Window.partitionBy("source").orderBy("__h")
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            excised
-              .withColumn("__h", md5(col("doc_id").cast("string")))
-              .withColumn("__tok", when(col("__cl"),
-                size(split(col("text"), " ")).cast("long")).otherwise(lit(0L)))
-              .join(broadcast(priorBase.get), Seq("source"), "left")
-              .withColumn("__bk", col("__cl") &&
-                coalesce(col("t0"), lit(0L)) + sum(col("__tok")).over(w) <= budget)
-              .drop("__h", "__tok", "t0")
-        }
-        // decision = FIRST failing stage in funnel order (the batch
-        // audit's drop_stage semantics, streamed): map gates, then the
-        // dedup collision gate, then decontamination, then budget; the
-        // gate names the deciding mechanism — for a near_dup the MODALITY
-        // whose band collided, `eval_gram` for decontamination,
-        // `budget` for budget rejections, none for admitted docs and
-        // map-gate decisions (which name themselves)
-        val decided = budgeted
-          .select(batch.columns.map(col).toSeq ++ Seq(
-            when(!col("__g1"), lit("holdout_excluded"))
-              .when(!col("__g2"), lit("quality_gate"))
-              .when(!col("__g3"), lit("repetition_filter"))
-              .when(col("__bk"), lit("admitted"))
-              .when(col("__cl"), lit("budget_rejected"))
-              .when(col("__dd"), lit("decontaminated"))
-              .otherwise(lit("near_dup")).as("__decision"),
-            when(!col("__g3") || col("__bk"), lit(null).cast("string"))
-              .when(col("__cl"), lit("budget"))
-              .when(col("__dd"), lit("eval_gram"))
-              .otherwise(col("__gate")).as("__gate")): _*)
-          .transform(pinShared)
-        val kept = decided.filter(col("__decision") === "admitted")
-          .select(batch.columns.map(col).toSeq: _*)
-        // ADMISSION DECISION LOG (optional — the streaming twin of
-        // q_curation_audit's explainability): one row per batch doc naming
-        // its decision and deciding gate, projected straight off the
-        // decision frame and landed under this batch's OWN batch_id
-        // partition with dynamic overwrite, so a replay rewrites identical
-        // rows (the decisions replay identically) and a fresh lineage lands
-        // under new keys: the log is exactly-once like every other effect
-        // here. Read it back with a plain spark.read.parquet(auditDir).
-        def writeAuditLog(ad: String): Unit =
-          BK(ad, "doc_id BIGINT, decision STRING, gate STRING, batch_id STRING")
-            .write(decided.select(col("doc_id"), col("__decision").as("decision"),
-              col("__gate").as("gate")), Some(batchKey))
-        // eval-gram channel commit: this batch's holdout grams land under
-        // the batch's OWN `batch_id=` partition (dynamic overwrite — a
-        // replay rewrites identical rows; the decontamination read above
-        // excludes this key, so the replay decided from pre-batch state).
-        // Runs regardless of admission outcome: an all-holdout batch
-        // admits nothing, but its grams ARE the batch's durable effect —
-        // every later batch must gate against them.
-        def commitEvalGrams(g: DataFrame): Unit =
-          if (!g.isEmpty) evalGrams.write(g, Some(batchKey))
-        // span-anchor channel commit: the PUBLISHED (budget-admitted,
-        // post-excision) docs' surviving sliding 10-gram anchors land under
-        // this batch's own partition — the stored set always describes the
-        // corpus as published, so a future copy of an excised span still
-        // hits the first corpus occurrence, which survived. Same dynamic
-        // overwrite replay discipline as the eval grams.
-        def commitSpanAnchors(): Unit = {
-          val anchors = kept
-            .select(explode(call_function("word_ngrams",
-              split(col("text"), " "), lit(10))).as("gram"))
-            .distinct()
-          if (!anchors.isEmpty) spanAnchors.write(anchors, Some(batchKey))
-        }
-        // fold the batch's admitted per-source delta into the ledger. Runs
-        // even for an all-rejected batch WHEN the ledger does not exist yet:
-        // that materializes the one-time corpus-derived seed, so later
-        // batches read O(|sources|) rows instead of re-aggregating the
-        // corpus every trigger. Seed-only publishes record this batch as
-        // the high-water mark with delta 0 — a replay rolls back 0 and
-        // decides identically. The seed's corpus read resolved its files
-        // when the prior was built and excludes this batch's docs, so the
-        // concurrent corpus commit cannot change it.
-        def commitLedger(): Unit = {
-          val delta = kept
-            .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
-            .groupBy("source").agg(sum("n_tok").as("d"))
-          val totals = priorBase.get.join(delta, Seq("source"), "full_outer")
-            .select(col("source"),
-              (coalesce(col("t0"), lit(0L)) + coalesce(col("d"), lit(0L)))
-                .as("cum_tokens"),
-              coalesce(col("d"), lit(0L)).as("last_delta"),
-              lit(batchId).as("last_batch_id"),
-              lit(lineage).as("last_lineage"))
-          // nothing to record (empty batch over an empty prior): an empty
-          // publish would leave a row-less ledger whose high-water-mark
-          // read has nothing to aggregate
-          if (!totals.isEmpty)
-            graft.etl.Warehouse.publish(budgetDir,
-              dir => totals.coalesce(1).write.mode("overwrite").parquet(dir))
-        }
-        // a frame's distinct corpus buckets and its row count in ONE job
-        // and no exchange: each partition reports its own distinct buckets
-        // and count, so at most (partitions × buckets) ints are collected
-        // — bucket ids only, never doc rows
-        def bucketsAndCount(df: DataFrame): (Seq[Int], Long) = {
-          val parts = df.select(col(B)).as[Int].mapPartitions { it =>
-            val seen = scala.collection.mutable.Set.empty[Int]
-            var n = 0L
-            it.foreach { b => seen += b; n += 1 }
-            Iterator((seen.toSeq, n))
-          }.collect()
-          (parts.flatMap(_._1).distinct.sorted.toSeq, parts.map(_._2).sum)
-        }
-        val docCols = kept.drop("embedding")
-          .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
-        val (candBuckets, nKept) = bucketsAndCount(docCols)
-        val vecs = kept.select(col("doc_id").as("vec_id"), col("embedding"))
-        // the corpus commit: admitted docs an earlier attempt of this batch
-        // already published (a replay after the corpus commit landed) are
-        // not novel; only the novel docs' buckets rewrite. The pin is lazy:
-        // the bucket pass below computes every partition, so it
-        // materializes the pin in its own job
-        def commitCorpus(): Unit = {
-          val existing =
-            if (BT.exists(corpusDir))
-              BT.readBuckets(spark, corpusDir, candBuckets,
-                empty = kept.drop("embedding").limit(0))
-            else kept.drop("embedding").limit(0)
-          val novel = docCols
-            .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
-            .transform(pinLazy)
-          val (touched, _) = bucketsAndCount(novel)
-          if (touched.nonEmpty) {
-            val out = existing
-              .withColumn(B, BT.bucketExpr(Seq("doc_id"), nBuckets))
-              .filter(col(B).isin(touched: _*))
-              .unionByName(novel)
-            BT.commit(corpusDir, nBuckets, touched,
-              dir => out.write.mode("overwrite").partitionBy(B).parquet(dir))
-          }
-        }
-        // the TRAINABLE rung of the ladder, one sequential unit: the first
-        // admitting batch seeds the centroid model (centroids only — its
-        // rows enter through the keyed append below, so batch 0 replays
-        // exactly-once too); every batch then assigns against the current
-        // snapshot's frozen centroids, with appendIvf's write-then-clean
-        // hygiene making the keyed write idempotent even when a retrain
-        // moved the replay's assignment (see its scaladoc). Returns whether
-        // THIS batch seeded the model (its clustering is minutes old —
-        // retraining it again the same batch is pure waste).
-        def publishIvf(d: String): Boolean = {
-          val seeded = graft.etl.AnnIndex.ensureIvfSeeded(vecs, d, ivfNlist)
-          // ONE frozen-model assignment feeds both the lists and the
-          // composite's codes (placements mirror by construction, and
-          // the argmax runs once, not once per index table); persisted
-          // because with the composite both appends evaluate it
-          val assigned = graft.etl.AnnIndex.assignIvfLists(vecs, d)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            graft.etl.AnnIndex.appendIvf(assigned, d, Some(batchKey))
-            // the IVF-PQ composite rides the same model lifecycle: the
-            // first admitting batch bootstraps it from the CURRENT lists
-            // corpus (which, after the append just above, already holds
-            // this batch's keyed append — and, on an ivfPqDir attached to
-            // a pre-existing stream, the whole prior corpus: the encode
-            // BACKFILLS it); every batch then encodes against the frozen
-            // books with the same write-then-clean keyed hygiene, the
-            // keyed append sweeping-and-rewriting exactly its own cells
-            // even on the bootstrap batch
-            ivfPqDir.foreach { pd =>
-              graft.etl.AnnIndex.ensureIvfPqFromLists(spark, d, pd, pqM, pqK)
-              graft.etl.AnnIndex.appendIvfPq(assigned, d, pd, Some(batchKey))
-            }
-            // drift flag for the retrain cadence below: set by every
-            // append (carrying the CUMULATIVE appended-row count since
-            // the last retrain — the growth gate's numerator; the
-            // assignment is one row per admitted doc, so the count is
-            // the one the bucket pass above already took), cleared
-            // by a completed retrain — so cadence batches with nothing
-            // new since the last retrain skip the O(corpus) re-cluster
-            // instead of republishing an identical model. A crash-replay
-            // recounts its own batch (the rows themselves stay
-            // exactly-once) — the gate is a maintenance heuristic and
-            // over-counting only retrains marginally earlier.
-            val pending = s"$d/_GRAFT_RETRAIN_PENDING"
-            graft.GraftFs.default.writeString(pending,
-              (readPendingCount(pending) + nKept).toString)
-          } finally assigned.unpersist(false)
-          seeded
-        }
-        // ── PUBLISH. The effects above each write their own table and read
-        // only the pinned decision frame (the corpus commit also reads the
-        // corpus's own buckets), so they run as ONE concurrent set of Spark
-        // jobs: their jobs are mostly single-task writes that would leave
-        // cores idle one after another, and a wide one just runs first
-        // under FIFO. Each effect's internal order is unchanged. The set
-        // returns only once every effect has ended; a failure in one
-        // surfaces after the others finish, and no effect is left running
-        // when the batch body exits.
-        val admits = nKept > 0
-        val publishSet: Seq[() => Any] =
-          auditDir.map(ad => () => writeAuditLog(ad)).toSeq ++
-            holdoutGrams.map(g => () => commitEvalGrams(g)) ++
-            Option.when(spanExcise)(() => commitSpanAnchors()) ++
-            Option.when(admits)(() => commitCorpus()) ++
-            Option.when(admits)(() => graft.etl.AnnIndex.appendLsh(vecs, lshDir,
-              graft.etl.AnnIndex.LshBands, graft.etl.AnnIndex.LshBits,
-              Some(batchKey))) ++
-            sq8Dir.filter(_ => admits).map(d =>
-              () => graft.etl.AnnIndex.appendSq8(vecs, d, Some(batchKey))) ++
-            ivfDir.filter(_ => admits).map(d => () => publishIvf(d)) ++
-            Option.when(budgetPerSource.nonEmpty && (admits || !ledgerExists))(
-              () => commitLedger())
-        // the IVF unit is the one effect with a value
-        val ivfSeededThisBatch =
-          GraftSqlBridge.concurrently(spark)(publishSet: _*)
-            .collectFirst { case seeded: Boolean => seeded }.getOrElse(false)
-        // the dedup-index commit lands the survivors' posting rows LAST,
-        // only once every other effect succeeded: a batch that failed part
-        // way leaves no postings, so a fresh-checkpoint restart (new
-        // lineage, whose gate sees every other lineage's postings) still
-        // admits its docs instead of near-dup-rejecting them against
-        // postings of a publish that never completed
-        if (admits)
-          graft.etl.IncrementalDedup.commitPostings(
-            posts.join(broadcast(kept.select("doc_id")), Seq("doc_id"),
-              "left_semi"),
-            dedupDir, Some(batchKey))
-        // IN-STREAM MAINTENANCE CADENCE (bounds the stream's on-disk
-        // growth): without it, every micro-batch leaves (a) one superseded
-        // `_budget` ledger version, (b) superseded corpus bucket versions,
-        // and (c) one `batch_id=` parquet fragment per LSH band / SQ8
-        // table / posting table — all O(batches) forever, and since
-        // batch_id sits BELOW the band prune level, a pruned probe's
-        // file-open cost grows linearly with batch count. Runs AFTER the
-        // batch's commits: the vacuum first, then each table's compaction
-        // as one concurrent set (the helper the publish stage uses). Every
-        // table still has one writer at a time — the set holds at most one
-        // rewrite per table, and the IVF lists and IVF-PQ codes share ONE
-        // sequential unit — the single-writer discipline of
-        // upsertToParquet's vacuumEvery.
-        //
-        // Replay safety of the coalescing compaction: THIS batch is not
-        // yet durably checkpointed when its body runs, so its own
-        // `batch_id=` partitions are passed as preserveBatchKeys — they
-        // survive the fold, keeping a crash-replay's excludeBatchKey
-        // filter effective (it must not see its own postings as
-        // pre-existing index state). Every earlier batch of this lineage
-        // IS checkpoint-committed by now, so folding those into the
-        // `batch_id=-1` base is exactly the quiet-window contract
-        // Compaction documents.
-        //
-        // Crash safety AND reader consistency come from the versioned-
-        // pointer publish: the rewrite lands as a complete sibling
-        // generation, one atomic pointer rename makes it current, and the
-        // retired generation survives one more cycle — a probe racing this
-        // maintenance resolves a complete snapshot either way, and a death
-        // at any point leaves the old generation current (the orphan
-        // rewrite is reclaimed by the next run). Spec-asserted by the
-        // concurrent reader/crash cases in CompactionSpec.
-        if (vacuumEvery > 0 && batchId % vacuumEvery == 0) {
-          if (BT.exists(corpusDir)) BT.vacuum(corpusDir)
-          if (graft.GraftFs.default.exists(s"$budgetDir/_CURRENT"))
-            graft.etl.Warehouse.vacuum(budgetDir)
-        }
-        // an in-stream retrain this batch subsumes an IVF layout compaction
-        // (it rewrites and batch-folds the whole lists table itself).
-        // Gates beyond the cadence: the seeding batch is exempt (its model
-        // was trained moments ago from this very data), and the persistent
-        // _GRAFT_RETRAIN_PENDING drift flag must be set — a cadence batch
-        // with no appends since the last retrain would re-cluster an
-        // unchanged corpus into an identical model for a full O(corpus)
-        // pass. The flag (not "did THIS batch admit") carries pending
-        // drift across skipped cadence points: admission that always lands
-        // between cadence batches still retrains at the next opportunity.
-        // `ivfRetrainMinGrowth` strengthens the gate from "any drift" to
-        // "enough drift": the flag carries the appended-row count since the
-        // last retrain, and a cadence batch re-clusters only when that
-        // growth reaches the configured fraction of the pre-growth corpus
-        // (the standard "retrain after +10% data" production heuristic) —
-        // the corpus size is one parquet-footer metadata count, paid only
-        // at cadence points with the gate enabled. An unparsable legacy
-        // flag counts as unknown growth and retrains (the conservative
-        // direction).
-        val ivfRetrainNow = ivfRetrainEvery > 0 && !ivfSeededThisBatch &&
-          batchId % ivfRetrainEvery == 0 &&
-          ivfDir.exists { d =>
-            val p = s"$d/_GRAFT_RETRAIN_PENDING"
-            graft.GraftFs.default.exists(p) && (ivfRetrainMinGrowth <= 0 || {
-              val appended = readPendingCount(p)
-              appended <= 0L ||
-                !graft.etl.Compaction.tableExists(s"$d/lists") || {
-                  val corpus = graft.etl.AnnIndex.readLists(spark,
-                    graft.etl.Compaction.currentPath(s"$d/lists")).count()
-                  appended.toDouble >=
-                    ivfRetrainMinGrowth * math.max(1L, corpus - appended)
-                }
-            })
-          }
-        val compactNow = compactEvery > 0 && batchId % compactEvery == 0
-        val preserve = Set(batchKey)
-        def existsTbl(p: String) = graft.etl.Compaction.tableExists(p)
-        def compact(t: graft.etl.BatchKeyed) =
-          graft.etl.Compaction.compactBatchKeyed(spark, t, preserve)
-        // every batch-keyed table but the IVF pair, one compaction each;
-        // the eval-gram and span-anchor tables grow one fragment per
-        // holdout-carrying or admitting batch
-        val keyedTables =
-          Seq(graft.etl.AnnIndex.lshTable(lshDir)) ++
-            sq8Dir.map(graft.etl.AnnIndex.sq8Table) ++
-            Seq(graft.etl.IncrementalDedup.postingsTable(dedupDir)) ++
-            Option.when(anyDecon)(evalGrams) ++
-            Option.when(spanExcise)(spanAnchors)
-        val compactions: Seq[() => Any] =
-          if (!compactNow) Nil
-          else keyedTables.filter(t => existsTbl(t.root)).map(t => () => compact(t))
-        // the IVF lists and the IVF-PQ codes: one sequential unit beside the
-        // other tables' compactions, since the codes follow the lists
-        def compactIvf(): Unit = {
-          (ivfDir.map(graft.etl.AnnIndex.listsTable) ++
-            ivfPqDir.map(graft.etl.AnnIndex.codesTable))
-            .filter(t => existsTbl(t.root)).foreach(compact)
-          // the two layout rewrites carry the SAME model, but the codes'
-          // carried `_lists_gen` sidecar still names the now-RETIRED
-          // lists generation (which stops receiving appends) — realign
-          // the pairing to the fresh generation or composite probes
-          // would serve a frozen corpus view until the next codes publish
-          for (d <- ivfDir; pd <- ivfPqDir
-               if existsTbl(s"$d/lists") && existsTbl(s"$pd/codes"))
-            graft.etl.AnnIndex.realignListsGenSidecar(d, pd)
-        }
-        // MODEL-DRIFT maintenance, the cadence compaction can't provide:
-        // every `ivfRetrainEvery`-th batch re-clusters the full lists corpus
-        // (frozen-centroid appends only ASSIGN — recall decays as the data
-        // distribution drifts away from the trained centroids), publishing
-        // the (centroids, lists) composite atomically. Runs AFTER this
-        // batch's commits, with no other writer of the IVF tables —
-        // exactly the writer quiet window retrainIvf's contract asks for —
-        // and preserves this batch's (not yet checkpointed) key so a
-        // crash-replay's cell-drop append stays exactly-once. A replay
-        // re-runs the retrain too: seeded k-means over the same folded
-        // corpus is deterministic, so the republished model matches.
-        def retrainIvfModel(d: String): Unit = {
-          graft.etl.AnnIndex.retrainIvf(spark, d, ivfNlist,
-            preserveBatchKeys = preserve)
-          // the composite follows ITS documented discipline — retrain
-          // AFTER the IVF publish, so the new codes generation mirrors
-          // the retrained lists (assignments, batch fold and all); a
-          // crash between the two publishes leaves the flag set, and
-          // the deterministic seeded re-cluster of the retry converges
-          // on the same pair
-          ivfPqDir
-            .filter(pd => graft.etl.Compaction.tableExists(s"$pd/codes"))
-            .foreach(pd => graft.etl.AnnIndex.retrainIvfPq(spark, d, pd, pqM, pqK))
-          // drift consumed — cleared only AFTER the publish, so a crash
-          // mid-retrain leaves the flag set and the next cadence batch
-          // retries
-          graft.GraftFs.default.deleteIfExists(s"$d/_GRAFT_RETRAIN_PENDING")
-        }
-        val ivfMaintenance: Option[() => Any] =
-          if (ivfRetrainNow)
-            ivfDir.filter(d => existsTbl(s"$d/lists")).map(d => () => retrainIvfModel(d))
-          else Option.when(compactNow && ivfDir.nonEmpty)(() => compactIvf())
-        GraftSqlBridge.concurrently(spark)(compactions ++ ivfMaintenance: _*)
-        ()
-    }
-  }
+      : DataStreamWriter[Row] =
+    graft.etl.CorpusIngest(dedupDir, lshDir, corpusDir, sq8Dir, budgetPerSource,
+      nBuckets, vacuumEvery, compactEvery, imageCol, audioCol, videoCol, ivfDir,
+      ivfNlist, ivfRetrainEvery, ivfPqDir, pqM, pqK, ivfRetrainMinGrowth,
+      auditDir, holdoutSources, qualityGate, repetitionGate, decontaminate,
+      spanDecontaminate, spanExcise).writer(docs)
 }

@@ -204,7 +204,7 @@ class InMemoryFsSpec extends AnyFunSuite {
   }
 
   test("writer lease acquire/steal/fence logic runs on a store with NO advisory locks at all") {
-    withFs { fs =>
+    withFs { _ =>
       val t = "/mem/dim"
       val a = BucketedTable.acquireWriterLease(t, "host-a", ttlMillis = 0L)
       val b = BucketedTable.acquireWriterLease(t, "host-b")

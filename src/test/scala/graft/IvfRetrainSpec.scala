@@ -43,6 +43,33 @@ class IvfRetrainSpec extends AnyFunSuite {
     files.map(_(1).stripPrefix("batch_id=")).toSet
   }
 
+  test("the IVF fit is repeatable: the same rows fit the same centroids in any input layout") {
+    // the in-stream retrain test's 20 vectors: id % 4 picks the axis. The
+    // seeded k-means|| init samples by partition and row order, so the fit
+    // must not see the order its rows arrive in (files, scan partitions)
+    def emb(id: Long): Array[Float] = {
+      val v = Array.fill(8)(0.02f * (((id * 31 + 5) % 11) - 5).toInt)
+      v((id % 4).toInt) = 1f
+      v
+    }
+    val rows = (0L until 20L).map(i => (i, (i % 4).toInt, emb(i)))
+    def centroids(order: Seq[(Long, Int, Array[Float])], parts: Int) = {
+      val ivf = Files.createTempDirectory("graft_ivf_layout").toString
+      AnnIndex.build(spark.sparkContext.parallelize(order, parts)
+        .toDF("vec_id", "label", "embedding"), ivf, nlist = 4)
+      spark.read.parquet(s"$ivf/centroids").collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
+    }
+    val inOrder = centroids(rows, 1)
+    val layouts = Seq(
+      "20 one-row partitions, reversed" -> centroids(rows.reverse, 20),
+      "3 partitions, interleaved" -> centroids(rows.sortBy(r => (r._1 * 7) % 20), 3),
+      "20 one-row partitions, by cluster" -> centroids(rows.sortBy(r => (r._2, r._1)), 20))
+    layouts.foreach { case (layout, fit) =>
+      assert(fit === inOrder, s"$layout fits other centroids than one in-order partition")
+    }
+  }
+
   test("retrainIvf re-clusters drifted appends into an atomically published composite") {
     val ivf = Files.createTempDirectory("graft_ivf_retrain").toString
     val base = (clusterRows(0, 0 until 30) ++ clusterRows(1, 30 until 60))

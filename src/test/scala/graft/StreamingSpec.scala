@@ -434,7 +434,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
     val outDir = Files.createTempDirectory("graft_stream_out").toString
 
-    def land(batch: Seq[Ev], name: String): Unit =
+    def land(batch: Seq[Ev]): Unit =
       batch.toDF().coalesce(1).write.mode("append").parquet(srcDir)
 
     def drain(): Unit = {
@@ -445,12 +445,12 @@ class StreamingSpec extends AnyFunSuite {
       q.awaitTermination()
     }
 
-    land(Seq(ev(1, "2024-01-01 10:00:00"), ev(2, "2024-01-01 10:01:00")), "b1")
+    land(Seq(ev(1, "2024-01-01 10:00:00"), ev(2, "2024-01-01 10:01:00")))
     drain()
     assert(spark.read.parquet(outDir).count() === 2)
 
     // second batch lands; restart picks up ONLY the new file
-    land(Seq(ev(3, "2024-01-01 10:02:00")), "b2")
+    land(Seq(ev(3, "2024-01-01 10:02:00")))
     drain()
     val out = spark.read.parquet(outDir)
     assert(out.count() === 3, "restart must process exactly the new files")
@@ -2157,59 +2157,55 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("corpusIngest curation gates: one-batch admission equals the batch funnel; decisions equal q_curation_audit") {
-    // r17 (judge #1): a streamed ingest with the curation gates on must
-    // admit EXACTLY what the batch funnel keeps, and its decision log must
-    // name the same drop stage per document — the q_curation_audit parity,
-    // streamed. Whole sf documents table as ONE micro-batch against empty
-    // state ≡ the batch funnel over the same table.
+    // with the curation gates on, the ingest's decision stage over the
+    // whole sf documents table as ONE batch against empty state admits
+    // EXACTLY what the batch funnel keeps, and names the same drop stage
+    // per document as q_curation_audit. The stage runs without a stream;
+    // that the published corpus equals the logged admissions is the
+    // decision-log test's assertion.
     import java.nio.file.Files
-    implicit val sqlCtx = spark.sqlContext
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
     val dir = TestSpark.sfDir
-    val dedupDir = Files.createTempDirectory("graft_cur_dedup").toString
-    val lshDir = Files.createTempDirectory("graft_cur_lsh").toString
-    val corpusDir = Files.createTempDirectory("graft_cur_corpus").toString
-    val auditDir = Files.createTempDirectory("graft_cur_audit").toString + "/log"
+    val ingest = graft.etl.CorpusIngest(tmp("graft_cur_dedup"),
+      tmp("graft_cur_lsh"), tmp("graft_cur_corpus"),
+      holdoutSources = Seq("src0"), qualityGate = true, repetitionGate = true,
+      decontaminate = true)
     val docs = graft.Tables.documents(spark, dir)
       .select("doc_id", "text", "source").collect()
       .map(r => SourcedDoc(r.getAs[Long]("doc_id"), r.getAs[String]("text"),
         r.getAs[String]("source"),
         Array.tabulate(4)(i => ((r.getAs[Long]("doc_id") * 31 + i) % 97).toFloat)))
-    val mem = MemoryStream[SourcedDoc]
-    val q = Streams.corpusIngest(mem.toDF(), dedupDir, lshDir, corpusDir,
-      auditDir = Some(auditDir), holdoutSources = Seq("src0"),
-      qualityGate = true, repetitionGate = true, decontaminate = true).start()
-    try {
-      mem.addData(docs.toSeq: _*); q.processAllAvailable()
-      val streamed = graft.etl.BucketedTable.readCurrent(spark, corpusDir)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val batchKept = graft.etl.CorpusPipeline.curate(spark, dir)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(streamed === batchKept,
-        s"streamed admission must equal the batch funnel: stream-only=" +
-          s"${(streamed -- batchKept).take(10)}, batch-only=" +
-          s"${(batchKept -- streamed).take(10)}")
-      // per-doc decision parity with the batch audit's drop stage. The
-      // batch funnel attributes exact and near dedup separately (stages 4
-      // and 5); the streaming gate resolves both through one posting
-      // table, so the dedup family maps onto `near_dup`.
-      val expect = graft.etl.CorpusPipeline.qCurationAudit(spark, dir)
-        .select("doc_id", "drop_stage").collect()
-        .map(r => r.getLong(0) -> (r.getString(1) match {
-          case "kept" => "admitted"
-          case "exact_dedup" | "near_dedup" => "near_dup"
-          case "decontaminate" => "decontaminated"
-          case s => s
-        })).toMap
-      val got = spark.read.parquet(auditDir)
-        .select("doc_id", "decision").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got.size === expect.size,
-        s"one decision per input doc: got ${got.size}, want ${expect.size}")
-      val mismatches = expect.keys.filter(k => expect(k) != got(k))
-      assert(mismatches.isEmpty,
-        s"decision mismatches (doc, batch-stage, stream-decision): " +
-          s"${mismatches.take(10).map(k => (k, expect(k), got(k)))}")
-    } finally q.stop()
+      .toSeq.toDF()
+    val decision = ingest.decide(docs, 0L, "curation-0")
+    val admitted = decision.kept
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val batchKept = graft.etl.CorpusPipeline.curate(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(admitted === batchKept,
+      s"streamed admission must equal the batch funnel: stream-only=" +
+        s"${(admitted -- batchKept).take(10)}, batch-only=" +
+        s"${(batchKept -- admitted).take(10)}")
+    // per-doc decision parity with the batch audit's drop stage. The
+    // batch funnel attributes exact and near dedup separately (stages 4
+    // and 5); the streaming gate resolves both through one posting
+    // table, so the dedup family maps onto `near_dup`.
+    val expect = graft.etl.CorpusPipeline.qCurationAudit(spark, dir)
+      .select("doc_id", "drop_stage").collect()
+      .map(r => r.getLong(0) -> (r.getString(1) match {
+        case "kept" => "admitted"
+        case "exact_dedup" | "near_dedup" => "near_dup"
+        case "decontaminate" => "decontaminated"
+        case s => s
+      })).toMap
+    val got = decision.log
+      .select("doc_id", "decision").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size === expect.size,
+      s"one decision per input doc: got ${got.size}, want ${expect.size}")
+    val mismatches = expect.keys.filter(k => expect(k) != got(k))
+    assert(mismatches.isEmpty,
+      s"decision mismatches (doc, batch-stage, stream-decision): " +
+        s"${mismatches.take(10).map(k => (k, expect(k), got(k)))}")
   }
 
   test("corpusIngest decontamination channel: eval grams persist across batches; replays decide identically") {
